@@ -30,8 +30,10 @@ object Par {
         try f.get()
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            // cancel the siblings before rethrowing so no stray Spark
-            // jobs keep burning executors after the operator has failed
+            // best-effort cancellation before rethrowing: interrupting
+            // the sibling submitter threads can stop them before they
+            // submit further jobs, but Spark jobs already running are
+            // not cancelled and run to completion
             pool.shutdownNow()
             fs.foreach(_.cancel(true))
             throw e.getCause

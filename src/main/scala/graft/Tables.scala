@@ -106,9 +106,9 @@ object Tables {
     shortFp(parts.mkString("|"))
   }
 
-  /** The ONE fingerprint format (32-bit Murmur hex) — Bench, MiniBench,
-    * and the per-table fingerprints must stay comparable, so every
-    * stamp goes through here. */
+  /** The ONE fingerprint format (32-bit Murmur hex) — Bench and the
+    * per-table fingerprints must stay comparable, so every stamp goes
+    * through here. */
   def shortFp(s: String): String =
     java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(s).toLong & 0xffffffffL)

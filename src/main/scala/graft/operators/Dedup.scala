@@ -306,34 +306,6 @@ object Dedup {
       .agg(count(lit(1)).as("common"))
   }
 
-  /** Sizing diagnostic for the inverted-index family (dd04/dd06/dd10):
-    * the volumes that decide their cost at a given corpus — posting
-    * count (shuffle input), bucket count, buckets lost to the df cap,
-    * max df, and the candidate-pair volume Σ df·(df−1)/2 over uncapped
-    * buckets (the post-index shuffle). `graft.tools.IndexStats` prints
-    * it per SF; SCALING.md's cap-sizing rule reads off this output.
-    */
-  def indexStats(spark: SparkSession, dir: String): DataFrame = {
-    // spread like every other shingling pass: the diagnostic must not be
-    // the slowest way to measure the volumes it reports
-    val corpus = Tables.spread(plantedDocs(spark, dir))
-      .select(col("doc_id"), col("source"),
-        array_distinct(T.shingle_hashes(col("text"), 3)).as("sh"))
-    val dfs = corpus
-      .select(col("source"), explode_outer(col("sh")).as("shingle"))
-      .groupBy(col("source"), col("shingle"))
-      .agg(count(lit(1)).as("df"))
-    dfs.agg(
-      count(lit(1)).as("n_shingles"),
-      sum(col("df")).as("n_postings"),
-      sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_buckets"),
-      sum(when(col("df") > 10000, 1L).otherwise(0L)).as("n_capped"),
-      max(col("df")).as("max_df"),
-      sum(when(col("df").between(2, 10000),
-        (col("df") * (col("df") - 1) / 2).cast(LongType))
-        .otherwise(0L)).as("cand_pairs"))
-  }
-
   /** Audit seam: the raw gated index over an arbitrary corpus, so
     * ScaleAuditSpec can feed degenerate corpora (the minhashCandidates
     * discipline). */
@@ -835,7 +807,7 @@ object Dedup {
     * Scale: the dd04 posting shape MINUS the pair expansion — one
     * shuffle to per-gram df, one co-partitioned join back, one doc agg.
     * No pairs ever materialize, so no df cap is needed: cost is
-    * Σ postings, strictly linear in the corpus (IndexStats measures it).
+    * Σ postings, strictly linear in the corpus.
     */
   def dd11DupGramFrac(spark: SparkSession, dir: String): DataFrame = {
     // postings feed BOTH the df aggregation and the join-back; a lazy
@@ -1419,7 +1391,7 @@ object Dedup {
     * pass; the band shuffle carries (band-hash, cid) pairs; the 2..50
     * cap is the collision-entropy rule (§4), count-gated
     * ([[gatedBuckets]]) so an over-cap bucket never materializes.
-    * Measured (r10, Dd15Stats): THIS corpus peaks at bucket size 28 —
+    * Measured (r10, banding volumes): THIS corpus peaks at bucket size 28 —
     * under the cap at both sf0.1 and the synthesized sf1, every chain
     * volume exactly linear — so the cap bites nothing here; it guards
     * real-corpus boilerplate mass (dd12's df ≥ 3 chunks), which is
@@ -1813,30 +1785,6 @@ object Dedup {
       .select(col("new_id"), col("bloom_hit"),
         coalesce(col("td"), lit(false)).as("true_dup"))
       .orderBy(col("new_id"))
-  }
-
-  /** dd15 banding-volume diagnostic (the dd04 decade-A/B method at
-    * chunk granularity, VERDICT r9 #5): the chunk / band-row / bucket /
-    * over-cap / candidate-pair volumes that govern dd15's cost, so a
-    * decade wall-clock ratio can be attributed to data growth vs
-    * fixed-overhead amortization. One row out; driven by
-    * `graft.tools.Dd15Stats`. */
-  def dd15Stats(spark: SparkSession, dir: String): DataFrame = {
-    val chunks = chunked10(spark, dir)
-    val sigs = chunks.select(
-        (col("doc_id") * 100000 + col("pos")).as("cid"),
-        T.minhash_sig(col("chunk"), 64, 3).as("sig"))
-      .localCheckpoint(false)
-    val sizes = bandRows(sigs, "sig")
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
-    val bucketAgg = sizes.agg(
-      sum(col("n")).as("n_band_rows"),
-      sum(when(col("n").between(2, 50), 1L).otherwise(0L)).as("n_buckets"),
-      sum(when(col("n") > 50, 1L).otherwise(0L)).as("n_overcap"),
-      max(col("n")).as("max_bucket"),
-      sum(when(col("n").between(2, 50),
-          expr("n * (n - 1) DIV 2")).otherwise(0L)).as("cand_pairs"))
-    sigs.agg(count(lit(1)).as("n_chunks")).crossJoin(bucketAgg)
   }
 
   // ------------------------------------------------------------ registry

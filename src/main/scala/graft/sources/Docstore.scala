@@ -414,41 +414,59 @@ final case class AggSpec(groupBy: Seq[StructField], aggs: Seq[AggOp]) {
         StructField(s"agg_$i(${a.op})", a.resultType, nullable = true) })
 }
 
-class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
-    filters: Array[Filter], opts: DocstoreOptions,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
+/** What both batch scans share: the pinned file snapshot, its splits,
+  * and the size statistics Catalyst plans joins with. `reportsRows`:
+  * whether the collection's row estimate describes the scan's output. */
+abstract class DocstoreBatchScan(fullSchema: StructType,
+    opts: DocstoreOptions, reportsRows: Boolean)
     extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = spec.outputSchema
   override def toBatch: Batch = this
 
-  /** Conservative upper bound: pre-aggregated output can't exceed the
-    * input bytes of the columns it reads. */
+  /** Collection size for Catalyst's join planning: data bytes scaled by
+    * the projected-column fraction (the same heuristic Spark's own
+    * FileScan uses), plus an extrapolated row count where it applies.
+    * Without this a DSv2 source defaults to "unknown = never
+    * broadcast". */
   override def estimateStatistics(): Statistics = {
-    val (totalBytes, _) = DocstoreTable.estimateStats(opts)
+    val (totalBytes, rows) = DocstoreTable.estimateStats(opts)
     val frac =
       if (fullSchema.isEmpty) 1.0
-      else math.max(1, spec.outputSchema.length).toDouble / fullSchema.length
+      else math.max(1, readSchema().length).toDouble / fullSchema.length
     val size = math.max(1L, (totalBytes * frac).toLong)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(size)
       override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
+        rows.filter(_ => reportsRows).map(java.util.OptionalLong.of)
+          .getOrElse(java.util.OptionalLong.empty())
     }
   }
+
+  /** Snapshot isolation (the analog of the reference's per-query
+    * transaction snapshot, reference src/mongo_transaction.cpp:1): the
+    * file listing — name AND length — is pinned on first use for this
+    * Scan's lifetime, so AQE re-planning, task retries, and speculative
+    * re-execution inside one query all read the same input set even if a
+    * concurrent append or `$merge` commits mid-query. A new query (new
+    * Scan) sees the new state. */
+  private lazy val snapshotFiles: Seq[(String, Long)] =
+    DocstoreTable.listFiles(opts)
+
+  override def planInputPartitions(): Array[InputPartition] =
+    DocstoreTable.planSplits(snapshotFiles, opts.splitSize).toArray
+}
+
+class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
+    filters: Array[Filter], opts: DocstoreOptions,
+    explicitPaths: Map[String, Array[String]] = Map.empty)
+    extends DocstoreBatchScan(fullSchema, opts, reportsRows = false) {
+  // size stats are a conservative upper bound: pre-aggregated output
+  // can't exceed the input bytes of the columns it reads
+  override def readSchema(): StructType = spec.outputSchema
   override def description(): String =
     s"docstore ${opts.path} PushedFilters: [${filters.mkString(", ")}], " +
       s"PushedAggregates: [${spec.aggs.map(a => s"${a.op}(${Option(a.field).map(_.name).getOrElse("*")})").mkString(", ")}], " +
       s"PushedGroupBy: [${spec.groupBy.map(_.name).mkString(", ")}]"
-
-  // pinned like DocstoreScan.snapshotFiles (per-query snapshot isolation)
-  private lazy val snapshotFiles: Seq[(String, Long)] =
-    DocstoreTable.listFiles(opts)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val split = opts.splitSize
-    DocstoreTable.planSplits(snapshotFiles, split).toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreAggReaderFactory(fullSchema, spec, filters, opts.schemaMode,
@@ -535,7 +553,8 @@ class DocstoreAggReader(p: DocstorePartition, fullSchema: StructType,
                       val v = row.get(ord, a.field.dataType)
                       accs(i) =
                         if (accs(i) == null) v
-                        else if (cmpVals(v, accs(i)) < 0 == (a.op == "min")) v
+                        else if (RowOrdering.compareValues(v, accs(i)) < 0 ==
+                          (a.op == "min")) v
                         else accs(i)
                     }
                 }
@@ -571,15 +590,6 @@ class DocstoreAggReader(p: DocstorePartition, fullSchema: StructType,
     }
   }
 
-  private def cmpVals(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long)             => java.lang.Long.compare(x, y)
-    case (x: Double, y: Double)         => java.lang.Double.compare(x, y)
-    case (x: Int, y: Int)               => Integer.compare(x, y)
-    case (x: UTF8String, y: UTF8String) => x.compareTo(y)
-    case (x: Boolean, y: Boolean)       => java.lang.Boolean.compare(x, y)
-    case _ => 0
-  }
-
   override def next(): Boolean = {
     if (iter == null) iter = accumulate()
     if (iter.hasNext) { current = iter.next(); true } else false
@@ -592,8 +602,8 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
     filters: Array[Filter], limit: Int, opts: DocstoreOptions,
     topN: Option[TopNSpec] = None,
     explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends Scan with Batch
-    with SupportsReportStatistics with SupportsRuntimeFiltering {
+    extends DocstoreBatchScan(fullSchema, opts, reportsRows = true)
+    with SupportsRuntimeFiltering {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 
   // Runtime filters Spark injects after planning (the DSv2 dynamic-
@@ -610,26 +620,7 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
   override def filter(dynamic: Array[Filter]): Unit =
     runtimeFilters = dynamic.filter(FilterEval.supports)
 
-  /** Collection size for Catalyst's join planning: data bytes scaled by
-    * the projected-column fraction (the same heuristic Spark's own
-    * FileScan uses), plus an extrapolated row count. Without this a DSv2
-    * source defaults to "unknown = never broadcast". */
-  override def estimateStatistics(): Statistics = {
-    val (totalBytes, rows) = DocstoreTable.estimateStats(opts)
-    val frac =
-      if (fullSchema.isEmpty) 1.0
-      else math.max(1, required.length).toDouble / fullSchema.length
-    val size = math.max(1L, (totalBytes * frac).toLong)
-    new Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(size)
-      override def numRows(): java.util.OptionalLong =
-        rows.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
-    }
-  }
-
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
   override def description(): String =
     s"docstore ${opts.path} PushedFilters: [${filters.mkString(", ")}], " +
       s"ReadSchema: ${required.simpleString}" +
@@ -639,21 +630,6 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
         .getOrElse("") +
       (if (runtimeFilters.nonEmpty)
         s", RuntimeFilters: [${runtimeFilters.mkString(", ")}]" else "")
-
-  /** Snapshot isolation (the analog of the reference's per-query
-    * transaction snapshot, reference src/mongo_transaction.cpp:1): the
-    * file listing — name AND length — is pinned on first use for this
-    * Scan's lifetime, so AQE re-planning, task retries, and speculative
-    * re-execution inside one query all read the same input set even if a
-    * concurrent append or `$merge` commits mid-query. A new query (new
-    * Scan) sees the new state. */
-  private lazy val snapshotFiles: Seq[(String, Long)] =
-    DocstoreTable.listFiles(opts)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val split = opts.splitSize
-    DocstoreTable.planSplits(snapshotFiles, split).toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreReaderFactory(fullSchema, required, filters ++ runtimeFilters,
@@ -881,20 +857,27 @@ class RowOrdering(keys: Seq[SortKey], schema: StructType)
         else if (an) { if (k.nullsFirst) -1 else 1 }
         else if (bn) { if (k.nullsFirst) 1 else -1 }
         else {
-          val raw = (a.get(o, k.field.dataType), b.get(o, k.field.dataType)) match {
-            case (x: Long, y: Long)             => java.lang.Long.compare(x, y)
-            case (x: Double, y: Double)         => java.lang.Double.compare(x, y)
-            case (x: Int, y: Int)               => Integer.compare(x, y)
-            case (x: UTF8String, y: UTF8String) => x.compareTo(y)
-            case (x: Boolean, y: Boolean)       => java.lang.Boolean.compare(x, y)
-            case _                              => 0
-          }
+          val raw = RowOrdering.compareValues(
+            a.get(o, k.field.dataType), b.get(o, k.field.dataType))
           if (k.ascending) raw else -raw
         }
       if (c != 0) return c
       i += 1
     }
     0
+  }
+}
+
+object RowOrdering {
+  /** Non-null value order shared by pushed TopN and the pushed MIN/MAX
+    * aggregates; unsupported type pairs compare equal. */
+  def compareValues(a: Any, b: Any): Int = (a, b) match {
+    case (x: Long, y: Long)             => java.lang.Long.compare(x, y)
+    case (x: Double, y: Double)         => java.lang.Double.compare(x, y)
+    case (x: Int, y: Int)               => Integer.compare(x, y)
+    case (x: UTF8String, y: UTF8String) => x.compareTo(y)
+    case (x: Boolean, y: Boolean)       => java.lang.Boolean.compare(x, y)
+    case _                              => 0
   }
 }
 

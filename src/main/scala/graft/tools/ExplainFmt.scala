@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-15 plan-artifact dumper: writes `.explain("formatted")` output
   * for the listed keys to `<outDir>/<key>_<tag>.txt` — the
   * before/after evidence files the optimization round commits under
@@ -13,12 +11,7 @@ object ExplainFmt {
     val outDir = args(1)
     val tag = args(2)
     val keys = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     graft.operators.DocstoreOps.ensureEventDocs(spark, sfDir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

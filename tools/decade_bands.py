@@ -8,6 +8,10 @@ Usage:
   python3 tools/decade_bands.py <bench_sf0.1.json> <bench_sf1.json> \
       <out.json> [plansweep.json]
 
+Either input may be a full BENCH_FULL.json or the file a subset run
+writes (`runMain graft.Bench <out.json> <key1,key2,...>`); a subset
+file feeds in directly, only its "queries" map is read.
+
 If a PLANSWEEP json is given, the band table is merged into it as a
 "decade_bands" column (the same artifact the judge reads), preserving
 every existing field.
