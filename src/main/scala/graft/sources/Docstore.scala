@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -37,11 +37,18 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design: files are split into newline-aligned byte ranges (the
   * standard Hadoop text-input contract), so one 1 TB collection file
-  * becomes ~8000 parallel partitions instead of one task; filters are
-  * evaluated during the scan *before* row materialization downstream,
-  * projection prunes unread doc paths, and LIMIT caps each reader. All
-  * three pushdowns are visible in `explain()` like the reference's
-  * `$match`/projection/`$limit` pipeline stages.
+  * becomes ~8000 parallel partitions instead of one task; projection
+  * prunes unread doc paths, and LIMIT caps each reader. All pushdowns are
+  * visible in `explain()` like the reference's `$match`/projection/
+  * `$limit` pipeline stages.
+  *
+  * One reader serves every scan, batch and streaming: each split's lines
+  * convert to rows and pass the pushed filters, which run as Catalyst's
+  * own generated predicate (see [[DocstoreFilters]]), before a row is
+  * emitted. The rows then leave as they are (with the LIMIT), through a
+  * bounded TopN heap ordered by Catalyst's `RowOrdering`, or into the
+  * in-reader `$group` hash aggregate, whose MIN/MAX compare with
+  * Catalyst's interpreted ordering of the column type.
   */
 class DocstoreSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -85,8 +92,23 @@ final case class DocstoreOptions(raw: Map[String, String]) {
   def schemaMode: String = m.getOrElse("schemamode", "permissive").toLowerCase
   def flatten: Boolean = m.getOrElse("flatten", "true").toBoolean
   def splitSize: Long = m.getOrElse("splitsize", (128L * 1024 * 1024).toString).toLong
+
+  // The one value validator of every entry point (reader, writer, ATTACH):
+  // a bad value fails here, naming the option — zero and overflow
+  // included (splitsize 0 would step-by-0 in the planner)
+  private def positive(k: String, max: Long): Unit = m.get(k).foreach { v =>
+    val ok = try { val n = v.toLong; n > 0 && n <= max }
+             catch { case _: NumberFormatException => false }
+    require(ok, s"docstore: $k must be a positive integer, got '$v'")
+  }
+  positive("samplesize", Int.MaxValue) // parsed as Int downstream
+  positive("splitsize", Long.MaxValue)
+  m.get("flatten").foreach(v => require(
+    Seq("true", "false").contains(v.toLowerCase),
+    s"docstore: flatten must be true or false, got '$v'"))
   require(Seq("permissive", "dropmalformed", "failfast").contains(schemaMode),
-    s"docstore: bad schemamode '$schemaMode'")
+    s"docstore: bad schemamode '${m("schemamode")}' " +
+      "(permissive | dropmalformed | failfast)")
 }
 
 object DocstoreTable {
@@ -179,13 +201,6 @@ object DocstoreTable {
         s"docstore __schema: column '$col' has unsupported type '$other'")
     }
 
-  /** Driver-side size estimate for `SupportsReportStatistics`: total data
-    * bytes plus a row count extrapolated from the average UTF-8 byte size
-    * of the first `samplesize` lines. At 100 TB this is one file listing
-    * + one tiny read — the same cost the reference pays to sample for
-    * schema inference — and it is what lets Catalyst pick a broadcast
-    * join for small collections instead of defaulting DSv2 sources to
-    * "unknown = huge". */
   /** Memo for sampled row-size stats, keyed by the collection's file-set
     * fingerprint. Catalyst may ask for statistics several times per
     * planning pass (and once per query on a reused table); the listing
@@ -204,29 +219,25 @@ object DocstoreTable {
     h
   }
 
+  /** Driver-side size estimate for `SupportsReportStatistics`: total data
+    * bytes plus a row count extrapolated from the average UTF-8 byte size
+    * of the first `samplesize` lines. At 100 TB this is one file listing
+    * + one tiny read — the same cost the reference pays to sample for
+    * schema inference — and it is what lets Catalyst pick a broadcast
+    * join for small collections instead of defaulting DSv2 sources to
+    * "unknown = huge". */
   def estimateStats(opts: DocstoreOptions): (Long, Option[Long]) = {
     val files = listFiles(opts)
     val sig = fileSig(files)
     val cached = statsCache.get(opts.path)
     if (cached != null && cached._1 == sig) return cached._2
     val totalBytes = files.map(_._2).sum
-    val conf = new Configuration()
     var sampled = 0L
     var sampledBytes = 0L
-    val it = files.iterator
-    while (sampled < opts.sampleSize && it.hasNext) {
-      val (file, len) = it.next()
-      val reader = new LineRangeReader(file, 0, len, conf)
-      try {
-        var line = reader.next()
-        while (sampled < opts.sampleSize && line != null) {
-          if (line.nonEmpty) {
-            sampled += 1
-            sampledBytes += line.getBytes(StandardCharsets.UTF_8).length + 1L
-          }
-          line = if (sampled < opts.sampleSize) reader.next() else null
-        }
-      } finally reader.close()
+    sampleLines(opts, files) { line =>
+      sampled += 1
+      sampledBytes += line.getBytes(StandardCharsets.UTF_8).length + 1L
+      true
     }
     val rows =
       if (sampled == 0 || sampledBytes == 0) None
@@ -238,25 +249,33 @@ object DocstoreTable {
   }
 
   def sampleDocs(opts: DocstoreOptions): Seq[DocValue.DDoc] = {
-    val conf = new Configuration()
     val docs = Seq.newBuilder[DocValue.DDoc]
+    sampleLines(opts, listFiles(opts)) { line =>
+      try { docs += ExtJson.parse(line); true }
+      catch { case _: Exception => false } // malformed line: skip in sampling
+    }
+    docs.result()
+  }
+
+  /** Feeds the collection's non-empty lines, in file order, to `take`
+    * until it has accepted `samplesize` of them (it returns whether the
+    * line counts); stops reading at that point. */
+  private def sampleLines(opts: DocstoreOptions, files: Seq[(String, Long)])(
+      take: String => Boolean): Unit = {
+    val conf = new Configuration()
     var remaining = opts.sampleSize
-    val it = listFiles(opts).iterator
+    val it = files.iterator
     while (remaining > 0 && it.hasNext) {
       val (file, len) = it.next()
       val reader = new LineRangeReader(file, 0, len, conf)
       try {
         var line = reader.next()
         while (remaining > 0 && line != null) {
-          if (line.nonEmpty) {
-            try { docs += ExtJson.parse(line); remaining -= 1 }
-            catch { case _: Exception => () } // malformed line: skip in sampling
-          }
+          if (line.nonEmpty && take(line)) remaining -= 1
           line = if (remaining > 0) reader.next() else null
         }
       } finally reader.close()
     }
-    docs.result()
   }
 }
 
@@ -327,7 +346,8 @@ class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions)
   // isPartiallyPushed (shared by Limit + TopN): defined once below
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition(FilterEval.supports)
+    val (supported, residual) =
+      filters.partition(DocstoreFilters.toCatalyst(_, fullSchema).isDefined)
     pushed = supported
     residual // Spark re-evaluates these above the scan
   }
@@ -469,133 +489,8 @@ class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
       s"PushedGroupBy: [${spec.groupBy.map(_.name).mkString(", ")}]"
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DocstoreAggReaderFactory(fullSchema, spec, filters, opts.schemaMode,
-      opts.flatten, explicitPaths)
-}
-
-class DocstoreAggReaderFactory(fullSchema: StructType, spec: AggSpec,
-    filters: Array[Filter], schemaMode: String, flatten: Boolean,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new DocstoreAggReader(p.asInstanceOf[DocstorePartition], fullSchema, spec,
-      filters, schemaMode, flatten, explicitPaths)
-}
-
-/** Per-partition hash aggregation inside the reader — the `$group`
-  * analog. State ∝ distinct groups in this split (bounded like any
-  * map-side combine); docs stream through without materializing
-  * non-aggregated columns. */
-class DocstoreAggReader(p: DocstorePartition, fullSchema: StructType,
-    spec: AggSpec, filters: Array[Filter], schemaMode: String, flatten: Boolean,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
-
-  // read only the columns aggregation + filters touch
-  private val filterCols = filters.flatMap(FilterEval.references).distinct
-  private val neededNames = (spec.groupBy.map(_.name) ++
-    spec.aggs.flatMap(a => Option(a.field).map(_.name)) ++ filterCols).distinct
-  private val evalSchema =
-    if (schemaMode == "permissive")
-      StructType(fullSchema.fields.filter(f => neededNames.contains(f.name)))
-    else fullSchema
-  private val groupOrds = spec.groupBy.map(f => evalSchema.fieldIndex(f.name)).toArray
-  private val aggOrds = spec.aggs.map(a =>
-    if (a.field == null) -1 else evalSchema.fieldIndex(a.field.name)).toArray
-  private val conv = new DocRowConverter(evalSchema, schemaMode, flatten,
-    explicitPaths)
-  private val eval = new FilterEval(evalSchema, filters)
-
-  private var iter: Iterator[InternalRow] = _
-  private var current: InternalRow = _
-
-  private def accumulate(): Iterator[InternalRow] = {
-    val lines = new LineRangeReader(p.file, p.start, p.length, new Configuration())
-    val groups = new java.util.HashMap[Seq[Any], Array[Any]]()
-    try {
-      var line = lines.next()
-      while (line != null) {
-        if (line.nonEmpty) {
-          conv.convert(line) match {
-            case Some(row) if eval.matches(row) =>
-              val key: Seq[Any] = groupOrds.map(o =>
-                if (row.isNullAt(o)) null else row.get(o, evalSchema(o).dataType)).toSeq
-              var accs = groups.get(key)
-              if (accs == null) {
-                accs = new Array[Any](spec.aggs.length)
-                var i = 0
-                while (i < accs.length) {
-                  accs(i) = if (spec.aggs(i).op.startsWith("count")) 0L else null
-                  i += 1
-                }
-                groups.put(key, accs)
-              }
-              var i = 0
-              while (i < spec.aggs.length) {
-                val a = spec.aggs(i)
-                val ord = aggOrds(i)
-                a.op match {
-                  case "count_star" => accs(i) = accs(i).asInstanceOf[Long] + 1L
-                  case "count" =>
-                    if (!row.isNullAt(ord)) accs(i) = accs(i).asInstanceOf[Long] + 1L
-                  case "sum" =>
-                    if (!row.isNullAt(ord)) {
-                      val v = row.get(ord, a.field.dataType)
-                      accs(i) = (accs(i), v) match {
-                        case (null, x)              => x
-                        case (s: Long, x: Long)     => s + x
-                        case (s: Double, x: Double) => s + x
-                        case (s, _)                 => s
-                      }
-                    }
-                  case "min" | "max" =>
-                    if (!row.isNullAt(ord)) {
-                      val v = row.get(ord, a.field.dataType)
-                      accs(i) =
-                        if (accs(i) == null) v
-                        else if (RowOrdering.compareValues(v, accs(i)) < 0 ==
-                          (a.op == "min")) v
-                        else accs(i)
-                    }
-                }
-                i += 1
-              }
-            case _ => ()
-          }
-        }
-        line = lines.next()
-      }
-    } finally lines.close()
-    // global aggregation: always emit one row so COUNT over an empty
-    // split still contributes its zero
-    if (groups.isEmpty && spec.groupBy.isEmpty) {
-      val zero = new Array[Any](spec.aggs.length)
-      var i = 0
-      while (i < zero.length) {
-        zero(i) = if (spec.aggs(i).op.startsWith("count")) 0L else null
-        i += 1
-      }
-      groups.put(Seq.empty, zero)
-    }
-    import scala.jdk.CollectionConverters._
-    groups.entrySet().iterator().asScala.map { e =>
-      val out = new GenericInternalRow(spec.groupBy.length + spec.aggs.length)
-      var i = 0
-      while (i < spec.groupBy.length) { out.update(i, e.getKey.apply(i)); i += 1 }
-      var j = 0
-      while (j < spec.aggs.length) {
-        out.update(spec.groupBy.length + j, e.getValue()(j)); j += 1
-      }
-      out
-    }
-  }
-
-  override def next(): Boolean = {
-    if (iter == null) iter = accumulate()
-    if (iter.hasNext) { current = iter.next(); true } else false
-  }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
+    new DocstoreReaderFactory(fullSchema, new StructType(), filters,
+      opts.schemaMode, opts.flatten, explicitPaths, agg = Some(spec))
 }
 
 class DocstoreScan(fullSchema: StructType, required: StructType,
@@ -618,7 +513,7 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
     required.fieldNames.map(Expressions.column)
 
   override def filter(dynamic: Array[Filter]): Unit =
-    runtimeFilters = dynamic.filter(FilterEval.supports)
+    runtimeFilters = dynamic.filter(DocstoreFilters.toCatalyst(_, fullSchema).isDefined)
 
   override def readSchema(): StructType = required
   override def description(): String =
@@ -633,7 +528,7 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreReaderFactory(fullSchema, required, filters ++ runtimeFilters,
-      limit, opts.schemaMode, opts.flatten, topN, explicitPaths)
+      opts.schemaMode, opts.flatten, explicitPaths, limit, topN)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -693,8 +588,8 @@ class DocstoreMicroBatchStream(fullSchema: StructType, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DocstoreReaderFactory(fullSchema, required, filters, -1,
-      opts.schemaMode, opts.flatten, None, explicitPaths)
+    new DocstoreReaderFactory(fullSchema, required, filters,
+      opts.schemaMode, opts.flatten, explicitPaths)
 }
 
 /** Micro-batch offset: first `n` files of the sorted listing, plus the
@@ -731,52 +626,158 @@ object FileCountOffset {
 final case class DocstorePartition(file: String, start: Long, length: Long)
   extends InputPartition
 
-class DocstoreReaderFactory(fullSchema: StructType, required: StructType,
-    filters: Array[Filter], limit: Int, schemaMode: String, flatten: Boolean,
-    topN: Option[TopNSpec] = None,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val dp = p.asInstanceOf[DocstorePartition]
-    new DocstoreReader(dp, fullSchema, required, filters, limit, schemaMode,
-      flatten, topN, explicitPaths)
+/** Pushed `sources.Filter` → Catalyst predicate — the reader's `$match`
+  * (reference: src/mongo_filter_pushdown.cpp:1), over the same grammar
+  * the reference pushes: comparisons, IS [NOT] NULL, IN, AND/OR/NOT, and
+  * string prefix/suffix/contains (reference: src/mongo_expr_pushdown.cpp:1).
+  * The one translation behind `pushFilters`, runtime filtering and the
+  * reader, so a filter is pushed exactly when the reader can run it, and
+  * it runs with Spark's own SQL semantics (three-valued logic, value
+  * order) — Spark never re-checks a filter a source accepted.
+  */
+object DocstoreFilters {
+  import org.apache.spark.sql.catalyst.{expressions => E}
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+
+  /** `f` over `schema`'s row layout, or None when Spark must evaluate it
+    * above the scan: every reference must be a top-level column and every
+    * literal of that column's own type (a null literal takes the column's
+    * type). */
+  def toCatalyst(f: Filter, schema: StructType): Option[E.Expression] = {
+    def col(name: String): Option[E.BoundReference] =
+      (UnresolvedAttribute.parseAttributeName(name) match {
+        case Seq(top) => Some(schema.fieldNames.indexOf(top)).filter(_ >= 0)
+        case _        => None // a struct sub-field
+      }).map(i => E.BoundReference(i, schema(i).dataType, nullable = true))
+    def lit(c: E.BoundReference, v: Any): Option[E.Literal] =
+      if (v == null) Some(E.Literal.create(null, c.dataType))
+      else scala.util.Try(E.Literal(v)).toOption.filter(_.dataType == c.dataType)
+    def cmp(a: String, v: Any)(mk: (E.Expression, E.Expression) => E.Expression) =
+      for (c <- col(a); l <- lit(c, v)) yield mk(c, l)
+    def both(l: Filter, r: Filter)(mk: (E.Expression, E.Expression) => E.Expression) =
+      for (x <- toCatalyst(l, schema); y <- toCatalyst(r, schema)) yield mk(x, y)
+    f match {
+      case EqualTo(a, v)            => cmp(a, v)(E.EqualTo(_, _))
+      case EqualNullSafe(a, v)      => cmp(a, v)(E.EqualNullSafe(_, _))
+      case GreaterThan(a, v)        => cmp(a, v)(E.GreaterThan(_, _))
+      case GreaterThanOrEqual(a, v) => cmp(a, v)(E.GreaterThanOrEqual(_, _))
+      case LessThan(a, v)           => cmp(a, v)(E.LessThan(_, _))
+      case LessThanOrEqual(a, v)    => cmp(a, v)(E.LessThanOrEqual(_, _))
+      case StringStartsWith(a, p)   => cmp(a, p)(E.StartsWith(_, _))
+      case StringEndsWith(a, p)     => cmp(a, p)(E.EndsWith(_, _))
+      case StringContains(a, p)     => cmp(a, p)(E.Contains(_, _))
+      case In(a, vs) => col(a).flatMap { c =>
+        val ls = vs.toSeq.map(lit(c, _))
+        if (ls.forall(_.isDefined)) Some(E.In(c, ls.flatten)) else None
+      }
+      case IsNull(a)    => col(a).map(E.IsNull(_))
+      case IsNotNull(a) => col(a).map(E.IsNotNull(_))
+      case And(l, r)    => both(l, r)(E.And(_, _))
+      case Or(l, r)     => both(l, r)(E.Or(_, _))
+      case Not(c)       => toCatalyst(c, schema).map(E.Not(_))
+      case _            => None
+    }
   }
+
+  /** The conjunction of already-pushed filters over `schema`. */
+  def conjunction(filters: Seq[Filter], schema: StructType): Option[E.Expression] =
+    filters.map(f => toCatalyst(f, schema).getOrElse(throw new IllegalStateException(
+      s"docstore: pushed filter $f does not translate"))).reduceOption(E.And(_, _))
 }
 
-class DocstoreReader(p: DocstorePartition, fullSchema: StructType,
-    required: StructType, filters: Array[Filter], limit: Int,
-    schemaMode: String, flatten: Boolean, topN: Option[TopNSpec] = None,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
+/** The one reader factory of every docstore scan, batch and streaming.
+  * Each split's reader yields the converted docs that pass the pushed
+  * filters, consumed one of three ways: as rows of `required` (at most
+  * `limit`, -1 = no cap), as the split's top `topN.n` rows, or as the
+  * split's partial aggregates under `agg`. */
+class DocstoreReaderFactory(fullSchema: StructType, val required: StructType,
+    filters: Array[Filter], val schemaMode: String, val flatten: Boolean,
+    val explicitPaths: Map[String, Array[String]], val limit: Int = -1,
+    val topN: Option[TopNSpec] = None, val agg: Option[AggSpec] = None)
+    extends PartitionReaderFactory {
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 
   // Filters may reference columns outside the projection (SELECT a WHERE
-  // b>0): evaluate on an eval-schema = required ∪ filter columns (∪ sort
-  // columns for TopN), then project down to `required` ordinals.
+  // b>0): evaluate on an eval schema = required ∪ filter ∪ sort ∪
+  // aggregate columns, then project down to `required` ordinals.
   // dropmalformed/failfast must validate EVERY column regardless of
   // pruning — row-level semantics (a pruned-away mismatch still poisons
   // the row, like the reference's schema_mode) — so they convert the
   // full schema.
-  private val filterCols = filters.flatMap(FilterEval.references).distinct
-  private val sortCols = topN.toSeq.flatMap(_.keys.map(_.field.name))
-  private val evalSchema =
-    if (schemaMode == "permissive")
-      StructType(fullSchema.fields.filter(f =>
-        required.fieldNames.contains(f.name) || filterCols.contains(f.name) ||
-          sortCols.contains(f.name)))
-    else fullSchema
-  private val outOrdinals = required.fieldNames.map(evalSchema.fieldIndex)
-  private val conv = new DocRowConverter(evalSchema, schemaMode, flatten,
-    explicitPaths)
-  private val eval = new FilterEval(evalSchema, filters)
+  val evalSchema: StructType =
+    if (schemaMode != "permissive") fullSchema
+    else {
+      val filterCols = DocstoreFilters.conjunction(filters.toSeq, fullSchema).toSeq
+        .flatMap(_.collect { case b: BoundReference => fullSchema(b.ordinal).name })
+      val needed = (required.fieldNames ++ filterCols ++
+        topN.toSeq.flatMap(_.keys.map(_.field.name)) ++
+        agg.toSeq.flatMap(a => a.groupBy ++ a.aggs.flatMap(x => Option(x.field)))
+          .map(_.name)).toSet
+      StructType(fullSchema.fields.filter(f => needed(f.name)))
+    }
+  /** Pushed filters over the eval schema, compiled in each reader. */
+  val predicate: Option[Expression] =
+    DocstoreFilters.conjunction(filters.toSeq, evalSchema)
+  val outOrdinals: Array[Int] = required.fieldNames.map(evalSchema.fieldIndex)
 
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new DocstoreReader(p.asInstanceOf[DocstorePartition], this)
+}
+
+class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
+    extends PartitionReader[InternalRow] {
+  import org.apache.spark.sql.catalyst.{expressions => E}
+  import f.{evalSchema, outOrdinals}
+
+  private val conv = new DocRowConverter(evalSchema, f.schemaMode, f.flatten,
+    f.explicitPaths)
+  // one compile per distinct predicate: Spark's codegen cache serves
+  // every later split of the scan
+  private val pred: E.BasePredicate = f.predicate.map { e =>
+    val compiled = E.Predicate.create(e); compiled.initialize(0); compiled
+  }.orNull
   private val lines = new LineRangeReader(p.file, p.start, p.length, new Configuration())
-  private var current: InternalRow = _
-  private var emitted = 0
-  private var topNIter: Iterator[InternalRow] = _
 
+  /** The split's docs that convert (malformed ones dropped per schema
+    * mode) and pass the pushed filters. */
+  private val docs: Iterator[InternalRow] = new Iterator[InternalRow] {
+    private var pending: InternalRow = _
+    override def hasNext: Boolean = {
+      while (pending == null) {
+        val line = lines.next()
+        if (line == null) return false
+        if (line.nonEmpty) conv.convert(line) match {
+          case Some(row) if pred == null || pred.eval(row) => pending = row
+          case _ => ()
+        }
+      }
+      true
+    }
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("end of docstore split")
+      val row = pending
+      pending = null
+      row
+    }
+  }
+
+  private lazy val out: Iterator[InternalRow] = (f.agg, f.topN) match {
+    case (Some(spec), _) => aggregate(spec)
+    case (_, Some(spec)) => top(spec).iterator.map(project)
+    case _ =>
+      val rows = docs.map(project)
+      if (f.limit >= 0) rows.take(f.limit) else rows
+  }
+  private var current: InternalRow = _
+
+  override def next(): Boolean =
+    if (out.hasNext) { current = out.next(); true } else false
+  override def get(): InternalRow = current
+  override def close(): Unit = lines.close()
+
+  private val projects = !outOrdinals.sameElements(evalSchema.indices)
   private def project(row: InternalRow): InternalRow =
-    if (outOrdinals.length == evalSchema.length &&
-      outOrdinals.zipWithIndex.forall(t => t._1 == t._2)) row
+    if (!projects) row
     else {
       val out = new GenericInternalRow(outOrdinals.length)
       var i = 0
@@ -787,97 +788,72 @@ class DocstoreReader(p: DocstorePartition, fullSchema: StructType,
       out
     }
 
-  override def next(): Boolean = topN match {
-    case Some(spec) => nextTopN(spec)
-    case None       => nextStreaming()
-  }
-
-  private def nextStreaming(): Boolean = {
-    if (limit >= 0 && emitted >= limit) return false
-    var line = lines.next()
-    while (line != null) {
-      if (line.nonEmpty) {
-        conv.convert(line) match {
-          case Some(row) if eval.matches(row) =>
-            current = project(row)
-            emitted += 1
-            return true
-          case _ => () // filtered out, or dropped malformed
-        }
-      }
-      line = lines.next()
+  /** The split's best n rows, best first: the per-split half of the
+    * pushed `ORDER BY … LIMIT n`, a bounded heap (memory O(n), not
+    * O(split rows)). Ties at the cut stay arbitrary; Spark's final
+    * TakeOrdered breaks them exactly as an un-pushed plan would. */
+  private def top(spec: TopNSpec): Array[InternalRow] = {
+    val ord = E.RowOrdering.create(spec.keys.map { k =>
+      E.SortOrder(
+        E.BoundReference(evalSchema.fieldIndex(k.field.name), k.field.dataType,
+          nullable = true),
+        if (k.ascending) E.Ascending else E.Descending,
+        if (k.nullsFirst) E.NullsFirst else E.NullsLast, Seq.empty)
+    }, Seq.empty)
+    // max-heap: its head is the worst row kept so far
+    val heap = new java.util.PriorityQueue[InternalRow](spec.n + 1, ord.reverse)
+    docs.foreach { row =>
+      if (heap.size < spec.n) heap.add(row)
+      else if (ord.lt(row, heap.peek)) { heap.poll(); heap.add(row) }
     }
-    false
+    val best = new Array[InternalRow](heap.size)
+    var i = best.length - 1
+    while (i >= 0) { best(i) = heap.poll(); i -= 1 }
+    best
   }
 
-  /** Bounded heap of the split's best n rows — the per-split half of the
-    * pushed `ORDER BY … LIMIT n` (memory O(n), not O(split rows)). */
-  private def nextTopN(spec: TopNSpec): Boolean = {
-    if (topNIter == null) {
-      val cmp = new RowOrdering(spec.keys, evalSchema)
-      // JDK PriorityQueue as a max-heap of the current worst-of-best
-      val heap = new java.util.PriorityQueue[InternalRow](spec.n + 1, cmp.reversed())
-      var line = lines.next()
-      while (line != null) {
-        if (line.nonEmpty) {
-          conv.convert(line) match {
-            case Some(row) if eval.matches(row) =>
-              heap.add(row.copy())
-              if (heap.size() > spec.n) heap.poll()
-            case _ => ()
+  /** Per-split hash aggregation — the `$group` analog. State ∝ distinct
+    * groups in this split (bounded like any map-side combine); Spark
+    * merges the splits. A global aggregate emits its row even for an
+    * empty split, so COUNT there still contributes its zero. */
+  private def aggregate(spec: AggSpec): Iterator[InternalRow] = {
+    val groupOrds = spec.groupBy.map(g => evalSchema.fieldIndex(g.name))
+    val ops = spec.aggs.map(_.op).toArray
+    val aggOrds = spec.aggs.map(a =>
+      if (a.field == null) -1 else evalSchema.fieldIndex(a.field.name)).toArray
+    val types = spec.aggs.map(a => Option(a.field).map(_.dataType).orNull).toArray
+    val orderings = types.map(t =>
+      if (t == null) null else TypeUtils.getInterpretedOrdering(t))
+    def zero(): Array[Any] = ops.map(op => if (op.startsWith("count")) 0L else null)
+    val groups = new java.util.HashMap[Seq[Any], Array[Any]]()
+    docs.foreach { row =>
+      val key: Seq[Any] = groupOrds.map(o =>
+        if (row.isNullAt(o)) null else row.get(o, evalSchema(o).dataType))
+      val accs = groups.computeIfAbsent(key, _ => zero())
+      var i = 0
+      while (i < accs.length) {
+        val o = aggOrds(i)
+        if (o < 0) accs(i) = accs(i).asInstanceOf[Long] + 1L // count(*)
+        else if (!row.isNullAt(o)) {
+          val v = row.get(o, types(i))
+          val acc = accs(i)
+          accs(i) = ops(i) match {
+            case "count" => acc.asInstanceOf[Long] + 1L
+            case "sum" => (acc, v) match {
+              case (s: Long, x: Long)     => s + x
+              case (s: Double, x: Double) => s + x
+              case _                      => v // first value
+            }
+            case "min" => if (acc == null || orderings(i).lt(v, acc)) v else acc
+            case "max" => if (acc == null || orderings(i).gt(v, acc)) v else acc
           }
         }
-        line = lines.next()
+        i += 1
       }
-      val buf = new Array[InternalRow](heap.size())
-      var i = buf.length - 1
-      while (i >= 0) { buf(i) = heap.poll(); i -= 1 }
-      topNIter = buf.iterator.map(project)
     }
-    if (topNIter.hasNext) { current = topNIter.next(); true } else false
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = lines.close()
-}
-
-/** Total ordering over eval-schema rows for pushed TopN (direction +
-  * null ordering per key; ties stay — Spark's final TakeOrdered breaks
-  * them exactly as an un-pushed plan would). */
-class RowOrdering(keys: Seq[SortKey], schema: StructType)
-    extends java.util.Comparator[InternalRow] {
-  private val ords = keys.map(k => schema.fieldIndex(k.field.name)).toArray
-  override def compare(a: InternalRow, b: InternalRow): Int = {
-    var i = 0
-    while (i < ords.length) {
-      val k = keys(i); val o = ords(i)
-      val an = a.isNullAt(o); val bn = b.isNullAt(o)
-      val c =
-        if (an && bn) 0
-        else if (an) { if (k.nullsFirst) -1 else 1 }
-        else if (bn) { if (k.nullsFirst) 1 else -1 }
-        else {
-          val raw = RowOrdering.compareValues(
-            a.get(o, k.field.dataType), b.get(o, k.field.dataType))
-          if (k.ascending) raw else -raw
-        }
-      if (c != 0) return c
-      i += 1
-    }
-    0
-  }
-}
-
-object RowOrdering {
-  /** Non-null value order shared by pushed TopN and the pushed MIN/MAX
-    * aggregates; unsupported type pairs compare equal. */
-  def compareValues(a: Any, b: Any): Int = (a, b) match {
-    case (x: Long, y: Long)             => java.lang.Long.compare(x, y)
-    case (x: Double, y: Double)         => java.lang.Double.compare(x, y)
-    case (x: Int, y: Int)               => Integer.compare(x, y)
-    case (x: UTF8String, y: UTF8String) => x.compareTo(y)
-    case (x: Boolean, y: Boolean)       => java.lang.Boolean.compare(x, y)
-    case _                              => 0
+    if (groups.isEmpty && spec.groupBy.isEmpty) groups.put(Seq.empty, zero())
+    groups.asScala.iterator.map { case (k, accs) =>
+      new GenericInternalRow((k ++ accs).toArray[Any]) }
   }
 }
 
@@ -1001,9 +977,11 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
   /** JsonNode → Catalyst internal value for the target type; Left = type
     * mismatch. Numeric widening Long→Double allowed (Int32/Int64/Double
     * unify in the reference's lattice); StringType accepts anything via
-    * the JSON-text VARCHAR fallback. */
+    * the JSON-text VARCHAR fallback. BSON undefined (`{"$undefined":true}`)
+    * is NULL in every type, as schema inference already treats it. */
   def toInternal(n: JsonNode, dt: DataType): Either[String, Any] = {
-    if (n == null || n.isNull) return Right(null)
+    if (n == null || n.isNull || (n.isObject && n.size() == 1 && n.has("$undefined")))
+      return Right(null)
     dt match {
       case StringType =>
         if (n.isTextual) return Right(UTF8String.fromString(n.textValue()))

@@ -89,22 +89,8 @@ class FileDocstoreClient(root: String, options: Map[String, String])
     if (unknown.nonEmpty) throw new IllegalArgumentException(
       s"docstore: unknown option(s): ${unknown.toSeq.sorted.mkString(", ")} " +
         s"(supported: ${FileDocstoreClient.KnownOptions.toSeq.sorted.mkString(", ")})")
-    // value-format validation: fail ATTACH, not the first query — zero
-    // and overflow included (splitsize 0 would step-by-0 in the planner)
-    def positive(k: String, max: Long): Unit = m.get(k).foreach { v =>
-      val ok = try { val n = v.toLong; n > 0 && n <= max }
-               catch { case _: NumberFormatException => false }
-      require(ok, s"docstore: $k must be a positive integer, got '$v'")
-    }
-    positive("samplesize", Int.MaxValue) // parsed as Int downstream
-    positive("splitsize", Long.MaxValue)
-    m.get("flatten").foreach(v => require(
-      Seq("true", "false").contains(v.toLowerCase),
-      s"docstore: flatten must be true or false, got '$v'"))
-    m.get("schemamode").foreach(v => require(
-      Seq("permissive", "dropmalformed", "failfast").contains(v.toLowerCase),
-      s"docstore: bad schemamode '$v' " +
-        "(permissive | dropmalformed | failfast)"))
+    // value-format validation: fail ATTACH, not the first query
+    DocstoreOptions(m)
     val ok =
       try { val st = fs.getFileStatus(new HPath(root)); st.isDirectory }
       catch { case _: Exception => false }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -58,24 +58,12 @@ class DocstoreStreamingWrite(schema: StructType, opts: DocstoreOptions)
     new DocstoreStreamingWriterFactory(schema, opts.path)
 
   override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(opts.path).getFileSystem(new Configuration())
-    messages.collect { case m: DocstoreCommit => m }.foreach { m =>
-      val tmp = new HPath(m.tempFile)
-      val fin = new HPath(m.finalFile)
-      fs.delete(fin, false) // idempotent epoch replay
-      if (!fs.rename(tmp, fin))
-        throw new java.io.IOException(
-          s"docstore streaming commit: rename $tmp -> $fin failed")
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit = // replace = idempotent replay
+    DocstoreCommit.publish(DocstoreCommit.fileSystem(opts.path), messages)
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(opts.path).getFileSystem(new Configuration())
-    messages.collect { case m: DocstoreCommit => m }
-      .foreach(m => fs.delete(new HPath(m.tempFile), false))
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    DocstoreCommit.discard(DocstoreCommit.fileSystem(opts.path), messages)
 }
 
 class DocstoreBatchWrite(schema: StructType, opts: DocstoreOptions,
@@ -85,8 +73,7 @@ class DocstoreBatchWrite(schema: StructType, opts: DocstoreOptions,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new HPath(opts.path)
-    val fs = root.getFileSystem(new Configuration())
-    val commits = messages.collect { case m: DocstoreCommit => m }
+    val fs = DocstoreCommit.fileSystem(opts.path)
     if (truncate && fs.exists(root) && fs.getFileStatus(root).isDirectory) {
       // overwrite: old (visible, non-dot) files are removed only once every
       // task has successfully written its replacement temp file
@@ -95,23 +82,37 @@ class DocstoreBatchWrite(schema: StructType, opts: DocstoreOptions,
           !s.getPath.getName.startsWith("_"))
         .foreach(s => fs.delete(s.getPath, false))
     }
-    commits.foreach { m =>
-      val tmp = new HPath(m.tempFile)
-      val fin = new HPath(m.finalFile)
-      fs.delete(fin, false) // idempotent re-commit of a retried job
-      if (!fs.rename(tmp, fin))
-        throw new java.io.IOException(s"docstore commit: rename $tmp -> $fin failed")
-    }
+    DocstoreCommit.publish(fs, messages) // replace = idempotent re-commit
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new HPath(opts.path).getFileSystem(new Configuration())
-    messages.collect { case m: DocstoreCommit => m }
-      .foreach(m => fs.delete(new HPath(m.tempFile), false))
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    DocstoreCommit.discard(DocstoreCommit.fileSystem(opts.path), messages)
 }
 
 final case class DocstoreCommit(tempFile: String, finalFile: String)
   extends WriterCommitMessage
+
+/** The commit and abort halves shared by the batch and streaming sinks. */
+object DocstoreCommit {
+  def fileSystem(dir: String): FileSystem =
+    new HPath(dir).getFileSystem(new Configuration())
+  private def commits(messages: Array[WriterCommitMessage]) =
+    messages.collect { case m: DocstoreCommit => m }
+
+  /** Rename every task's temp file to its final name, replacing a file
+    * already there; a failed rename fails the commit. */
+  def publish(fs: FileSystem, messages: Array[WriterCommitMessage]): Unit =
+    commits(messages).foreach { m =>
+      val tmp = new HPath(m.tempFile)
+      val fin = new HPath(m.finalFile)
+      fs.delete(fin, false)
+      if (!fs.rename(tmp, fin))
+        throw new java.io.IOException(s"docstore commit: rename $tmp -> $fin failed")
+    }
+
+  /** Delete every task's temp file. */
+  def discard(fs: FileSystem, messages: Array[WriterCommitMessage]): Unit =
+    commits(messages).foreach(m => fs.delete(new HPath(m.tempFile), false))
+}
 
 /** Named (serializable) factory — ships only (schema, dir) to executors. */
 class DocstoreStreamingWriterFactory(schema: StructType, dir: String)

@@ -468,6 +468,32 @@ class DocstoreSpec extends SparkSpec {
     assert(df.filter(col("case_data_clientFullname").isNotNull).count() == 1)
   }
 
+  test("a filter on a struct sub-field stays above the scan and still matches") {
+    val dir = writeDocs("struct_filter", Seq(
+      """{"id":1,"st":{"x":1,"y":"a"}}""",
+      """{"id":2,"st":{"x":2,"y":"b"}}"""))
+    val df = spark.read.format("docstore")
+      .schema(StructType.fromDDL("id BIGINT, st STRUCT<x: BIGINT, y: STRING>"))
+      .option("path", dir).load()
+      .filter(col("st.x") === 2)
+    assert(df.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
+  test("BSON undefined reads as NULL in every type and schema mode") {
+    val dir = writeDocs("undefined", Seq(
+      """{"id":1,"s":"a","n":5}""",
+      """{"id":2,"s":{"$undefined":true},"n":{"$undefined":true}}"""))
+    for (mode <- Seq("permissive", "dropmalformed", "failfast")) {
+      val df = spark.read.format("docstore").option("path", dir)
+        .option("schemamode", mode).load()
+      assert(df.schema("s").dataType == StringType &&
+        df.schema("n").dataType == LongType, mode)
+      val got = df.orderBy("id").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[String]("s"), r.getAs[Any]("n")))
+      assert(got.toSeq == Seq((1L, "a", 5L), (2L, null, null)), mode)
+    }
+  }
+
   test("empty collection scans as zero rows (edge_cases analog)") {
     // mirrors test/sql/edge_cases/empty_collections.test
     val dir = writeDocs("empty_coll", Seq.empty)

@@ -9,8 +9,11 @@ import org.scalacheck.{Gen, rng}
 /** Property-based parity: for random collections and random predicates,
   * the docstore scan WITH pushdown must return exactly the rows a native
   * in-memory DataFrame filter returns. Spark trusts a source's accepted
-  * pushFilters — a divergence in FilterEval would silently drop or leak
-  * rows, which no example-based test reliably catches.
+  * pushFilters, which the docstore reader runs as a Catalyst predicate
+  * translated from each `sources.Filter` (`DocstoreFilters`); a wrong
+  * translation would silently drop or leak rows, which no example-based
+  * test reliably catches. The aggregate and TopN properties check the
+  * reader's in-split `$group` and bounded heap the same way.
   */
 class FilterParitySpec extends SparkSpec {
   import spark.implicits._

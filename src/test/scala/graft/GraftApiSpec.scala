@@ -247,6 +247,17 @@ class GraftApiSpec extends AnyFunSuite {
         options = Map("splitsize" -> "0"))
     }
     assert(e6.getMessage.contains("splitsize"))
+    // the reader path validates the same values at load, naming the option
+    for ((k, v) <- Seq("samplesize" -> "0", "splitsize" -> "0", "flatten" -> "yes")) {
+      val e = intercept[IllegalArgumentException] {
+        spark.read.format("docstore").option("path", docs).option(k, v).load()
+      }
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+    val e7 = intercept[IllegalArgumentException] {
+      Graft.mongoScan(spark, docs, sampleSize = 0)
+    }
+    assert(e7.getMessage.contains("samplesize"), e7.getMessage)
     // detach must EVICT the cached catalog: re-attaching the same name to
     // a different root serves the new root, not stale data
     val altRoot = "/tmp/graft_docstore/catalog_alt"
