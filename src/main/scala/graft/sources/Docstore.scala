@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
@@ -13,8 +15,9 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-import java.io.{BufferedInputStream, InputStream}
+import java.io.InputStream
 import java.nio.charset.StandardCharsets
 import java.util.{Set => JSet}
 import scala.jdk.CollectionConverters._
@@ -49,18 +52,30 @@ import scala.jdk.CollectionConverters._
   * bounded TopN heap ordered by Catalyst's `RowOrdering`, or into the
   * in-reader `$group` hash aggregate, whose MIN/MAX compare with
   * Catalyst's interpreted ordering of the column type.
+  *
+  * Hadoop configuration: the active session's (`DocstoreTable.hadoopConf`)
+  * for every listing, sample, commit and catalog call; each scan and
+  * write broadcasts it once to its tasks.
   */
 class DocstoreSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
   override def shortName(): String = "docstore"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DocstoreTable.inferSchema(DocstoreOptions(options.asScala.toMap))
+  // one provider instance serves a load's inferSchema and getTable
+  private var inferred: (StructType, DocstoreSample) = _
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    inferred = DocstoreTable.inferred(DocstoreOptions(options.asScala.toMap))
+    inferred._1
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new DocstoreTable(schema, DocstoreOptions(properties.asScala.toMap))
+      properties: java.util.Map[String, String]): Table = {
+    val opts = DocstoreOptions(properties.asScala.toMap)
+    new DocstoreTable(schema, opts, // a user-supplied schema samples for the paths alone
+      if (inferred != null && (inferred._1 eq schema)) inferred._2 else DocstoreTable.sample(opts))
+  }
 }
 
 /** Validated option bag for docstore scans/writes.
@@ -112,16 +127,36 @@ final case class DocstoreOptions(raw: Map[String, String]) {
 }
 
 object DocstoreTable {
+  /** The Hadoop conf of docstore I/O: the active session's, as Spark's own
+    * file sources read it; outside any session (a catalog client driven
+    * directly), the one Spark builds for this JVM's SparkConf. */
+  def hadoopConf(): Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sessionState.newHadoopConf())
+      .getOrElse(org.apache.spark.sql.graftshim.defaultHadoopConf())
+
+  def fileSystem(path: String): FileSystem =
+    new HPath(path).getFileSystem(hadoopConf())
+
+  /** [[hadoopConf]] shipped to the tasks of one scan or write. */
+  def broadcastConf(): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(
+      new SerializableConfiguration(hadoopConf()))
+
+  /** A collection data file: neither hidden (`.`, e.g. the sink's
+    * in-progress temps) nor bookkeeping (`_`). */
+  def isDataFile(s: FileStatus): Boolean = {
+    val name = s.getPath.getName
+    s.isFile && !name.startsWith(".") && !name.startsWith("_")
+  }
+
   /** List data files for a path (file or directory of .jsonl). */
   def listFiles(opts: DocstoreOptions): Seq[(String, Long)] = {
-    val conf = new Configuration()
     val p = new HPath(opts.path)
-    val fs = p.getFileSystem(conf)
+    val fs = fileSystem(opts.path)
     val st = fs.getFileStatus(p)
     val files =
-      if (st.isDirectory) fs.listStatus(p).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
-          !s.getPath.getName.startsWith("_"))
+      if (st.isDirectory) fs.listStatus(p).toSeq.filter(isDataFile)
         .sortBy(_.getPath.getName)
       else Seq(st)
     files.map(s => (s.getPath.toString, s.getLen))
@@ -140,48 +175,37 @@ object DocstoreTable {
       }
     }
 
-  def inferSchema(opts: DocstoreOptions): StructType =
-    schemaAndPaths(opts)._1
+  def inferSchema(opts: DocstoreOptions): StructType = inferred(opts)._1
 
-  /** Schema + explicit per-column doc paths. A `__schema` document in the
-    * sample (reference: src/mongo_schema_inference.cpp user-provided
-    * `__schema` support) overrides inference: each field is either a type
-    * string (`"BIGINT"`) or `{"path": "a.b", "type": "BIGINT"}` mapping a
-    * column to a nested doc path. Without one, schema is inferred and
-    * paths stay implicit (flattened `parent_child` resolution). */
-  def schemaAndPaths(opts: DocstoreOptions): (StructType, Map[String, Array[String]]) = {
-    val sample = sampleDocs(opts)
-    sample.iterator.flatMap(_.map.get("__schema")).collectFirst {
-      case d: DocValue.DDoc => d
-    } match {
-      case Some(schemaDoc) =>
-        val fields = schemaDoc.fields.map {
-          case (name, DocValue.DString(tpe)) =>
-            (StructField(name, parseTypeName(name, tpe), nullable = true),
-              name -> Array(name))
-          case (name, spec: DocValue.DDoc) =>
-            val tpe = spec.map.get("type") match {
-              case Some(DocValue.DString(t)) => parseTypeName(name, t)
-              case _ => throw new IllegalArgumentException(
-                s"docstore __schema: column '$name' needs a string 'type'")
-            }
-            val path = spec.map.get("path") match {
-              case Some(DocValue.DString(p)) => p.split('.')
-              case None                      => Array(name)
-              case Some(other) => throw new IllegalArgumentException(
-                s"docstore __schema: column '$name' path must be a string, got $other")
-            }
-            (StructField(name, tpe, nullable = true), name -> path)
-          case (name, other) => throw new IllegalArgumentException(
-            s"docstore __schema: column '$name' must be a type string or " +
-              s"{path, type} document, got $other")
+  /** A `__schema` document's columns and their doc paths (reference:
+    * src/mongo_schema_inference.cpp user-provided `__schema` support):
+    * each field is either a type string (`"BIGINT"`) or
+    * `{"path": "a.b", "type": "BIGINT"}` mapping a column to a nested
+    * doc path. */
+  private def declaredSchema(schemaDoc: DocValue.DDoc)
+      : (StructType, Map[String, Array[String]]) = {
+    val fields = schemaDoc.fields.map {
+      case (name, DocValue.DString(tpe)) =>
+        (StructField(name, parseTypeName(name, tpe), nullable = true),
+          name -> Array(name))
+      case (name, spec: DocValue.DDoc) =>
+        val tpe = spec.map.get("type") match {
+          case Some(DocValue.DString(t)) => parseTypeName(name, t)
+          case _ => throw new IllegalArgumentException(
+            s"docstore __schema: column '$name' needs a string 'type'")
         }
-        (StructType(fields.map(_._1)), fields.map(_._2).toMap)
-      case None =>
-        (SchemaInference.infer(
-          sample.filterNot(_.map.contains("__schema")), opts.flatten)._1,
-          Map.empty)
+        val path = spec.map.get("path") match {
+          case Some(DocValue.DString(p)) => p.split('.')
+          case None                      => Array(name)
+          case Some(other) => throw new IllegalArgumentException(
+            s"docstore __schema: column '$name' path must be a string, got $other")
+        }
+        (StructField(name, tpe, nullable = true), name -> path)
+      case (name, other) => throw new IllegalArgumentException(
+        s"docstore __schema: column '$name' must be a type string or " +
+          s"{path, type} document, got $other")
     }
+    (StructType(fields.map(_._1)), fields.map(_._2).toMap)
   }
 
   /** DuckDB-style type names (the reference's `columns` argument types)
@@ -201,68 +225,32 @@ object DocstoreTable {
         s"docstore __schema: column '$col' has unsupported type '$other'")
     }
 
-  /** Memo for sampled row-size stats, keyed by the collection's file-set
-    * fingerprint. Catalyst may ask for statistics several times per
-    * planning pass (and once per query on a reused table); the listing
-    * stays fresh — one RPC — but the sample read is paid once per
-    * distinct dataset state, not per call.
-    */
-  private val statsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, (Long, Option[Long]))]()
-
-  private def fileSig(files: Seq[(String, Long)]): Long = {
-    var h = 0xcbf29ce484222325L
-    files.foreach { case (name, len) =>
-      h = (h ^ name.hashCode.toLong) * 0x100000001b3L
-      h = (h ^ len) * 0x100000001b3L
-    }
-    h
-  }
-
-  /** Driver-side size estimate for `SupportsReportStatistics`: total data
-    * bytes plus a row count extrapolated from the average UTF-8 byte size
-    * of the first `samplesize` lines. At 100 TB this is one file listing
-    * + one tiny read — the same cost the reference pays to sample for
-    * schema inference — and it is what lets Catalyst pick a broadcast
-    * join for small collections instead of defaulting DSv2 sources to
-    * "unknown = huge". */
+  /** Total data bytes and extrapolated rows, as a scan reports them from
+    * its snapshot and its load's sample ([[DocstoreBatchScan]]). */
   def estimateStats(opts: DocstoreOptions): (Long, Option[Long]) = {
     val files = listFiles(opts)
-    val sig = fileSig(files)
-    val cached = statsCache.get(opts.path)
-    if (cached != null && cached._1 == sig) return cached._2
     val totalBytes = files.map(_._2).sum
-    var sampled = 0L
-    var sampledBytes = 0L
-    sampleLines(opts, files) { line =>
-      sampled += 1
-      sampledBytes += line.getBytes(StandardCharsets.UTF_8).length + 1L
-      true
-    }
-    val rows =
-      if (sampled == 0 || sampledBytes == 0) None
-      else Some(math.max(1L, math.round(
-        totalBytes.toDouble * sampled / sampledBytes)))
-    val result = (totalBytes, rows)
-    statsCache.put(opts.path, (sig, result))
-    result
+    (totalBytes, read(opts, files)._2.rows(totalBytes))
   }
 
-  def sampleDocs(opts: DocstoreOptions): Seq[DocValue.DDoc] = {
+  /** The sample of a load that brings its own schema: nothing inferred. */
+  def sample(opts: DocstoreOptions): DocstoreSample = read(opts, listFiles(opts))._2
+
+  /** A load's sample and its schema: the `__schema` document's, else
+    * inferred from the sampled documents, which are then let go. */
+  def inferred(opts: DocstoreOptions): (StructType, DocstoreSample) = {
+    val (docs, s) = read(opts, listFiles(opts))
+    (s.declared.fold(SchemaInference.infer(
+      docs.filterNot(_.map.contains("__schema")), opts.flatten)._1)(_._1), s)
+  }
+
+  /** Reads the non-empty lines, in file order, until `samplesize` of them
+    * parse; malformed lines are skipped but count toward bytes per line. */
+  private def read(opts: DocstoreOptions, files: Seq[(String, Long)])
+      : (Seq[DocValue.DDoc], DocstoreSample) = {
+    val conf = hadoopConf()
     val docs = Seq.newBuilder[DocValue.DDoc]
-    sampleLines(opts, listFiles(opts)) { line =>
-      try { docs += ExtJson.parse(line); true }
-      catch { case _: Exception => false } // malformed line: skip in sampling
-    }
-    docs.result()
-  }
-
-  /** Feeds the collection's non-empty lines, in file order, to `take`
-    * until it has accepted `samplesize` of them (it returns whether the
-    * line counts); stops reading at that point. */
-  private def sampleLines(opts: DocstoreOptions, files: Seq[(String, Long)])(
-      take: String => Boolean): Unit = {
-    val conf = new Configuration()
+    var lines, bytes = 0L
     var remaining = opts.sampleSize
     val it = files.iterator
     while (remaining > 0 && it.hasNext) {
@@ -271,17 +259,43 @@ object DocstoreTable {
       try {
         var line = reader.next()
         while (remaining > 0 && line != null) {
-          if (line.nonEmpty && take(line)) remaining -= 1
+          if (line.nonEmpty) {
+            lines += 1
+            bytes += line.getBytes(StandardCharsets.UTF_8).length + 1L
+            try { docs += ExtJson.parse(line); remaining -= 1 }
+            catch { case _: Exception => () } // malformed line: skip in sampling
+          }
           line = if (remaining > 0) reader.next() else null
         }
       } finally reader.close()
     }
+    val sampled = docs.result()
+    val declared = sampled.iterator.flatMap(_.map.get("__schema"))
+      .collectFirst { case d: DocValue.DDoc => declaredSchema(d) }
+    (sampled, new DocstoreSample(declared, lines, bytes))
   }
 }
 
-class DocstoreTable(schema0: StructType, opts: DocstoreOptions)
+/** What a load keeps of a collection's first `samplesize` parseable
+  * documents: the schema and explicit doc paths of a `__schema` document
+  * (else none: columns resolve by flattened names), and the bytes per
+  * line that scale a listing's size to a row count. */
+final class DocstoreSample(
+    val declared: Option[(StructType, Map[String, Array[String]])],
+    lines: Long, bytes: Long) {
+  val paths: Map[String, Array[String]] = declared.fold(Map.empty[String, Array[String]])(_._2)
+
+  def rows(totalBytes: Long): Option[Long] =
+    if (lines == 0 || bytes == 0) None
+    else Some(math.max(1L, math.round(totalBytes.toDouble * lines / bytes)))
+}
+
+/** `sample0` is read on the first scan, so a write never samples. */
+class DocstoreTable(schema0: StructType, opts: DocstoreOptions,
+    sample0: => DocstoreSample)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
+  private lazy val sample = sample0
   override def name(): String = s"docstore(${opts.path})"
   override def schema(): StructType = schema0
   override def capabilities(): JSet[TableCapability] =
@@ -289,7 +303,7 @@ class DocstoreTable(schema0: StructType, opts: DocstoreOptions)
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DocstoreScanBuilder(schema0, opts)
+    new DocstoreScanBuilder(schema0, opts, sample)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -305,12 +319,17 @@ class DocstoreTable(schema0: StructType, opts: DocstoreOptions)
   * count_pushdown.test). Aggregation push is PARTIAL: each partition
   * emits pre-aggregated rows (map-side combine inside the scan — no row
   * materialization for non-grouped columns), Spark merges. */
-class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions)
+class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions,
+    sample: DocstoreSample)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownLimit
     with SupportsPushDownTopN with SupportsPushDownAggregates {
   import org.apache.spark.sql.connector.expressions.{Expression => CExpr, NamedReference, SortOrder => CSortOrder, SortDirection, NullOrdering}
   import org.apache.spark.sql.connector.expressions.aggregate._
+
+  /** A builder over `fullSchema` outside a table: samples for the paths. */
+  def this(fullSchema: StructType, opts: DocstoreOptions) =
+    this(fullSchema, opts, DocstoreTable.sample(opts))
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
@@ -399,17 +418,11 @@ class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions)
     true
   }
 
-  // explicit per-column doc paths from a __schema document (if any);
-  // resolved once on the driver, shipped to executors with the factory
-  private lazy val explicitPaths: Map[String, Array[String]] =
-    DocstoreTable.schemaAndPaths(opts)._2
-
   override def build(): Scan = aggSpec match {
     case Some(spec) =>
-      new DocstoreAggScan(fullSchema, spec, pushed, opts, explicitPaths)
+      new DocstoreAggScan(fullSchema, spec, pushed, opts, sample)
     case None =>
-      new DocstoreScan(fullSchema, required, pushed, limit, opts, topN,
-        explicitPaths)
+      new DocstoreScan(fullSchema, required, pushed, limit, opts, topN, sample)
   }
 }
 
@@ -438,17 +451,19 @@ final case class AggSpec(groupBy: Seq[StructField], aggs: Seq[AggOp]) {
   * and the size statistics Catalyst plans joins with. `reportsRows`:
   * whether the collection's row estimate describes the scan's output. */
 abstract class DocstoreBatchScan(fullSchema: StructType,
-    opts: DocstoreOptions, reportsRows: Boolean)
+    opts: DocstoreOptions, sample: DocstoreSample, reportsRows: Boolean)
     extends Scan with Batch with SupportsReportStatistics {
   override def toBatch: Batch = this
 
-  /** Collection size for Catalyst's join planning: data bytes scaled by
-    * the projected-column fraction (the same heuristic Spark's own
-    * FileScan uses), plus an extrapolated row count where it applies.
+  /** Collection size for Catalyst's join planning, computed once from
+    * the pinned snapshot: data bytes scaled by the projected-column
+    * fraction (the same heuristic Spark's own FileScan uses), plus the
+    * row count the load's sample extrapolates, where it applies.
     * Without this a DSv2 source defaults to "unknown = never
     * broadcast". */
-  override def estimateStatistics(): Statistics = {
-    val (totalBytes, rows) = DocstoreTable.estimateStats(opts)
+  private lazy val stats: Statistics = {
+    val totalBytes = snapshotFiles.map(_._2).sum
+    val rows = if (reportsRows) sample.rows(totalBytes) else None
     val frac =
       if (fullSchema.isEmpty) 1.0
       else math.max(1, readSchema().length).toDouble / fullSchema.length
@@ -457,10 +472,11 @@ abstract class DocstoreBatchScan(fullSchema: StructType,
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(size)
       override def numRows(): java.util.OptionalLong =
-        rows.filter(_ => reportsRows).map(java.util.OptionalLong.of)
+        rows.map(java.util.OptionalLong.of)
           .getOrElse(java.util.OptionalLong.empty())
     }
   }
+  override def estimateStatistics(): Statistics = stats
 
   /** Snapshot isolation (the analog of the reference's per-query
     * transaction snapshot, reference src/mongo_transaction.cpp:1): the
@@ -477,9 +493,8 @@ abstract class DocstoreBatchScan(fullSchema: StructType,
 }
 
 class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
-    filters: Array[Filter], opts: DocstoreOptions,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends DocstoreBatchScan(fullSchema, opts, reportsRows = false) {
+    filters: Array[Filter], opts: DocstoreOptions, sample: DocstoreSample)
+    extends DocstoreBatchScan(fullSchema, opts, sample, reportsRows = false) {
   // size stats are a conservative upper bound: pre-aggregated output
   // can't exceed the input bytes of the columns it reads
   override def readSchema(): StructType = spec.outputSchema
@@ -490,14 +505,14 @@ class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreReaderFactory(fullSchema, new StructType(), filters,
-      opts.schemaMode, opts.flatten, explicitPaths, agg = Some(spec))
+      opts.schemaMode, opts.flatten, sample.paths, DocstoreTable.broadcastConf(),
+      agg = Some(spec))
 }
 
 class DocstoreScan(fullSchema: StructType, required: StructType,
     filters: Array[Filter], limit: Int, opts: DocstoreOptions,
-    topN: Option[TopNSpec] = None,
-    explicitPaths: Map[String, Array[String]] = Map.empty)
-    extends DocstoreBatchScan(fullSchema, opts, reportsRows = true)
+    topN: Option[TopNSpec], sample: DocstoreSample)
+    extends DocstoreBatchScan(fullSchema, opts, sample, reportsRows = true)
     with SupportsRuntimeFiltering {
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 
@@ -528,12 +543,13 @@ class DocstoreScan(fullSchema: StructType, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreReaderFactory(fullSchema, required, filters ++ runtimeFilters,
-      opts.schemaMode, opts.flatten, explicitPaths, limit, topN)
+      opts.schemaMode, opts.flatten, sample.paths, DocstoreTable.broadcastConf(),
+      limit, topN)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new DocstoreMicroBatchStream(fullSchema, required, filters, opts,
-      explicitPaths)
+      sample.paths)
 }
 
 /** Streaming reads over a document collection directory — the
@@ -552,12 +568,9 @@ class DocstoreMicroBatchStream(fullSchema: StructType, required: StructType,
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  private def sortedFiles(): Seq[(String, Long)] =
-    DocstoreTable.listFiles(opts).sortBy(_._1)
-
   override def initialOffset(): Offset = FileCountOffset(0)
   override def latestOffset(): Offset = {
-    val files = sortedFiles()
+    val files = DocstoreTable.listFiles(opts)
     FileCountOffset(files.size, files.lastOption.map(_._1).getOrElse(""))
   }
   override def deserializeOffset(json: String): Offset =
@@ -568,7 +581,7 @@ class DocstoreMicroBatchStream(fullSchema: StructType, required: StructType,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FileCountOffset]
     val e = end.asInstanceOf[FileCountOffset]
-    val files = sortedFiles()
+    val files = DocstoreTable.listFiles(opts) // sorted by name
     // The tail-only-growth contract is VALIDATED, not assumed: the offset
     // remembers the filename at its boundary; if a file was deleted,
     // renamed, or a new file sorted before the tail, indices shifted and
@@ -589,7 +602,7 @@ class DocstoreMicroBatchStream(fullSchema: StructType, required: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new DocstoreReaderFactory(fullSchema, required, filters,
-      opts.schemaMode, opts.flatten, explicitPaths)
+      opts.schemaMode, opts.flatten, explicitPaths, DocstoreTable.broadcastConf())
 }
 
 /** Micro-batch offset: first `n` files of the sorted listing, plus the
@@ -689,10 +702,12 @@ object DocstoreFilters {
   * Each split's reader yields the converted docs that pass the pushed
   * filters, consumed one of three ways: as rows of `required` (at most
   * `limit`, -1 = no cap), as the split's top `topN.n` rows, or as the
-  * split's partial aggregates under `agg`. */
+  * split's partial aggregates under `agg`. `conf`: the scan's broadcast
+  * of the session's Hadoop conf. */
 class DocstoreReaderFactory(fullSchema: StructType, val required: StructType,
     filters: Array[Filter], val schemaMode: String, val flatten: Boolean,
-    val explicitPaths: Map[String, Array[String]], val limit: Int = -1,
+    val explicitPaths: Map[String, Array[String]],
+    val conf: Broadcast[SerializableConfiguration], val limit: Int = -1,
     val topN: Option[TopNSpec] = None, val agg: Option[AggSpec] = None)
     extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
@@ -736,7 +751,7 @@ class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
   private val pred: E.BasePredicate = f.predicate.map { e =>
     val compiled = E.Predicate.create(e); compiled.initialize(0); compiled
   }.orNull
-  private val lines = new LineRangeReader(p.file, p.start, p.length, new Configuration())
+  private val lines = new LineRangeReader(p.file, p.start, p.length, f.conf.value.value)
 
   /** The split's docs that convert (malformed ones dropped per schema
     * mode) and pass the pushed filters. */
@@ -872,8 +887,6 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
   import com.fasterxml.jackson.databind.JsonNode
   import com.fasterxml.jackson.databind.node.ObjectNode
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   /** All ways to read column `name`: the literal field first, then each
     * '_' split as a nested-doc path, left-to-right, recursively. The split
     * space is 2^k for k underscores, so enumeration is lazy and capped —
@@ -933,7 +946,7 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
 
   def convert(line: String): Option[InternalRow] = {
     val node =
-      try mapper.readTree(line)
+      try ExtJson.mapper.readTree(line)
       catch {
         case e: Exception => return malformed(s"unparseable document: ${e.getMessage}")
       }
@@ -944,7 +957,11 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
         val row = new GenericInternalRow(schema.length)
         var i = 0
         while (i < schema.length) {
-          toInternal(resolve(doc, i), schema(i).dataType) match {
+          val v = try toInternal(resolve(doc, i), schema(i).dataType) catch {
+            case e @ (_: IllegalArgumentException | _: java.time.DateTimeException) =>
+              Left(s"cannot decode ${resolve(doc, i)}: ${e.getMessage}")
+          }
+          v match {
             case Right(x) => row.update(i, x)
             case Left(msg) =>
               schemaMode match {
@@ -978,7 +995,8 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
     * mismatch. Numeric widening Long→Double allowed (Int32/Int64/Double
     * unify in the reference's lattice); StringType accepts anything via
     * the JSON-text VARCHAR fallback. BSON undefined (`{"$undefined":true}`)
-    * is NULL in every type, as schema inference already treats it. */
+    * is NULL in every type, as schema inference already treats it. Throws
+    * on a wrapper whose payload does not decode (`{"$numberLong":"x"}`). */
   def toInternal(n: JsonNode, dt: DataType): Either[String, Any] = {
     if (n == null || n.isNull || (n.isObject && n.size() == 1 && n.has("$undefined")))
       return Right(null)
@@ -1083,12 +1101,11 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
   * straddles the split end belongs to the split it started in. Byte-level
   * (UTF-8 decoded per line), so multi-byte chars never break offsets. */
 class LineRangeReader(file: String, start: Long, length: Long, conf: Configuration) {
-  private val fs: FileSystem = new HPath(file).getFileSystem(conf)
   // .gz collections decompress transparently; they are unsplittable, so
   // the whole file is one range and `end` bounds DECOMPRESSED bytes
   private val gzipped = file.endsWith(".gz")
   private val in: InputStream = {
-    val s = fs.open(new HPath(file))
+    val s = new HPath(file).getFileSystem(conf).open(new HPath(file))
     if (gzipped) {
       require(start == 0, s"compressed collection is unsplittable: $file")
       new java.util.zip.GZIPInputStream(s, 1 << 16)
@@ -1108,23 +1125,11 @@ class LineRangeReader(file: String, start: Long, length: Long, conf: Configurati
   private var hi = 0 // valid bytes in chunk
   private val pending = new java.io.ByteArrayOutputStream(1 << 10)
 
-  if (start > 0) skipPartialLine() // first (partial) line belongs to prev split
-
   private def refill(): Boolean = {
     pos += lo
     lo = 0
     hi = in.read(chunk)
     if (hi < 0) { hi = 0; eof = true; false } else true
-  }
-
-  private def skipPartialLine(): Unit = {
-    while (true) {
-      if (lo >= hi && !refill()) return
-      var i = lo
-      while (i < hi && chunk(i) != '\n') i += 1
-      if (i < hi) { lo = i + 1; return }
-      lo = hi
-    }
   }
 
   /** Next full line (without newline), or null when the range is done. */
@@ -1161,4 +1166,6 @@ class LineRangeReader(file: String, start: Long, length: Long, conf: Configurati
   }
 
   def close(): Unit = in.close()
+
+  if (start > 0) next() // the first (partial) line belongs to the previous split
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 import org.apache.spark.sql.connector.catalog._
@@ -70,17 +69,18 @@ object DocstoreClient {
 }
 
 /** JSONL-directory implementation of [[DocstoreClient]]: root directory →
-  * instance, subdirectory → database, `<name>.jsonl` → collection. Table
-  * schemas are inferred once per client instance and cached (the
-  * reference caches collection schemas the same way).
+  * instance, subdirectory → database, `<name>.jsonl` → collection. Each
+  * collection is sampled once per client instance and its sample (schema,
+  * `__schema` paths, row size) cached (the reference caches collection
+  * schemas the same way). File access uses the session's Hadoop conf.
   */
 class FileDocstoreClient(root: String, options: Map[String, String])
     extends DocstoreClient {
   private val m = options.map { case (k, v) => k.toLowerCase -> v }
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+  private val samples =
+    new java.util.concurrent.ConcurrentHashMap[String, (StructType, DocstoreSample)]()
 
-  private def fs: FileSystem = new HPath(root).getFileSystem(new Configuration())
+  private def fs: FileSystem = DocstoreTable.fileSystem(root)
   private def collPath(ns: String, coll: String): String =
     s"$root/$ns/$coll.jsonl"
 
@@ -126,15 +126,14 @@ class FileDocstoreClient(root: String, options: Map[String, String])
   override def loadCollection(namespace: String, coll: String): Table = {
     val path = collPath(namespace, coll)
     val opts = DocstoreOptions(m - "root" - "client" + ("path" -> path))
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => DocstoreTable.inferSchema(opts))
-    new DocstoreTable(schema, opts)
+    val (schema, sample) = samples.computeIfAbsent(path, _ => DocstoreTable.inferred(opts))
+    new DocstoreTable(schema, opts, sample)
   }
 
   override def invalidate(namespace: String, coll: String): Unit =
-    schemaCache.remove(collPath(namespace, coll))
+    samples.remove(collPath(namespace, coll))
 
-  override def clearCache(): Unit = schemaCache.clear()
+  override def clearCache(): Unit = samples.clear()
 }
 
 object FileDocstoreClient {

@@ -3,15 +3,17 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets
 
-/** Batch WRITE for the docstore source: rows → extended-JSON JSONL part
+/** Batch and streaming WRITE for the docstore source: rows → extended-JSON JSONL part
   * files, the inverse of the scan's type mapping (Timestamp→`$date`,
   * Date→midnight `$date`, Binary→`$binary`, struct→nested doc,
   * array→JSON array). The reference is scan-only; a pipeline engine
@@ -27,22 +29,8 @@ import java.nio.charset.StandardCharsets
   * overwrite never destroys the old collection, an overwrite of a path
   * being read never deletes input mid-scan, and a dead executor's
   * orphan temp file is never visible to readers.
-  */
-class DocstoreWriteBuilder(schema: StructType, opts: DocstoreOptions)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = {
-    val t = doTruncate
-    new Write {
-      override def toBatch: BatchWrite = new DocstoreBatchWrite(schema, opts, t)
-      override def toStreaming: streaming.StreamingWrite =
-        new DocstoreStreamingWrite(schema, opts)
-    }
-  }
-}
-
-/** Streaming sink: each micro-batch's rows land as one committed file per
+  *
+  * Streaming: each micro-batch's rows land as one committed file per
   * epoch+partition, named so the collection's lexicographic listing only
   * grows at the tail (`part-s<epoch>` sorts after every earlier epoch AND
   * after batch `part-<n>` files) — a stream-written collection is
@@ -51,56 +39,52 @@ class DocstoreWriteBuilder(schema: StructType, opts: DocstoreOptions)
   * final name is deterministic per (epoch, partition) and commit
   * overwrites it; task-attempt temp names stay unique per attempt.
   */
-class DocstoreStreamingWrite(schema: StructType, opts: DocstoreOptions)
-    extends streaming.StreamingWrite {
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    new DocstoreStreamingWriterFactory(schema, opts.path)
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = // replace = idempotent replay
-    DocstoreCommit.publish(DocstoreCommit.fileSystem(opts.path), messages)
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit =
-    DocstoreCommit.discard(DocstoreCommit.fileSystem(opts.path), messages)
+class DocstoreWriteBuilder(schema: StructType, opts: DocstoreOptions)
+    extends WriteBuilder with SupportsTruncate {
+  private var doTruncate = false
+  override def truncate(): WriteBuilder = { doTruncate = true; this }
+  override def build(): Write = new DocstoreWrite(schema, opts, doTruncate)
 }
 
-class DocstoreBatchWrite(schema: StructType, opts: DocstoreOptions,
-    truncate: Boolean) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new DocstoreWriterFactory(schema, opts.path)
+/** One write, batch or streaming; `truncate` applies to the batch commit. */
+class DocstoreWrite(schema: StructType, opts: DocstoreOptions, truncate: Boolean)
+    extends Write with BatchWrite with streaming.StreamingWrite {
+  override def toBatch: BatchWrite = this
+  override def toStreaming: streaming.StreamingWrite = this
+  override def useCommitCoordinator(): Boolean = true
+
+  private def factory =
+    new DocstoreWriterFactory(schema, opts.path, DocstoreTable.broadcastConf())
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo) = factory
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new HPath(opts.path)
-    val fs = DocstoreCommit.fileSystem(opts.path)
+    val fs = DocstoreTable.fileSystem(opts.path)
     if (truncate && fs.exists(root) && fs.getFileStatus(root).isDirectory) {
-      // overwrite: old (visible, non-dot) files are removed only once every
-      // task has successfully written its replacement temp file
-      fs.listStatus(root)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
-          !s.getPath.getName.startsWith("_"))
+      // overwrite: the old data files are removed only once every task
+      // has successfully written its replacement temp file
+      fs.listStatus(root).filter(DocstoreTable.isDataFile)
         .foreach(s => fs.delete(s.getPath, false))
     }
-    DocstoreCommit.publish(fs, messages) // replace = idempotent re-commit
+    publish(fs, messages) // replace = idempotent re-commit
   }
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    DocstoreCommit.discard(DocstoreCommit.fileSystem(opts.path), messages)
-}
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    publish(DocstoreTable.fileSystem(opts.path), messages) // idempotent replay
 
-final case class DocstoreCommit(tempFile: String, finalFile: String)
-  extends WriterCommitMessage
+  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+    val fs = DocstoreTable.fileSystem(opts.path)
+    commits(messages).foreach(m => fs.delete(new HPath(m.tempFile), false))
+  }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    abort(messages)
 
-/** The commit and abort halves shared by the batch and streaming sinks. */
-object DocstoreCommit {
-  def fileSystem(dir: String): FileSystem =
-    new HPath(dir).getFileSystem(new Configuration())
   private def commits(messages: Array[WriterCommitMessage]) =
     messages.collect { case m: DocstoreCommit => m }
 
   /** Rename every task's temp file to its final name, replacing a file
     * already there; a failed rename fails the commit. */
-  def publish(fs: FileSystem, messages: Array[WriterCommitMessage]): Unit =
+  private def publish(fs: FileSystem, messages: Array[WriterCommitMessage]): Unit =
     commits(messages).foreach { m =>
       val tmp = new HPath(m.tempFile)
       val fin = new HPath(m.finalFile)
@@ -108,35 +92,32 @@ object DocstoreCommit {
       if (!fs.rename(tmp, fin))
         throw new java.io.IOException(s"docstore commit: rename $tmp -> $fin failed")
     }
-
-  /** Delete every task's temp file. */
-  def discard(fs: FileSystem, messages: Array[WriterCommitMessage]): Unit =
-    commits(messages).foreach(m => fs.delete(new HPath(m.tempFile), false))
 }
 
-/** Named (serializable) factory — ships only (schema, dir) to executors. */
-class DocstoreStreamingWriterFactory(schema: StructType, dir: String)
-    extends streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] = {
-    val fin = f"$dir/part-s$epochId%012d-$partitionId%05d.jsonl"
-    val tmp = f"$dir/.part-s$epochId%012d-$partitionId%05d-$taskId.inprogress"
-    new DocstoreDataWriter(schema, dir, tmp, fin)
-  }
-}
+final case class DocstoreCommit(tempFile: String, finalFile: String)
+  extends WriterCommitMessage
 
-class DocstoreWriterFactory(schema: StructType, dir: String)
-    extends DataWriterFactory {
+/** The writer factory of both sinks — ships only (schema, dir, the
+  * write's Hadoop conf broadcast) to executors. Temp names carry a dot
+  * prefix, excluded by the scan's listing filter until commit. */
+class DocstoreWriterFactory(schema: StructType, dir: String,
+    conf: Broadcast[SerializableConfiguration])
+    extends DataWriterFactory with streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new DocstoreDataWriter(schema, dir,
-      // dot prefix = excluded by the scan's listing filter until commit
+    new DocstoreDataWriter(schema, conf.value.value, dir,
       f"$dir/.part-$partitionId%05d-$taskId.jsonl.inprogress",
       f"$dir/part-$partitionId%05d-$taskId.jsonl")
+
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): DataWriter[InternalRow] =
+    new DocstoreDataWriter(schema, conf.value.value, dir,
+      f"$dir/.part-s$epochId%012d-$partitionId%05d-$taskId.inprogress",
+      f"$dir/part-s$epochId%012d-$partitionId%05d.jsonl")
 }
 
-class DocstoreDataWriter(schema: StructType, dir: String, file: String,
-    finalFile: String) extends DataWriter[InternalRow] {
-  private val fs = new HPath(dir).getFileSystem(new Configuration())
+class DocstoreDataWriter(schema: StructType, conf: Configuration, dir: String,
+    file: String, finalFile: String) extends DataWriter[InternalRow] {
+  private val fs = new HPath(dir).getFileSystem(conf)
   private val out: OutputStream = {
     fs.mkdirs(new HPath(dir))
     new BufferedOutputStream(fs.create(new HPath(file), true), 1 << 16)

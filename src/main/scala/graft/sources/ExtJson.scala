@@ -1,6 +1,6 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node._
 
 import java.time.{Instant, LocalDate, ZoneOffset}
@@ -43,7 +43,10 @@ object DocValue {
 object ExtJson {
   import DocValue._
 
-  private val mapper = new ObjectMapper()
+  /** The one document parser of sampling and the scan: content after the
+    * document makes a line malformed (`{"n":1}{"n":2}` is not one row). */
+  private[sources] val mapper =
+    new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
   private val isoFmt = DateTimeFormatter.ISO_OFFSET_DATE_TIME
 
   /** Parse one JSONL line into a document. Throws on malformed input —

@@ -13,4 +13,9 @@ package object graftshim {
     classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The Hadoop conf a SparkContext would start from in this JVM. */
+  def defaultHadoopConf(): org.apache.hadoop.conf.Configuration =
+    org.apache.spark.deploy.SparkHadoopUtil.newConfiguration(
+      new org.apache.spark.SparkConf())
 }

@@ -494,6 +494,52 @@ class DocstoreSpec extends SparkSpec {
     }
   }
 
+  test("a wrapper whose payload does not decode is a malformed value in every schema mode") {
+    val dir = writeDocs("bad_wrappers", Seq(
+      """{"id":1,"n":{"$numberLong":"x"}}""",
+      """{"id":2,"d":{"$numberDouble":"abc"}}""",
+      """{"id":3,"t":{"$date":"2024-03-01"}}""",
+      """{"id":4,"b":{"$binary":{"base64":"***","subType":"00"}}}""",
+      """{"id":5,"n":7,"d":1.5}"""))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("n", LongType), StructField("d", DoubleType),
+      StructField("t", TimestampType), StructField("b", BinaryType)))
+    def read(mode: String) = spark.read.format("docstore").schema(schema)
+      .option("path", dir).option("schemamode", mode).load()
+    // permissive: the bad value reads as NULL, the row stays
+    val got = read("permissive").orderBy("id").collect().map(r =>
+      (r.getAs[Long]("id"), r.getAs[Any]("n"), r.getAs[Any]("d"),
+        r.getAs[Any]("t"), r.getAs[Any]("b")))
+    assert(got.toSeq == Seq((1L, null, null, null, null),
+      (2L, null, null, null, null), (3L, null, null, null, null),
+      (4L, null, null, null, null), (5L, 7L, 1.5, null, null)))
+    // dropmalformed: the row goes
+    assert(read("dropmalformed").collect().map(_.getAs[Long]("id")).toSeq ==
+      Seq(5L))
+    // failfast: the usual error, naming the column
+    val e = intercept[Exception](read("failfast").collect())
+    assert(e.toString.contains("column 'n'") ||
+      Option(e.getCause).exists(_.toString.contains("column 'n'")), e.toString)
+  }
+
+  test("content after a document makes the line malformed") {
+    val dir = writeDocs("trailing_tokens", Seq(
+      """{"n":1}{"n":2}""",
+      """{"n":3} trailing""",
+      """{"n":4}"""))
+    // the sampler skips both lines, so inference sees only {"n":4}
+    val df = spark.read.format("docstore").option("path", dir).load()
+    assert(df.schema.fieldNames.toSeq == Seq("n"))
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(4L))
+    assert(spark.read.format("docstore").option("path", dir)
+      .option("schemamode", "dropmalformed").load().count() == 1)
+    val e = intercept[Exception](spark.read.format("docstore")
+      .option("path", dir).option("schemamode", "failfast").load().collect())
+    assert(e.toString.contains("unparseable document") ||
+      Option(e.getCause).exists(_.toString.contains("unparseable document")),
+      e.toString)
+  }
+
   test("empty collection scans as zero rows (edge_cases analog)") {
     // mirrors test/sql/edge_cases/empty_collections.test
     val dir = writeDocs("empty_coll", Seq.empty)

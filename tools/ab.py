@@ -1,0 +1,199 @@
+#!/usr/bin/env python3
+"""A/B the repo benchmark: a parent revision against the working tree.
+
+    python3 tools/ab.py <parent-rev> [--pairs 6] [--traced-pairs 0]
+                        [--workdir DIR] [--json out.json]
+
+Run from the root of a graft checkout. The parent is exported with
+`git archive` into a temporary directory; then, for every workload in
+`BENCHMARK.json`, N pairs of untraced `perfbench/run.py` runs go on seeds
+1 .. N, one run at a time, the parent first in odd pairs and the change
+first in even ones. Run length comes from `BENCHMARK.json`. Each side's
+first run builds it (perfbench's own sbt build, cached in that side's
+`.bench_build/` by a source stamp); the build's time is outside the
+metrics, which the JVM measures.
+
+Per end-to-end metric it prints both medians, the median change, the
+parent's interquartile range as a fraction of its median, how many pairs
+the change won, and the verdict against the metric's `bound` in
+`BENCHMARK.json`: `ok` (no worse than the bound), `REGRESSED`, or
+`unresolved` (the parent's own spread exceeds the bound and the runs do
+not separate). A `gain` note marks a metric the change won in at least
+nine of ten pairs by more than the parent's IQR. `fail_frac` is each
+side's failed/attempted ops. Traced pairs, if asked for, run after every
+workload's untraced pairs and add the per-layer medians (ungated).
+
+If any run exits non-zero or reports a failed op, the tool stops and
+prints the side, workload, seed, exit code and the last 40 lines of that
+run's stderr, then exits 1. It reads `perfbench/` and `BENCHMARK.json`
+and changes neither.
+"""
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+sys.dont_write_bytecode = True
+
+def quartiles(xs):
+    s = sorted(xs)
+    if len(s) < 2:
+        return s[0], s[0]
+    q = statistics.quantiles(s, n=4, method="inclusive")
+    return q[0], q[2]
+
+
+def side_env():
+    env = dict(os.environ)
+    env.pop("CARGO_TARGET_DIR", None)  # each side keeps its own build
+    return env
+
+
+def stop(side, workload, seed, rc, stderr):
+    print(f"[ab] FAILED: side={side} workload={workload} seed={seed} "
+          f"exit={rc}", flush=True)
+    for line in stderr.splitlines()[-40:]:
+        print(f"[ab]   {line}")
+    sys.exit(1)
+
+
+def run_once(side, root, workload, seed, seconds, trace):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds),
+           "--trace", str(trace)]
+    r = subprocess.run(cmd, cwd=root, env=side_env(), capture_output=True,
+                       text=True, timeout=1200)
+    lines = r.stdout.strip().splitlines()
+    try:
+        res = json.loads(lines[-1]) if lines else None
+    except json.JSONDecodeError:
+        res = None
+    if r.returncode != 0 or res is None:
+        stop(side, workload, seed, r.returncode, r.stderr)
+    if res["failed"] > 0:
+        stop(side, workload, seed, f"0 but {res['failed']} of "
+             f"{res['attempted']} ops failed", r.stderr)
+    vals = {k: v["value"] for k, v in res["metrics"].items()}
+    print(f"[ab] {workload} seed {seed} {side}: " + ", ".join(
+        f"{k}={v:.4g}" for k, v in sorted(vals.items())
+        if not trace or k.startswith(("docstore.", "schema_inference."))),
+        file=sys.stderr, flush=True)
+    return {"metrics": vals, "failed": res["failed"],
+            "attempted": res["attempted"]}
+
+
+def pairs(roots, workload, seeds, seconds, trace):
+    out = {"parent": [], "change": []}
+    for i, seed in enumerate(seeds):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            out[side].append(run_once(side, roots[side], workload, seed,
+                                      seconds, trace))
+    return out
+
+
+def report(workload, runs, e2e):
+    print(f"\n== {workload}: {len(runs['parent'])} pairs", flush=True)
+    print(f"{'metric':16s} {'parent':>12s} {'change':>12s} {'change%':>8s} "
+          f"{'par.IQR%':>8s} {'wins':>6s} {'bound%':>7s}  verdict")
+    ok = True
+    n = len(runs["parent"])
+    for m in e2e:
+        name, lower, bound = m["name"], m["better"] == "lower", m["bound"]
+        p = [r["metrics"][name] for r in runs["parent"]]
+        c = [r["metrics"][name] for r in runs["change"]]
+        pm, cm = statistics.median(p), statistics.median(c)
+        q1, q3 = quartiles(p)
+        iqr = (q3 - q1) / pm if pm else float("nan")
+        delta = (cm - pm) / pm if pm else float("nan")
+        worse = delta if lower else -delta
+        wins = sum((b < a) if lower else (b > a) for a, b in zip(p, c))
+        separated = max(c) < min(p) if lower else min(c) > max(p)
+        if worse > bound:
+            verdict = "REGRESSED"
+            ok = False
+        elif iqr > bound and not separated:
+            verdict = "unresolved"
+        else:
+            verdict = "ok"
+        if wins >= 0.9 * n and -worse * pm > (q3 - q1):
+            verdict += " (gain)"
+        print(f"{name:16s} {pm:12.4g} {cm:12.4g} {100 * delta:+8.1f} "
+              f"{100 * iqr:8.1f} {wins:3d}/{n:<2d} {100 * bound:7.1f}  {verdict}")
+    for side in ("parent", "change"):
+        f = sum(r["failed"] for r in runs[side])
+        a = sum(r["attempted"] for r in runs[side])
+        print(f"fail_frac {side}: {f / max(1, a):.4f} ({f} of {a} ops)")
+    return ok
+
+
+def report_layers(workload, runs, names):
+    print(f"\n== {workload}: per-layer medians over "
+          f"{len(runs['parent'])} traced pairs (ungated)")
+    for name in names:
+        p = [r["metrics"][name] for r in runs["parent"] if name in r["metrics"]]
+        c = [r["metrics"][name] for r in runs["change"] if name in r["metrics"]]
+        if p and c:
+            pm, cm = statistics.median(p), statistics.median(c)
+            d = f"{100 * (cm - pm) / pm:+.1f}%" if pm else "n/a"
+            print(f"{name:36s} {pm:12.4g} {cm:12.4g} {d:>8s}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent_rev")
+    ap.add_argument("--pairs", type=int, default=6)
+    ap.add_argument("--traced-pairs", type=int, default=0)
+    ap.add_argument("--workdir", default=None,
+                    help="where the parent is exported (default: a temp dir)")
+    ap.add_argument("--json", default=None, help="write every run here")
+    a = ap.parse_args()
+
+    root = os.getcwd()
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    workloads = [w["name"] for w in bench["workloads"]]
+    tmp = tempfile.mkdtemp(prefix="ab-", dir=a.workdir)
+    parent = os.path.join(tmp, "p")
+    os.makedirs(parent)
+    # perfbench's sbt build puts its boot socket under the checkout, and a
+    # unix socket path has ~100 bytes: a longer checkout path fails to build
+    for side in (parent, root):
+        if len(side) > 34:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise SystemExit(f"ab: checkout path too long for perfbench's "
+                             f"sbt build (over 34 chars): {side}")
+    try:
+        archive = subprocess.run(["git", "archive", a.parent_rev], cwd=root,
+                                 capture_output=True, check=True).stdout
+        subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
+        roots = {"parent": parent, "change": root}
+        seeds = list(range(1, a.pairs + 1))
+        results, ok = {}, True
+        # every gated (untraced) result first; traced runs only locate
+        for w in workloads:
+            runs = pairs(roots, w, seeds, bench["run_seconds"], 0)
+            results[w] = {"untraced": runs}
+            ok = report(w, runs, bench["end_to_end"]) and ok
+        for w in (workloads if a.traced_pairs else []):
+            traced = pairs(roots, w, seeds[:a.traced_pairs],
+                           bench["run_seconds"], 1)
+            results[w]["traced"] = traced
+            report_layers(w, traced, [m["name"] for m in bench["per_layer"]])
+        if a.json:
+            with open(a.json, "w") as f:
+                json.dump({"parent_rev": a.parent_rev, "seeds": seeds,
+                           "results": results}, f, indent=1)
+        print("\n[ab] " + ("every end-to-end metric inside its bound" if ok
+                           else "a metric regressed beyond its bound"))
+        return 0 if ok else 1
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    sys.exit(main())
