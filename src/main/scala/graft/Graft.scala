@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.sources.MongoFilter
 
@@ -45,7 +45,10 @@ object Graft {
     * This is the engine API behind every expensive derived collection:
     * at 100 TB the verified pair set / cluster assignment is an ARTIFACT
     * computed once per corpus generation, not a subplan each consumer
-    * re-runs (VERDICT r8 #1/#7).
+    * re-runs (VERDICT r8 #1/#7). Operators reach it through
+    * [[artifact]], which fixes the storage format of derived data;
+    * `ensureEventDocs` calls it directly because `events_docs` is a
+    * document collection by contract (the `d`-keys scan it).
     */
   def ensureArtifact(root: String, name: String, fingerprint: String)(
       write: String => Unit): String = {
@@ -95,6 +98,45 @@ object Graft {
       }
     }
     path
+  }
+
+  /** A derived artifact of the testdata at `dir`: built by `build` at
+    * most once per fingerprint of its source `table` (through
+    * [[ensureArtifact]]) and returned as the committed frame read back.
+    * Derived data is internal, so it is stored as parquet: the types
+    * round-trip exactly (FLOAT arrays, INT columns) and the scan splits
+    * by Spark's own file sizing. The frame's schema is committed beside
+    * the data (`_schema.json`, which the parquet reader skips) and read
+    * back from there: an empty artifact keeps its schema, and a read
+    * needs no schema-inference job.
+    *
+    * An artifact smaller than Spark's cost of opening one file
+    * (`spark.sql.files.openCostInBytes`, 4 MiB by default) reads as ONE
+    * partition, the split Spark would give it had it been written as
+    * one file. That partition is `SinglePartition`, so its consumers
+    * aggregate and sort with no exchange. Read as several file splits
+    * (unknown partitioning), each of them shuffled: at sf0.1 the exec
+    * jobs of dd16, st15, p08, s02 and s07 rose 5 → 8, 8 → 11, 1 → 3,
+    * 4 → 8 and 4 → 8. Larger artifacts (the s18/s19 graphs) keep
+    * Spark's file splitting.
+    */
+  def artifact(spark: SparkSession, dir: String, name: String,
+      table: String)(build: => DataFrame): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val path = ensureArtifact(operators.DocstoreOps.docsRoot(dir), name,
+        Tables.tableFingerprint(dir, table)) { p =>
+      val df = build
+      df.write.mode("overwrite").parquet(p)
+      Files.writeString(Paths.get(p, "_schema.json"), df.schema.json)
+    }
+    val df = spark.read.schema(DataType.fromJson(
+        Files.readString(Paths.get(path, "_schema.json"))).asInstanceOf[StructType])
+      .parquet(path)
+    // the file index listed the directory when the frame was made, so
+    // its size costs no further I/O
+    val bytes = df.queryExecution.analyzed.stats.sizeInBytes
+    if (bytes < spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1)
+    else df
   }
 
   /** Maintenance sweep for artifact-build leftovers: deletes `.build-`

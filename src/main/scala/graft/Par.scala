@@ -15,30 +15,38 @@ package graft
   *
   * Thunks must be independent (no thunk may consume another's frame);
   * each runs exactly once and failures rethrow the original cause so
-  * error semantics match the sequential form.
+  * error semantics match the sequential form. The first failure
+  * cancels the siblings: their threads are interrupted, and once they
+  * have ended (or after 10 s) every Spark job they started is cancelled
+  * through a job tag unique to this run (a tag leaves the caller's job
+  * group and local properties alone). Cancelling after the threads end
+  * also catches a job a sibling submits between its interrupt and its
+  * exit; only a sibling that ignores its interrupt past 10 s can still
+  * start one that runs on.
   */
 object Par {
   def run[A](thunks: (() => A)*): IndexedSeq[A] = {
     if (thunks.sizeIs <= 1) return thunks.map(_()).toIndexedSeq
+    val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    val done = new java.util.concurrent.ExecutorCompletionService[A](pool)
     try {
-      val fs = thunks.map(t =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          override def call(): A = t()
-        }))
-      fs.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // best-effort cancellation before rethrowing: interrupting
-            // the sibling submitter threads can stop them before they
-            // submit further jobs, but Spark jobs already running are
-            // not cancelled and run to completion
-            pool.shutdownNow()
-            fs.foreach(_.cancel(true))
-            throw e.getCause
-        }
-      }.toIndexedSeq
+      val fs = thunks.map(t => done.submit(() => {
+        sc.addJobTag(tag)
+        try t() finally sc.removeJobTag(tag)
+      }))
+      // completion order, not submission order: a failure is seen while
+      // its siblings still run, not after they finish
+      try thunks.foreach(_ => done.take().get())
+      catch {
+        case e: java.util.concurrent.ExecutionException =>
+          pool.shutdownNow()
+          pool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
+          sc.cancelJobsWithTag(tag)
+          throw e.getCause
+      }
+      fs.map(_.get()).toIndexedSeq
     } finally pool.shutdown()
   }
 

@@ -182,60 +182,4 @@ object Tables {
       try ck.rdd.getNumPartitions catch { case _: Throwable => return ck }
     if (parts <= 1) ck else ck.coalesce(math.max(1, parts / shrink))
   }
-
-  /** Read a docstore artifact with splits derived from its ON-DISK size
-    * (optimization guide §6 — input split sizing): artifacts are built
-    * once per data fingerprint by whatever parallelism the build had,
-    * so a small artifact lands as dozens of near-empty files and every
-    * probe pays one task per file. Coalescing the scan to
-    * ceil(bytes/128 MiB) merges those splits without a shuffle; at
-    * production sizes the quotient exceeds the file count and the
-    * coalesce is the identity.
-    */
-  def sizedArtifactRead(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.format("docstore").option("path", path).load()
-    val bytes = dirBytes(path)
-    // unknown size (non-local FS, permission error) ⇒ leave the scan alone;
-    // a saturating-add here would silently coalesce a huge artifact to 1 task
-    if (bytes < 0) return df
-    val parts = math.max(1L, (bytes + SplitBytes - 1) / SplitBytes)
-    df.coalesce(math.min(parts, Int.MaxValue.toLong).toInt)
-  }
-
-  // 32 MiB, not the scan default 128 MiB: artifact rows feed hashing /
-  // cosine kernels whose per-core throughput makes a 128 MiB-per-task
-  // layout a serial second at the synthesized-sf1 decade check; at
-  // production sizes bytes/32 MiB exceeds the file count and the
-  // coalesce is still the identity
-  private val SplitBytes = 32L * 1024 * 1024
-
-  /** Coalesce an ALREADY-checkpointed frame's read side by `shrink`
-    * (floor 1) — [[ckptNarrow]]'s tail half, for call sites that manage
-    * the checkpoint themselves. */
-  def coalesceTail(ck: DataFrame, shrink: Int): DataFrame = {
-    val parts =
-      try ck.rdd.getNumPartitions catch { case _: Throwable => return ck }
-    if (parts <= 1) ck else ck.coalesce(math.max(1, parts / shrink))
-  }
-
-
-  /** Total bytes under `path`, walked recursively (nested layouts count
-    * every leaf, not just top-level files); -1 when the size cannot be
-    * determined — callers must treat that as "leave the scan alone".
-    * Only IOException maps to the sentinel; fatal errors propagate.
-    */
-  private def dirBytes(path: String): Long = {
-    import java.nio.file.{Files, Paths}
-    try {
-      val p = Paths.get(path)
-      if (!Files.isDirectory(p)) return Files.size(p)
-      val stream = Files.walk(p)
-      try stream.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(Files.isRegularFile(_)).map(Files.size).sum
-      finally stream.close()
-    } catch {
-      case _: java.io.IOException => -1L
-      case _: java.io.UncheckedIOException => -1L
-    }
-  }
 }

@@ -510,13 +510,15 @@ object Dedup {
     val nodes = plantedDocs(spark, dir).select(col("doc_id"))
     // edge list = the materialized dd04 pair artifact (one inverted-index
     // verification per corpus generation; the CC loop is this operator's
-    // own work) — a docstore scan where the shingle pipeline used to sit
-    val edges = Tables.sizedArtifactRead(spark,
-      ensureJaccardPairArtifact(spark, dir))
-      .select(col("id_a"), col("id_b"))
+    // own work) — an artifact scan where the shingle pipeline used to sit
+    val edges = ensureJaccardPairArtifact(spark, dir)
+    // no checkpoint on the adjacency: every iteration re-reads the pair
+    // artifact (one partition). A checkpoint did not win at both scales
+    // (4 cores, alternated min-of-5 runs of the dd06 key alone, with →
+    // without): sf0.1 1.30/1.53/1.44/1.49 → 1.42/1.43/1.41/1.63 s (two
+    // pairs each way); synthesized sf1 1.52/1.75 → 1.98/2.06 s
     val adj = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint() // pair pipeline runs once, not once per iteration
     // init = identity FUSED with the first propagation step: each node
     // starts at min(self, min neighbor) — same fixpoint, one fewer loop
     // iteration (each iteration costs a checkpoint + convergence job)
@@ -537,7 +539,8 @@ object Dedup {
           (coalesce(col("nmin"), col("cluster_id")) < col("cluster_id"))
             .cast(LongType).as("ch"))
         .transform(Tables.ckptNarrow(_))
-      val changed = next.agg(sum(col("ch"))).first().getLong(0)
+      // coalesce: an empty pair set sums to NULL, not 0
+      val changed = next.agg(coalesce(sum(col("ch")), lit(0L))).first().getLong(0)
       labels = next.drop("ch")
       converged = changed == 0
       iter += 1
@@ -868,24 +871,19 @@ object Dedup {
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   /** Materialize dd06's cluster assignment ONCE per documents generation
-    * into a docstore collection and return its path — the production
-    * composition for every cluster consumer (split/dedup/audit): the CC
-    * chain (shingle → inverted index → pair verify → iterative closure)
-    * is an expensive artifact, so it is written with the engine's own
-    * sink (the same path a pipeline-terminal `{"$out": path}` takes —
-    * MongoPipeline.scala $out) and read back as a plain docstore scan
+    * and return it read back — the production composition for every
+    * cluster consumer (split/dedup/audit): the CC chain (shingle →
+    * inverted index → pair verify → iterative closure) is an expensive
+    * artifact, so it is built once and read back as a plain scan
     * instead of re-running per consumer. Cache-keyed by the documents
     * table's fingerprint, so a regenerated corpus invalidates the
-    * artifact instead of silently serving stale clusters (the
-    * ensureEventDocs discipline); the completion marker is written only
-    * after the sink's failure-atomic commit, so a crashed build is
-    * re-run, never half-read.
+    * artifact instead of silently serving stale clusters; the completion
+    * marker is written only after the write's commit, so a crashed
+    * build is re-run, never half-read.
     */
-  def ensureClusterArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "dd06_clusters_v1",
-        graft.Tables.tableFingerprint(dir, "documents")) { path =>
+  def ensureClusterArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "dd06_clusters_v2", "documents") {
       dd06Clusters(spark, dir)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** dd02's VERIFIED near-dup pair set, materialized once per documents
@@ -896,11 +894,9 @@ object Dedup {
     * consumer (dd13's provenance matrix, future drop/dedup passes) reads
     * this collection instead of re-running the pipeline (VERDICT r8 #1).
     */
-  def ensureMinhashPairArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "dd02_pairs_v1",
-        graft.Tables.tableFingerprint(dir, "documents")) { path =>
+  def ensureMinhashPairArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "dd02_pairs_v2", "documents") {
       dd02MinHash(spark, dir)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** The BASE corpus's MinHash signature table (doc_id, 64-long sig),
@@ -910,14 +906,12 @@ object Dedup {
     * corpus is signed once when it is built, and every subsequent
     * crawl batch pays only its own batch-sized signature pass plus a
     * banded probe of this collection. */
-  def ensureMinhashSigArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "dd16_sigs_v1",
-        graft.Tables.tableFingerprint(dir, "documents")) { path =>
+  def ensureMinhashSigArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "dd16_sigs_v2", "documents") {
       // spread: the corpus-sized kernel pass (dd02's rule — a narrow
       // scan would sign the whole corpus on one core)
       Tables.spread(Tables(spark, dir, "documents"))
         .select(col("doc_id"), T.minhash_sig(col("text"), 64, 3).as("sig"))
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** dd04's verified Jaccard ≥ 0.5 pair set (the dd06 cluster graph's
@@ -926,11 +920,9 @@ object Dedup {
     * cluster artifact build — consumes this collection, so the
     * inverted-index pair verification runs once per corpus, not once
     * per cluster consumer. */
-  def ensureJaccardPairArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "dd04_pairs_v1",
-        graft.Tables.tableFingerprint(dir, "documents")) { path =>
+  def ensureJaccardPairArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "dd04_pairs_v2", "documents") {
       jaccardPairs(spark, dir).select(col("id_a"), col("id_b"))
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   // --------------------------------------------------------------- dd05
@@ -1187,8 +1179,7 @@ object Dedup {
     * the matrix itself is |sources|² at most.
     */
   def dd13DupSources(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.sizedArtifactRead(spark,
-      ensureMinhashPairArtifact(spark, dir))
+    val pairs = ensureMinhashPairArtifact(spark, dir)
       .select(col("id_a"), col("id_b"))
     val srcs = plantedDocs(spark, dir).select(col("doc_id"), col("source"))
     pairs
@@ -1515,8 +1506,7 @@ object Dedup {
         .select((col("doc_id") + 6000000L).as("doc_id"),
           array_join(transform(ws, w => concat(w, lit("~new"))), " ")
             .as("text")))
-    val corpusSigs = Tables.sizedArtifactRead(spark,
-      ensureMinhashSigArtifact(spark, dir))
+    val corpusSigs = ensureMinhashSigArtifact(spark, dir)
       .select(col("doc_id").as("cid"), col("sig").as("csig"))
     // batch signatures: map-only, then a barrier — the sig feeds both
     // the band probe and the verify join (the t17 lesson: without it,
@@ -1529,15 +1519,13 @@ object Dedup {
     // small by the operator's own premise (it broadcasts), so
     // materializing its 512 B/doc signatures is the s09 query-sized
     // checkpoint discipline, and the kernel provably runs once.
-    val batchSigs = batch.select(col("doc_id").as("nid"),
-        T.minhash_sig(col("text"), 64, 3).as("nsig"))
-      .localCheckpoint(false)
-      // coalesce AFTER the checkpoint (the kernel materializes at the
-      // spread parallelism): the 512 B/doc signature frame feeds its
-      // band/verify consumers from a few partitions — near-1×R shuffle
-      // blocks (guide §2.2) without serializing the banding at larger
-      // SFs (sf1 decade check)
-      .transform(Tables.coalesceTail(_, 8))
+    // ckptNarrow coalesces AFTER the checkpoint (the kernel materializes
+    // at the spread parallelism): the 512 B/doc signature frame feeds
+    // its band/verify consumers from a few partitions — near-1×R
+    // shuffle blocks (guide §2.2) without serializing the banding at
+    // larger SFs (sf1 decade check)
+    val batchSigs = Tables.ckptNarrow(batch.select(col("doc_id").as("nid"),
+        T.minhash_sig(col("text"), 64, 3).as("nsig")), 8)
     val est = corpusProbeMatches(corpusSigs, batchSigs)
     val verdicts = est.groupBy(col("nid"))
       .agg(count(lit(1)).as("n_matches"),

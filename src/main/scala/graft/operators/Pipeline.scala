@@ -181,21 +181,19 @@ object Pipeline {
     * the assignment is reproducible across engines and runs.
     *
     * Scale: the cluster assignment is READ, not recomputed — dd06's CC
-    * chain materializes once per corpus generation into a docstore
-    * collection ([[Dedup.ensureClusterArtifact]], the engine's own $out
-    * write path) and this split — like any other cluster consumer —
-    * is a docstore scan plus a map-only tag. The plan shows a docstore
-    * BatchScan where the iterative CC loop used to sit.
+    * chain materializes once per corpus generation into an artifact
+    * ([[Dedup.ensureClusterArtifact]]) and this split — like any other
+    * cluster consumer — is an artifact scan plus a map-only tag. The
+    * plan shows a parquet FileScan of the cluster artifact where the
+    * iterative CC loop used to sit.
     */
-  def p08LeakSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val artifact = Dedup.ensureClusterArtifact(spark, dir)
-    Tables.sizedArtifactRead(spark, artifact)
+  def p08LeakSafeSplit(spark: SparkSession, dir: String): DataFrame =
+    Dedup.ensureClusterArtifact(spark, dir)
       .withColumn("split",
         when(substring(md5(concat(col("cluster_id").cast(StringType),
           lit("#split"))), 1, 2) <= "19", "eval").otherwise("train"))
       .select(col("doc_id"), col("cluster_id"), col("split"))
       .orderBy(col("doc_id"))
-  }
 
   val p08Sql: String = Dedup.p08Sql
 
@@ -943,8 +941,7 @@ object Pipeline {
   }
 
   def p16CurationDag(spark: SparkSession, dir: String): DataFrame = {
-    val labels = Tables.sizedArtifactRead(spark,
-      Dedup.ensureClusterArtifact(spark, dir))
+    val labels = Dedup.ensureClusterArtifact(spark, dir)
       .select(col("doc_id"), col("cluster_id"))
     val pd = Tables.ckptNarrow(p16TokenFrame(spark, dir), 4)
 

@@ -156,22 +156,15 @@ object Similarity {
     * ONCE per embeddings generation (VERDICT r10 #3: production vector
     * stacks build once, probe many; dd16's artifact discipline). The
     * corpus-sized assignCells encode runs only inside the builder;
-    * every query consumes a docstore scan. Vectors ride along as
-    * array<double> (docstore's numeric type) — float→double→float
-    * round-trips EXACTLY, so the consumer's cosine kernel sees the
-    * same floats the live path saw and the oracle replica still
-    * hash-matches. */
-  def ensureIvfCellsArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "s02_ivf_cells_v1",
-        graft.Tables.tableFingerprint(dir, "embeddings")) { path =>
+    * every query consumes the artifact scan. */
+  def ensureIvfCellsArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "s02_ivf_cells_v2", "embeddings") {
       val corpus = Tables(spark, dir, "embeddings")
       // spread: the corpus-sized encode pass (dd02's rule — a narrow
       // scan would assign the whole corpus on one core)
       assignCells(Tables.spread(corpus), ivfCentroids(corpus),
           col("embedding"))
-        .select(col("vec_id"), col("label"), col("cell"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-        .write.format("docstore").mode("overwrite").save(path)
+        .select(col("vec_id"), col("label"), col("cell"), col("embedding"))
     }
 
   /** IVF-style ANN: coarse quantizer = 8 seeded centroids, corpus
@@ -183,15 +176,9 @@ object Similarity {
     val corpus = Tables(spark, dir, "embeddings")
     val centroids = ivfCentroids(corpus)
 
-    // the inverted file: a docstore scan, NO encode kernel here — the
+    // the inverted file: an artifact scan, NO encode kernel here — the
     // plan audit pins the consumer plan free of the assign fold
-    val assigned = Tables.sizedArtifactRead(spark,
-        ensureIvfCellsArtifact(spark, dir))
-      // label: docstore's numeric type is int64 — restore the table's
-      // int32 so the output schema matches the oracle's
-      .select(col("vec_id"), col("label").cast(IntegerType).as("label"),
-        col("cell"),
-        expr("transform(emb, x -> CAST(x AS FLOAT))").as("embedding"))
+    val assigned = ensureIvfCellsArtifact(spark, dir)
 
     // probe: each query picks its 2 nearest cells — per-query rows are
     // bounded by the centroid count, so a window-free sort/slice agg
@@ -550,11 +537,10 @@ object Similarity {
     * per embeddings generation (VERDICT r10 #3). This is the state
     * shape that makes billion-vector ANN fit (8 small codes + a cell id
     * per vector); the corpus-sized assign+encode kernels run only in
-    * the builder, and the ADC probe consumes a docstore scan that
+    * the builder, and the ADC probe consumes an artifact scan that
     * never touches the original vectors. */
-  def ensurePqCodesArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "s07_pq_codes_v1",
-        graft.Tables.tableFingerprint(dir, "embeddings")) { path =>
+  def ensurePqCodesArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "s07_pq_codes_v2", "embeddings") {
       val m = 8; val sub = 8; val kCb = 4
       val corpus = Tables(spark, dir, "embeddings")
       val cb = pqCodebook(corpus, kCb)
@@ -571,7 +557,6 @@ object Similarity {
           expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
         .select(col("vec_id") +: col("cell") +:
           (0 until m).map(s => bestCode(s).as(s"code$s")): _*)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   def s07IvfPq(spark: SparkSession, dir: String): DataFrame = {
@@ -581,10 +566,9 @@ object Similarity {
     val cb = pqCodebook(corpus, kCb)
     def cdist(vecCol: Column, c: Int, s: Int): Column =
       pqDist(cb, vecCol, c, s, sub)
-    // the codes table: a docstore scan — no assign fold, no encode
+    // the codes table: an artifact scan — no assign fold, no encode
     // kernel in the consumer plan (plan-audited)
-    val encoded = Tables.sizedArtifactRead(spark,
-      ensurePqCodesArtifact(spark, dir))
+    val encoded = ensurePqCodesArtifact(spark, dir)
     // probes: nprobe nearest cells per query (bounded sort/slice agg,
     // same as s02) + the 8×4 ADC lookup table as 32 plain columns
     // (tiny frame — ≤ queries × nprobe rows — so the repeated q_vec
@@ -1257,10 +1241,8 @@ object Similarity {
   private[graft] def s15Tiers(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables(spark, dir, "embeddings")
     val centroids = ivfCentroids(corpus)
-    val assigned = Tables.sizedArtifactRead(spark,
-        ensureIvfCellsArtifact(spark, dir))
-      .select(col("vec_id"), col("cell"),
-        expr("transform(emb, x -> CAST(x AS FLOAT))").as("embedding"))
+    val assigned = ensureIvfCellsArtifact(spark, dir)
+      .select(col("vec_id"), col("cell"), col("embedding"))
     // probe rank of each (query, cell): bounded 8-cell frame per query,
     // the s02 sort/slice probe shape generalized to ALL ranks 1..8
     // (shared with s16's fraction-matched probes)
@@ -1834,21 +1816,15 @@ object Similarity {
     * the within-cell kNN would run NN-descent rounds instead of the
     * exact cell-bounded self-join). Neighbor vectors ride the edge rows
     * DiskANN-style (nbr_emb inline), so each search hop is ONE artifact
-    * scan — no second corpus join. */
-  private[operators] def asDoubleArr(c: Column): Column =
-    transform(c, x => x.cast(DoubleType))
-
-  /** The s18 graph-build body, shared with s19's fresh rebuild: given a
+    * scan — no second corpus join.
+    *
+    * The s18 graph-build body, shared with s19's fresh rebuild: given a
     * corpus (vec_id, embedding) and its coarse centroids, emit the
     * artifact frame — in-cell top-[[S18R]] edges + the all-pairs hub
     * layer over cell entry nodes, neighbor vectors inline
     * (DiskANN-style), plus one `entry` row per cell. */
   private def buildGraphEdges(corpus: DataFrame,
       cents: DataFrame): DataFrame = {
-    // the cosine kernel reads FLOAT arrays (VectorMath.cosineF) — the
-    // build scores on the original float column and only the WRITE
-    // widens to double (docstore's numeric type; float→double→float
-    // round-trips exactly, the s02 artifact rule)
     val assigned = assignCells(Tables.spread(corpus), cents,
         col("embedding"))
       .select(col("vec_id"), col("cell"), col("embedding"))
@@ -1883,20 +1859,18 @@ object Similarity {
       .filter(col("src") =!= col("nbr"))
     inCell.unionByName(hub)
       .withColumn("kind", lit("edge"))
-      .select(col("src"), col("nbr"), asDoubleArr(col("nbr_vec")).as("nbr_emb"),
+      .select(col("src"), col("nbr"), col("nbr_vec").as("nbr_emb"),
         col("kind"), lit(-1L).as("cell"))
       .unionByName(entries.select(col("entry").as("src"),
-        lit(-1L).as("nbr"), asDoubleArr(col("entry_vec")).as("nbr_emb"),
+        lit(-1L).as("nbr"), col("entry_vec").as("nbr_emb"),
         lit("entry").as("kind"), col("cell")))
   }
 
-  def ensureGraphAnnArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir), "s18_graph_v1",
-        graft.Tables.tableFingerprint(dir, "embeddings")) { path =>
+  def ensureGraphAnnArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "s18_graph_v2", "embeddings") {
       val corpus = Tables(spark, dir, "embeddings")
       val (cents, _) = graphCentroids(corpus)
       buildGraphEdges(corpus, cents)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** Graph-based ANN (the HNSW/DiskANN family — Atlas `$vectorSearch`'s
@@ -1920,21 +1894,23 @@ object Similarity {
     * centroids, vec_id tie-breaks), so the full build+probe replicates
     * declaratively in the oracle.
     */
-  /** The s18 beam probe, shared with s19's three tiers: read the graph
-    * artifact at `artPath`, seed each query's beam with the entry nodes
+  /** The s18 beam probe, shared with s19's three tiers: over the graph
+    * artifact `graph`, seed each query's beam with the entry nodes
     * of its 2 nearest cells (by `cents`), then [[S18T]] fixed hops —
     * each hop expands the current top-[[S18B]] beam through the edge
     * list, scores ONLY never-visited candidates, and re-beams. Returns
     * the final visited frame (q_id, vec_id, cos). */
-  private def beamVisited(spark: SparkSession, artPath: String,
-      cents: DataFrame, qs: DataFrame): DataFrame = {
-    // size-derived scan splits (guide §6): the build wrote one file per
-    // build task, so a small artifact would otherwise cost a task per
-    // near-empty file in EVERY hop's scan
-    val art = Tables.sizedArtifactRead(spark, artPath)
+  private def beamVisited(graph: DataFrame, cents: DataFrame,
+      qs: DataFrame): DataFrame = {
+    // no checkpoint on the artifact read: each hop re-scans the parquet
+    // graph. A lazy localCheckpoint here did not win at both scales (4
+    // cores, two alternated min-of-5 pairs, with → without): sf0.1 s18
+    // 2.44/2.21 → 2.44/2.39 s, s20 3.94/4.03 → 4.04/4.23 s (both pairs
+    // favour it); synthesized sf1 s18 4.02/3.60 → 3.41/3.77 s, s20
+    // 6.64/6.48 → 6.01/6.27 s (both pairs favour its removal)
+    val art = graph
       .select(col("src"), col("nbr"), col("kind"), col("cell"),
-        expr("transform(nbr_emb, x -> CAST(x AS FLOAT))").as("nbr_emb"))
-      .localCheckpoint(false)
+        col("nbr_emb"))
     val edges = art.filter(col("kind") === "edge")
       .select(col("src"), col("nbr"), col("nbr_emb"))
     val entries = art.filter(col("kind") === "entry")
@@ -2027,7 +2003,7 @@ object Similarity {
     // the beam chain and the s01 exact baseline are independent eager
     // chains — overlap them (guide §2.6)
     val (visited, exact) = graft.Par.run2(
-      () => beamVisited(spark,
+      () => beamVisited(
         ensureGraphAnnArtifact(spark, dir), cents, queriesDf(spark, dir)),
       () => Tables.ckptTiny(s01BruteForce(spark, dir)
         .select(col("q_id"), col("vec_id"))))
@@ -2174,12 +2150,9 @@ object Similarity {
     * rewrite is old-rows-passthrough + batch-sized additions. The
     * cell membership re-derives map-only here; a deployment-grade
     * store would persist it (s02's IVF artifact does). */
-  def ensureGraphMaintArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir),
-        "s19_graph_maint_v1",
-        graft.Tables.tableFingerprint(dir, "embeddings")) { path =>
-      val old = spark.read.format("docstore")
-        .option("path", ensureGraphAnnArtifact(spark, dir)).load()
+  def ensureGraphMaintArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "s19_graph_maint_v2", "embeddings") {
+      val old = ensureGraphAnnArtifact(spark, dir)
         .select(col("src"), col("nbr"), col("nbr_emb"), col("kind"),
           col("cell"))
       val base = Tables(spark, dir, "embeddings")
@@ -2234,26 +2207,21 @@ object Similarity {
           col("f.nbr_vec").as("nbr_vec"))
       val added = newOut.select(col("src"), col("nbr"), col("nbr_vec"))
         .unionByName(back)
-        .select(col("src"), col("nbr"),
-          asDoubleArr(col("nbr_vec")).as("nbr_emb"),
+        .select(col("src"), col("nbr"), col("nbr_vec").as("nbr_emb"),
           lit("edge").as("kind"), lit(-1L).as("cell"))
       old.unionByName(added)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** s19's FRESH tier: the s18 build re-run from scratch on the grown
     * corpus — new centroids (count rescaled to the grown size), new
     * assignment, new in-cell kNN and hub. The reindexing-cadence
     * comparison anchor. */
-  def ensureGraphFreshArtifact(spark: SparkSession, dir: String): String =
-    graft.Graft.ensureArtifact(DocstoreOps.docsRoot(dir),
-        "s19_graph_fresh_v1",
-        graft.Tables.tableFingerprint(dir, "embeddings")) { path =>
+  def ensureGraphFreshArtifact(spark: SparkSession, dir: String): DataFrame =
+    graft.Graft.artifact(spark, dir, "s19_graph_fresh_v2", "embeddings") {
       val grown = grownCorpus(spark, dir)
         .select(col("vec_id"), col("embedding"))
       val (cents, _) = graphCentroids(grown)
       buildGraphEdges(grown, cents)
-        .write.format("docstore").mode("overwrite").save(path)
     }
 
   /** GRAPH-INDEX MAINTENANCE AUDIT (round 15, VERDICT r14 #3) — the
@@ -2303,12 +2271,9 @@ object Similarity {
               V.cosine_sim(col("q_vec"), col("embedding")).as("cos")),
           K, Nil)
         .select(col("q_id"), col("vec_id"))),
-      () => beamVisited(spark, ensureGraphFreshArtifact(spark, dir),
-        freshCents, qs),
-      () => beamVisited(spark, ensureGraphMaintArtifact(spark, dir),
-        oldCents, qs),
-      () => beamVisited(spark, ensureGraphAnnArtifact(spark, dir),
-        oldCents, qs))
+      () => beamVisited(ensureGraphFreshArtifact(spark, dir), freshCents, qs),
+      () => beamVisited(ensureGraphMaintArtifact(spark, dir), oldCents, qs),
+      () => beamVisited(ensureGraphAnnArtifact(spark, dir), oldCents, qs))
     val exact = chains(0)
     def tier(name: String, visited: DataFrame): DataFrame = {
       val top = topKPerQuery(
@@ -2518,7 +2483,7 @@ object Similarity {
   private def s18TopFrame(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables(spark, dir, "embeddings")
     val (cents, _) = graphCentroids(corpus)
-    val visited = beamVisited(spark,
+    val visited = beamVisited(
       ensureGraphAnnArtifact(spark, dir), cents, queriesDf(spark, dir))
     topKPerQuery(visited.filter(col("vec_id") =!= col("q_id"))
         .withColumn("__x", lit(0)), K, Seq("__x"))

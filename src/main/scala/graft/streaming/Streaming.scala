@@ -1868,16 +1868,14 @@ object Streaming {
     */
   def st15IngestDedup(spark: SparkSession, dir: String): DataFrame = {
     val D = graft.operators.Dedup
-    val corpusSigs = Tables.sizedArtifactRead(spark,
-      D.ensureMinhashSigArtifact(spark, dir))
+    val corpusSigs = D.ensureMinhashSigArtifact(spark, dir)
       .select(col("doc_id").as("cid"), col("sig").as("csig"))
-    val batchSigs = st15Wave(spark, dir)
+    // kernel once (the dd16 barrier rule), then the post-checkpoint
+    // coalesce: kernel parallel below, consumers read a few partitions
+    // (sf1-safe, guide §2.2)
+    val batchSigs = Tables.ckptNarrow(st15Wave(spark, dir)
       .select(col("doc_id").as("nid"),
-        graft.functions.text.minhash_sig(col("text"), 64, 3).as("nsig"))
-      .localCheckpoint(false) // kernel once (the dd16 barrier rule)
-      // post-checkpoint coalesce (dd16's rule): kernel parallel below,
-      // consumers read a few partitions (sf1-safe, guide §2.2)
-      .transform(graft.Tables.coalesceTail(_, 8))
+        graft.functions.text.minhash_sig(col("text"), 64, 3).as("nsig")), 8)
     st15Verdicts(corpusSigs, batchSigs, None)
   }
 

@@ -1142,31 +1142,31 @@ class NewOpsSpec extends SparkSpec {
 
   test("p08 reads the materialized dd06 cluster artifact, not the CC loop") {
     import graft.operators.Dedup
-    // write→read contract: the docstore round-trip returns the cluster
+    // write→read contract: the artifact round-trip returns the cluster
     // assignment dd06 computes, bit-for-bit (ids and sizes as BIGINT)
-    val path = Dedup.ensureClusterArtifact(spark, sfDir)
-    val readBack = spark.read.format("docstore").option("path", path).load()
-      .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
+    val readBack = Dedup.ensureClusterArtifact(spark, sfDir)
     val direct = Dedup.dd06Clusters(spark, sfDir)
-    // names + types match; nullability intentionally differs (a docstore
-    // scan is always nullable — a collection can omit any field)
+    // names + types match; nullability intentionally differs (a parquet
+    // read back is always nullable)
     assert(readBack.schema.map(f => (f.name, f.dataType)) ==
       direct.schema.map(f => (f.name, f.dataType)),
       s"${readBack.schema} != ${direct.schema}")
     assert(readBack.exceptAll(direct).isEmpty && direct.exceptAll(readBack).isEmpty)
     // idempotence: a second ensure serves the cache (marker honored) —
-    // the collection's files are untouched
-    val before = new java.io.File(path).listFiles().map(f =>
-      f.getName -> f.lastModified()).toMap
-    assert(Dedup.ensureClusterArtifact(spark, sfDir) == path)
-    val after = new java.io.File(path).listFiles().map(f =>
-      f.getName -> f.lastModified()).toMap
-    assert(after == before)
-    // and p08's plan is a docstore scan where the CC loop used to sit:
-    // no iterative-checkpoint frames (LogicalRDD scans) anywhere in it
+    // the artifact's files are untouched
+    def files(df: org.apache.spark.sql.DataFrame) = df.inputFiles.map { f =>
+      val file = new java.io.File(new java.net.URI(f))
+      file.getPath -> file.lastModified() }.toMap
+    val before = files(readBack)
+    assert(before.nonEmpty)
+    assert(files(Dedup.ensureClusterArtifact(spark, sfDir)) == before)
+    // and p08's plan is a parquet scan of the cluster artifact where the
+    // CC loop used to sit: no iterative-checkpoint frames (LogicalRDD
+    // scans) anywhere in it
     val p08 = SparkEntry.queries("p08_leak_safe_split")(spark, sfDir)
     val physical = p08.queryExecution.executedPlan.toString
-    assert(physical.contains("docstore"), physical)
+    assert(physical.linesIterator.exists(l => l.contains("FileScan parquet") &&
+      l.contains("/dd06_clusters_v2_")), physical)
     assert(!physical.contains("Scan ExistingRDD"), physical)
   }
 
@@ -1211,11 +1211,8 @@ class NewOpsSpec extends SparkSpec {
   test("dd02 pair artifact round-trips bit-exact and serves dd06/dd13") {
     import graft.operators.Dedup
     // write→read contract for the VERIFIED pair set (ids BIGINT,
-    // est_jaccard an exact dyadic k/64 double — lossless through the
-    // docstore's shortest-repr JSON)
-    val path = Dedup.ensureMinhashPairArtifact(spark, sfDir)
-    val readBack = spark.read.format("docstore").option("path", path).load()
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
+    // est_jaccard an exact dyadic k/64 double)
+    val readBack = Dedup.ensureMinhashPairArtifact(spark, sfDir)
     val direct = Dedup.dd02MinHash(spark, sfDir)
     assert(readBack.schema.map(f => (f.name, f.dataType)) ==
       direct.schema.map(f => (f.name, f.dataType)),
@@ -1225,7 +1222,8 @@ class NewOpsSpec extends SparkSpec {
     // the dd04 (Jaccard-edge) artifact exists with a commit marker after
     // any dd06 run — the CC loop consumes the materialized edge list
     Dedup.dd06Clusters(spark, sfDir).collect()
-    val jp = Dedup.ensureJaccardPairArtifact(spark, sfDir)
+    val jp = new java.io.File(new java.net.URI(
+      Dedup.ensureJaccardPairArtifact(spark, sfDir).inputFiles.head)).getParent
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$jp/_GRAFT_COMPLETE")))
   }

@@ -845,9 +845,7 @@ class StreamingSpec extends SparkSpec {
       "micro-batch splits, signatures accumulated in the store") {
     implicit val ctx = spark.sqlContext
     import graft.streaming.Streaming.DocRow
-    val corpusSigs = spark.read.format("docstore")
-      .option("path",
-        graft.operators.Dedup.ensureMinhashSigArtifact(spark, sfDir)).load()
+    val corpusSigs = graft.operators.Dedup.ensureMinhashSigArtifact(spark, sfDir)
       .select(col("doc_id").as("cid"), col("sig").as("csig"))
     val wave = Streaming.st15Wave(spark, sfDir).orderBy("doc_id")
       .collect().map(r => DocRow(r.getLong(0), r.getString(1)))

@@ -2,7 +2,7 @@
 """A/B the repo benchmark: a parent revision against the working tree.
 
     python3 tools/ab.py <parent-rev> [--pairs 6] [--traced-pairs 0]
-                        [--workdir DIR] [--json out.json]
+                        [--bench-keys K1,K2] [--workdir DIR] [--json out.json]
 
 Run from the root of a graft checkout. The parent is exported with
 `git archive` into a temporary directory; then, for every workload in
@@ -22,6 +22,12 @@ not separate). A `gain` note marks a metric the change won in at least
 nine of ten pairs by more than the parent's IQR. `fail_frac` is each
 side's failed/attempted ops. Traced pairs, if asked for, run after every
 workload's untraced pairs and add the per-layer medians (ungated).
+
+`--bench-keys` runs N alternated pairs of `graft.Bench <out> <keys>`
+instead (sbt `runMain` in each checkout, on the scale factor Bench reads
+from `SPARK_GRAFT_SF_DIR`; Bench adds its canary key). Per key it prints
+both sides' medians of Bench's min-of-5 wall and CPU, the wall change,
+the pairs the change won and the median construct/exec job counts.
 
 If any run exits non-zero or reports a failed op, the tool stops and
 prints the side, workload, seed, exit code and the last 40 lines of that
@@ -49,7 +55,9 @@ def quartiles(xs):
 
 def side_env():
     env = dict(os.environ)
-    env.pop("CARGO_TARGET_DIR", None)  # each side keeps its own build
+    # run.py builds into $CARGO_TARGET_DIR when set; an absolute one would
+    # make both sides share (and rebuild) one build directory
+    env.pop("CARGO_TARGET_DIR", None)
     return env
 
 
@@ -86,13 +94,13 @@ def run_once(side, root, workload, seed, seconds, trace):
             "attempted": res["attempted"]}
 
 
-def pairs(roots, workload, seeds, seconds, trace):
+def pairs(seeds, run):
+    """run(side, seed) for each seed, the parent first in odd pairs."""
     out = {"parent": [], "change": []}
     for i, seed in enumerate(seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            out[side].append(run_once(side, roots[side], workload, seed,
-                                      seconds, trace))
+            out[side].append(run(side, seed))
     return out
 
 
@@ -131,6 +139,54 @@ def report(workload, runs, e2e):
     return ok
 
 
+def bench_once(side, root, keys, i, tmp):
+    out = os.path.join(tmp, f"bench_{side}_{i}.json")
+    r = subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true",
+                        f"runMain graft.Bench {out} {keys}"], cwd=root,
+                       env=side_env(), capture_output=True, text=True,
+                       timeout=3600)
+    try:
+        with open(out) as f:
+            res = json.load(f)
+        os.remove(out)
+    except (OSError, json.JSONDecodeError):
+        res = None
+    if r.returncode != 0 or res is None:
+        stop(side, "bench", i, r.returncode, r.stdout + r.stderr)
+    failed = [k for k, v in res["queries"].items() if v < 0]
+    if failed:
+        stop(side, "bench", i, f"0 but keys failed: {failed}",
+             r.stdout + r.stderr)
+    print(f"[ab] bench run {i} {side}: total {res['value']:.3f} s, "
+          f"gate {res['window_gate']}", file=sys.stderr, flush=True)
+    return res
+
+
+def report_bench(runs):
+    n = len(runs["parent"])
+    print(f"\n== graft.Bench subset: {n} pairs, medians of per-run "
+          f"min-of-5 (s); jobs = construct/exec")
+    print(f"{'key':26s} {'wall par':>9s} {'wall chg':>9s} {'change%':>8s} "
+          f"{'wins':>5s} {'cpu par':>8s} {'cpu chg':>8s} "
+          f"{'jobs par':>9s} {'jobs chg':>9s}")
+    med = statistics.median
+
+    def col(side, field, k):
+        return med(r[field][k] for r in runs[side])
+
+    for k in sorted(runs["parent"][0]["queries"]):
+        wp, wc = col("parent", "queries", k), col("change", "queries", k)
+        wins = sum(c["queries"][k] < p["queries"][k]
+                   for p, c in zip(runs["parent"], runs["change"]))
+        jobs = {s: f"{col(s, 'queries_construct_jobs', k):g}/"
+                   f"{col(s, 'queries_exec_jobs', k):g}"
+                for s in ("parent", "change")}
+        print(f"{k:26s} {wp:9.3f} {wc:9.3f} {100 * (wc - wp) / wp:+8.1f} "
+              f"{wins:2d}/{n:<2d} {col('parent', 'queries_cpu', k):8.3f} "
+              f"{col('change', 'queries_cpu', k):8.3f} "
+              f"{jobs['parent']:>9s} {jobs['change']:>9s}")
+
+
 def report_layers(workload, runs, names):
     print(f"\n== {workload}: per-layer medians over "
           f"{len(runs['parent'])} traced pairs (ungated)")
@@ -148,6 +204,9 @@ def main():
     ap.add_argument("parent_rev")
     ap.add_argument("--pairs", type=int, default=6)
     ap.add_argument("--traced-pairs", type=int, default=0)
+    ap.add_argument("--bench-keys", default=None,
+                    help="comma-separated graft.Bench keys to A/B instead "
+                         "of the perfbench workloads")
     ap.add_argument("--workdir", default=None,
                     help="where the parent is exported (default: a temp dir)")
     ap.add_argument("--json", default=None, help="write every run here")
@@ -174,22 +233,31 @@ def main():
         roots = {"parent": parent, "change": root}
         seeds = list(range(1, a.pairs + 1))
         results, ok = {}, True
-        # every gated (untraced) result first; traced runs only locate
-        for w in workloads:
-            runs = pairs(roots, w, seeds, bench["run_seconds"], 0)
-            results[w] = {"untraced": runs}
-            ok = report(w, runs, bench["end_to_end"]) and ok
-        for w in (workloads if a.traced_pairs else []):
-            traced = pairs(roots, w, seeds[:a.traced_pairs],
-                           bench["run_seconds"], 1)
-            results[w]["traced"] = traced
-            report_layers(w, traced, [m["name"] for m in bench["per_layer"]])
+        if a.bench_keys:
+            results["graft.Bench"] = pairs(seeds, lambda side, i: bench_once(
+                side, roots[side], a.bench_keys, i, tmp))
+            report_bench(results["graft.Bench"])
+        else:
+            # every gated (untraced) result first; traced runs only locate
+            for w in workloads:
+                runs = pairs(seeds, lambda side, seed: run_once(
+                    side, roots[side], w, seed, bench["run_seconds"], 0))
+                results[w] = {"untraced": runs}
+                ok = report(w, runs, bench["end_to_end"]) and ok
+            for w in (workloads if a.traced_pairs else []):
+                traced = pairs(seeds[:a.traced_pairs],
+                               lambda side, seed: run_once(
+                                   side, roots[side], w, seed,
+                                   bench["run_seconds"], 1))
+                results[w]["traced"] = traced
+                report_layers(w, traced,
+                              [m["name"] for m in bench["per_layer"]])
+            print("\n[ab] " + ("every end-to-end metric inside its bound"
+                               if ok else "a metric regressed beyond its bound"))
         if a.json:
             with open(a.json, "w") as f:
                 json.dump({"parent_rev": a.parent_rev, "seeds": seeds,
                            "results": results}, f, indent=1)
-        print("\n[ab] " + ("every end-to-end metric inside its bound" if ok
-                           else "a metric regressed beyond its bound"))
         return 0 if ok else 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
