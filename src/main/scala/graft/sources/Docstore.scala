@@ -40,18 +40,25 @@ import scala.jdk.CollectionConverters._
   *
   * Scale design: files are split into newline-aligned byte ranges (the
   * standard Hadoop text-input contract), so one 1 TB collection file
-  * becomes ~8000 parallel partitions instead of one task; projection
+  * becomes ~8000 parallel partitions instead of one task, while many
+  * small files share a partition as they do in Spark's file sources; projection
   * prunes unread doc paths, and LIMIT caps each reader. All pushdowns are
   * visible in `explain()` like the reference's `$match`/projection/
   * `$limit` pipeline stages.
   *
-  * One reader serves every scan, batch and streaming: each split's lines
-  * convert to rows and pass the pushed filters, which run as Catalyst's
-  * own generated predicate (see [[DocstoreFilters]]), before a row is
-  * emitted. The rows then leave as they are (with the LIMIT), through a
-  * bounded TopN heap ordered by Catalyst's `RowOrdering`, or into the
-  * in-reader `$group` hash aggregate, whose MIN/MAX compare with
-  * Catalyst's interpreted ordering of the column type.
+  * One reader serves every scan, batch and streaming. Each split's lines
+  * stay bytes: a line that cannot satisfy a pushed string equality is
+  * skipped before it is parsed ([[DocstorePrefilter]]), and the rest
+  * stream through one Jackson parser that fills the row with the columns
+  * the query reads and skips every other field ([[DocRowConverter]]).
+  * Rows pass the pushed filters, which run as Catalyst's own generated
+  * predicate (see [[DocstoreFilters]]), before a row is emitted. The rows
+  * then leave as they are (with the LIMIT), through a bounded TopN heap
+  * ordered by Catalyst's `RowOrdering`, or into the in-reader `$group`
+  * hash aggregate, whose MIN/MAX compare with Catalyst's interpreted
+  * ordering of the column type. Each reader reports its line, skip,
+  * parse, malformed and byte counts as the scan's SQL metrics
+  * ([[DocstoreMetrics]]).
   *
   * Hadoop configuration: the active session's (`DocstoreTable.hadoopConf`)
   * for every listing, sample, commit and catalog call; each scan and
@@ -162,18 +169,35 @@ object DocstoreTable {
     files.map(s => (s.getPath.toString, s.getLen))
   }
 
-  /** Byte-range splits for a file list. Compressed (`.gz`) collections
-    * are unsplittable — one whole-file partition each, decompressed
-    * transparently in [[LineRangeReader]]; plain files split on the
-    * Hadoop text contract. */
-  def planSplits(files: Seq[(String, Long)], split: Long): Seq[DocstorePartition] =
-    files.flatMap { case (file, len) =>
+  /** A file list's byte ranges, packed into partitions by Spark's own
+    * file-source rule (`FilePartition.maxSplitBytes` and
+    * `getFilePartitions`): ranges go in listing order into a partition
+    * until it holds `min(split, maxSplitBytes)` bytes, each range also
+    * charged `spark.sql.files.openCostInBytes`. A collection of many small
+    * files then pays a task launch and a task result per few files, not
+    * per file. Compressed (`.gz`) files are unsplittable — one whole-file
+    * range each, decompressed transparently in [[LineRangeReader]]; plain
+    * files split on the Hadoop text contract. */
+  def planSplits(files: Seq[(String, Long)], split: Long): Seq[DocstorePartition] = {
+    import org.apache.spark.paths.SparkPath
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val spark = SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val ranges = files.flatMap { case (file, len) =>
+      val path = SparkPath.fromPathString(file)
+      def range(start: Long, n: Long) =
+        PartitionedFile(InternalRow.empty, path, start, n, fileSize = len)
       if (len == 0) Seq.empty
-      else if (file.endsWith(".gz")) Seq(DocstorePartition(file, 0, len))
-      else (0L until len by split).map { start =>
-        DocstorePartition(file, start, math.min(split, len - start))
-      }
+      else if (file.endsWith(".gz")) Seq(range(0, len))
+      else (0L until len by split).map(start => range(start, math.min(split, len - start)))
     }
+    val maxBytes = math.min(split,
+      FilePartition.maxSplitBytes(spark, files.map(_._2 + openCost).sum))
+    FilePartition.getFilePartitions(spark, ranges, maxBytes).map { fp =>
+      DocstorePartition(fp.files.toSeq.map(f =>
+        DocstoreRange(f.toPath.toString, f.start, f.length)))
+    }
+  }
 
   def inferSchema(opts: DocstoreOptions): StructType = inferred(opts)._1
 
@@ -257,15 +281,14 @@ object DocstoreTable {
       val (file, len) = it.next()
       val reader = new LineRangeReader(file, 0, len, conf)
       try {
-        var line = reader.next()
-        while (remaining > 0 && line != null) {
-          if (line.nonEmpty) {
+        while (remaining > 0 && reader.next()) {
+          if (reader.len > 0) {
             lines += 1
-            bytes += line.getBytes(StandardCharsets.UTF_8).length + 1L
+            bytes += reader.len + 1L
+            val line = new String(reader.buf, reader.off, reader.len, StandardCharsets.UTF_8)
             try { docs += ExtJson.parse(line); remaining -= 1 }
             catch { case _: Exception => () } // malformed line: skip in sampling
           }
-          line = if (remaining > 0) reader.next() else null
         }
       } finally reader.close()
     }
@@ -414,7 +437,8 @@ class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions,
       case _ => None
     }
     if (aggs.exists(_.isEmpty)) return false
-    aggSpec = Some(AggSpec(groups.map(_.get), aggs.map(_.get)))
+    aggSpec = Some(AggSpec(groups.map(_.get), aggs.map(_.get),
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
     true
   }
 
@@ -438,7 +462,11 @@ final case class AggOp(op: String, field: StructField) {
     case _                      => field.dataType
   }
 }
-final case class AggSpec(groupBy: Seq[StructField], aggs: Seq[AggOp]) {
+/** `ansi`: the session's `spark.sql.ansi.enabled` when the aggregate was
+  * pushed; a BIGINT SUM then raises on overflow, as Spark's `Sum` does,
+  * instead of wrapping. */
+final case class AggSpec(groupBy: Seq[StructField], aggs: Seq[AggOp],
+    ansi: Boolean) {
   /** Scan output: groupBy columns then aggregate columns (the DSv2
     * aggregate-pushdown contract). */
   def outputSchema: StructType = StructType(
@@ -490,6 +518,9 @@ abstract class DocstoreBatchScan(fullSchema: StructType,
 
   override def planInputPartitions(): Array[InputPartition] =
     DocstoreTable.planSplits(snapshotFiles, opts.splitSize).toArray
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] = DocstoreMetrics.all
 }
 
 class DocstoreAggScan(fullSchema: StructType, spec: AggSpec,
@@ -636,8 +667,10 @@ object FileCountOffset {
   }
 }
 
-final case class DocstorePartition(file: String, start: Long, length: Long)
-  extends InputPartition
+final case class DocstoreRange(file: String, start: Long, length: Long)
+
+/** One task's share of a scan: byte ranges read in order. */
+final case class DocstorePartition(ranges: Seq[DocstoreRange]) extends InputPartition
 
 /** Pushed `sources.Filter` → Catalyst predicate — the reader's `$match`
   * (reference: src/mongo_filter_pushdown.cpp:1), over the same grammar
@@ -705,8 +738,8 @@ object DocstoreFilters {
   * split's partial aggregates under `agg`. `conf`: the scan's broadcast
   * of the session's Hadoop conf. */
 class DocstoreReaderFactory(fullSchema: StructType, val required: StructType,
-    filters: Array[Filter], val schemaMode: String, val flatten: Boolean,
-    val explicitPaths: Map[String, Array[String]],
+    filters: Array[Filter], val schemaMode: String, flatten: Boolean,
+    explicitPaths: Map[String, Array[String]],
     val conf: Broadcast[SerializableConfiguration], val limit: Int = -1,
     val topN: Option[TopNSpec] = None, val agg: Option[AggSpec] = None)
     extends PartitionReaderFactory {
@@ -734,6 +767,12 @@ class DocstoreReaderFactory(fullSchema: StructType, val required: StructType,
   val predicate: Option[Expression] =
     DocstoreFilters.conjunction(filters.toSeq, evalSchema)
   val outOrdinals: Array[Int] = required.fieldNames.map(evalSchema.fieldIndex)
+  /** The eval schema's document paths, built once for every split. */
+  val paths = new DocPaths(evalSchema, flatten, explicitPaths)
+  /** A permissive scan's byte prefilter for its pushed string equalities;
+    * null when there is none. */
+  val prefilter: DocstorePrefilter =
+    if (schemaMode == "permissive") DocstorePrefilter(filters.toSeq).orNull else null
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new DocstoreReader(p.asInstanceOf[DocstorePartition], this)
@@ -744,26 +783,42 @@ class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
   import org.apache.spark.sql.catalyst.{expressions => E}
   import f.{evalSchema, outOrdinals}
 
-  private val conv = new DocRowConverter(evalSchema, f.schemaMode, f.flatten,
-    f.explicitPaths)
+  private val conv = new DocRowConverter(evalSchema, f.paths, f.schemaMode)
   // one compile per distinct predicate: Spark's codegen cache serves
   // every later split of the scan
   private val pred: E.BasePredicate = f.predicate.map { e =>
     val compiled = E.Predicate.create(e); compiled.initialize(0); compiled
   }.orNull
-  private val lines = new LineRangeReader(p.file, p.start, p.length, f.conf.value.value)
+  private val ranges = p.ranges.iterator
+  private var lines: LineRangeReader = _
+  private var linesRead, linesSkipped, rangeBytes = 0L
 
-  /** The split's docs that convert (malformed ones dropped per schema
-    * mode) and pass the pushed filters. */
+  /** Advances `lines` to the partition's next line, across its ranges. */
+  private def nextLine(): Boolean = {
+    while (lines == null || !lines.next()) {
+      if (lines != null) { rangeBytes += lines.bytesRead; lines.close(); lines = null }
+      if (!ranges.hasNext) return false
+      val r = ranges.next()
+      lines = new LineRangeReader(r.file, r.start, r.length, f.conf.value.value)
+    }
+    true
+  }
+
+  /** The split's docs that the prefilter keeps, that convert (malformed
+    * ones dropped per schema mode) and that pass the pushed filters. */
   private val docs: Iterator[InternalRow] = new Iterator[InternalRow] {
     private var pending: InternalRow = _
     override def hasNext: Boolean = {
       while (pending == null) {
-        val line = lines.next()
-        if (line == null) return false
-        if (line.nonEmpty) conv.convert(line) match {
-          case Some(row) if pred == null || pred.eval(row) => pending = row
-          case _ => ()
+        if (!nextLine()) return false
+        if (lines.len > 0) {
+          linesRead += 1
+          if (f.prefilter != null && !f.prefilter.mayMatch(lines.buf, lines.off, lines.len))
+            linesSkipped += 1
+          else {
+            val row = conv.convert(lines.buf, lines.off, lines.len)
+            if (row != null && (pred == null || pred.eval(row))) pending = row
+          }
         }
       }
       true
@@ -788,7 +843,15 @@ class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
   override def next(): Boolean =
     if (out.hasNext) { current = out.next(); true } else false
   override def get(): InternalRow = current
-  override def close(): Unit = lines.close()
+  override def close(): Unit = if (lines != null) lines.close()
+
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    import DocstoreMetrics._
+    Array(task(LinesRead, linesRead), task(LinesSkipped, linesSkipped),
+      task(DocsParsed, linesRead - linesSkipped), task(DocsMalformed, conv.malformed),
+      task(BytesRead, rangeBytes + (if (lines == null) 0L else lines.bytesRead)))
+  }
 
   private val projects = !outOrdinals.sameElements(evalSchema.indices)
   private def project(row: InternalRow): InternalRow =
@@ -855,7 +918,9 @@ class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
           accs(i) = ops(i) match {
             case "count" => acc.asInstanceOf[Long] + 1L
             case "sum" => (acc, v) match {
-              case (s: Long, x: Long)     => s + x
+              case (s: Long, x: Long)     =>
+                if (spec.ansi) org.apache.spark.sql.catalyst.util.MathUtils.addExact(s, x)
+                else s + x
               case (s: Double, x: Double) => s + x
               case _                      => v // first value
             }
@@ -872,20 +937,46 @@ class DocstoreReader(p: DocstorePartition, f: DocstoreReaderFactory)
   }
 }
 
-/** Extended-JSON line → InternalRow under a flat schema, honoring the
-  * reference's schema modes (reference: src/mongo_schema_inference.cpp
-  * schema_mode): permissive → mismatched value becomes NULL;
-  * dropmalformed → row skipped; failfast → throw.
-  *
-  * Hot path: works directly on Jackson's parsed tree (no intermediate
-  * value model — that costs ~40% of scan throughput at 100k docs/s), and
-  * flattened-column path candidates (`user_id` → `user_id` | `user`.`id`)
-  * are precomputed once, not re-derived per row.
-  */
-class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
-    explicitPaths: Map[String, Array[String]] = Map.empty) {
-  import com.fasterxml.jackson.databind.JsonNode
-  import com.fasterxml.jackson.databind.node.ObjectNode
+/** The document paths an eval schema reads, as a trie over field names.
+  * Each column has its candidate paths — the `__schema` mapping, else the
+  * flattened-name candidates (`user_id` → `user_id` | `user`.`id`) — and
+  * each candidate ends in a slot that [[DocRowConverter]] fills. Built
+  * once per reader factory and shipped with it. */
+final class DocPaths(schema: StructType, flatten: Boolean,
+    explicitPaths: Map[String, Array[String]]) extends Serializable {
+  import DocPaths.Node
+
+  val root = new Node
+  private val types = scala.collection.mutable.ArrayBuffer.empty[DataType]
+  /** Per column, its slots in candidate order. */
+  val colSlots: Array[Array[Int]] = schema.fields.map { f =>
+    val cands = explicitPaths.get(f.name) match {
+      case Some(p) => List(p.toList) // __schema path mapping wins
+      case None    => if (flatten) DocPaths.candidatePaths(f.name) else List(List(f.name))
+    }
+    cands.map { path =>
+      val node = path.foldLeft(root)((n, k) => n.children.computeIfAbsent(k, _ => new Node))
+      node.slots :+= types.length
+      types += f.dataType
+      types.length - 1
+    }.toArray
+  }
+  val slotType: Array[DataType] = types.toArray
+  root.seal()
+}
+
+object DocPaths {
+  final class Node extends Serializable {
+    val children = new java.util.HashMap[String, Node]()
+    /** Slots whose path ends here. */
+    var slots: Array[Int] = Array.emptyIntArray
+    /** Every slot at or below this node: what a repeated key resets. */
+    var under: Array[Int] = Array.emptyIntArray
+    private[DocPaths] def seal(): Unit = {
+      children.values.forEach(_.seal())
+      under = slots ++ children.values.asScala.flatMap(_.under)
+    }
+  }
 
   /** All ways to read column `name`: the literal field first, then each
     * '_' split as a nested-doc path, left-to-right, recursively. The split
@@ -902,86 +993,206 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
       } yield s.substring(0, idx) :: rest)
     go(name).take(256).toList
   }
+}
 
-  private val paths: Array[Array[Array[String]]] =
-    schema.fieldNames.map { n =>
-      explicitPaths.get(n) match {
-        case Some(p) => Array(p) // __schema path mapping wins
-        case None =>
-          val cands = if (flatten) candidatePaths(n) else List(List(n))
-          cands.map(_.toArray).toArray
+/** Extended-JSON line → InternalRow under a flat schema, honoring the
+  * reference's schema modes (reference: src/mongo_schema_inference.cpp
+  * schema_mode): permissive → mismatched value becomes NULL;
+  * dropmalformed → row skipped; failfast → throw.
+  *
+  * Hot path: one streaming Jackson parse over the line's UTF-8 bytes. It
+  * descends only into objects on a [[DocPaths]] path and skips every
+  * other field, so a query reading 2 of 10 fields builds no tree for the
+  * other 8. A scalar token converts straight into its slot; a needed
+  * object or array (an extended-JSON wrapper, a struct, an array, or the
+  * JSON-VARCHAR fallback) is read as that value's subtree and converted
+  * by [[toInternal]], the one set of conversion rules. The whole line is
+  * still tokenized, so a syntax error anywhere, in a skipped field too,
+  * makes the line malformed, as does content after the document.
+  *
+  * The answer is the tree walk's: the first candidate path wins even when
+  * its value is null, a later one only when non-null; a repeated key
+  * replaces the earlier value (the tree's last-wins); a document holding
+  * a top-level `__schema` key, wherever it sits, is skipped; a line that
+  * is not valid UTF-8 and does not parse, or that starts with bytes from
+  * which Jackson would guess another encoding, is read as its
+  * replacement-decoded text, as a decoded line was.
+  */
+class DocRowConverter(schema: StructType, paths: DocPaths, schemaMode: String) {
+  import com.fasterxml.jackson.core.{JsonParser, JsonProcessingException, JsonToken}
+  import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+  import com.fasterxml.jackson.databind.node.ObjectNode
+  import DocRowConverter._
+
+  private val factory = ExtJson.mapper.getFactory
+  // one value's subtree mid-line: the trailing-token check is the line's
+  private val subtree = ExtJson.mapper.readerFor(classOf[JsonNode])
+    .without(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  private val colSlots = paths.colSlots
+  private val kind: Array[Int] = paths.slotType.map {
+    case StringType  => KString
+    case LongType    => KLong
+    case DoubleType  => KDouble
+    case BooleanType => KBoolean
+    case _           => KTree
+  }
+  // per slot, this line's outcome: Missing | Null | Value (value) | Bad (error)
+  private val state = new Array[Byte](kind.length)
+  private val value = new Array[Any](kind.length)
+  private val error = new Array[String](kind.length)
+  private var schemaDoc = false
+
+  /** Lines dropped as malformed: unparseable, not a document, or (under
+    * dropmalformed) holding a value that does not convert. */
+  var malformed = 0L
+
+  /** The row of the line `buf(off until off + len)`, or null when the line
+    * is dropped or is a `__schema` document. */
+  def convert(buf: Array[Byte], off: Int, len: Int): InternalRow =
+    parse(buf, off, len, asBytes = utf8Bootstrap(buf, off, len))
+
+  /** Parses the line's bytes, or (`asBytes` false) its decoded text, which
+    * is what the line is read as when its bytes would not parse as UTF-8. */
+  private def parse(buf: Array[Byte], off: Int, len: Int, asBytes: Boolean): InternalRow = {
+    java.util.Arrays.fill(state, Missing)
+    schemaDoc = false
+    var p: JsonParser = null
+    try {
+      p = if (asBytes) factory.createParser(buf, off, len)
+          else factory.createParser(new String(buf, off, len, StandardCharsets.UTF_8))
+      if (p.nextToken() != JsonToken.START_OBJECT)
+        return drop("not a document", buf, off, len)
+      fill(p, paths.root, top = true)
+      if (p.nextToken() != null)
+        return drop("unparseable document: content after the document", buf, off, len)
+    } catch {
+      // a syntax error, or a decoding error (`CharConversionException`)
+      case e: java.io.IOException =>
+        if (asBytes && !validUtf8(buf, off, len)) return parse(buf, off, len, asBytes = false)
+        val msg = e match {
+          case j: JsonProcessingException => j.getOriginalMessage
+          case _ => e.getMessage
+        }
+        return drop(s"unparseable document: $msg", buf, off, len)
+    } finally if (p != null) p.close()
+    if (schemaDoc) null else row(buf, off, len)
+  }
+
+  /** Fills the slots below `node` from the object whose START_OBJECT `p`
+    * has just read, leaving `p` on its END_OBJECT. */
+  private def fill(p: JsonParser, node: DocPaths.Node, top: Boolean): Unit = {
+    var name = p.nextFieldName()
+    while (name != null) {
+      val t = p.nextToken()
+      if (top && name == "__schema") schemaDoc = true
+      val child = node.children.get(name)
+      if (child == null) p.skipChildren()
+      else {
+        clear(child.under)
+        if (child.slots.isEmpty) {
+          if (t == JsonToken.START_OBJECT) fill(p, child, top = false) else p.skipChildren()
+        } else if (t == JsonToken.START_OBJECT || t == JsonToken.START_ARRAY) {
+          val tree: JsonNode = subtree.readTree(p)
+          child.slots.foreach(setTree(_, tree))
+          if (t == JsonToken.START_OBJECT && !child.children.isEmpty) {
+            val tp = tree.traverse()
+            tp.nextToken()
+            fill(tp, child, top = false)
+          }
+        } else setScalar(child.slots, p, t)
+      }
+      name = p.nextFieldName()
+    }
+  }
+
+  private def clear(slots: Array[Int]): Unit = {
+    var i = 0
+    while (i < slots.length) { state(slots(i)) = Missing; i += 1 }
+  }
+
+  /** A scalar token into each slot: the common (token, type) pairs
+    * directly, the rest through the token's node. */
+  private def setScalar(slots: Array[Int], p: JsonParser, t: JsonToken): Unit = {
+    var viaTree = false
+    var i = 0
+    while (i < slots.length) {
+      val s = slots(i)
+      if (t == JsonToken.VALUE_NULL) state(s) = Null
+      else if (!direct(s, p, t)) viaTree = true
+      i += 1
+    }
+    if (viaTree) { // reading the node consumes the token: direct slots go first
+      val tree: JsonNode = subtree.readTree(p)
+      slots.foreach(s => if (state(s) == Missing) setTree(s, tree))
+    }
+  }
+
+  private def direct(s: Int, p: JsonParser, t: JsonToken): Boolean = {
+    import JsonToken._
+    // BIG_INTEGER converts through its node, as the tree did
+    def integral = t == VALUE_NUMBER_INT && p.getNumberType != JsonParser.NumberType.BIG_INTEGER
+    val v: Any = kind(s) match {
+      case KString if t == VALUE_STRING => UTF8String.fromString(p.getText)
+      case KLong if integral => p.getLongValue
+      case KDouble if t == VALUE_NUMBER_FLOAT || integral => p.getDoubleValue
+      case KBoolean if t == VALUE_TRUE || t == VALUE_FALSE => t == VALUE_TRUE
+      case _ => return false
+    }
+    value(s) = v
+    state(s) = Value
+    true
+  }
+
+  private def setTree(s: Int, n: JsonNode): Unit =
+    if (n.isNull) state(s) = Null
+    else {
+      val v = try toInternal(n, paths.slotType(s)) catch {
+        case e @ (_: IllegalArgumentException | _: java.time.DateTimeException) =>
+          Left(s"cannot decode $n: ${e.getMessage}")
+      }
+      v match {
+        case Right(x) => value(s) = x; state(s) = Value
+        case Left(msg) => error(s) = msg; state(s) = Bad
       }
     }
 
-  private def resolve(doc: ObjectNode, col: Int): JsonNode = {
-    val cands = paths(col)
-    // literal field name wins, even if explicitly null (single-segment
-    // first candidate only — an explicit __schema path walks below)
-    if (cands(0).length == 1) {
-      val direct = doc.get(cands(0)(0))
-      if (direct != null) return direct
-    } else {
-      var node: JsonNode = doc
-      var i = 0
-      while (node != null && i < cands(0).length) {
-        node = if (node.isObject) node.get(cands(0)(i)) else null
-        i += 1
+  /** The row from the filled slots: per column, its first candidate when
+    * present (even as null), else the first later one that is non-null. */
+  private def row(buf: Array[Byte], off: Int, len: Int): InternalRow = {
+    val row = new GenericInternalRow(colSlots.length)
+    var c = 0
+    while (c < colSlots.length) {
+      val cands = colSlots(c)
+      var s = cands(0)
+      if (state(s) == Missing) {
+        s = -1
+        var k = 1
+        while (s < 0 && k < cands.length) {
+          if (state(cands(k)) >= Value) s = cands(k)
+          k += 1
+        }
       }
-      if (node != null) return node
-    }
-    var c = 1
-    while (c < cands.length) {
-      val path = cands(c)
-      var node: JsonNode = doc
-      var i = 0
-      while (node != null && i < path.length) {
-        node = if (node.isObject) node.get(path(i)) else null
-        i += 1
+      if (s >= 0) {
+        if (state(s) == Value) row.update(c, value(s))
+        else if (state(s) == Bad) schemaMode match {
+          case "permissive"    => ()
+          case "dropmalformed" => malformed += 1; return null
+          case "failfast" =>
+            throw new IllegalStateException(s"docstore failfast: column " +
+              s"'${schema(c).name}': ${clip(error(s))}${excerpt(buf, off, len)}")
+        }
       }
-      if (node != null && !node.isNull) return node
       c += 1
     }
+    row
+  }
+
+  private def drop(msg: String, buf: Array[Byte], off: Int, len: Int): InternalRow = {
+    if (schemaMode == "failfast")
+      throw new IllegalStateException(s"docstore failfast: ${clip(msg)}${excerpt(buf, off, len)}")
+    malformed += 1 // permissive + dropmalformed both drop unparseable lines
     null
-  }
-
-  def convert(line: String): Option[InternalRow] = {
-    val node =
-      try ExtJson.mapper.readTree(line)
-      catch {
-        case e: Exception => return malformed(s"unparseable document: ${e.getMessage}")
-      }
-    node match {
-      case doc: ObjectNode if doc.has("__schema") =>
-        None // schema-definition document, not data
-      case doc: ObjectNode =>
-        val row = new GenericInternalRow(schema.length)
-        var i = 0
-        while (i < schema.length) {
-          val v = try toInternal(resolve(doc, i), schema(i).dataType) catch {
-            case e @ (_: IllegalArgumentException | _: java.time.DateTimeException) =>
-              Left(s"cannot decode ${resolve(doc, i)}: ${e.getMessage}")
-          }
-          v match {
-            case Right(x) => row.update(i, x)
-            case Left(msg) =>
-              schemaMode match {
-                case "permissive"    => row.update(i, null)
-                case "dropmalformed" => return None
-                case "failfast" =>
-                  throw new IllegalStateException(
-                    s"docstore failfast: column '${schema(i).name}': $msg in: $line")
-              }
-          }
-          i += 1
-        }
-        Some(row)
-      case _ => malformed(s"not a document: $line")
-    }
-  }
-
-  private def malformed(msg: String): Option[InternalRow] = schemaMode match {
-    case "failfast" => throw new IllegalStateException(s"docstore failfast: $msg")
-    case _          => None // permissive + dropmalformed both drop unparseable lines
   }
 
   /** Single-key `$wrapper` object → its extended-JSON tag, else null. */
@@ -1096,10 +1307,190 @@ class DocRowConverter(schema: StructType, schemaMode: String, flatten: Boolean,
   }
 }
 
+object DocRowConverter {
+  private final val Missing: Byte = 0
+  private final val Null: Byte = 1
+  private final val Value: Byte = 2
+  private final val Bad: Byte = 3
+  private final val KTree = 0
+  private final val KString = 1
+  private final val KLong = 2
+  private final val KDouble = 3
+  private final val KBoolean = 4
+
+  /** How much of a document or a value a failfast error echoes: the
+    * driver receives the message, and a document may be megabytes. */
+  final val EchoChars = 200
+
+  private def clip(s: String): String =
+    if (s.length <= EchoChars) s else s.substring(0, EchoChars) + "…"
+
+  private def excerpt(buf: Array[Byte], off: Int, len: Int): String = {
+    val head = new String(buf, off, math.min(len, EchoChars), StandardCharsets.UTF_8)
+    s" in document of $len bytes: $head${if (len > EchoChars) "…" else ""}"
+  }
+
+  /** Whether Jackson's byte parser reads the line as UTF-8. It guesses the
+    * encoding from the first four bytes: a zero byte among them selects
+    * UTF-16 or UTF-32, and a leading byte-order mark (`EF BB BF`, `FE FF`,
+    * `FF FE`) is consumed. Such a line is read as its decoded text
+    * instead, where it fails or parses exactly as text. */
+  private def utf8Bootstrap(buf: Array[Byte], off: Int, len: Int): Boolean = {
+    if (len > 0) {
+      val b0 = buf(off) & 0xFF
+      if (b0 == 0xEF || b0 == 0xFE || b0 == 0xFF) return false
+    }
+    var i = off
+    while (i < off + math.min(len, 4)) {
+      if (buf(i) == 0) return false
+      i += 1
+    }
+    true
+  }
+
+  private def validUtf8(buf: Array[Byte], off: Int, len: Int): Boolean =
+    try { StandardCharsets.UTF_8.newDecoder().decode(java.nio.ByteBuffer.wrap(buf, off, len)); true }
+    catch { case _: java.nio.charset.CharacterCodingException => false }
+}
+
+/** Skips a line before it is parsed when it cannot satisfy the pushed
+  * string equalities — Sparser's "filter before you parse". Each group is
+  * one pushed conjunct (`EqualTo`, `EqualNullSafe`, `In` on a string
+  * column, or an `Or` of them); a line may match only if, for every group,
+  * it holds the JSON-quoted UTF-8 bytes of one of the group's literals
+  * (`"k3"`). Safe, so always on where it applies:
+  *   - a string value equal to the literal is written in the line as those
+  *     bytes, unless it uses an escape; a line holding any backslash is
+  *     therefore always parsed (found in the same pass as the search);
+  *   - a non-string value reads as a string through the JSON-VARCHAR
+  *     fallback or a `$oid` payload's text, so a literal such a value
+  *     could render to is never searched for: object or array text, a
+  *     number as Jackson prints it (`Infinity` and `NaN` too), `true`,
+  *     `false`, `null` and the empty string;
+  *   - neither is a literal holding U+FFFD or an unpaired surrogate: a line
+  *     that is not valid UTF-8 reads as its replacement-decoded text;
+  *   - only a permissive scan skips lines ([[DocstoreReaderFactory]]): a
+  *     skipped line yields no row there whatever it holds, while failfast
+  *     must still raise on a malformed one and dropmalformed counts it.
+  * A conjunct with more than `MaxNeedles` literals (a large runtime IN) is
+  * not searched. */
+final class DocstorePrefilter private (groups: Array[Array[Array[Byte]]])
+    extends Serializable {
+  private val all = (1L << groups.length) - 1
+
+  def mayMatch(b: Array[Byte], off: Int, len: Int): Boolean = {
+    var found = 0L
+    var i = off
+    val end = off + len
+    while (i < end) {
+      val c = b(i)
+      if (c == '\\') return true
+      if (c == '"') {
+        var g = 0
+        while (g < groups.length) {
+          if ((found & (1L << g)) == 0 && DocstorePrefilter.anyAt(groups(g), b, i, end)) {
+            found |= 1L << g
+            if (found == all) return true
+          }
+          g += 1
+        }
+      }
+      i += 1
+    }
+    false
+  }
+}
+
+object DocstorePrefilter {
+  final val MaxNeedles = 32
+  private final val MaxGroups = 63
+
+  /** The prefilter of a conjunction of pushed filters, if any conjunct
+    * can be searched for. */
+  def apply(filters: Seq[Filter]): Option[DocstorePrefilter] = {
+    val groups = filters.flatMap(conjuncts).flatMap(needles)
+      .filter(g => g.nonEmpty && g.size <= MaxNeedles && g.forall(searchable))
+      .take(MaxGroups)
+    if (groups.isEmpty) None
+    else Some(new DocstorePrefilter(groups.map(_.distinct.map(v =>
+      ("\"" + v + "\"").getBytes(StandardCharsets.UTF_8)).toArray).toArray))
+  }
+
+  private def conjuncts(f: Filter): Seq[Filter] = f match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other     => Seq(other)
+  }
+
+  /** The literals one of which a matching line holds. A pushed filter's
+    * string literal is on a string column ([[DocstoreFilters.toCatalyst]]). */
+  private def needles(f: Filter): Option[Seq[String]] = f match {
+    case EqualTo(_, v: String)       => Some(Seq(v))
+    case EqualNullSafe(_, v: String) => Some(Seq(v))
+    case In(_, vs) if vs.forall(v => v == null || v.isInstanceOf[String]) =>
+      Some(vs.toSeq.collect { case s: String => s }) // NULL never equals
+    case Or(l, r) => for (a <- needles(l); b <- needles(r)) yield a ++ b
+    case _ => None
+  }
+
+  private def searchable(v: String): Boolean =
+    v.nonEmpty && v.head != '{' && v.head != '[' &&
+      !Set("true", "false", "null")(v) &&
+      scala.util.Try(java.lang.Double.parseDouble(v)).isFailure && // 5, 1.0E10, NaN, -Infinity
+      !v.contains('\uFFFD') &&
+      new String(v.getBytes(StandardCharsets.UTF_8), StandardCharsets.UTF_8) == v
+
+  private def anyAt(ns: Array[Array[Byte]], b: Array[Byte], i: Int, end: Int): Boolean = {
+    var k = 0
+    while (k < ns.length) {
+      val n = ns(k)
+      if (n.length <= end - i) {
+        var j = 1 // n(0) is the quote at b(i)
+        while (j < n.length && n(j) == b(i + j)) j += 1
+        if (j == n.length) return true
+      }
+      k += 1
+    }
+    false
+  }
+}
+
+/** The docstore scan's SQL metrics: per-reader sums, counted on the
+  * lines' own path, so they cost no job and no pass. */
+object DocstoreMetrics {
+  import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
+
+  val LinesRead = "linesRead"
+  val LinesSkipped = "linesSkipped"
+  val DocsParsed = "docsParsed"
+  val DocsMalformed = "docsMalformed"
+  val BytesRead = "bytesRead"
+
+  def all: Array[CustomMetric] = Array(new LinesReadMetric, new LinesSkippedMetric,
+    new DocsParsedMetric, new DocsMalformedMetric, new BytesReadMetric)
+
+  def task(metric: String, n: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = n
+  }
+
+  // Spark re-creates a metric by its class's no-argument constructor
+  abstract class Sum(metric: String, desc: String)
+      extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+    override def name(): String = metric
+    override def description(): String = desc
+  }
+  class LinesReadMetric extends Sum(LinesRead, "docstore lines read")
+  class LinesSkippedMetric extends Sum(LinesSkipped, "docstore lines skipped by the prefilter")
+  class DocsParsedMetric extends Sum(DocsParsed, "docstore documents parsed")
+  class DocsMalformedMetric extends Sum(DocsMalformed, "docstore malformed documents dropped")
+  class BytesReadMetric extends Sum(BytesRead, "docstore bytes read")
+}
+
 /** Byte-range JSONL reader with the standard Hadoop text-split contract:
   * a split starting mid-file skips to the first full line; the line that
-  * straddles the split end belongs to the split it started in. Byte-level
-  * (UTF-8 decoded per line), so multi-byte chars never break offsets. */
+  * straddles the split end belongs to the split it started in. Lines stay
+  * bytes (split on '\n', so multi-byte chars never break offsets), handed
+  * out in place: no copy unless a line straddles a chunk refill. */
 class LineRangeReader(file: String, start: Long, length: Long, conf: Configuration) {
   // .gz collections decompress transparently; they are unsplittable, so
   // the whole file is one range and `end` bounds DECOMPRESSED bytes
@@ -1123,7 +1514,16 @@ class LineRangeReader(file: String, start: Long, length: Long, conf: Configurati
   private val chunk = new Array[Byte](1 << 16)
   private var lo = 0 // next unconsumed byte in chunk
   private var hi = 0 // valid bytes in chunk
-  private val pending = new java.io.ByteArrayOutputStream(1 << 10)
+  private var carry = new Array[Byte](1 << 10) // a line across refills
+
+  /** After [[next]] returned true: the line, without its newline or a
+    * trailing '\r', is `buf(off until off + len)` — valid until the next
+    * call. */
+  var buf: Array[Byte] = chunk
+  var off = 0
+  var len = 0
+  /** Bytes of the lines handed out so far, newlines included. */
+  var bytesRead = 0L
 
   private def refill(): Boolean = {
     pos += lo
@@ -1132,37 +1532,43 @@ class LineRangeReader(file: String, start: Long, length: Long, conf: Configurati
     if (hi < 0) { hi = 0; eof = true; false } else true
   }
 
-  /** Next full line (without newline), or null when the range is done. */
-  def next(): String = {
+  /** Advances to the next full line; false when the range is done. */
+  def next(): Boolean = {
     // a line belongs to this split iff it STARTS at or before `end`
-    if (eof && lo >= hi) return null
-    if (pos + lo > end) return null
-    pending.reset()
+    if (eof && lo >= hi) return false
+    if (pos + lo > end) return false
+    var carried = 0
     while (true) {
-      if (lo >= hi && !refill()) {
-        if (pending.size() == 0) return null
-        return finish()
-      }
+      if (lo >= hi && !refill())
+        return carried > 0 && line(carry, 0, carried, newline = 0)
       var i = lo
       while (i < hi && chunk(i) != '\n') i += 1
       if (i < hi) {
-        pending.write(chunk, lo, i - lo)
+        val from = lo
         lo = i + 1
-        return finish()
-      } else {
-        pending.write(chunk, lo, hi - lo)
-        lo = hi
+        if (carried == 0) return line(chunk, from, i - from, newline = 1)
+        carried = append(carried, from, i)
+        return line(carry, 0, carried, newline = 1)
       }
+      carried = append(carried, lo, hi)
+      lo = hi
     }
-    null // unreachable
+    false // unreachable
   }
 
-  private def finish(): String = {
-    val bytes = pending.toByteArray
-    // strip trailing \r for CRLF files
-    val n = if (bytes.nonEmpty && bytes(bytes.length - 1) == '\r') bytes.length - 1
-            else bytes.length
-    new String(bytes, 0, n, StandardCharsets.UTF_8)
+  private def append(n: Int, from: Int, until: Int): Int = {
+    val m = n + until - from
+    if (m > carry.length) carry = java.util.Arrays.copyOf(carry, math.max(m, 2 * carry.length))
+    System.arraycopy(chunk, from, carry, n, until - from)
+    m
+  }
+
+  private def line(b: Array[Byte], o: Int, n: Int, newline: Int): Boolean = {
+    bytesRead += n + newline
+    buf = b
+    off = o
+    len = if (n > 0 && b(o + n - 1) == '\r') n - 1 else n // CRLF files
+    true
   }
 
   def close(): Unit = in.close()

@@ -644,4 +644,276 @@ class DocstoreSpec extends SparkSpec {
       "regenerated events.parquet must produce a new docs dir")
     assert(spark.read.text(dir2).count() == 25)
   }
+
+  /** A docstore scan metric of an executed query, summed over its scans. */
+  private def scanMetric(df: org.apache.spark.sql.DataFrame, name: String): Long =
+    graft.tools.PlanSweep.allNodes(df.queryExecution.executedPlan)
+      .filter(_.nodeName.contains("Scan")).flatMap(_.metrics.get(name)).map(_.value).sum
+
+  private def errorChain(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString(" | ")
+
+  /** The sorted `id`s of `df`, run as it is so that its metrics count. */
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(r => r.getLong(r.fieldIndex("id"))).toSeq.sorted
+
+  private val kindSchema = StructType(Seq(StructField("id", LongType),
+    StructField("kind", StringType)))
+
+  test("scan metrics: a planted-bad collection reports its exact drop count") {
+    val good = (0 until 10).map(i => s"""{"id":$i,"s":"v$i"}""")
+    val bad = Seq("""{"id":"x""", "[1,2]", """{"id":99} {"id":98}""")
+    val dir = writeDocs("metrics_bad", good.take(5) ++ bad ++ Seq("") ++ good.drop(5))
+    val df = spark.read.format("docstore").option("path", dir).load().select("id")
+    assert(df.count() == 10)
+    val rows = df.filter(col("id") >= 0L)
+    assert(rows.collect().length == 10)
+    assert(scanMetric(rows, "docsMalformed") == 3)
+    assert(scanMetric(rows, "linesRead") == 13) // the empty line is no document
+    assert(scanMetric(rows, "docsParsed") == 13)
+    assert(scanMetric(rows, "linesSkipped") == 0)
+    assert(scanMetric(rows, "bytesRead") == Files.size(Paths.get(s"$dir/docs.jsonl")))
+    assert(scanMetric(rows, "numOutputRows") == 10)
+  }
+
+  test("scan metrics: an _id lookup over many splits parses only the lines holding the id") {
+    val hex = (i: Int) => f"65f0a1b2c3d4e5f6$i%08x"
+    val dir = writeDocs("metrics_lookup", (0 until 2000).map(i =>
+      s"""{"_id":{"$$oid":"${hex(i)}"},"n":$i,"kind":"k${i % 8}"}"""))
+    val df = spark.read.format("docstore").option("path", dir)
+      .option("splitsize", "8192").load()
+      .filter(col("_id") === hex(777)).select("n")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(777L))
+    assert(df.rdd.getNumPartitions > 8)
+    assert(scanMetric(df, "linesRead") == 2000)
+    assert(scanMetric(df, "docsParsed") == 1)
+    assert(scanMetric(df, "linesSkipped") == 1999)
+    // an IN over two kinds keeps a quarter of the lines; the parsed ones all match
+    val kinds = spark.read.format("docstore").option("path", dir).load()
+      .filter(col("kind").isin("k1", "k5")).select("n")
+    assert(kinds.count() == 500)
+    val k = kinds.filter(col("n") >= 0L)
+    assert(k.collect().length == 500 && scanMetric(k, "docsParsed") == 500)
+  }
+
+  test("prefilter: an escaped literal still matches a pushed string equality") {
+    val dir = writeDocs("prefilter_escape", Seq(
+      """{"id":1,"kind":"k3"}""",
+      """{"id":2,"kind":"k""" + "\\" + """u0033"}""",
+      """{"id":3,"kind":"k4"}""",
+      """{"id":4,"kind":"k33"}"""))
+    val df = spark.read.format("docstore").schema(kindSchema).option("path", dir).load()
+      .filter(col("kind") === "k3")
+    assert(ids(df) == Seq(1L, 2L))
+    // the escaped line holds a backslash, so it is parsed; k4 and k33 are not
+    assert(scanMetric(df, "linesSkipped") == 2)
+  }
+
+  test("prefilter: a non-string value matches through the JSON-VARCHAR fallback") {
+    val dir = writeDocs("prefilter_fallback", Seq(
+      """{"id":1,"kind":5}""",
+      """{"id":2,"kind":1e2}""",
+      """{"id":3,"kind":true}""",
+      """{"id":4,"kind":{"$oid":7}}""",
+      """{"id":5,"kind":[1, 2]}""",
+      """{"id":6,"kind":{"$oid":null}}""",
+      """{"id":7,"kind":"x"}"""))
+    def read(v: String) = spark.read.format("docstore").schema(kindSchema)
+      .option("path", dir).load().filter(col("kind") === v)
+    for ((v, want) <- Seq("5" -> Seq(1L), "100.0" -> Seq(2L), "true" -> Seq(3L),
+        "7" -> Seq(4L), "[1,2]" -> Seq(5L), "null" -> Seq(6L))) {
+      val df = read(v)
+      assert(ids(df) == want, v)
+      assert(scanMetric(df, "linesSkipped") == 0, v) // never prefiltered
+    }
+    assert(scanMetric({ val d = read("x"); d.collect(); d }, "linesSkipped") == 6)
+  }
+
+  test("trailing tokens make a line malformed whatever the query reads") {
+    val dir = writeDocs("trailing_any_read", Seq(
+      """{"id":1,"kind":"a"} {"id":2}""",
+      """{"id":3,"kind":"a"}]""",
+      """{"id":4,"kind":"a"}"""))
+    val df = spark.read.format("docstore").schema(kindSchema).option("path", dir).load()
+    assert(df.count() == 1)
+    val a = df.filter(col("kind") === "a")
+    assert(ids(a) == Seq(4L))
+    assert(scanMetric(a, "docsMalformed") == 2)
+  }
+
+  test("a syntax error inside a field the query skips is malformed in every mode") {
+    val dir = writeDocs("skipped_syntax", Seq(
+      """{"id":1,"junk":[1,2,}""",
+      """{"id":2,"junk":{"a":tru},"x":1}""",
+      """{"id":3,"junk":"bad \q escape"}""",
+      """{"id":4,"junk":01}""",
+      """{"id":5,"junk":{"ok":[{}]}}"""))
+    val schema = StructType(Seq(StructField("id", LongType)))
+    def read(mode: String) = spark.read.format("docstore").schema(schema)
+      .option("path", dir).option("schemamode", mode).load()
+    assert(ids(read("permissive")) == Seq(5L))
+    assert(ids(read("dropmalformed")) == Seq(5L))
+    val e = intercept[Exception](read("failfast").collect())
+    assert(errorChain(e).contains("unparseable document"), errorChain(e))
+  }
+
+  test("failfast names the column and echoes a bounded head of the document") {
+    val line = s"""{"id":1,"n":"x","big":"${"a" * 100000}"}"""
+    val dir = writeDocs("failfast_bounded", Seq(line))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("n", LongType)))
+    val e = intercept[Exception](spark.read.format("docstore").schema(schema)
+      .option("path", dir).option("schemamode", "failfast").load().collect())
+    val msg = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).find(m => m != null && m.startsWith("docstore failfast")).get
+    assert(msg.contains("column 'n'"), msg)
+    assert(msg.contains(s"in document of ${line.length} bytes"), msg)
+    assert(msg.length < 600, msg.length)
+  }
+
+  test("failfast raises on a malformed line even when it lacks the pushed literal") {
+    val dir = writeDocs("failfast_prefilter", Seq(
+      """{"id":1,"kind":"k3"}""",
+      """{"id":2,"kind": broken"""))
+    def read(mode: String) = spark.read.format("docstore").schema(kindSchema)
+      .option("path", dir).option("schemamode", mode).load().filter(col("kind") === "k3")
+    val e = intercept[Exception](read("failfast").collect())
+    assert(errorChain(e).contains("unparseable document"), errorChain(e))
+    assert(ids(read("dropmalformed")) == Seq(1L))
+    assert(ids(read("permissive")) == Seq(1L))
+  }
+
+  test("flattened candidates: the first wins even when null, a later one only when non-null") {
+    val dir = writeDocs("candidates", Seq(
+      """{"id":1,"user_id":null,"user":{"id":5}}""",
+      """{"id":2,"user":{"id":6}}""",
+      """{"id":3,"user":{"id":8},"user_id":7}""",
+      """{"id":4,"a":{"b_c":null,"b":{"c":9}}}""",
+      """{"id":5,"a":{"b_c":2,"b":{"c":9}}}""",
+      """{"id":6,"a":{"b":{"c":null}},"a_b":{"c":3}}"""))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("user_id", LongType), StructField("a_b_c", LongType)))
+    for (mode <- Seq("permissive", "dropmalformed", "failfast")) {
+      val got = spark.read.format("docstore").schema(schema).option("path", dir)
+        .option("schemamode", mode).load().orderBy("id").collect()
+        .map(r => (r.get(1), r.get(2))).toSeq
+      assert(got == Seq((null, null), (6L, null), (7L, null), (null, 9L),
+        (null, 2L), (null, 3L)), mode)
+    }
+  }
+
+  test("a repeated key reads as its last value, as the parsed tree's") {
+    val dir = writeDocs("dup_keys", Seq(
+      """{"id":1,"n":1,"n":2,"user":{"id":1,"segment":"a"}}""",
+      """{"id":2,"n":3,"user":{"id":1},"user":{"segment":"x"}}""",
+      """{"id":3,"user":{"id":1,"segment":"b"},"user":5,"n":"bad","n":4}"""))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("n", LongType),
+      StructField("user_id", LongType), StructField("user_segment", StringType)))
+    val got = spark.read.format("docstore").schema(schema).option("path", dir)
+      .option("schemamode", "failfast").load().orderBy("id").collect().map(_.toSeq).toSeq
+    assert(got == Seq(Seq(1L, 2L, 1L, "a"), Seq(2L, 3L, null, "x"), Seq(3L, 4L, null, null)))
+  }
+
+  test("a __schema key anywhere in a document, last included, skips it in every mode") {
+    val dir = writeDocs("schema_last", Seq(
+      """{"id":1}""",
+      """{"id":2,"kind":"k"}""",
+      """{"id":3,"kind":"k","__schema":{"id":"BIGINT","kind":"VARCHAR"}}"""))
+    for (mode <- Seq("permissive", "dropmalformed", "failfast")) {
+      val df = spark.read.format("docstore").option("path", dir)
+        .option("schemamode", mode).load()
+      assert(df.schema.fieldNames.toSeq == Seq("id", "kind"), mode)
+      assert(ids(df) == Seq(1L, 2L), mode)
+      assert(ids(df.filter(col("kind") === "k")) == Seq(2L), mode)
+    }
+  }
+
+  test("an integer beyond BIGINT converts as the parsed tree did") {
+    val big = BigInt("123456789012345678901234567890")
+    val dir = writeDocs("big_int", Seq(s"""{"id":1,"l":$big,"d":$big,"s":$big}"""))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("l", LongType),
+      StructField("d", DoubleType), StructField("s", StringType)))
+    val r = spark.read.format("docstore").schema(schema).option("path", dir).load().head
+    assert(r.getLong(1) == big.longValue)
+    assert(r.getDouble(2) == big.doubleValue)
+    assert(r.getString(3) == big.toString)
+  }
+
+  test("the JSON-VARCHAR fallback prints Jackson's text, not the line's bytes") {
+    val dir = writeDocs("fallback_text", Seq(
+      """{"id":1,"s":{ "a" : 1 ,  "b":[ 1, 2 ] }}""",
+      """{"id":2,"s":1e2}""",
+      """{"id":3,"s":{"x":"éA"}}""",
+      """{"id":4,"s":-0.5E-3}"""))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
+    val got = spark.read.format("docstore").schema(schema).option("path", dir).load()
+      .orderBy("id").collect().map(_.getString(1)).toSeq
+    assert(got == Seq("""{"a":1,"b":[1,2]}""", "100.0", """{"x":"éA"}""", "-5.0E-4"))
+  }
+
+  test("a pushed BIGINT SUM overflows as Spark's own SUM does, ANSI on and off") {
+    val dir = writeDocs("sum_overflow", Seq(
+      """{"g":1,"v":9223372036854775807}""",
+      """{"g":1,"v":1}"""))
+    val key = "spark.sql.ansi.enabled"
+    val saved = spark.conf.getOption(key)
+    def docstore = spark.read.format("docstore").option("path", dir).load()
+      .groupBy("g").agg(sum("v"))
+    def json = spark.read.json(s"$dir/docs.jsonl").groupBy("g").agg(sum("v"))
+    try {
+      spark.conf.set(key, "false")
+      assert(explainText(docstore).contains("PushedAggregates: [sum(v)]"))
+      assert(docstore.collect().toSeq == json.collect().toSeq)
+      assert(docstore.head.getLong(1) == Long.MinValue)
+      spark.conf.set(key, "true")
+      assert(explainText(docstore).contains("PushedAggregates: [sum(v)]"))
+      for (df <- Seq(json, docstore)) {
+        val e = intercept[Exception](df.collect())
+        assert(errorChain(e).contains("ARITHMETIC_OVERFLOW"), errorChain(e))
+      }
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("a line whose leading bytes would pass for UTF-16 or UTF-32 is malformed in every mode") {
+    val dir = "/tmp/graft_docstore_spec/encoding_guess"
+    Files.createDirectories(Paths.get(dir))
+    val lines: Seq[Array[Byte]] = Seq(
+      "\u0000\u0000\u0000{\"id\":1}".getBytes("UTF-8"), // reads as UTF-32BE
+      "\u0000{\u0000\u0000".getBytes("UTF-8"),           // unsupported UCS-4 order
+      Array[Byte]('{', 0, '}', 0),                         // `{}` in UTF-16LE
+      Array[Byte](0xFF.toByte, 0xFE.toByte, '{', 0, '}', 0), // UTF-16LE byte-order mark
+      Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++ "{\"id\":3}".getBytes("UTF-8"),
+      "{\"id\":2}".getBytes("UTF-8"))
+    Files.write(Paths.get(s"$dir/docs.jsonl"), lines.flatMap(_ :+ '\n'.toByte).toArray)
+    val schema = StructType(Seq(StructField("id", LongType)))
+    def read(mode: String) = spark.read.format("docstore").schema(schema)
+      .option("path", dir).option("schemamode", mode).load()
+    for (mode <- Seq("permissive", "dropmalformed")) {
+      val df = read(mode).filter(col("id").isNull || col("id") >= 0L)
+      assert(df.collect().map(_.get(0)).toSeq == Seq(2L), mode)
+      assert(scanMetric(df, "docsMalformed") == 5, mode)
+    }
+    val e = intercept[Exception](read("failfast").collect())
+    assert(errorChain(e).contains("docstore failfast: unparseable document"), errorChain(e))
+  }
+
+  test("splits pack by Spark's file rule: small files share partitions, splitsize still caps one") {
+    val dir = "/tmp/graft_docstore_spec/packing"
+    Files.createDirectories(Paths.get(dir))
+    val files = 24
+    (0 until files).foreach { f =>
+      Files.write(Paths.get(f"$dir/part-$f%02d.jsonl"), (0 until 10).map(i =>
+        s"""{"id":${f * 10 + i},"pad":"${"x" * 50}"}""").mkString("", "\n", "\n").getBytes("UTF-8"))
+    }
+    val packed = spark.read.format("docstore").option("path", dir).load().select("id")
+    val n = packed.rdd.getNumPartitions
+    assert(n >= 1 && n <= spark.sparkContext.defaultParallelism, n)
+    // ranges keep listing order within and across partitions
+    assert(packed.collect().map(_.getLong(0)).toSeq == (0L until files * 10L))
+    val fileLen = Files.size(Paths.get(s"$dir/part-00.jsonl"))
+    val split = 256L
+    val small = spark.read.format("docstore").option("path", dir)
+      .option("splitsize", split.toString).load().select("id")
+    assert(small.rdd.getNumPartitions == files * ((fileLen + split - 1) / split), fileLen)
+    assert(small.collect().map(_.getLong(0)).sorted.toSeq == (0L until files * 10L))
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """A/B the repo benchmark: a parent revision against the working tree.
 
-    python3 tools/ab.py <parent-rev> [--pairs 6] [--traced-pairs 0]
+    python3 tools/ab.py <parent-rev> [--pairs 10] [--traced-pairs 0]
                         [--bench-keys K1,K2] [--workdir DIR] [--json out.json]
 
 Run from the root of a graft checkout. The parent is exported with
@@ -19,8 +19,12 @@ the change won, and the verdict against the metric's `bound` in
 `BENCHMARK.json`: `ok` (no worse than the bound), `REGRESSED`, or
 `unresolved` (the parent's own spread exceeds the bound and the runs do
 not separate). A `gain` note marks a metric the change won in at least
-nine of ten pairs by more than the parent's IQR. `fail_frac` is each
-side's failed/attempted ops. Traced pairs, if asked for, run after every
+nine of ten pairs by more than the parent's IQR, over at least ten pairs:
+fewer are too few to claim a gain on. `fail_frac` is each
+side's failed/attempted ops. For a workload of several op kinds
+(docscan's six queries) it then prints per kind the median over runs of
+each run's median op latency, from the latencies `run.py` logs on
+stderr, and the pairs the change won. Traced pairs, if asked for, run after every
 workload's untraced pairs and add the per-layer medians (ungated).
 
 `--bench-keys` runs N alternated pairs of `graft.Bench <out> <keys>`
@@ -90,8 +94,16 @@ def run_once(side, root, workload, seed, seconds, trace):
         f"{k}={v:.4g}" for k, v in sorted(vals.items())
         if not trace or k.startswith(("docstore.", "schema_inference."))),
         file=sys.stderr, flush=True)
+    # per op kind, the median latency of this run's timed ops (run.py
+    # logs every op's kind and milliseconds on stderr)
+    kinds = {}
+    for line in r.stderr.splitlines():
+        if "op latencies ms: " in line:
+            for kind, ms in json.loads(line.split("op latencies ms: ", 1)[1]):
+                kinds.setdefault(kind, []).append(ms)
     return {"metrics": vals, "failed": res["failed"],
-            "attempted": res["attempted"]}
+            "attempted": res["attempted"],
+            "kinds": {k: statistics.median(v) for k, v in kinds.items()}}
 
 
 def pairs(seeds, run):
@@ -128,7 +140,7 @@ def report(workload, runs, e2e):
             verdict = "unresolved"
         else:
             verdict = "ok"
-        if wins >= 0.9 * n and -worse * pm > (q3 - q1):
+        if n >= 10 and wins >= 0.9 * n and -worse * pm > (q3 - q1):
             verdict += " (gain)"
         print(f"{name:16s} {pm:12.4g} {cm:12.4g} {100 * delta:+8.1f} "
               f"{100 * iqr:8.1f} {wins:3d}/{n:<2d} {100 * bound:7.1f}  {verdict}")
@@ -187,6 +199,26 @@ def report_bench(runs):
               f"{jobs['parent']:>9s} {jobs['change']:>9s}")
 
 
+def report_kinds(runs):
+    """Per op kind: the median over runs of each run's median latency."""
+    kinds = sorted(set().union(*(r.get("kinds", {}) for r in runs["change"])))
+    if len(kinds) < 2:
+        return
+    print(f"{'op kind (ms)':16s} {'parent':>12s} {'change':>12s} {'change%':>8s} "
+          f"{'wins':>6s}")
+    for k in kinds:
+        p = [r["kinds"].get(k) for r in runs["parent"]]
+        c = [r["kinds"].get(k) for r in runs["change"]]
+        pc = [(a, b) for a, b in zip(p, c) if a is not None and b is not None]
+        if not pc:
+            continue
+        pm = statistics.median(a for a, _ in pc)
+        cm = statistics.median(b for _, b in pc)
+        wins = sum(b < a for a, b in pc)
+        print(f"{k:16s} {pm:12.4g} {cm:12.4g} {100 * (cm - pm) / pm:+8.1f} "
+              f"{wins:3d}/{len(pc):<2d}")
+
+
 def report_layers(workload, runs, names):
     print(f"\n== {workload}: per-layer medians over "
           f"{len(runs['parent'])} traced pairs (ungated)")
@@ -202,7 +234,7 @@ def report_layers(workload, runs, names):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent_rev")
-    ap.add_argument("--pairs", type=int, default=6)
+    ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--traced-pairs", type=int, default=0)
     ap.add_argument("--bench-keys", default=None,
                     help="comma-separated graft.Bench keys to A/B instead "
@@ -244,6 +276,7 @@ def main():
                     side, roots[side], w, seed, bench["run_seconds"], 0))
                 results[w] = {"untraced": runs}
                 ok = report(w, runs, bench["end_to_end"]) and ok
+                report_kinds(runs)
             for w in (workloads if a.traced_pairs else []):
                 traced = pairs(seeds[:a.traced_pairs],
                                lambda side, seed: run_once(
