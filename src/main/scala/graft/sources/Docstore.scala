@@ -1148,8 +1148,7 @@ class DocRowConverter(schema: StructType, paths: DocPaths, schemaMode: String) {
     if (n.isNull) state(s) = Null
     else {
       val v = try toInternal(n, paths.slotType(s)) catch {
-        case e @ (_: IllegalArgumentException | _: java.time.DateTimeException) =>
-          Left(s"cannot decode $n: ${e.getMessage}")
+        case e: IllegalArgumentException => Left(s"cannot decode $n: ${e.getMessage}")
       }
       v match {
         case Right(x) => value(s) = x; state(s) = Value
@@ -1195,68 +1194,30 @@ class DocRowConverter(schema: StructType, paths: DocPaths, schemaMode: String) {
     null
   }
 
-  /** Single-key `$wrapper` object → its extended-JSON tag, else null. */
-  private def extTag(o: ObjectNode): String =
-    if (o.size() == 1) {
-      val k = o.fieldNames().next()
-      if (k.charAt(0) == '$') k else null
-    } else null
-
   /** JsonNode → Catalyst internal value for the target type; Left = type
-    * mismatch. Numeric widening Long→Double allowed (Int32/Int64/Double
-    * unify in the reference's lattice); StringType accepts anything via
-    * the JSON-text VARCHAR fallback. BSON undefined (`{"$undefined":true}`)
-    * is NULL in every type, as schema inference already treats it. Throws
-    * on a wrapper whose payload does not decode (`{"$numberLong":"x"}`). */
+    * mismatch. A wrapper decodes through [[ExtJson.decode]], so the scan
+    * reads what sampling inferred from; a VARCHAR reads every wrapper but
+    * `$oid` as its JSON text, undecoded. Numeric widening Long→Double
+    * allowed (Int32/Int64/Double unify in the reference's lattice);
+    * StringType accepts anything via the JSON-text VARCHAR fallback. BSON
+    * undefined is NULL in every type. Throws on a wrapper whose payload
+    * does not decode (`{"$numberLong":"x"}`). */
   def toInternal(n: JsonNode, dt: DataType): Either[String, Any] = {
-    if (n == null || n.isNull || (n.isObject && n.size() == 1 && n.has("$undefined")))
-      return Right(null)
+    if (n == null || n.isNull) return Right(null)
+    val tag = n match {
+      case o: ObjectNode => ExtJson.wrapperTag(o)
+      case _             => null
+    }
+    val w = if (tag == null || (dt == StringType && tag != "$oid" && tag != "$undefined")) null
+      else ExtJson.decode(tag, n.asInstanceOf[ObjectNode])
+    if (w != null) return fromWrapper(w, n, dt)
     dt match {
       case StringType =>
-        if (n.isTextual) return Right(UTF8String.fromString(n.textValue()))
-        if (n.isObject) {
-          val o = n.asInstanceOf[ObjectNode]
-          extTag(o) match {
-            case "$oid" => return Right(UTF8String.fromString(o.get("$oid").asText()))
-            case _      => () // wrapper or plain doc → JSON VARCHAR fallback
-          }
-        }
-        Right(UTF8String.fromString(n.toString))
-      case LongType =>
-        if (n.isIntegralNumber) Right(n.longValue())
-        else wrapped(n) match {
-          case ("$numberInt" | "$numberLong", v) => Right(v.asText().toLong)
-          case _ => Left(s"cannot convert $n to bigint")
-        }
-      case DoubleType =>
-        if (n.isNumber) Right(n.doubleValue())
-        else wrapped(n) match {
-          case ("$numberDouble" | "$numberDecimal", v) => Right(v.asText().toDouble)
-          case ("$numberInt" | "$numberLong", v)       => Right(v.asText().toDouble)
-          case _ => Left(s"cannot convert $n to double")
-        }
-      case BooleanType =>
-        if (n.isBoolean) Right(n.booleanValue()) else Left(s"cannot convert $n to boolean")
-      case TimestampType =>
-        dateMicros(n) match {
-          case Some(us) => Right(us)
-          case None     => Left(s"cannot convert $n to timestamp")
-        }
-      case DateType =>
-        dateMicros(n) match {
-          case Some(us) if ExtJson.isMidnightUtc(us) => Right(ExtJson.epochDay(us))
-          case _ => Left(s"cannot convert $n to date")
-        }
-      case BinaryType =>
-        wrapped(n) match {
-          case ("$binary", v) =>
-            val b64 = if (v.isObject && v.has("base64")) v.get("base64").asText()
-                      else v.asText()
-            Right(java.util.Base64.getDecoder.decode(b64))
-          case _ => Left(s"cannot convert $n to binary")
-        }
-      case ArrayType(et, _) =>
-        if (!n.isArray) return Left(s"cannot convert $n to array")
+        Right(UTF8String.fromString(if (n.isTextual) n.textValue() else n.toString))
+      case LongType if n.isIntegralNumber => Right(n.longValue())
+      case DoubleType if n.isNumber       => Right(n.doubleValue())
+      case BooleanType if n.isBoolean     => Right(n.booleanValue())
+      case ArrayType(et, _) if n.isArray =>
         val out = new Array[Any](n.size())
         var i = 0
         while (i < out.length) {
@@ -1267,44 +1228,39 @@ class DocRowConverter(schema: StructType, paths: DocPaths, schemaMode: String) {
           i += 1
         }
         Right(new GenericArrayData(out))
-      case st: StructType =>
-        if (!n.isObject) return Left(s"cannot convert $n to struct")
-        val o = n.asInstanceOf[ObjectNode]
+      case st: StructType if n.isObject =>
         val out = new GenericInternalRow(st.length)
         var i = 0
         while (i < st.length) {
-          toInternal(o.get(st(i).name), st(i).dataType) match {
+          toInternal(n.get(st(i).name), st(i).dataType) match {
             case Right(x) => out.update(i, x)
             case left     => return left
           }
           i += 1
         }
         Right(out)
-      case other => Left(s"unsupported read type ${other.simpleString}")
+      case _ => mismatch(n, dt)
     }
   }
 
-  private def wrapped(n: JsonNode): (String, JsonNode) = n match {
-    case o: ObjectNode =>
-      val tag = extTag(o)
-      if (tag != null) (tag, o.get(tag)) else (null, null)
-    case _ => (null, null)
+  /** A decoded wrapper `w` (the node `n`) as a value of `dt`. */
+  private def fromWrapper(w: DocValue, n: JsonNode, dt: DataType): Either[String, Any] = {
+    import DocValue._
+    (w, dt) match {
+      case (DNull, _)                      => Right(null)
+      case (DObjectId(hex), StringType)    => Right(UTF8String.fromString(hex))
+      case (DLong(l), LongType)            => Right(l)
+      case (DLong(l), DoubleType)          => Right(l.toDouble)
+      case (DDouble(d), DoubleType)        => Right(d)
+      case (DTimestamp(us), TimestampType) => Right(us)
+      case (DTimestamp(us), DateType) if ExtJson.isMidnightUtc(us) => Right(ExtJson.epochDay(us))
+      case (DBinary(b), BinaryType)        => Right(b)
+      case _                               => mismatch(n, dt)
+    }
   }
 
-  private val isoFmt = java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME
-
-  /** `{"$date": ...}` → micros since epoch. */
-  private def dateMicros(n: JsonNode): Option[Long] = wrapped(n) match {
-    case ("$date", v) =>
-      if (v.isTextual) {
-        val i = java.time.Instant.from(isoFmt.parse(v.textValue()))
-        Some(i.getEpochSecond * 1000000L + i.getNano / 1000L)
-      } else if (v.isObject && v.has("$numberLong"))
-        Some(v.get("$numberLong").asText().toLong * 1000L)
-      else if (v.isNumber) Some(v.longValue() * 1000L)
-      else None
-    case _ => None
-  }
+  private def mismatch(n: JsonNode, dt: DataType) =
+    Left(s"cannot convert $n to ${dt.simpleString}")
 }
 
 object DocRowConverter {

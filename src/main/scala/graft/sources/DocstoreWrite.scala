@@ -15,8 +15,9 @@ import java.nio.charset.StandardCharsets
 
 /** Batch and streaming WRITE for the docstore source: rows → extended-JSON JSONL part
   * files, the inverse of the scan's type mapping (Timestamp→`$date`,
-  * Date→midnight `$date`, Binary→`$binary`, struct→nested doc,
-  * array→JSON array). The reference is scan-only; a pipeline engine
+  * Date→midnight `$date`, Binary→`$binary`, NaN and ±Infinity→
+  * `$numberDouble`, struct→nested doc, array→JSON array), written by
+  * [[ExtJson]]'s leaf encoders. The reference is scan-only; a pipeline engine
   * needs the sink so cleaned/filtered collections round-trip:
   * `Graft.mongoScan(...).filter(...).write.format("docstore")`.
   *
@@ -139,7 +140,7 @@ class DocstoreDataWriter(schema: StructType, conf: Configuration, dir: String,
       if (!row.isNullAt(i)) { // absent field = BSON missing, like Mongo
         if (!first) sb.append(',')
         first = false
-        sb.append(ExtJson.quote(st(i).name)).append(':')
+        ExtJson.quote(sb, st(i).name).append(':')
         renderValue(row.get(i, st(i).dataType), st(i).dataType)
       }
       i += 1
@@ -148,20 +149,14 @@ class DocstoreDataWriter(schema: StructType, conf: Configuration, dir: String,
   }
 
   private def renderValue(v: Any, dt: DataType): Unit = dt match {
-    case LongType    => sb.append(v.asInstanceOf[Long])
-    case DoubleType  =>
-      val d = v.asInstanceOf[Double]
-      if (d.isNaN || d.isInfinite) sb.append("null") else sb.append(d)
-    case IntegerType => sb.append(v.asInstanceOf[Int])
-    case BooleanType => sb.append(v.asInstanceOf[Boolean])
-    case StringType  => sb.append(ExtJson.quote(v.asInstanceOf[UTF8String].toString))
-    case TimestampType =>
-      sb.append(ExtJson.render(DocValue.DTimestamp(v.asInstanceOf[Long])))
-    case DateType =>
-      sb.append(ExtJson.render(
-        DocValue.DTimestamp(v.asInstanceOf[Int].toLong * 86400000000L)))
-    case BinaryType =>
-      sb.append(ExtJson.render(DocValue.DBinary(v.asInstanceOf[Array[Byte]])))
+    case LongType      => sb.append(v.asInstanceOf[Long])
+    case DoubleType    => ExtJson.writeDouble(sb, v.asInstanceOf[Double])
+    case IntegerType   => sb.append(v.asInstanceOf[Int])
+    case BooleanType   => sb.append(v.asInstanceOf[Boolean])
+    case StringType    => ExtJson.quote(sb, v.asInstanceOf[UTF8String].toString)
+    case TimestampType => ExtJson.writeDate(sb, v.asInstanceOf[Long])
+    case DateType      => ExtJson.writeDay(sb, v.asInstanceOf[Int])
+    case BinaryType    => ExtJson.writeBinary(sb, v.asInstanceOf[Array[Byte]])
     case ArrayType(et, _) =>
       val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       sb.append('[')

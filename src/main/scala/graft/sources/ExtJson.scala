@@ -2,8 +2,14 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-import java.time.{Instant, LocalDate, ZoneOffset}
+import java.lang.{StringBuilder => JStringBuilder}
+import java.time.{DateTimeException, Instant, LocalDate, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import java.util.Base64
 
@@ -13,15 +19,21 @@ import java.util.Base64
   * (reference: src/mongo_table_function.cpp:1); this environment has no
   * Mongo server, so collections are JSONL files in MongoDB *extended
   * JSON* — the public canonical text encoding of BSON. `DocValue` is the
-  * parsed form every other layer (inference, row conversion, filter
-  * evaluation) consumes, mirroring the reference's BSON value walk
-  * (reference: src/mongo_schema_inference.cpp:1).
+  * parsed form sampling, inference and both Mongo compilers consume,
+  * mirroring the reference's BSON value walk
+  * (reference: src/mongo_schema_inference.cpp:1). [[ExtJson]] owns the
+  * BSON↔Spark mapping (the reference's README "BSON Type Mapping"):
+  * the scan decodes wrapper payloads with its `decode`, the sink writes
+  * leaves with its encoders, and the compilers take their literals and
+  * `$type` names from it.
   *
-  * Extended-JSON wrappers recognized (public Mongo spec):
-  * `$oid $date $numberInt $numberLong $numberDouble $numberDecimal
-  * $binary $regularExpression $code $timestamp $minKey $maxKey
-  * $undefined` — each mapped per the reference's README "BSON Type
-  * Mapping" table.
+  * Extended-JSON wrappers recognized (public Mongo spec), each a
+  * single-key object: `$oid $date $numberInt $numberLong $numberDouble
+  * $numberDecimal $binary $regularExpression $code $timestamp $minKey
+  * $maxKey $undefined`. `$binary` takes the canonical
+  * `{"base64": …, "subType": …}` payload or the relaxed base64 string;
+  * the legacy two-key `{"$binary": …, "$type": "00"}` form is not a
+  * wrapper and reads as a plain document.
   */
 sealed trait DocValue
 object DocValue {
@@ -48,6 +60,7 @@ object ExtJson {
   private[sources] val mapper =
     new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
   private val isoFmt = DateTimeFormatter.ISO_OFFSET_DATE_TIME
+  private final val MicrosPerDay = 86400000000L
 
   /** Parse one JSONL line into a document. Throws on malformed input —
     * schema-mode handling (permissive / dropmalformed / failfast,
@@ -69,75 +82,154 @@ object ExtJson {
       val b = Seq.newBuilder[DocValue]
       a.forEach(e => b += fromNode(e))
       DArray(b.result())
-    case o: ObjectNode => fromObject(o)
+    case o: ObjectNode =>
+      val tag = wrapperTag(o)
+      val w = if (tag == null) null else decode(tag, o)
+      if (w != null) w
+      else {
+        val b = Seq.newBuilder[(String, DocValue)]
+        o.fields().forEachRemaining(e => b += e.getKey -> fromNode(e.getValue))
+        DDoc(b.result())
+      }
     case other => DString(other.toString)
   }
 
-  private def fromObject(o: ObjectNode): DocValue = {
-    val names = {
-      val b = Seq.newBuilder[String]
-      o.fieldNames().forEachRemaining(b += _)
-      b.result()
+  /** The tag of an extended-JSON wrapper (a single-key object whose key
+    * starts with '$'), else null. */
+  def wrapperTag(o: ObjectNode): String =
+    if (o.size() != 1) null
+    else {
+      val k = o.fieldNames().next()
+      if (k.startsWith("$")) k else null
     }
-    // Extended-JSON type wrappers are single-key objects whose key starts
-    // with '$' (plus $binary's two-key payload form).
-    if (names.size == 1 && names.head.startsWith("$")) {
-      val key = names.head
-      val v = o.get(key)
-      key match {
-        case "$oid" => DObjectId(v.asText())
-        case "$date" =>
-          v match {
-            case t: TextNode =>
-              DTimestamp(Instant.from(isoFmt.parse(t.textValue())).toEpochMilli * 1000L +
-                Instant.from(isoFmt.parse(t.textValue())).getNano / 1000 % 1000)
-            case obj: ObjectNode if obj.has("$numberLong") =>
-              DTimestamp(obj.get("$numberLong").asText().toLong * 1000L) // millis → micros
-            case num: NumericNode => DTimestamp(num.longValue() * 1000L)
-            case other => DString(other.toString)
-          }
-        case "$numberInt" | "$numberLong" => DLong(v.asText().toLong)
-        case "$numberDouble" | "$numberDecimal" => DDouble(v.asText().toDouble)
-        case "$binary" =>
-          v match {
-            case obj: ObjectNode if obj.has("base64") =>
-              DBinary(Base64.getDecoder.decode(obj.get("base64").asText()))
-            case t: TextNode => DBinary(Base64.getDecoder.decode(t.textValue()))
-            case other => DString(other.toString)
-          }
-        case "$regularExpression" | "$code" | "$timestamp" | "$minKey" |
-            "$maxKey" => // reference maps these all to VARCHAR
-          DString(o.toString)
-        case "$undefined" => DNull
-        case _ => // unknown $-key: treat as a plain nested doc
-          DDoc(names.map(f => f -> fromNode(o.get(f))))
+
+  /** The value of wrapper `o`, whose tag is `tag`; null for a tag outside
+    * the table, which makes `o` a plain document. Throws
+    * `IllegalArgumentException` when the payload does not decode. */
+  def decode(tag: String, o: ObjectNode): DocValue = {
+    val v = o.get(tag)
+    try tag match {
+      case "$oid"                             => DObjectId(v.asText())
+      case "$date"                            => DTimestamp(dateMicros(v))
+      case "$numberInt" | "$numberLong"       => DLong(v.asText().toLong)
+      case "$numberDouble" | "$numberDecimal" => DDouble(v.asText().toDouble)
+      case "$binary" => v match {
+        case t: TextNode => DBinary(Base64.getDecoder.decode(t.textValue()))
+        case p: ObjectNode if p.has("base64") =>
+          DBinary(Base64.getDecoder.decode(p.get("base64").asText()))
+        case _ => throw new IllegalArgumentException("no base64 payload")
       }
-    } else {
-      DDoc(names.map(f => f -> fromNode(o.get(f))))
+      case "$regularExpression" | "$code" | "$timestamp" | "$minKey" |
+          "$maxKey" => // reference maps these all to VARCHAR
+        DString(o.toString)
+      case "$undefined" => DNull
+      case _ => null
+    } catch {
+      case e @ (_: ArithmeticException | _: DateTimeException) =>
+        throw new IllegalArgumentException(s"$tag: ${e.getMessage}", e)
     }
   }
 
-  /** Serialize a DocValue back to extended JSON (used by tests and the
-    * parquet→docstore doc generator). */
-  def render(v: DocValue): String = v match {
-    case DNull          => "null"
-    case DBool(b)       => b.toString
-    case DLong(l)       => l.toString
-    case DDouble(d)     => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case DString(s)     => quote(s)
-    case DObjectId(hex) => s"""{"$$oid":${quote(hex)}}"""
-    case DTimestamp(us) =>
-      val i = Instant.ofEpochSecond(us / 1000000L, (us % 1000000L) * 1000L)
-      s"""{"$$date":${quote(i.atOffset(ZoneOffset.UTC).format(isoFmt))}}"""
-    case DBinary(b) =>
-      s"""{"$$binary":{"base64":${quote(Base64.getEncoder.encodeToString(b))},"subType":"00"}}"""
-    case DArray(items) => items.map(render).mkString("[", ",", "]")
-    case DDoc(fields) =>
-      fields.map { case (k, fv) => s"${quote(k)}:${render(fv)}" }.mkString("{", ",", "}")
+  /** A `$date` payload (ISO-8601 text, or epoch millis as a number or a
+    * `$numberLong`) as micros since epoch; out of Long range throws. */
+  private def dateMicros(v: JsonNode): Long = v match {
+    case t: TextNode =>
+      val i = Instant.from(isoFmt.parse(t.textValue()))
+      Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L), i.getNano / 1000L)
+    case n: NumericNode if n.canConvertToLong => Math.multiplyExact(n.longValue(), 1000L)
+    case o: ObjectNode if o.has("$numberLong") =>
+      Math.multiplyExact(o.get("$numberLong").asText().toLong, 1000L)
+    case _ => throw new IllegalArgumentException(s"not a date payload: $v")
   }
 
-  def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
+  /** A scalar as the Catalyst literal both Mongo compilers compare with:
+    * an ObjectId as its 24-hex text, a date as a TIMESTAMP. */
+  def literal(v: DocValue): Literal = v match {
+    case DNull          => Literal(null)
+    case DBool(b)       => Literal(b)
+    case DLong(l)       => Literal(l)
+    case DDouble(d)     => Literal(d)
+    case DString(s)     => Literal(s)
+    case DObjectId(hex) => Literal(hex)
+    case DTimestamp(us) => Literal(us, TimestampType)
+    case DBinary(b)     => Literal(b)
+    case other => throw new IllegalArgumentException(s"unsupported literal $other")
+  }
+
+  /** Mongo's `$type` name of a Spark type: the BSON table read backwards. */
+  def typeName(dt: DataType): String = dt match {
+    case ByteType | ShortType | IntegerType      => "int"
+    case LongType                                => "long"
+    case FloatType | DoubleType                  => "double"
+    case _: DecimalType                          => "decimal"
+    case _: StringType                           => "string"
+    case BooleanType                             => "bool"
+    case TimestampType | TimestampNTZType | DateType => "date"
+    case _: ArrayType                            => "array"
+    case _: StructType | _: MapType              => "object"
+    case BinaryType                              => "binData"
+    case other                                   => other.catalogString
+  }
+
+  /** The `$type` of a value: "null" for a null, else its column's name. */
+  def typeOf(c: Expression): Expression = If(IsNull(c), Literal("null"), MongoTypeName(c))
+
+  /** Whether a `$type` name is numeric: the `number` alias. */
+  def isNumber(typeName: Expression): Expression =
+    In(typeName, Seq("int", "long", "double", "decimal").map(Literal(_)))
+
+  /** Serialize a DocValue back to extended JSON. */
+  def render(v: DocValue): String = {
+    val sb = new JStringBuilder
+    write(sb, v)
+    sb.toString
+  }
+
+  private def write(sb: JStringBuilder, v: DocValue): Unit = v match {
+    case DNull          => sb.append("null")
+    case DBool(b)       => sb.append(b)
+    case DLong(l)       => sb.append(l)
+    case DDouble(d)     => writeDouble(sb, d)
+    case DString(s)     => quote(sb, s)
+    case DObjectId(hex) => quote(sb.append("{\"$oid\":"), hex).append('}')
+    case DTimestamp(us) => writeDate(sb, us)
+    case DBinary(b)     => writeBinary(sb, b)
+    case DArray(items) =>
+      sb.append('[')
+      items.zipWithIndex.foreach { case (x, i) => if (i > 0) sb.append(','); write(sb, x) }
+      sb.append(']')
+    case DDoc(fields) =>
+      sb.append('{')
+      fields.zipWithIndex.foreach { case ((k, x), i) =>
+        if (i > 0) sb.append(',')
+        quote(sb, k).append(':')
+        write(sb, x)
+      }
+      sb.append('}')
+  }
+
+  /** A double; NaN and ±Infinity as canonical `{"$numberDouble": …}`. */
+  def writeDouble(sb: JStringBuilder, d: Double): JStringBuilder =
+    if (d.isNaN || d.isInfinite) sb.append("{\"$numberDouble\":\"").append(d).append("\"}")
+    else sb.append(d)
+
+  /** Micros since epoch as `{"$date": ISO-8601 text}`. */
+  def writeDate(sb: JStringBuilder, micros: Long): JStringBuilder = {
+    val i = Instant.ofEpochSecond(micros / 1000000L, (micros % 1000000L) * 1000L)
+    sb.append("{\"$date\":\"").append(isoFmt.format(i.atOffset(ZoneOffset.UTC))).append("\"}")
+  }
+
+  /** A DATE (days since epoch) as its midnight-UTC `$date`. */
+  def writeDay(sb: JStringBuilder, days: Int): JStringBuilder =
+    writeDate(sb, days * MicrosPerDay)
+
+  def writeBinary(sb: JStringBuilder, b: Array[Byte]): JStringBuilder =
+    sb.append("{\"$binary\":{\"base64\":\"").append(Base64.getEncoder.encodeToString(b))
+      .append("\",\"subType\":\"00\"}}")
+
+  /** `s` as a JSON string literal. */
+  def quote(sb: JStringBuilder, s: String): JStringBuilder = {
+    sb.append('"')
     s.foreach {
       case '"'  => sb.append("\\\"")
       case '\\' => sb.append("\\\\")
@@ -147,15 +239,40 @@ object ExtJson {
       case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
       case c => sb.append(c)
     }
-    sb.append('"').toString
+    sb.append('"')
   }
 
   /** True if the timestamp is exactly midnight UTC — the reference's
     * Date-vs-Timestamp rule (README "BSON Type Mapping": Date → DATE if
     * the time component is 00:00:00 UTC, else TIMESTAMP). */
-  def isMidnightUtc(micros: Long): Boolean = micros % 86400000000L == 0
+  def isMidnightUtc(micros: Long): Boolean = micros % MicrosPerDay == 0
 
   def epochDay(micros: Long): Int =
     LocalDate.ofInstant(Instant.ofEpochSecond(micros / 1000000L), ZoneOffset.UTC)
       .toEpochDay.toInt
+}
+
+/** [[ExtJson.typeName]] of the child's type as a non-null string constant.
+  *
+  * Spark's own `TypeOf` splices its type name into the generated Java
+  * UNQUOTED, so any plan compiled before ConstantFolding has collapsed it
+  * (eager expression-evaluation paths, spec harnesses) fails codegen and
+  * falls back to the interpreter. The name is fixed once the child
+  * resolves, so this expression emits a bound constant reference instead
+  * — and, being foldable, still collapses to a plain Literal in optimized
+  * plans. The child is never evaluated.
+  */
+case class MongoTypeName(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = true
+  private def name = UTF8String.fromString(ExtJson.typeName(child.dataType))
+  override def eval(input: InternalRow): Any = name
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("typeName", name)
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral, value = JavaCode.global(ref, dataType))
+  }
+  override protected def withNewChildInternal(c: Expression): MongoTypeName =
+    copy(child = c)
+  override def prettyName: String = "mongo_type_name"
 }

@@ -1,8 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedExtractValue}
+import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedAttribute, UnresolvedExtractValue}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 import org.apache.spark.sql.graftshim.{toColumn, toExpression}
 
 /** MongoDB filter-document → Catalyst expression compiler.
@@ -28,7 +30,7 @@ import org.apache.spark.sql.graftshim.{toColumn, toExpression}
   * (scalar-ops and document forms — compiled to Catalyst higher-order
   * `exists`, still codegen'd), dotted paths (`a.b` → nested field /
   * struct access, resolved by the analyzer), and the find()-API geo
-  * grammar over `[x, y]` pair columns: `$geoWithin` (`$box $center
+  * grammar over `[x, y]` pair or GeoJSON Point columns: `$geoWithin` (`$box $center
   * $centerSphere $polygon $geometry`), `$geoIntersects` (point-field
   * form), `$near $nearSphere` (distance-range form; see the geo section
   * below for unit and ordering semantics), and `$jsonSchema` (the
@@ -157,7 +159,7 @@ object MongoFilter {
       // with null must compile to IsNull, not EqualTo(_, null) (which
       // evaluates to NULL and matches nothing).
       case DNull        => IsNull(attr(field))
-      case literalValue => EqualTo(attr(field), toLit(literalValue)) // implicit $eq
+      case literalValue => EqualTo(attr(field), ExtJson.literal(literalValue)) // implicit $eq
     }
   }
 
@@ -165,19 +167,19 @@ object MongoFilter {
     op match {
       case "$eq"  => operand match {
         case DNull => IsNull(c) // Mongo null equality matches null AND missing
-        case o     => EqualTo(c, toLit(o))
+        case o     => EqualTo(c, ExtJson.literal(o))
       }
-      case "$ne"  => Not(EqualNullSafe(c, toLit(operand))) // $ne matches missing too
-      case "$gt"  => GreaterThan(c, toLit(operand))
-      case "$gte" => GreaterThanOrEqual(c, toLit(operand))
-      case "$lt"  => LessThan(c, toLit(operand))
-      case "$lte" => LessThanOrEqual(c, toLit(operand))
+      case "$ne"  => Not(EqualNullSafe(c, ExtJson.literal(operand))) // $ne matches missing too
+      case "$gt"  => GreaterThan(c, ExtJson.literal(operand))
+      case "$gte" => GreaterThanOrEqual(c, ExtJson.literal(operand))
+      case "$lt"  => LessThan(c, ExtJson.literal(operand))
+      case "$lte" => LessThanOrEqual(c, ExtJson.literal(operand))
       case "$in" => operand match {
         case DArray(items) =>
           // a null element means "match null/missing" in Mongo — In() with a
           // null literal would yield NULL instead, so split it out as IsNull
           val (nulls, vals) = items.partition(_ == DNull)
-          val inPart = if (vals.nonEmpty) Some(In(c, vals.map(toLit))) else None
+          val inPart = if (vals.nonEmpty) Some(In(c, vals.map(ExtJson.literal))) else None
           val nullPart = if (nulls.nonEmpty) Some(IsNull(c)) else None
           (inPart ++ nullPart).reduceOption[Expression](Or)
             .getOrElse(Literal.FalseLiteral) // Mongo: $in [] matches nothing
@@ -187,7 +189,7 @@ object MongoFilter {
         case DArray(items) =>
           val (nulls, vals) = items.partition(_ == DNull)
           val notIn: Expression =
-            if (vals.nonEmpty) Not(In(c, vals.map(toLit))) else Literal.TrueLiteral
+            if (vals.nonEmpty) Not(In(c, vals.map(ExtJson.literal))) else Literal.TrueLiteral
           if (nulls.nonEmpty) And(notIn, IsNotNull(c)) // null listed → nulls excluded
           else Or(notIn, IsNull(c))                    // else missing/null matches
         case other => throw bad(s"$$nin needs an array, got $other")
@@ -197,7 +199,7 @@ object MongoFilter {
         // integer value; Remainder is codegen'd and null-safe like any
         // arithmetic comparison
         case DArray(Seq(d, r)) =>
-          EqualTo(Remainder(c, toLit(d)), toLit(r))
+          EqualTo(Remainder(c, ExtJson.literal(d)), ExtJson.literal(r))
         case other => throw bad(s"$$mod needs [divisor, remainder], got $other")
       }
       case "$exists" => operand match {
@@ -210,10 +212,9 @@ object MongoFilter {
         // predicate: compare the column's Spark type mapped to Mongo's
         // name (plus the value's null-ness for "null")
         case DString(want) =>
-          val mapped = mongoTypeName(c)
+          val mapped = ExtJson.typeOf(c)
           // Mongo aliases: "number" matches any numeric type
-          if (want == "number")
-            In(mapped, Seq("int", "long", "double", "decimal").map(Literal(_)))
+          if (want == "number") ExtJson.isNumber(mapped)
           else EqualTo(mapped, Literal(want))
         case other => throw bad(s"$$type needs a type-name string, got $other")
       }
@@ -258,7 +259,7 @@ object MongoFilter {
       }
       case "$all" => operand match {
         case DArray(items) if items.nonEmpty =>
-          items.map(i => ArrayContains(c, toLit(i)): Expression).reduce(And)
+          items.map(i => ArrayContains(c, ExtJson.literal(i)): Expression).reduce(And)
         case DArray(_) => Literal.FalseLiteral // Mongo: $all [] matches nothing
         case other     => throw bad(s"$$all needs an array, got $other")
       }
@@ -278,7 +279,7 @@ object MongoFilter {
                       sub.fields.forall(_._1.startsWith("$")) =>
                     sub.fields.map { case (o, od) => compileOp(member, o, od) }
                       .reduce(And)
-                  case lit => EqualTo(member, toLit(lit))
+                  case lit => EqualTo(member, ExtJson.literal(lit))
                 }
               }.reduce(And)
           ArrayExists(c, LambdaFunction(cond, Seq(x)))
@@ -286,32 +287,6 @@ object MongoFilter {
       }
       case other => throw bad(s"unsupported operator $other")
     }
-  }
-
-  /** The VALUE's Mongo type name for a column: the Spark column type
-    * mapped through the reference's BSON table (README "BSON Type
-    * Mapping"), with the value's null-ness checked first ("null").
-    * TypeNameOf, not Spark's TypeOf: same value, but codegen-safe on
-    * unoptimized paths (TypeOf splices the name unquoted); constant-folds
-    * to a literal during optimization, so every branch below folds away. */
-  private def mongoTypeName(c: Expression): Expression = {
-    val sparkType = graft.functions.TypeNameOf(c)
-    CaseWhen(Seq(
-      (IsNull(c), Literal("null")),
-      (In(sparkType, Seq("tinyint", "smallint", "int").map(Literal(_))),
-        Literal("int")),
-      (EqualTo(sparkType, Literal("bigint")), Literal("long")),
-      (In(sparkType, Seq("double", "float").map(Literal(_))),
-        Literal("double")),
-      (StartsWith(sparkType, Literal("decimal")), Literal("decimal")),
-      (EqualTo(sparkType, Literal("string")), Literal("string")),
-      (EqualTo(sparkType, Literal("boolean")), Literal("bool")),
-      (In(sparkType, Seq("timestamp", "timestamp_ntz", "date")
-        .map(Literal(_))), Literal("date")),
-      (StartsWith(sparkType, Literal("array")), Literal("array")),
-      (StartsWith(sparkType, Literal("struct")), Literal("object")),
-      (EqualTo(sparkType, Literal("binary")), Literal("binData"))),
-      Some(sparkType))
   }
 
   // -------- $jsonSchema (draft-4 validation subset, as a MATCH) --------
@@ -328,8 +303,6 @@ object MongoFilter {
   // Unknown / unenforceable keywords (JS `$where`-class, uniqueItems,
   // additionalProperties: false over a fixed column set) are refused,
   // not ignored. `description`/`title` are annotations and pass.
-
-  private val numericTypeNames = Seq("int", "long", "double", "decimal")
 
   private def compileSchema(path: Option[String], schema: DDoc): Expression = {
     val m = schema.fields.toMap
@@ -382,8 +355,8 @@ object MongoFilter {
     if (unknown.nonEmpty) throw bad(
       s"$$jsonSchema.$p: unsupported keywords ${unknown.mkString(", ")}")
     val c = attr(p)
-    val typeName = mongoTypeName(c)
-    val isNumeric = In(typeName, numericTypeNames.map(Literal(_)))
+    val typeName = ExtJson.typeOf(c)
+    val isNumeric = ExtJson.isNumber(typeName)
     val isString = EqualTo(typeName, Literal("string"))
     def guarded(guard: Expression, cons: Expression): Expression =
       Or(Not(guard), cons)
@@ -430,7 +403,7 @@ object MongoFilter {
     m.get("enum").foreach {
       case DArray(items) if items.nonEmpty =>
         val (nulls, vals) = items.partition(_ == DNull)
-        val inPart = if (vals.nonEmpty) Some(In(c, vals.map(toLit))) else None
+        val inPart = if (vals.nonEmpty) Some(In(c, vals.map(ExtJson.literal))) else None
         val nullPart = if (nulls.nonEmpty) Some(IsNull(c)) else None
         constraints += (inPart ++ nullPart).reduceOption[Expression](Or)
           .getOrElse(Literal.FalseLiteral)
@@ -481,11 +454,9 @@ object MongoFilter {
   // along, so they compile here to pure closed-form Catalyst math —
   // codegen'd, partition-prunable when the coordinates are sargable.
   //
-  // The queried field must hold a numeric `[lng, lat]` (or flat `[x, y]`)
-  // pair array — the legacy coordinate form. For GeoJSON Point FIELDS,
-  // query the embedded pair directly: `{"loc.coordinates": {...}}`
-  // (there is no server-side 2dsphere index metadata to resolve the
-  // shape from, mirroring $geoNear's explicit `key`).
+  // The queried field holds a numeric `[lng, lat]` (or flat `[x, y]`)
+  // pair array — the legacy coordinate form — or a GeoJSON Point
+  // document, read by its `coordinates` (see `lngLat`).
   //
   // Geometry semantics: $box/$center/$polygon are flat (2d) per Mongo;
   // $centerSphere is a spherical cap over central angle (radians);
@@ -513,21 +484,20 @@ object MongoFilter {
     case other => throw bad(s"$what needs an [x, y] pair, got $other")
   }
 
-  /** The queried pair field as (x, y) double columns. */
-  private def geoXY(field: String): (Column, Column) = {
-    import org.apache.spark.sql.functions.element_at
-    val c = toColumn(attr(field))
-    (element_at(c, 1).cast(org.apache.spark.sql.types.DoubleType),
-      element_at(c, 2).cast(org.apache.spark.sql.types.DoubleType))
-  }
+  /** A location's (x, y) as double columns: a `[lng, lat]` pair array or
+    * a GeoJSON Point document's `coordinates`, whichever the column's type
+    * is — the one location reader of the geo operators and `$geoNear`. */
+  private[sources] def lngLat(loc: Expression): (Column, Column) =
+    (toColumn(GeoCoord(loc, 1)), toColumn(GeoCoord(loc, 2)))
 
-  /** Haversine central angle (radians) from (x, y) to a literal point. */
-  private def centralAngle(x: Column, y: Column,
-      lng: Double, lat: Double): Column = {
+  private def geoXY(field: String): (Column, Column) = lngLat(attr(field))
+
+  /** Haversine central angle (radians) from (x, y) to (lng, lat). */
+  private[sources] def centralAngle(x: Column, y: Column,
+      lng: Column, lat: Column): Column = {
     import org.apache.spark.sql.functions.{asin, cos, lit, pow, radians, sin, sqrt}
-    val h = pow(sin(radians(y - lit(lat)) / 2), 2) +
-      cos(radians(lit(lat))) * cos(radians(y)) *
-        pow(sin(radians(x - lit(lng)) / 2), 2)
+    val h = pow(sin(radians(y - lat) / 2), 2) +
+      cos(radians(lat)) * cos(radians(y)) * pow(sin(radians(x - lng) / 2), 2)
     lit(2.0) * asin(sqrt(h))
   }
 
@@ -595,7 +565,7 @@ object MongoFilter {
             lit(rr * rr)
         case Seq(("$centerSphere", DArray(Seq(c, r)))) =>
           val (cx, cy) = pairOf(c, "$centerSphere")
-          centralAngle(x, y, cx, cy) <= lit(numD(r, "$centerSphere radius"))
+          centralAngle(x, y, lit(cx), lit(cy)) <= lit(numD(r, "$centerSphere radius"))
         case Seq(("$polygon", DArray(pts))) if pts.size >= 3 =>
           pointInRing(x, y, pts.map(pairOf(_, "$polygon")))
         case Seq(("$geometry", g: DDoc)) => geometryContains(x, y, g)
@@ -668,7 +638,7 @@ object MongoFilter {
       if (!geoJson && opName == "$near") // flat 2d, legacy units
         sqrt(pow(x - lit(cx), 2) + pow(y - lit(cy), 2))
       else {
-        val ca = centralAngle(x, y, cx, cy)
+        val ca = centralAngle(x, y, lit(cx), lit(cy))
         if (geoJson) lit(6371008.8) * ca else ca // meters vs radians
       }
     val bounds = (minD.map(dist >= lit(_)) ++ maxD.map(dist <= lit(_)))
@@ -696,18 +666,6 @@ object MongoFilter {
   private def attr(field: String): Expression =
     UnresolvedAttribute(field.split('.').toImmutableArraySeq)
 
-  private def toLit(v: DocValue): Expression = v match {
-    case DNull          => Literal(null)
-    case DBool(b)       => Literal(b)
-    case DLong(l)       => Literal(l)
-    case DDouble(d)     => Literal(d)
-    case DString(s)     => Literal(s)
-    case DObjectId(hex) => Literal(hex) // ObjectId equality uses the 24-hex form
-    case DTimestamp(us) => Literal(us, org.apache.spark.sql.types.TimestampType)
-    case DBinary(b)     => Literal(b)
-    case other          => throw bad(s"unsupported literal $other")
-  }
-
   private def subDocs(op: String, v: DocValue): Seq[DDoc] = v match {
     case DArray(items) if items.nonEmpty && items.forall(_.isInstanceOf[DDoc]) =>
       items.map(_.asInstanceOf[DDoc])
@@ -719,4 +677,24 @@ object MongoFilter {
   private implicit class ArrOps[A](private val a: Array[A]) {
     def toImmutableArraySeq: Seq[A] = a.toIndexedSeq
   }
+}
+
+/** Coordinate `i` (1 = x/lng, 2 = y/lat) of a location as a DOUBLE: element
+  * `i` of a pair array, or of a GeoJSON Point struct's `coordinates`. The
+  * shape is the column's type, known only once the analyzer resolves it. */
+private[sources] case class GeoCoord(child: Expression, i: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression] {
+  private def pair: Expression = child.dataType match {
+    case st: StructType if st.fieldNames.contains("coordinates") =>
+      GetStructField(child, st.fieldIndex("coordinates"))
+    case _ => child
+  }
+  override lazy val replacement: Expression =
+    Cast(ElementAt(pair, Literal(i)), DoubleType)
+  override def checkInputDataTypes(): TypeCheckResult = pair.dataType match {
+    case _: ArrayType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure("a location must be a " +
+      s"[x, y] array or a GeoJSON Point, got ${other.simpleString}")
+  }
+  override protected def withNewChildInternal(c: Expression): GeoCoord = copy(child = c)
 }

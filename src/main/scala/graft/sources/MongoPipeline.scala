@@ -1078,19 +1078,7 @@ object MongoPipeline {
             case _                => throw bad("$geoNear needs distanceField")
           }
           val loc = col(fieldPath("$" + keyField))
-          // [lng, lat] array or GeoJSON struct field
-          val (lng, lat) = df.schema(keyField).dataType match {
-            case _: org.apache.spark.sql.types.StructType =>
-              (element_at(loc.getField("coordinates"), 1),
-                element_at(loc.getField("coordinates"), 2))
-            case _ => (element_at(loc, 1), element_at(loc, 2))
-          }
-          val R = 6371008.8
-          val (phi1, phi2) = (radians(nearLat), radians(lat))
-          val dPhi = radians(lat - nearLat)
-          val dLam = radians(lng - nearLng)
-          val h = pow(sin(dPhi / 2), 2) +
-            cos(phi1) * cos(phi2) * pow(sin(dLam / 2), 2)
+          val (lng, lat) = MongoFilter.lngLat(toExpression(loc))
           val mult = m.get("distanceMultiplier") match {
             case Some(DDouble(x)) => x
             case Some(DLong(x))   => x.toDouble
@@ -1104,7 +1092,7 @@ object MongoPipeline {
             case Some(x) => throw bad("$geoNear.spherical: only spherical " +
               s"(2dsphere) geometry is supported, got $x")
           }
-          val dist = lit(2 * R) * asin(sqrt(h))
+          val dist = lit(6371008.8) * MongoFilter.centralAngle(lng, lat, nearLng, nearLat)
           val filtered = m.get("query") match {
             case Some(q: DDoc) => df.filter(toColumn(MongoFilter.compileDoc(q)))
             case None          => df
@@ -1973,19 +1961,11 @@ object MongoPipeline {
           s"(in scope: ${env.keys.toSeq.sorted.mkString(", ")})")
       }
     case DString(s) if s.startsWith("$")  => col(fieldPath(s))
-    case DString(s)     => lit(s)
-    case DLong(l)       => lit(l)
-    case DDouble(d)     => lit(d)
-    case DBool(b)       => lit(b)
-    case DNull          => lit(null)
-    case DTimestamp(us) => toColumn(
-      org.apache.spark.sql.catalyst.expressions.Literal(us,
-        org.apache.spark.sql.types.TimestampType))
     case DArray(items)  => array(items.map(valueExpr(_, env)): _*)
     case DDoc(Seq((op, operand))) if op.startsWith("$") => opExpr(op, operand, env)
     case d: DDoc => struct(d.fields.map { case (k, fv) =>
       valueExpr(fv, env).as(k) }: _*) // document literal → struct
-    case other => throw bad(s"unsupported expression $other")
+    case scalar => toColumn(ExtJson.literal(scalar))
   }
 
   private def args(operand: DocValue, env: Map[String, Column]): Seq[Column] =
@@ -2576,10 +2556,9 @@ object MongoPipeline {
         case DArray(Seq(one)) => one
         case x                => x
       }, env)
-      val t = toColumn(graft.functions.TypeNameOf(toExpression(v)))
       // a NULL value is not an array in Mongo even when the COLUMN is
-      // array-typed — guard on the value like $type does
-      when(v.isNull, lit(false)).otherwise(t.startsWith("array"))
+      // array-typed: its $type is "null"
+      toColumn(ExtJson.typeOf(toExpression(v))) === "array"
     // document ↔ entry-list conversions. $objectToArray resolves against
     // the input's Spark type (struct fields in order, or map entries);
     // $arrayToObject produces a MAP — the fixed-schema analog of building
@@ -2663,30 +2642,10 @@ object MongoPipeline {
       case other => throw bad(s"$$meta: unsupported metadata $other " +
         "(vectorSearchScore, searchScore, score)")
     }
-    // type introspection: Spark type names mapped to Mongo's $type names
-    case "$type" =>
-      val t = toColumn(graft.functions.TypeNameOf(
-        toExpression(valueExpr(operand, env))))
-      when(valueExpr(operand, env).isNull, "null")
-        .when(t.isin("tinyint", "smallint", "int"), "int")
-        .when(t === "bigint", "long")
-        // Mongo reports Decimal128 as "decimal" — keep parity with
-        // MongoFilter's $type, which already maps decimals there
-        .when(t.startsWith("decimal"), "decimal")
-        .when(t === "double" || t === "float", "double")
-        .when(t === "string", "string")
-        .when(t === "boolean", "bool")
-        .when(t === "timestamp" || t === "date", "date")
-        .when(t.startsWith("array"), "array")
-        .when(t.startsWith("struct") || t.startsWith("map"), "object")
-        .when(t === "binary", "binData")
-        .otherwise(t)
+    // type introspection: Spark types by Mongo's $type names
+    case "$type" => toColumn(ExtJson.typeOf(toExpression(valueExpr(operand, env))))
     case "$isNumber" =>
-      val t = toColumn(graft.functions.TypeNameOf(
-        toExpression(valueExpr(operand, env))))
-      valueExpr(operand, env).isNotNull &&
-        (t.isin("tinyint", "smallint", "int", "bigint", "double", "float") ||
-          t.startsWith("decimal"))
+      toColumn(ExtJson.isNumber(ExtJson.typeOf(toExpression(valueExpr(operand, env)))))
     // date constructors / destructors
     case "$dateFromString" => operand match {
       case d: DDoc =>

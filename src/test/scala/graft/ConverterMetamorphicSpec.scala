@@ -11,8 +11,8 @@ import scala.jdk.CollectionConverters._
 
 /** Metamorphic check of the streaming docstore converter: a document's
   * rows may not depend on how its JSON is laid out. Random conflicting
-  * documents (InferenceFuzzSpec's grammar, plus strings that need
-  * escapes) are written twice — as generated, and re-serialised with
+  * documents (InferenceFuzzSpec's grammar with the whole wrapper table,
+  * plus strings that need escapes) are written twice — as generated, and re-serialised with
   * random whitespace, shuffled key order and some string characters
   * spelled as `\\uXXXX` escapes. Under one schema, both collections must
   * scan to the same rows in every schema mode, for the whole schema, for
@@ -33,7 +33,24 @@ class ConverterMetamorphicSpec extends SparkSpec {
     Seq("s" + rnd.nextInt(20), "é" + rnd.nextInt(3), "q\"" + rnd.nextInt(3),
       "tab\t", "k3", "")(rnd.nextInt(6)))
 
-  private def value(depth: Int): String = rnd.nextInt(if (depth > 0) 10 else 8) match {
+  /** The rest of the wrapper table, and one payload that does not decode. */
+  private def wrapper(): String = rnd.nextInt(13) match {
+    case 0 => s"""{"$$numberInt":"${rnd.nextInt()}"}"""
+    case 1 => s"""{"$$numberLong":"${rnd.nextLong()}"}"""
+    case 2 => s"""{"$$numberDouble":"${rnd.nextDouble() * 100}"}"""
+    case 3 => """{"$numberDouble":"NaN"}"""
+    case 4 => s"""{"$$numberDecimal":"${rnd.nextInt(1000)}.25"}"""
+    case 5 => s"""{"$$date":{"$$numberLong":"${86400000L * rnd.nextInt(20000)}"}}"""
+    case 6 => s"""{"$$date":${rnd.between(0L, 1900000000000L)}}"""
+    case 7 => """{"$binary":{"base64":"AQI=","subType":"00"}}"""
+    case 8 => """{"$binary":"AQID"}"""
+    case 9 => """{"$undefined":true}"""
+    case 10 => """{"$regularExpression":{"pattern":"^a","options":"i"}}"""
+    case 11 => s"""{"$$timestamp":{"t":${rnd.nextInt(1000)},"i":1}}"""
+    case 12 => """{"$numberLong":"x"}"""
+  }
+
+  private def value(depth: Int): String = rnd.nextInt(if (depth > 0) 11 else 9) match {
     case 0 => rnd.nextLong().toString
     case 1 => (rnd.nextDouble() * 1000 - 500).toString
     case 2 => str()
@@ -44,8 +61,9 @@ class ConverterMetamorphicSpec extends SparkSpec {
       val d = java.time.Instant.ofEpochMilli(rnd.between(0L, 1900000000000L))
       s"""{"$$date":"$d"}"""
     case 7 => str()
-    case 8 => (0 until rnd.nextInt(4)).map(_ => value(depth - 1)).mkString("[", ",", "]")
-    case 9 => doc(depth - 1)
+    case 8 => wrapper()
+    case 9 => (0 until rnd.nextInt(4)).map(_ => value(depth - 1)).mkString("[", ",", "]")
+    case 10 => doc(depth - 1)
   }
 
   private def doc(depth: Int): String =

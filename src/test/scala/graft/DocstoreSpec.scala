@@ -522,6 +522,26 @@ class DocstoreSpec extends SparkSpec {
       Option(e.getCause).exists(_.toString.contains("column 'n'")), e.toString)
   }
 
+  test("a $binary without base64 and a $date past Long micros do not decode, " +
+      "in sampling and in every schema mode") {
+    val dir = writeDocs("undecodable_wrappers", Seq(
+      """{"id":1,"b":{"$binary":{"base64":"AQI=","subType":"00"}},"t":{"$date":"2024-03-01T12:00:00Z"}}""",
+      """{"id":2,"b":{"$binary":{"subType":"00"}}}""",
+      """{"id":3,"t":{"$date":{"$numberLong":"9223372036854775807"}}}"""))
+    def read(mode: String) = spark.read.format("docstore").option("path", dir)
+      .option("schemamode", mode).load()
+    // the sampler skips both documents, so b infers BINARY and t TIMESTAMP
+    val schema = read("permissive").schema
+    assert(schema("b").dataType == BinaryType && schema("t").dataType == TimestampType, schema)
+    val got = read("permissive").orderBy("id").collect().map(r =>
+      (r.getAs[Long]("id"), Option(r.getAs[Array[Byte]]("b")).map(_.toSeq), r.isNullAt(r.fieldIndex("t"))))
+    assert(got.toSeq == Seq((1L, Some(Seq[Byte](1, 2)), false), (2L, None, true), (3L, None, true)))
+    assert(read("dropmalformed").collect().map(_.getAs[Long]("id")).toSeq == Seq(1L))
+    val e = intercept[Exception](read("failfast").collect())
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("docstore failfast: column 'b'")), e.toString)
+  }
+
   test("content after a document makes the line malformed") {
     val dir = writeDocs("trailing_tokens", Seq(
       """{"n":1}{"n":2}""",
@@ -620,6 +640,20 @@ class DocstoreSpec extends SparkSpec {
     assert(r(0).getDate(2) == java.sql.Date.valueOf("2024-03-05"))
     assert(r(0).getAs[Array[Byte]](3).toSeq == Seq[Byte](1, 2, 3))
     assert(r(1).getSeq[Long](4) == Seq(3L))
+  }
+
+  test("docstore write: NaN and ±Infinity round-trip as $numberDouble") {
+    import spark.implicits._
+    val outDir = "/tmp/graft_docstore_spec/write_nonfinite"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outDir))
+    Seq((1L, Double.NaN), (2L, Double.PositiveInfinity), (3L, Double.NegativeInfinity),
+      (4L, 1.5)).toDF("id", "x")
+      .write.format("docstore").option("path", outDir).mode("append").save()
+    val back = spark.read.format("docstore").option("path", outDir).load()
+    assert(back.schema("x").dataType == DoubleType)
+    val xs = back.orderBy("id").collect().map(r => r.getAs[Any]("x"))
+    assert(xs.head.asInstanceOf[Double].isNaN, xs.toSeq)
+    assert(xs.tail.toSeq == Seq(Double.PositiveInfinity, Double.NegativeInfinity, 1.5))
   }
 
   test("ensureEventDocs invalidates its cache when the source parquet changes") {

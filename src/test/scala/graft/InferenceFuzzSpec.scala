@@ -3,8 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Fuzz the document layer end to end: random extended-JSON collections
-  * with deliberately conflicting field types, nesting, arrays, ObjectIds
-  * and dates must always infer a schema, scan fully under permissive
+  * with deliberately conflicting field types, nesting, arrays and every
+  * wrapper of the BSON table (plus one payload that does not decode)
+  * must always infer a schema, scan fully under permissive
   * mode, and produce a STABLE schema (re-inference agrees with itself).
   * This is the surface the reference hardens case by case (the
   * test/sql/schema suite); the fuzz covers the combinations those
@@ -18,7 +19,24 @@ class InferenceFuzzSpec extends SparkSpec {
   private def hex24(): String =
     (0 until 24).map(_ => "0123456789abcdef"(rnd.nextInt(16))).mkString
 
-  private def value(depth: Int): String = rnd.nextInt(if (depth > 0) 9 else 7) match {
+  /** The rest of the wrapper table, and one payload that does not decode. */
+  private def wrapper(): String = rnd.nextInt(13) match {
+    case 0 => s"""{"$$numberInt":"${rnd.nextInt()}"}"""
+    case 1 => s"""{"$$numberLong":"${rnd.nextLong()}"}"""
+    case 2 => s"""{"$$numberDouble":"${rnd.nextDouble() * 100}"}"""
+    case 3 => """{"$numberDouble":"NaN"}"""
+    case 4 => s"""{"$$numberDecimal":"${rnd.nextInt(1000)}.25"}"""
+    case 5 => s"""{"$$date":{"$$numberLong":"${86400000L * rnd.nextInt(20000)}"}}"""
+    case 6 => s"""{"$$date":${rnd.between(0L, 1900000000000L)}}"""
+    case 7 => """{"$binary":{"base64":"AQI=","subType":"00"}}"""
+    case 8 => """{"$binary":"AQID"}"""
+    case 9 => """{"$undefined":true}"""
+    case 10 => """{"$regularExpression":{"pattern":"^a","options":"i"}}"""
+    case 11 => s"""{"$$timestamp":{"t":${rnd.nextInt(1000)},"i":1}}"""
+    case 12 => """{"$numberLong":"x"}"""
+  }
+
+  private def value(depth: Int): String = rnd.nextInt(if (depth > 0) 10 else 8) match {
     case 0 => rnd.nextLong().toString
     case 1 => (rnd.nextDouble() * 1000 - 500).toString
     case 2 => "\"s" + rnd.nextInt(100) + "\""
@@ -28,10 +46,11 @@ class InferenceFuzzSpec extends SparkSpec {
     case 6 =>
       val d = java.time.Instant.ofEpochMilli(rnd.between(0L, 1900000000000L))
       s"""{"$$date":"$d"}"""
-    case 7 => // array of same-depth values (possibly empty / mixed)
+    case 7 => wrapper()
+    case 8 => // array of same-depth values (possibly empty / mixed)
       (0 until rnd.nextInt(4)).map(_ => value(depth - 1))
         .mkString("[", ",", "]")
-    case 8 => doc(depth - 1) // nested document
+    case 9 => doc(depth - 1) // nested document
   }
 
   private def doc(depth: Int): String = {

@@ -127,6 +127,22 @@ class MongoFilterSpec extends SparkSpec {
     assert(ids("""{"tag":{"$type":"string"}}""") == Seq(1L, 3L, 4L))
   }
 
+  test("$type names a map column \"object\" and a timestamp_ntz column \"date\", " +
+      "in the filter and the pipeline alike") {
+    val typed = df.select(col("id"),
+      when(col("tag").isNotNull, map(lit("k"), col("id"))).as("m"),
+      expr("timestamp_ntz'2024-03-01 12:00:00'").as("t"))
+    def tids(f: String) = typed.filter(MongoFilter.compile(f))
+      .select("id").as[Long].collect().toSeq.sorted
+    assert(tids("""{"m":{"$type":"object"}}""") == Seq(1L, 3L, 4L))
+    assert(tids("""{"t":{"$type":"date"}}""") == Seq(1L, 2L, 3L, 4L))
+    val names = Graft.aggregate(typed,
+      """[{"$project": {"id": 1, "tm": {"$type": "$m"}, "tt": {"$type": "$t"}}}]""")
+      .orderBy("id").collect().map(r => (r.getAs[String]("tm"), r.getAs[String]("tt")))
+    assert(names.toSeq == Seq(("object", "date"), ("null", "date"),
+      ("object", "date"), ("object", "date")))
+  }
+
   test("bitwise operators: mask and bit-position forms") {
     // ids 1..4 = binary 01, 10, 11, 100
     assert(ids("""{"id":{"$bitsAllSet":3}}""") == Seq(3L))          // 11
@@ -355,6 +371,28 @@ class MongoFilterSpec extends SparkSpec {
         (x - qx) * (x - qx) + (y - qy) * (y - qy) <= r * r }.map(_._1).sorted
       assert(got == want)
     }
+  }
+
+  test("a GeoJSON Point column answers $near, $geoWithin and $geoNear as its pair array does") {
+    val both = geo.select(col("id"), col("loc"),
+      when(col("loc").isNotNull, struct(lit("Point").as("type"), col("loc").as("coordinates")))
+        .as("pt"))
+    def on(field: String, f: String) = both.filter(MongoFilter.compile(f.replace("F", field)))
+      .select("id").as[Long].collect().toSeq.sorted
+    for (f <- Seq(
+        """{"F":{"$near":{"$geometry":{"type":"Point","coordinates":[0,0]},"$maxDistance":250000}}}""",
+        """{"F":{"$nearSphere":[1,1],"$maxDistance":0.03}}""",
+        """{"F":{"$near":[0,0],"$maxDistance":2}}""",
+        """{"F":{"$geoWithin":{"$box":[[-1,-2],[2,1]]}}}""",
+        """{"F":{"$geoWithin":{"$centerSphere":[[0,0],0.03]}}}""")) {
+      val want = on("loc", f)
+      assert(want.nonEmpty && want.size < 49, f)
+      assert(on("pt", f) == want, f)
+    }
+    def geoNear(key: String) = Graft.aggregate(both, s"""[{"$$geoNear": {"near": [0.5, 0.5],
+      "key": "$key", "distanceField": "d", "maxDistance": 250000}}]""")
+      .select("id", "d").as[(Long, Double)].collect().toSeq.sorted
+    assert(geoNear("loc").nonEmpty && geoNear("pt") == geoNear("loc"))
   }
 
   test("geo predicates stay codegen'd boolean filters (no UDF, no shuffle)") {

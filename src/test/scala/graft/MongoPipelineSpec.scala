@@ -490,6 +490,21 @@ class MongoPipelineSpec extends SparkSpec {
     assert(math.abs(km(1).getDouble(km(1).fieldIndex("km")) - 55.597) < 0.01)
   }
 
+  test("$expr and $addFields take $oid and $binary literals") {
+    val oid = "64de1f00c0ffee0000000001"
+    val docs = Seq((oid, Array[Byte](1, 2)), ("64de1f00c0ffee0000000002", Array[Byte](3)))
+      .toDF("_id", "b")
+    def ids(f: String) = docs.filter(Graft.mongoFilter(f)).select("_id").as[String].collect().toSeq
+    assert(ids(s"""{"$$expr": {"$$eq": ["$$_id", {"$$oid": "$oid"}]}}""") == Seq(oid))
+    assert(ids(s"""{"_id": {"$$oid": "$oid"}}""") == Seq(oid))
+    assert(ids("""{"$expr": {"$eq": ["$b", {"$binary": {"base64": "AQI=", "subType": "00"}}]}}""") ==
+      Seq(oid))
+    val added = Graft.aggregate(docs.limit(1), s"""[{"$$addFields": {"o": {"$$oid": "$oid"},
+      "bin": {"$$binary": {"base64": "AQI=", "subType": "00"}}}}]""").head
+    assert(added.getAs[String]("o") == oid)
+    assert(added.getAs[Array[Byte]]("bin").toSeq == Seq[Byte](1, 2))
+  }
+
   test("$merge upserts into a docstore collection") {
     val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
     // seed the target with ids 1-3

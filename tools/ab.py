@@ -33,6 +33,9 @@ from `SPARK_GRAFT_SF_DIR`; Bench adds its canary key). Per key it prints
 both sides' medians of Bench's min-of-5 wall and CPU, the wall change,
 the pairs the change won and the median construct/exec job counts.
 
+Before any run it prints each side's count of non-blank, non-comment
+Scala lines under `src/main`, and the change's delta.
+
 If any run exits non-zero or reports a failed op, the tool stops and
 prints the side, workload, seed, exit code and the last 40 lines of that
 run's stderr, then exits 1. It reads `perfbench/` and `BENCHMARK.json`
@@ -55,6 +58,32 @@ def quartiles(xs):
         return s[0], s[0]
     q = statistics.quantiles(s, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def main_loc(root):
+    """Non-blank lines under src/main/**/*.scala outside // and /* */ comments."""
+    n = 0
+    for d, _, files in os.walk(os.path.join(root, "src", "main")):
+        for name in files:
+            if not name.endswith(".scala"):
+                continue
+            in_block = False
+            with open(os.path.join(d, name), encoding="utf-8") as f:
+                for line in f:
+                    s = line.strip()
+                    if in_block:
+                        if "*/" not in s:
+                            continue
+                        in_block = False
+                        s = s.split("*/", 1)[1].strip()
+                    if s.startswith("/*"):
+                        if "*/" not in s:
+                            in_block = True
+                            continue
+                        s = s.split("*/", 1)[1].strip()
+                    if s and not s.startswith("//"):
+                        n += 1
+    return n
 
 
 def side_env():
@@ -263,6 +292,10 @@ def main():
                                  capture_output=True, check=True).stdout
         subprocess.run(["tar", "-x", "-C", parent], input=archive, check=True)
         roots = {"parent": parent, "change": root}
+        loc = {side: main_loc(r) for side, r in roots.items()}
+        print(f"[ab] src/main Scala lines (non-blank, non-comment): parent "
+              f"{loc['parent']}, change {loc['change']}, delta "
+              f"{loc['change'] - loc['parent']:+d}", flush=True)
         seeds = list(range(1, a.pairs + 1))
         results, ok = {}, True
         if a.bench_keys:
@@ -290,7 +323,7 @@ def main():
         if a.json:
             with open(a.json, "w") as f:
                 json.dump({"parent_rev": a.parent_rev, "seeds": seeds,
-                           "results": results}, f, indent=1)
+                           "main_loc": loc, "results": results}, f, indent=1)
         return 0 if ok else 1
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
