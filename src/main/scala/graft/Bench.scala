@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.sources.ExtJson
+
 /** The timing harness: `runMain graft.Bench [out.json] [key1,key2,...]`.
   * Defaults: `BENCH_FULL.json` and every registry key. A subset run
   * times the named keys plus the canary key of `tools/bench_canary.json`,
@@ -25,13 +27,6 @@ object Bench {
     (named ++ canary).distinct.sorted
   }
 
-  private def jnum(src: String, field: String): Option[Double] =
-    ("\"" + field + "\"\\s*:\\s*([0-9.eE+-]+)").r
-      .findFirstMatchIn(src).map(_.group(1).toDouble)
-  private def jstr(src: String, field: String): Option[String] =
-    ("\"" + field + "\"\\s*:\\s*\"([^\"]*)\"").r
-      .findFirstMatchIn(src).map(_.group(1))
-
   /** One successful round of one key: wall split at the `t1` mark
     * between construction and the noop write, executor CPU, and the
     * jobs/stages each phase submitted. */
@@ -43,13 +38,17 @@ object Bench {
     val out = args.headOption.getOrElse("BENCH_FULL.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val canarySrc =
-      try Some(java.nio.file.Files.readString(
-        java.nio.file.Paths.get("tools/bench_canary.json")))
+      try Some(ExtJson.mapper.readTree(
+        new java.io.File("tools/bench_canary.json")))
       catch { case _: Throwable => None }
+    def jstr(field: String) = canarySrc.map(_.path(field))
+      .filter(_.isTextual).map(_.asText)
+    def jnum(field: String) = canarySrc.map(_.path(field))
+      .filter(_.isNumber).map(_.asDouble)
     // key selection first: an unknown key fails before any Spark work
     val registry = SparkEntry.queries
     val keys = selectKeys(registry.keys, args.lift(1),
-      canarySrc.flatMap(jstr(_, "key")))
+      jstr("key"))
     val spark = LocalSession()
     val sc = spark.sparkContext
     // ERROR: keep stdout clean for the driver's one-line JSON parse (the
@@ -186,13 +185,12 @@ object Bench {
     val gate: Option[CanaryGate] =
       if (sys.env.get("SPARK_GRAFT_BENCH_GATE").contains("off")) None
       else for {
-        src <- canarySrc
-        sfx <- jstr(src, "sf_suffix")
+        sfx <- jstr("sf_suffix")
         if sfDir.stripSuffix("/").endsWith(sfx)
-        key <- jstr(src, "key")
-        ref <- jnum(src, "ref_sec")
-        mr <- jnum(src, "max_ratio")
-        ml <- jnum(src, "max_load_before")
+        key <- jstr("key")
+        ref <- jnum("ref_sec")
+        mr <- jnum("max_ratio")
+        ml <- jnum("max_load_before")
       } yield CanaryGate(key, ref, mr, ml)
     def load1m(s: String): Double =
       s.split(" ").headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
@@ -249,9 +247,9 @@ object Bench {
     // ~2000 chars, so a 90+-query JSON line gets front-truncated and fails
     // its parse. The file holds everything; stdout gets a line that FITS.
     def qjson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      rs.map { case (k, v) => ExtJson.quote(k) + ":" + v }.mkString("{", ",", "}")
     def cjson(rs: Seq[(String, Double)]): String =
-      rs.map { case (k, v) => "\"" + k + "\":" + v.toLong }
+      rs.map { case (k, v) => ExtJson.quote(k) + ":" + v.toLong }
         .mkString("{", ",", "}")
     // Testdata fingerprint: ties this measurement to the exact bytes it
     // ran against. Cross-round per-query deltas are only meaningful when
@@ -287,7 +285,7 @@ object Bench {
       } else try {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(out), fullJson + "\n")
-        "\"" + out + "\""
+        ExtJson.quote(out)
       } catch { case _: Throwable => "null" }
     // stdout line: total + a headline subset (one per operator family),
     // 3-decimal rounding, well under the tail window even as queries grow
@@ -300,7 +298,7 @@ object Bench {
       "t07_tfidf", "m02_media_features", "p01_clean_pipeline",
       "st02_sessionize", "st06_asof_join")
     val hqs = results.filter(r => headline.contains(r._1))
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      .map { case (k, v) => ExtJson.quote(k) + ":" + r3(v) }
       .mkString("{", ",", "}")
     val dataFpShort = graft.Tables.shortFp(dataFp)
     val pubTotal = if (gateStatus == "FAILED") -1.0 else totalWall

@@ -123,10 +123,6 @@ object Tables {
   def testdataFingerprint(sfDir: String): String =
     all.map(n => s"$n=${tableFingerprint(sfDir, n)}").mkString(",")
 
-  /** Register all tables as temp views so `spark.sql` queries work too. */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => apply(spark, sfDir, n).createOrReplaceTempView(n))
-
   /** Rebalance a DataFrame that is about to feed a CPU-heavy map-side
     * kernel (minhash/simhash/shingling), but ONLY when the upstream scan
     * has fewer partitions than the cluster has slots. On a 1000-executor

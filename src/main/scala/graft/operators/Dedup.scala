@@ -40,7 +40,7 @@ object Dedup {
       .select(col("doc_id"), col("text"), col("source"))
     val planted = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + PlantOffset).as("doc_id"),
-        regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("text"),
+        TextAnalysis.dropLastWord(col("text")).as("text"),
         col("source"))
     docs.unionAll(planted)
   }
@@ -425,7 +425,7 @@ object Dedup {
       .select(col("doc_id"), col("text"), col("source"))
     // half-prefix plant, built with the kernel's own whitespace class so
     // the oracle's reconstruction is byte-identical
-    val ws = filter(split(col("text"), "[ \t\n\r]+"), t => t =!= "")
+    val ws = TextAnalysis.words(col("text"))
     val planted = docs.filter(col("doc_id") % 7 === 1)
       .select((col("doc_id") + PlantOffset).as("doc_id"),
         array_join(slice(ws, lit(1), greatest(lit(3),
@@ -558,11 +558,12 @@ object Dedup {
     clustered.unionByName(singletons).orderBy(col("doc_id"))
   }
 
-  /** Oracle: exact transitive closure via recursive CTE — min reachable
-    * id per node IS the component's min label.
-    */
-  val dd06Sql: String =
-    s"""WITH RECURSIVE $pairCtes,
+  /** dd06's oracle labels, shared with p08's and p16's: exact transitive
+    * closure via recursive CTE over the pair graph — min reachable id
+    * per node IS the component's min label. Ends in
+    * `labels(doc_id, cluster_id)`. */
+  private[operators] val clusterCtes: String =
+    s"""$pairCtes,
        |edges AS (
        |  SELECT id_a AS src, id_b AS dst FROM jp
        |  UNION ALL SELECT id_b, id_a FROM jp),
@@ -570,231 +571,14 @@ object Dedup {
        |  SELECT doc_id, doc_id FROM corpus
        |  UNION
        |  SELECT e.src, reach.r FROM edges e JOIN reach ON reach.id = e.dst),
-       |labels AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
+       |labels AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
+  val dd06Sql: String =
+    s"""WITH RECURSIVE $clusterCtes,
        |sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM labels GROUP BY 1)
        |SELECT doc_id, cluster_id, cluster_size
        |FROM labels JOIN sizes USING (cluster_id)
        |ORDER BY doc_id""".stripMargin
-
-  /** Oracle for p08 (graft.operators.Pipeline.p08LeakSafeSplit) — lives
-    * here because it shares the recursive-closure CTE chain with dd06:
-    * same cluster labels, then the split tag is a hash of the CLUSTER
-    * id, so the whole cluster lands on one side. */
-  val p08Sql: String =
-    s"""WITH RECURSIVE $pairCtes,
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM jp
-       |  UNION ALL SELECT id_b, id_a FROM jp),
-       |reach(id, r) AS (
-       |  SELECT doc_id, doc_id FROM corpus
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON reach.id = e.dst),
-       |labels AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-       |SELECT doc_id, cluster_id,
-       |  CASE WHEN substr(md5(CAST(cluster_id AS VARCHAR) || '#split'),
-       |            1, 2) <= '19'
-       |       THEN 'eval' ELSE 'train' END AS split
-       |FROM labels ORDER BY doc_id""".stripMargin
-
-  /** Oracle for p16 (graft.operators.Pipeline.p16CurationDag) — lives
-    * here like p08Sql because it embeds the same recursive-closure CTE
-    * chain (the fuzzy-dedup stage consumes the dd06 cluster artifact,
-    * whose derivation is pairCtes + transitive closure). Every stage
-    * formula is the shipped key's own oracle expression verbatim:
-    * t11's strip chain, t01's marker CASE, t16's blocklist, t18's gram
-    * gates, t20's structural battery, md5-token exact dedup, dd06
-    * clusters, t10's 8-gram decontamination, p08's cluster-hash split,
-    * p13's Hamilton apportionment, and t21's recursive-CTE BPE for the
-    * packing budget. */
-  def p16Sql: String = {
-    val strip =
-      """trim(regexp_replace(
-        |      replace(replace(replace(replace(replace(
-        |        regexp_replace(
-        |          regexp_replace(text,
-        |            '(?s)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'),
-        |          '<[^>]+>', ' ', 'g'),
-        |        '&amp;', '&'), '&lt;', '<'), '&gt;', '>'),
-        |        '&quot;', '"'), '&nbsp;', ' '),
-        |      '[ \t\n\r]+', ' ', 'g'))""".stripMargin
-    def hits(ws: Seq[String]): String = {
-      val inl = ws.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(ts, x -> x IN ($inl))) AS BIGINT)"
-    }
-    val langCols = TextAnalysis.langMarkers
-      .map { case (l, ws) => s"    ${hits(ws)} AS s_$l" }.mkString(",\n")
-    val stopSum = TextAnalysis.t20StopWords
-      .map(w => s"list_contains(ts, '$w')::INT").mkString(" + ")
-    s"""WITH RECURSIVE $pairCtes,
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM jp
-       |  UNION ALL SELECT id_b, id_a FROM jp),
-       |reach(id, r) AS (
-       |  SELECT doc_id, doc_id FROM corpus
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON reach.id = e.dst),
-       |labels AS (
-       |  SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id),
-       |c16 AS (
-       |  SELECT doc_id, text, source FROM corpus
-       |  UNION ALL
-       |  SELECT doc_id + 8000000, text, source FROM documents
-       |  WHERE doc_id % 20 = 7),
-       |f16 AS MATERIALIZED (
-       |  SELECT doc_id, source, text,
-       |    list_filter(string_split_regex(lower($strip), '[ \\t\\n\\r]+'),
-       |      x -> x <> '') AS ts,
-       |    string_split(text, chr(10)) AS ls
-       |  FROM c16),
-       |st16 AS (
-       |  SELECT doc_id, source, ts,
-       |    CAST(len(ts) AS BIGINT) AS n_words,
-       |    CAST(COALESCE(list_sum(list_transform(ts, x -> length(x))), 0)
-       |      AS BIGINT) AS sum_len,
-       |    CAST(len(ls) AS BIGINT) AS n_lines,
-       |    CAST(len(list_filter(ls, l -> starts_with(l, '- ')))
-       |      AS BIGINT) AS bullet_lines,
-       |    CAST(len(list_filter(ls, l -> ends_with(l, '...')))
-       |      AS BIGINT) AS ellipsis_lines,
-       |    CAST(len(list_filter(ts, x -> regexp_matches(x, '[a-z]')))
-       |      AS BIGINT) AS alpha_words,
-       |    CAST((length(text) - length(replace(text, '#', ''))) +
-       |      (length(text) - length(replace(text, '...', ''))) // 3
-       |      AS BIGINT) AS n_symbols,
-       |    CAST($stopSum AS BIGINT) AS stop_hits,
-       |$langCols,
-       |    CAST(len(list_filter(ts,
-       |      x -> x IN (${TextAnalysis.blocklistInSql}))) AS BIGINT) AS n_bad,
-       |    md5(array_to_string(ts, ' ')) AS key
-       |  FROM f16),
-       |g2 AS (
-       |  SELECT doc_id, ts[i] || ' ' || ts[i+1] AS g
-       |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-       |        FROM f16 WHERE len(ts) >= 2)),
-       |c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-       |t2 AS (SELECT doc_id, MAX(c) AS top2 FROM c2 GROUP BY 1),
-       |g5 AS (
-       |  SELECT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' ' ||
-       |    ts[i+3] || ' ' || ts[i+4] AS g
-       |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 3)) AS i
-       |        FROM f16 WHERE len(ts) >= 5)),
-       |c5 AS (SELECT doc_id, g, COUNT(*) AS c FROM g5 GROUP BY 1, 2),
-       |d5 AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup5
-       |       FROM c5 WHERE c >= 2 GROUP BY 1),
-       |cg16 AS MATERIALIZED (
-       |  SELECT doc_id, unnest(gs) AS gram
-       |  FROM (SELECT doc_id,
-       |      CASE WHEN len(ts) < 8 THEN [array_to_string(ts, ' ')]
-       |      ELSE list_distinct(list_transform(range(1, len(ts) - 6),
-       |        i -> array_to_string(ts[i:(i+7)], ' '))) END AS gs
-       |    FROM f16)),
-       |eg16 AS (
-       |  SELECT DISTINCT gram FROM cg16
-       |  WHERE doc_id % 97 = 0 AND doc_id < $PlantOffset),
-       |ov16 AS (
-       |  SELECT cg16.doc_id, COUNT(*) AS n_grams, COUNT(e.gram) AS n_overlap
-       |  FROM cg16 LEFT JOIN eg16 e ON cg16.gram = e.gram
-       |  GROUP BY 1),
-       |${graft.functions.KernelOracleSql.bpeDocLenCtes("f16", "x16", "ts")},
-       |fl16 AS MATERIALIZED (
-       |  SELECT s.doc_id, s.source, s.key,
-       |    COALESCE(l.cluster_id, s.doc_id) AS cluster,
-       |    COALESCE(b.b, 0) AS n_bpe,
-       |    COALESCE(o.n_grams, 0) AS n_grams,
-       |    COALESCE(o.n_overlap, 0) AS n_overlap,
-       |    s.n_words > 0 AS k1,
-       |    (CASE
-       |      WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
-       |        AND s_en >= s_zh THEN 'en'
-       |      WHEN s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-       |      WHEN s_de >= s_fr AND s_de >= s_zh THEN 'de'
-       |      WHEN s_fr >= s_zh THEN 'fr' ELSE 'zh' END) = 'en' AS k2x,
-       |    s.n_bad = 0 AS k3x,
-       |    (COALESCE(t2.top2, 0) * 10 <= s.n_words AND
-       |     COALESCE(d5.dup5, 0) * 100 <= GREATEST(s.n_words - 4, 0) * 15)
-       |      AS k4x,
-       |    (s.n_words >= 50 AND s.n_words <= 100000 AND
-       |     3 * s.n_words <= s.sum_len AND s.sum_len <= 10 * s.n_words AND
-       |     s.n_symbols * 10 <= s.n_words AND
-       |     s.bullet_lines * 10 <= s.n_lines * 9 AND
-       |     s.ellipsis_lines * 10 <= s.n_lines * 3 AND
-       |     s.alpha_words * 5 >= s.n_words * 4 AND
-       |     s.stop_hits >= 2) AS k5x
-       |  FROM st16 s
-       |  LEFT JOIN t2 USING (doc_id) LEFT JOIN d5 USING (doc_id)
-       |  LEFT JOIN ov16 o USING (doc_id) LEFT JOIN labels l USING (doc_id)
-       |  LEFT JOIN x16pw b USING (doc_id)),
-       |fk AS MATERIALIZED (
-       |  SELECT *, k1 AND k2x AS k2, k1 AND k2x AND k3x AS k3,
-       |    k1 AND k2x AND k3x AND k4x AS k4,
-       |    k1 AND k2x AND k3x AND k4x AND k5x AS k5
-       |  FROM fl16),
-       |mk16 AS (SELECT key, min(doc_id) AS mk FROM fk WHERE k5 GROUP BY key),
-       |f6 AS MATERIALIZED (SELECT fk.*, (k5 AND doc_id = mk) AS k6
-       |       FROM fk LEFT JOIN mk16 USING (key)),
-       |mc16 AS (SELECT cluster, min(doc_id) AS mc FROM f6 WHERE k6 GROUP BY 1),
-       |f7 AS MATERIALIZED (SELECT f6.*, (k6 AND doc_id = mc) AS k7
-       |       FROM f6 LEFT JOIN mc16 USING (cluster)),
-       |f9 AS MATERIALIZED (
-       |  SELECT *, (k7 AND n_overlap * 5 < n_grams) AS k8,
-       |    (k7 AND n_overlap * 5 < n_grams AND
-       |     substr(md5(CAST(cluster AS VARCHAR) || '#split'), 1, 2) > '19')
-       |      AS k9,
-       |    CASE WHEN CAST(substr(source, 4) AS BIGINT) < 10 THEN 'head'
-       |         WHEN CAST(substr(source, 4) AS BIGINT) < 16 THEN 'mid'
-       |         ELSE 'tail' || substr(source, 4) END AS grp
-       |  FROM f7),
-       |c016 AS (SELECT grp, COUNT(*) AS n_s FROM f9 WHERE k9 GROUP BY grp),
-       |cw16 AS (SELECT grp, n_s,
-       |    CAST(ROUND(SQRT(n_s) * 1000000) AS BIGINT) AS w FROM c016),
-       |tt16 AS (SELECT CAST(SUM(n_s) AS BIGINT) // 3 AS b,
-       |    CAST(SUM(w) AS BIGINT) AS wsum FROM cw16),
-       |a016 AS (SELECT grp, n_s, w, b, wsum,
-       |    (b * w) // wsum AS base, (b * w) % wsum AS rem FROM cw16, tt16),
-       |a116 AS (SELECT *, row_number() OVER (ORDER BY rem DESC, grp) AS rr,
-       |    SUM(base) OVER () AS base_sum FROM a016),
-       |alloc16 AS (SELECT grp, CAST(LEAST(base +
-       |      CASE WHEN rr <= b - base_sum THEN 1 ELSE 0 END, n_s) AS BIGINT)
-       |    AS alloc FROM a116),
-       |sel16 AS (SELECT doc_id, grp, n_bpe, row_number() OVER (
-       |    PARTITION BY grp
-       |    ORDER BY md5(CAST(doc_id AS VARCHAR) || '#temp'), doc_id) AS rn
-       |  FROM f9 WHERE k9),
-       |pick16 AS MATERIALIZED (SELECT s.grp, s.n_bpe FROM sel16 s JOIN alloc16 a USING (grp)
-       |  WHERE s.rn <= a.alloc),
-       |n1016 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n10 FROM pick16),
-       |seq16 AS (SELECT CAST(COALESCE(SUM((s + 511) // 512), 0) AS BIGINT)
-       |    AS nseq
-       |  FROM (SELECT grp, SUM(n_bpe) AS s FROM pick16 GROUP BY grp)),
-       |cnt16 AS MATERIALIZED (
-       |  SELECT CAST(COUNT(*) AS BIGINT) AS n0,
-       |    CAST(SUM(k1::INT) AS BIGINT) AS n1,
-       |    CAST(SUM(k2::INT) AS BIGINT) AS n2,
-       |    CAST(SUM(k3::INT) AS BIGINT) AS n3,
-       |    CAST(SUM(k4::INT) AS BIGINT) AS n4,
-       |    CAST(SUM(k5::INT) AS BIGINT) AS n5,
-       |    CAST(SUM(k6::INT) AS BIGINT) AS n6,
-       |    CAST(SUM(k7::INT) AS BIGINT) AS n7,
-       |    CAST(SUM(k8::INT) AS BIGINT) AS n8,
-       |    CAST(SUM(k9::INT) AS BIGINT) AS n9
-       |  FROM f9)
-       |SELECT stage, rule, n_in, n_dropped, n_out FROM (
-       |  SELECT 1::BIGINT AS stage, 'markup_strip_nonempty' AS rule,
-       |    n0 AS n_in, n0 - n1 AS n_dropped, n1 AS n_out FROM cnt16
-       |  UNION ALL SELECT 2, 'lang_id_en', n1, n1 - n2, n2 FROM cnt16
-       |  UNION ALL SELECT 3, 'blocklist_c4', n2, n2 - n3, n3 FROM cnt16
-       |  UNION ALL SELECT 4, 'gopher_repetition', n3, n3 - n4, n4 FROM cnt16
-       |  UNION ALL SELECT 5, 'gopher_structural', n4, n4 - n5, n5 FROM cnt16
-       |  UNION ALL SELECT 6, 'exact_dedup', n5, n5 - n6, n6 FROM cnt16
-       |  UNION ALL SELECT 7, 'fuzzy_dedup_clusters', n6, n6 - n7, n7 FROM cnt16
-       |  UNION ALL SELECT 8, 'decontaminate_8gram', n7, n7 - n8, n8 FROM cnt16
-       |  UNION ALL SELECT 9, 'leak_safe_train_split', n8, n8 - n9, n9 FROM cnt16
-       |  UNION ALL SELECT 10, 'temperature_mix_a05', n9, n9 - n10, n10
-       |    FROM cnt16, n1016
-       |  UNION ALL SELECT 11, 'pack_512_bpe_seqs', n10, 0, nseq
-       |    FROM n1016, seq16)
-       |ORDER BY stage""".stripMargin
-  }
 
   // --------------------------------------------------------------- dd11
   /** Duplicated-text fraction per document — the exact-substring dedup
@@ -1008,7 +792,7 @@ object Dedup {
   private def chunked10(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.spread(plantedDocs(spark, dir))
     val toksDf = corpus.select(col("doc_id"),
-      filter(split(col("text"), "[ \\t\\n\\r]+"), t => t =!= "").as("ws"))
+      TextAnalysis.words(col("text")).as("ws"))
       .filter(size(col("ws")) > 0)
     toksDf.select(col("doc_id"), explode(expr(
       """transform(sequence(0, int(floor((size(ws)-1)/10))),
@@ -1249,7 +1033,7 @@ object Dedup {
   def dd14SubstringDedup(spark: SparkSession, dir: String): DataFrame = {
     val toksDf = Tables.spread(plantedDocs(spark, dir))
       .select(col("doc_id"),
-        filter(split(lower(col("text")), "[ \\t\\n\\r]+"), x => x =!= "")
+        TextAnalysis.toks(col("text"))
           .as("ts"))
       .filter(size(col("ts")) > 0)
       .localCheckpoint(false) // reused: grams + final reassembly
@@ -1498,10 +1282,10 @@ object Dedup {
     // repartition barrier after the kernel only spreads its output
     val base = Tables.spread(Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text")))
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = TextAnalysis.words(col("text"))
     val batch = base.filter(col("doc_id") % 7 === 3)
         .select((col("doc_id") + 5000000L).as("doc_id"),
-          regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("text"))
+          TextAnalysis.dropLastWord(col("text")).as("text"))
       .unionAll(base.filter(col("doc_id") % 7 === 5)
         .select((col("doc_id") + 6000000L).as("doc_id"),
           array_join(transform(ws, w => concat(w, lit("~new"))), " ")
@@ -1590,10 +1374,10 @@ object Dedup {
   private[graft] def dd17Corpus(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = TextAnalysis.words(col("text"))
     val trims = base.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 29000000L).as("doc_id"),
-        regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("text"))
+        TextAnalysis.dropLastWord(col("text")).as("text"))
     dd17Levels.foldLeft(base.unionAll(trims)) { case (acc, (m, r)) =>
       acc.unionAll(base.filter(col("doc_id") % 31 === r)
         .select((col("doc_id") + (20L + r) * 1000000L).as("doc_id"),
@@ -1691,7 +1475,7 @@ object Dedup {
       driverBitmapMaxBits: Long = 1L << 20): DataFrame = {
     val base = Tables.spread(Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text")))
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = TextAnalysis.words(col("text"))
     // the wave's three mutation branches ride ONE text scan (round 15,
     // VERDICT r14 #4 — the old 3-way filtered union re-read text per
     // branch): %7 is single-valued so the CASE branches are exactly
@@ -1703,8 +1487,7 @@ object Dedup {
         (col("doc_id") + when(sel === 2, 4000000L)
           .when(sel === 3, 5000000L).otherwise(6000000L)).as("doc_id"),
         when(sel === 2, col("text"))
-          .when(sel === 3, regexp_replace(col("text"),
-            "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", ""))
+          .when(sel === 3, TextAnalysis.dropLastWord(col("text")))
           .otherwise(array_join(
             transform(ws, w => concat(w, lit("~new"))), " ")).as("text"))
     // n is a scalar model parameter (the s04 precedent): ONE count()

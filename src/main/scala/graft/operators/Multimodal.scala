@@ -282,7 +282,7 @@ object Multimodal {
     val corpus = docs.unionAll(
       docs.filter(col("doc_id") % 9 === 0)
         .select((col("doc_id") + 999999L).as("doc_id"),
-          regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("text")))
+          TextAnalysis.dropLastWord(col("text")).as("text")))
     corpus.select(col("doc_id"),
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (col("doc_id") % 3 + 1).cast("int")).as("media_type"),
@@ -751,13 +751,13 @@ object Multimodal {
   def m09(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = TextAnalysis.words(col("text"))
     val cap12 = array_join(slice(ws, 1, 12), " ")
     val base = docs.select(col("doc_id"), col("text").as("img_txt"),
       cap12.as("caption"))
     val reenc = docs.filter(col("doc_id") % 11 === 1)
       .select((col("doc_id") + 7000000L).as("doc_id"),
-        regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("img_txt"),
+        TextAnalysis.dropLastWord(col("text")).as("img_txt"),
         array_join(transform(slice(ws, 1, 12), w => concat(w, lit("~re"))),
           " ").as("caption"))
     val rehost = docs.filter(col("doc_id") % 11 === 2)

@@ -107,7 +107,7 @@ object Pipeline {
       .filter(substring(md5(col("doc_id").cast(StringType)), 1, 2)
         <= threshold)
       .withColumn("tokens",
-        size(filter(split(lower(col("text")), "[ \\t\\n\\r]+"), x => x =!= ""))
+        size(TextAnalysis.toks(col("text")))
           .cast(LongType))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("docs_kept"), sum(col("tokens")).as("token_budget"))
@@ -190,12 +190,30 @@ object Pipeline {
   def p08LeakSafeSplit(spark: SparkSession, dir: String): DataFrame =
     Dedup.ensureClusterArtifact(spark, dir)
       .withColumn("split",
-        when(substring(md5(concat(col("cluster_id").cast(StringType),
-          lit("#split"))), 1, 2) <= "19", "eval").otherwise("train"))
+        when(evalSplit(col("cluster_id")), "eval").otherwise("train"))
       .select(col("doc_id"), col("cluster_id"), col("split"))
       .orderBy(col("doc_id"))
 
-  val p08Sql: String = Dedup.p08Sql
+  /** p08's rule: a cluster goes to eval when the first md5 byte of its
+    * salted id is at most 0x19 (about 10 % of clusters). */
+  private def evalSplit(cluster: Column): Column =
+    substring(md5(concat(cluster.cast(StringType), lit("#split"))), 1, 2) <=
+      "19"
+
+  /** The oracle side of [[evalSplit]]. */
+  private[operators] def evalSplitSql(cluster: String): String =
+    s"""substr(md5(CAST($cluster AS VARCHAR) || '#split'),
+       |            1, 2) <= '19'""".stripMargin
+
+  /** Oracle: dd06's cluster labels ([[Dedup.clusterCtes]]), then the
+    * split tag is a hash of the CLUSTER id, so the whole cluster lands
+    * on one side. */
+  val p08Sql: String =
+    s"""WITH RECURSIVE ${Dedup.clusterCtes}
+       |SELECT doc_id, cluster_id,
+       |  CASE WHEN ${evalSplitSql("cluster_id")}
+       |       THEN 'eval' ELSE 'train' END AS split
+       |FROM labels ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- p13
   /** Temperature-scaled source rebalancing (the XLM-R / mT5 α-sampling
@@ -229,11 +247,24 @@ object Pipeline {
     * (N^1.5·1e6 < 2^63); past that drop the weight scaling to 1e3
     * (bound ~9e10 docs) — documented, not coded.
     */
-  def p13TemperatureMix(spark: SparkSession, dir: String): DataFrame = {
-    val srcNum = substring(col("source"), 4, 10).cast(LongType)
-    val grpCol = when(srcNum < 10, "head").when(srcNum < 16, "mid")
-      .otherwise(concat(lit("tail"), substring(col("source"), 4, 10)))
-    val docs = Tables(spark, dir, "documents").withColumn("grp", grpCol)
+  def p13TemperatureMix(spark: SparkSession, dir: String): DataFrame =
+    temperatureMix(Tables(spark, dir, "documents")
+        .withColumn("grp", mixGroup(col("source"))))
+      .select(col("doc_id"), col("grp"), col("rn"), col("alloc"))
+      .orderBy(col("doc_id"))
+
+  /** p13's fold of the sources into head (0-9), mid (10-15) and one tail
+    * group per remaining source. */
+  private def mixGroup(source: Column): Column = {
+    val srcNum = substring(source, 4, 10).cast(LongType)
+    when(srcNum < 10, "head").when(srcNum < 16, "mid")
+      .otherwise(concat(lit("tail"), substring(source, 4, 10)))
+  }
+
+  /** p13's mix over `docs(doc_id, grp, …)`: the capped Hamilton
+    * allocation of ⌊N/3⌋ by √n_s, each group's quota filled in md5-rank
+    * order. Returns the picked rows of `docs` with `rn` and `alloc`. */
+  private def temperatureMix(docs: DataFrame): DataFrame = {
     val counts = docs.groupBy(col("grp")).agg(count(lit(1)).as("n_s"))
       .withColumn("w", round(sqrt(col("n_s")) * 1e6).cast(LongType))
     val tot = counts.agg(sum(col("n_s")).as("__N"), sum(col("w")).as("__W"))
@@ -251,43 +282,49 @@ object Pipeline {
         col("base") + when(col("rr") <= col("b") - col("base_sum"), 1L)
           .otherwise(0L), col("n_s")))
       .select(col("grp"), col("alloc"))
-    val sel = Ladders.globalRank(
-      docs.withColumn("__h",
-          md5(concat(col("doc_id").cast(StringType), lit("#temp"))))
-        .withColumn("__b", substring(col("__h"), 1, 2)),
-      Seq("grp"), "__b", Seq(col("__h"), col("doc_id")), "rn", None)
-    sel.join(broadcast(alloc), "grp")
+    Ladders.globalRank(
+        docs.withColumn("__h",
+            md5(concat(col("doc_id").cast(StringType), lit("#temp"))))
+          .withColumn("__b", substring(col("__h"), 1, 2)),
+        Seq("grp"), "__b", Seq(col("__h"), col("doc_id")), "rn", None)
+      .join(broadcast(alloc), "grp")
       .filter(col("rn") <= col("alloc"))
-      .select(col("doc_id"), col("grp"), col("rn"), col("alloc"))
-      .orderBy(col("doc_id"))
   }
 
+  /** The oracle side of [[mixGroup]]. */
+  private[operators] def mixGroupSql(source: String): String =
+    s"""CASE WHEN CAST(substr($source, 4) AS BIGINT) < 10 THEN 'head'
+       |         WHEN CAST(substr($source, 4) AS BIGINT) < 16 THEN 'mid'
+       |         ELSE 'tail' || substr($source, 4) END""".stripMargin
+
+  /** The oracle side of [[temperatureMix]]: CTEs ending in
+    * `tm_pick(<src's columns>, rn, alloc)` over `src(doc_id, grp, …)`. */
+  private[operators] def temperatureMixCtesSql(src: String): String =
+    s"""tm_n AS (SELECT grp, COUNT(*) AS n_s FROM $src GROUP BY grp),
+       |tm_w AS (SELECT grp, n_s,
+       |    CAST(ROUND(SQRT(n_s) * 1000000) AS BIGINT) AS w FROM tm_n),
+       |tm_tot AS (SELECT CAST(SUM(n_s) AS BIGINT) // 3 AS b,
+       |    CAST(SUM(w) AS BIGINT) AS wsum FROM tm_w),
+       |tm_a0 AS (SELECT grp, n_s, w, b, wsum,
+       |    (b * w) // wsum AS base, (b * w) % wsum AS rem FROM tm_w, tm_tot),
+       |tm_a1 AS (SELECT *, row_number() OVER (ORDER BY rem DESC, grp) AS rr,
+       |    SUM(base) OVER () AS base_sum FROM tm_a0),
+       |tm_alloc AS (SELECT grp, CAST(LEAST(base +
+       |      CASE WHEN rr <= b - base_sum THEN 1 ELSE 0 END, n_s) AS BIGINT)
+       |    AS alloc FROM tm_a1),
+       |tm_sel AS (SELECT *, row_number() OVER (PARTITION BY grp
+       |    ORDER BY md5(CAST(doc_id AS VARCHAR) || '#temp'), doc_id) AS rn
+       |  FROM $src),
+       |tm_pick AS MATERIALIZED (SELECT s.*, a.alloc
+       |  FROM tm_sel s JOIN tm_alloc a USING (grp) WHERE s.rn <= a.alloc)""".stripMargin
+
   val p13Sql: String =
-    """WITH d AS (
-      |  SELECT doc_id,
-      |    CASE WHEN CAST(substr(source, 4) AS BIGINT) < 10 THEN 'head'
-      |         WHEN CAST(substr(source, 4) AS BIGINT) < 16 THEN 'mid'
-      |         ELSE 'tail' || substr(source, 4) END AS grp
-      |  FROM documents),
-      |c0 AS (SELECT grp, COUNT(*) AS n_s FROM d GROUP BY grp),
-      |c AS (SELECT grp, n_s,
-      |    CAST(ROUND(SQRT(n_s) * 1000000) AS BIGINT) AS w FROM c0),
-      |t AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n,
-      |    CAST(SUM(w) AS BIGINT) AS wsum,
-      |    CAST(SUM(n_s) AS BIGINT) // 3 AS b FROM c),
-      |a0 AS (SELECT grp, n_s, w, b, wsum,
-      |    (b * w) // wsum AS base, (b * w) % wsum AS rem FROM c, t),
-      |a1 AS (SELECT *, row_number() OVER (ORDER BY rem DESC, grp) AS rr,
-      |    SUM(base) OVER () AS base_sum FROM a0),
-      |alloc AS (SELECT grp, CAST(LEAST(base +
-      |      CASE WHEN rr <= b - base_sum THEN 1 ELSE 0 END, n_s)
-      |    AS BIGINT) AS alloc FROM a1),
-      |sel AS (SELECT doc_id, grp, row_number() OVER (PARTITION BY grp
-      |    ORDER BY md5(CAST(doc_id AS VARCHAR) || '#temp'), doc_id) AS rn
-      |  FROM d)
-      |SELECT s.doc_id, s.grp, s.rn, a.alloc
-      |FROM sel s JOIN alloc a USING (grp)
-      |WHERE s.rn <= a.alloc ORDER BY s.doc_id""".stripMargin
+    s"""WITH d AS (
+       |  SELECT doc_id,
+       |    ${mixGroupSql("source")} AS grp
+       |  FROM documents),
+       |${temperatureMixCtesSql("d")}
+       |SELECT doc_id, grp, rn, alloc FROM tm_pick ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- p04
   /** Stratified sampling: a fixed FRACTION of every (source) stratum,
@@ -373,7 +410,7 @@ object Pipeline {
   def p05TokenShards(spark: SparkSession, dir: String): DataFrame =
     tokenShards(Tables(spark, dir, "documents")
       .withColumn("tokens",
-        size(filter(split(lower(col("text")), "[ \\t\\n\\r]+"), x => x =!= ""))
+        size(TextAnalysis.toks(col("text")))
           .cast(LongType))
       .select(col("doc_id"), col("source"), col("tokens")), 20000L)
 
@@ -457,9 +494,12 @@ object Pipeline {
     * fused into one WHERE. Rules are Gopher-adjacent, thresholds sized
     * to the corpus distributions (documented in each rule name):
     * minimum length → stopword presence → mean-word-length band →
-    * lexical diversity. Feature definitions are t02's exactly, so both
-    * engines compute identical IEEE ratios and the comparisons agree
-    * bitwise.
+    * lexical diversity → t16's blocklist. Features are t02's, over
+    * [[TextAnalysis.toks]] with t02's stopword list, so both engines
+    * compute identical IEEE ratios and the comparisons agree bitwise;
+    * the last stage is t16's [[TextAnalysis.blockHits]]. The count row
+    * ([[cnt]]) and its unpivot ([[funnelReport]]) are the funnel p16
+    * reports through.
     *
     * Scale: ONE scan — every per-doc feature is a map-side expression,
     * the funnel collapses to a single partially-aggregated count row,
@@ -467,10 +507,9 @@ object Pipeline {
     * shuffle of document data at all; cost = scan bandwidth.
     */
   def p09QualityFunnel(spark: SparkSession, dir: String): DataFrame = {
-    val t = filter(split(lower(col("text")), "[ \\t\\n\\r]+"), x => x =!= "")
+    val t = TextAnalysis.toks(col("text"))
     val nTok = size(t).cast(LongType)
-    val nStop = size(filter(t, x => x.isin(Seq("the", "a", "of", "to",
-      "and", "is", "in", "that", "it").map(lit): _*))).cast(LongType)
+    val nStop = TextAnalysis.markerHits(t, TextAnalysis.t02StopWords)
     val wordChars = aggregate(t, lit(0L), (acc, x) => acc + length(x))
     val nUniq = size(array_distinct(t)).cast(LongType)
     val stopR = nStop.cast(DoubleType) / nTok
@@ -482,42 +521,67 @@ object Pipeline {
     val b4 = uniqR >= 0.35
     // stage 5 = t16's C4 blocklist gate (the same literal list), so
     // the funnel reports the attrition of EVERY shipping filter
-    val b5 = size(filter(t,
-      x => x.isin(TextAnalysis.blocklist.map(lit): _*))) === 0
-    def cnt(c: org.apache.spark.sql.Column) =
-      sum(when(c, 1L).otherwise(0L))
+    val b5 = TextAnalysis.blockHits(t) === 0
     val one = Tables(spark, dir, "documents").agg(
       count(lit(1)).as("n0"), cnt(b1).as("s1"), cnt(b1 && b2).as("s2"),
       cnt(b1 && b2 && b3).as("s3"), cnt(b1 && b2 && b3 && b4).as("s4"),
       cnt(b1 && b2 && b3 && b4 && b5).as("s5"))
-    def stage(i: Int, rule: String, in: String, out: String) =
-      struct(lit(i.toLong).as("stage"), lit(rule).as("rule"),
+    funnelReport(one, p09Rules)
+  }
+
+  private val p09Rules = Seq(
+    ("min_tokens_25", "n0", "s1"),
+    ("stopword_ratio_ge_0.02", "s1", "s2"),
+    ("avg_word_len_3.0_4.7", "s2", "s3"),
+    ("uniq_token_ratio_ge_0.35", "s3", "s4"),
+    ("blocklist_c4", "s4", "s5"))
+
+  /** A funnel's count of the rows where `c` holds. */
+  private def cnt(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+
+  /** A funnel's report, unpivoted from its one count row `one`: stage i
+    * (from 1) applies `rules(i - 1) = (rule, n_in, n_out)`, which name
+    * the columns of `one` holding the stage's input and output counts.
+    * `tail` appends stages built by hand, whose n_dropped is not
+    * n_in - n_out. */
+  private def funnelReport(one: DataFrame, rules: Seq[(String, String, String)],
+      tail: Column*): DataFrame = {
+    val stages = rules.zipWithIndex.map { case ((rule, in, out), i) =>
+      struct(lit(i + 1L).as("stage"), lit(rule).as("rule"),
         col(in).as("n_in"), (col(in) - col(out)).as("n_dropped"),
-        col(out).as("n_out"))
-    one.select(explode(array(
-        stage(1, "min_tokens_25", "n0", "s1"),
-        stage(2, "stopword_ratio_ge_0.02", "s1", "s2"),
-        stage(3, "avg_word_len_3.0_4.7", "s2", "s3"),
-        stage(4, "uniq_token_ratio_ge_0.35", "s3", "s4"),
-        stage(5, "blocklist_c4", "s4", "s5"))).as("r"))
-      .select(col("r.stage").as("stage"), col("r.rule").as("rule"),
-        col("r.n_in").as("n_in"), col("r.n_dropped").as("n_dropped"),
-        col("r.n_out").as("n_out"))
+        col(out).as("n_out")) }
+    one.select(explode(array(stages ++ tail: _*)).as("r"))
+      .select(Seq("stage", "rule", "n_in", "n_dropped", "n_out")
+        .map(c => col(s"r.$c").as(c)): _*)
       .orderBy(col("stage"))
+  }
+
+  /** The oracle side of [[cnt]]. */
+  private[operators] def cntSql(c: String): String =
+    s"CAST(SUM(CASE WHEN $c THEN 1 ELSE 0 END) AS BIGINT)"
+
+  /** The oracle side of [[funnelReport]], reading every count from the
+    * one-row relation `from`; each of `tail` is a hand-built stage row. */
+  private[operators] def funnelReportSql(rules: Seq[(String, String, String)],
+      from: String, tail: String*): String = {
+    val rows = rules.zipWithIndex.map { case ((rule, in, out), i) =>
+      if (i == 0) s"SELECT 1::BIGINT AS stage, '$rule' AS rule, $in AS n_in, " +
+        s"$in - $out AS n_dropped, $out AS n_out FROM $from"
+      else s"UNION ALL SELECT ${i + 1}, '$rule', $in, $in - $out, $out FROM $from"
+    } ++ tail.map(r => s"UNION ALL $r FROM $from")
+    s"""SELECT stage, rule, n_in, n_dropped, n_out FROM (
+       |  ${rows.mkString("\n  ")})
+       |ORDER BY stage""".stripMargin
   }
 
   val p09Sql: String =
     s"""WITH base AS (
-      |  SELECT doc_id,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> '')) AS BIGINT) AS n_tokens,
-      |    CAST(len(list_filter(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> ''),
-      |      x -> x IN ('the','a','of','to','and','is','in','that','it'))) AS BIGINT) AS n_stop,
-      |    CAST(list_sum(list_transform(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> ''),
-      |      x -> length(x))) AS BIGINT) AS word_chars,
-      |    CAST(len(list_distinct(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> ''))) AS BIGINT) AS n_uniq,
-      |    CAST(len(list_filter(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> ''),
-      |      x -> x IN (${TextAnalysis.blocklistInSql}))) AS BIGINT) AS n_bad
-      |  FROM documents),
+      |  SELECT doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
+      |    ${TextAnalysis.markerHitsSql("ts", TextAnalysis.t02StopWords)} AS n_stop,
+      |    CAST(list_sum(list_transform(ts, x -> length(x))) AS BIGINT) AS word_chars,
+      |    CAST(len(list_distinct(ts)) AS BIGINT) AS n_uniq,
+      |    ${TextAnalysis.markerHitsSql("ts", TextAnalysis.blocklist)} AS n_bad
+      |  FROM (SELECT doc_id, ${TextAnalysis.toksSql("text")} AS ts FROM documents)),
       |flags AS (
       |  SELECT
       |    n_tokens >= 25 AS b1,
@@ -529,19 +593,13 @@ object Pipeline {
       |  FROM base),
       |c AS (
       |  SELECT COUNT(*) AS n0,
-      |    CAST(SUM(CASE WHEN b1 THEN 1 ELSE 0 END) AS BIGINT) AS s1,
-      |    CAST(SUM(CASE WHEN b1 AND b2 THEN 1 ELSE 0 END) AS BIGINT) AS s2,
-      |    CAST(SUM(CASE WHEN b1 AND b2 AND b3 THEN 1 ELSE 0 END) AS BIGINT) AS s3,
-      |    CAST(SUM(CASE WHEN b1 AND b2 AND b3 AND b4 THEN 1 ELSE 0 END) AS BIGINT) AS s4,
-      |    CAST(SUM(CASE WHEN b1 AND b2 AND b3 AND b4 AND b5 THEN 1 ELSE 0 END) AS BIGINT) AS s5
+      |    ${cntSql("b1")} AS s1,
+      |    ${cntSql("b1 AND b2")} AS s2,
+      |    ${cntSql("b1 AND b2 AND b3")} AS s3,
+      |    ${cntSql("b1 AND b2 AND b3 AND b4")} AS s4,
+      |    ${cntSql("b1 AND b2 AND b3 AND b4 AND b5")} AS s5
       |  FROM flags)
-      |SELECT stage, rule, n_in, n_in - n_out AS n_dropped, n_out FROM (
-      |  SELECT 1::BIGINT AS stage, 'min_tokens_25' AS rule, n0 AS n_in, s1 AS n_out FROM c
-      |  UNION ALL SELECT 2, 'stopword_ratio_ge_0.02', s1, s2 FROM c
-      |  UNION ALL SELECT 3, 'avg_word_len_3.0_4.7', s2, s3 FROM c
-      |  UNION ALL SELECT 4, 'uniq_token_ratio_ge_0.35', s3, s4 FROM c
-      |  UNION ALL SELECT 5, 'blocklist_c4', s4, s5 FROM c)
-      |ORDER BY stage""".stripMargin
+      |${funnelReportSql(p09Rules, "c")}""".stripMargin
 
   // ---------------------------------------------------------------- p10
   /** Concat-and-chunk sequence packing — the step that turns a curated
@@ -575,7 +633,7 @@ object Pipeline {
   def p10PackSequences(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables(spark, dir, "documents")
       .withColumn("tokens",
-        size(filter(split(lower(col("text")), "[ \\t\\n\\r]+"), x => x =!= ""))
+        size(TextAnalysis.toks(col("text")))
           .cast(LongType))
       .select(col("doc_id"), col("source"), col("tokens"))
     packSpans(toks, 512L)
@@ -764,14 +822,10 @@ object Pipeline {
     // whitespace (review r10c) — n_bad and n_tokens must count over ONE
     // token stream. t16 keeps Java \s+; the spec's doc-for-doc equality
     // with t16 holds on this corpus (space/\t/\n only), not on \f.
-    val ts = filter(split(lower(col("text")), "[ \\t\\n\\r]+"),
-      x => x =!= "")
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
         graft.functions.text.shingle_hashes(col("text"), 1).as("hs"),
-        size(filter(ts, x =>
-            x.isin(TextAnalysis.blocklist.map(lit): _*)))
-          .cast(LongType).as("n_bad"))
+        TextAnalysis.blockHits(TextAnalysis.toks(col("text"))).as("n_bad"))
       .select(col("doc_id"), col("source"),
         size(col("hs")).cast(LongType).as("n_tokens"), col("n_bad"),
         p11Score(col("hs")).as("score_milli"))
@@ -851,18 +905,29 @@ object Pipeline {
   /** The END-TO-END composed corpus build (VERDICT r10 #4) — every
     * shipped curation stage chained the way a production pretraining
     * pipeline runs them, with p09's per-stage attrition funnel as the
-    * output and stage counts reconciling EXACTLY to the input:
+    * output and stage counts reconciling EXACTLY to the input. Each
+    * stage calls the rule its stage key owns, applied to the cleaned
+    * token frame `ts`:
     *
-    *   1 markup strip (t11's chain)   2 lang-id (t01's CASE)
-    *   3 C4 blocklist (t16)           4 Gopher repetition (t18)
-    *   5 Gopher structural (t20)      6 exact dedup (md5 token key)
+    *   1 markup strip, nonempty: t11's [[TextAnalysis.stripMarkup]]
+    *   2 lang-id = en: t01's [[TextAnalysis.langArgmax]]
+    *   3 C4 blocklist: t16's [[TextAnalysis.blockHits]]
+    *   4 Gopher repetition: t18's [[TextAnalysis.repetitionStats]] and
+    *     [[TextAnalysis.repetitionKeep]]
+    *   5 Gopher structural: t20's [[TextAnalysis.gopherWordStats]],
+    *     [[TextAnalysis.gopherLineStats]] and [[TextAnalysis.gopherRules]]
+    *   6 exact dedup (md5 token key)
     *   7 fuzzy dedup (dd06 cluster ARTIFACT — min surviving doc per
-    *     cluster)                     8 8-gram decontamination (t10)
-    *   9 leak-safe split (p08's cluster-hash rule, same artifact)
-    *  10 temperature mix (p13's α=0.5 Hamilton apportionment)
+    *     cluster)
+    *   8 8-gram decontamination: t10's [[TextAnalysis.gramSet8]]
+    *   9 leak-safe split: p08's [[evalSplit]], same artifact
+    *  10 temperature mix: p13's [[mixGroup]] and [[temperatureMix]]
     *  11 pack to 512-BPE-token sequences (p10's budget on t21's REAL
     *     tokenizer — n_out is SEQUENCES, the one unit change, with
     *     n_dropped pinned 0)
+    *
+    * The report is p09's [[funnelReport]]; [[p16Sql]] calls the oracle
+    * side of each of these definitions.
     *
     * Input = the dedup family's canonical crawl (base + recrawled
     * trims) plus verbatim re-fetches (doc_id%20==7 at +8M) so the
@@ -895,8 +960,7 @@ object Pipeline {
     // rule, ids +1M, already in the cluster artifact; a verbatim
     // re-fetch for doc_id%20==7 at +8M, NOT in the artifact — it can
     // never reach stage 7 because stage 6 drops it by construction)
-    val trimmed = regexp_replace(col("text"),
-      "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "")
+    val trimmed = TextAnalysis.dropLastWord(col("text"))
     val input = Tables(spark, dir, "documents")
       .select(explode(array(
         struct(col("doc_id"), col("text"), col("source")),
@@ -910,34 +974,19 @@ object Pipeline {
       .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"),
         col("r.source").as("source"))
 
-    // THE text-bearing scan: strip chain (t11's, verbatim), the ONE
-    // tokenization, the BPE count, and the raw-text line stats
-    val noBlocks = regexp_replace(col("text"),
-      "(?s)<(script|style)[^>]*>.*?</(script|style)>", " ")
-    val noTags = regexp_replace(noBlocks, "<[^>]+>", " ")
-    val decoded = Seq("&amp;" -> "&", "&lt;" -> "<", "&gt;" -> ">",
-      "&quot;" -> "\"", "&nbsp;" -> " ").foldLeft(noTags) {
-      case (c, (e, r)) => replace(c, lit(e), lit(r)) }
-    val clean = trim(regexp_replace(decoded, "[ \\t\\n\\r]+", " "))
+    // THE text-bearing scan: t11's strip chain, the ONE tokenization,
+    // the BPE count, and t20's line statistics of the raw text
     Tables.spread(input)
-      .withColumn("__clean", clean)
-      .select(col("doc_id"), col("source"),
-        filter(split(lower(col("__clean")), "[ \\t\\n\\r]+"),
-          x => x =!= "").as("ts"),
+      .withColumn("__clean", TextAnalysis.stripMarkup(col("text")))
+      .select(Seq(col("doc_id"), col("source"),
+        TextAnalysis.toks(col("__clean")).as("ts"),
         // lower() BEFORE the kernel: the oracle's BPE word frame
         // derives from the lowered token stream, and the merge table
         // has no uppercase pairs — raw-case input would diverge on
         // the first corpus with an A-Z byte (review r11)
         size(T.bpe_token_ids(lower(col("__clean"))))
-          .cast(LongType).as("n_bpe"),
-        size(split(col("text"), "\n")).cast(LongType).as("n_lines"),
-        size(filter(split(col("text"), "\n"), l => l.startsWith("- ")))
-          .cast(LongType).as("bullet_lines"),
-        size(filter(split(col("text"), "\n"), l => l.endsWith("...")))
-          .cast(LongType).as("ellipsis_lines"),
-        expr("CAST((length(text) - length(replace(text, '#', ''))) + " +
-          "(length(text) - length(replace(text, '...', ''))) div 3 " +
-          "AS BIGINT)").as("n_symbols"))
+          .cast(LongType).as("n_bpe")) ++
+        TextAnalysis.gopherLineStats(col("text"), split(col("text"), "\n")): _*)
   }
 
   def p16CurationDag(spark: SparkSession, dir: String): DataFrame = {
@@ -945,50 +994,20 @@ object Pipeline {
       .select(col("doc_id"), col("cluster_id"))
     val pd = Tables.ckptNarrow(p16TokenFrame(spark, dir), 4)
 
-    // per-doc map-side stats off the token frame (no text anywhere)
-    val langPred = {
-      val s = TextAnalysis.langMarkers.map { case (l, ws) =>
-        l -> size(filter(col("ts"), x => x.isin(ws.map(lit): _*)))
-          .cast(LongType) }.toMap
-      when(s("en") >= s("es") && s("en") >= s("de") && s("en") >= s("fr") &&
-        s("en") >= s("zh"), "en")
-        .when(s("es") >= s("de") && s("es") >= s("fr") &&
-          s("es") >= s("zh"), "es")
-        .when(s("de") >= s("fr") && s("de") >= s("zh"), "de")
-        .when(s("fr") >= s("zh"), "fr")
-        .otherwise("zh")
-    }
-    val stats = pd.select(col("doc_id"), col("source"), col("ts"),
-      col("n_bpe"), col("n_lines"), col("bullet_lines"),
-      col("ellipsis_lines"), col("n_symbols"),
-      size(col("ts")).cast(LongType).as("n_words"),
-      aggregate(transform(col("ts"), x => length(x).cast(LongType)),
-        lit(0L), (a, x) => a + x).as("sum_len"),
-      size(filter(col("ts"), x => x.rlike("[a-z]")))
-        .cast(LongType).as("alpha_words"),
-      TextAnalysis.t20StopWords
-        .map(w => array_contains(col("ts"), w).cast("int"))
-        .reduce(_ + _).cast(LongType).as("stop_hits"),
-      (langPred === "en").as("k2x"),
-      (size(filter(col("ts"),
-        x => x.isin(TextAnalysis.blocklist.map(lit): _*))) === 0).as("k3x"),
-      md5(concat_ws(" ", col("ts"))).as("key"),
-      // t18's gram gates as ONE kernel pass each (round 16 — the
-      // gram_stats rewrite t18 itself got): the old explode +
-      // (doc_id, gram) exchanges existed only to take this per-doc
-      // max/sum; a doc shorter than n tokens yields the same zeros the
-      // old left_outer + coalesce produced
-      graft.functions.text.gram_stats(col("ts"), 2)
-        .getField("maxc").as("top2"),
-      graft.functions.text.gram_stats(col("ts"), 5)
-        .getField("dupsum").as("dup5"))
+    // per-doc map-side stats off the token frame (no text anywhere):
+    // t20's word statistics, t01's language, t16's blocklist, the
+    // exact-dedup key and t18's gram gates (one kernel pass each)
+    val markers = TextAnalysis.langMarkers.toMap
+    val stats = pd.select(col("*") +:
+      TextAnalysis.gopherWordStats(col("ts")) ++: Seq(
+      (TextAnalysis.langArgmax(l => TextAnalysis.markerHits(col("ts"),
+        markers(l))) === "en").as("k2x"),
+      (TextAnalysis.blockHits(col("ts")) === 0).as("k3x"),
+      md5(concat_ws(" ", col("ts"))).as("key")) ++:
+      TextAnalysis.repetitionStats(col("ts")): _*)
 
     // t10's decontamination grams, both sides off the SAME token frame
-    val grams = pd.select(col("doc_id"), expr(
-        """CASE WHEN size(ts) < 8 THEN array(array_join(ts, ' '))
-          |ELSE array_distinct(transform(sequence(1, size(ts) - 7),
-          |  i -> array_join(slice(ts, i, 8), ' '))) END""".stripMargin)
-        .as("gs"))
+    val grams = pd.select(col("doc_id"), TextAnalysis.gramSet8("ts").as("gs"))
       .select(col("doc_id"), explode_outer(col("gs")).as("gram"))
     val evalG = grams
       .filter(col("doc_id") % 97 === 0 && col("doc_id") < Dedup.PlantOffset)
@@ -1009,17 +1028,8 @@ object Pipeline {
         coalesce(col("n_grams"), lit(0L)).as("n_grams"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
         (col("n_words") > 0).as("k1"), col("k2x"), col("k3x"),
-        (col("top2") * 10 <= col("n_words") &&
-          col("dup5") * 100 <=
-            greatest(col("n_words") - 4, lit(0L)) * 15).as("k4x"),
-        (col("n_words") >= 50 && col("n_words") <= 100000 &&
-          lit(3) * col("n_words") <= col("sum_len") &&
-          col("sum_len") <= lit(10) * col("n_words") &&
-          col("n_symbols") * 10 <= col("n_words") &&
-          col("bullet_lines") * 10 <= col("n_lines") * 9 &&
-          col("ellipsis_lines") * 10 <= col("n_lines") * 3 &&
-          col("alpha_words") * 5 >= col("n_words") * 4 &&
-          col("stop_hits") >= 2).as("k5x"))
+        TextAnalysis.repetitionKeep(col("n_words")).as("k4x"),
+        TextAnalysis.gopherRules.map(_._2).reduce(_ && _).as("k5x"))
       // cumulative flags DERIVED, never re-expanded (review r11: a
       // re-expanded conjunction is a drift surface where a threshold
       // edit in one copy breaks funnel monotonicity) — the oracle's
@@ -1044,41 +1054,12 @@ object Pipeline {
       .withColumn("k7", col("k6") && col("doc_id") === col("mc"))
       .withColumn("k8",
         col("k7") && col("n_overlap") * 5 < col("n_grams"))
-      .withColumn("k9", col("k8") &&
-        substring(md5(concat(col("cluster").cast(StringType),
-          lit("#split"))), 1, 2) > "19")
-      .withColumn("grp", {
-        val srcNum = substring(col("source"), 4, 10).cast(LongType)
-        when(srcNum < 10, "head").when(srcNum < 16, "mid")
-          .otherwise(concat(lit("tail"), substring(col("source"), 4, 10)))
-      })
+      .withColumn("k9", col("k8") && !evalSplit(col("cluster")))
+      .withColumn("grp", mixGroup(col("source")))
       .transform(Tables.ckptNarrow(_))
 
-    // stage 10: p13's capped Hamilton over the k9 survivors
-    val counts = f9.filter(col("k9")).groupBy(col("grp"))
-      .agg(count(lit(1)).as("n_s"))
-      .withColumn("w", round(sqrt(col("n_s")) * 1e6).cast(LongType))
-    val tot = counts.agg(sum(col("n_s")).as("__N"), sum(col("w")).as("__W"))
-    val wTiny = Window.orderBy(col("rem").desc, col("grp"))
-    val alloc = counts.crossJoin(broadcast(tot))
-      .withColumn("b", expr("__N DIV 3"))
-      .withColumn("base", expr("(b * w) DIV __W"))
-      .withColumn("rem", expr("(b * w) % __W"))
-      .withColumn("rr", row_number().over(wTiny))
-      .withColumn("base_sum", sum(col("base")).over(wTiny.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("alloc", least(
-        col("base") + when(col("rr") <= col("b") - col("base_sum"), 1L)
-          .otherwise(0L), col("n_s")))
-      .select(col("grp"), col("alloc"))
-    val picked = Ladders.globalRank(
-        f9.filter(col("k9"))
-          .withColumn("__h",
-            md5(concat(col("doc_id").cast(StringType), lit("#temp"))))
-          .withColumn("__b", substring(col("__h"), 1, 2)),
-        Seq("grp"), "__b", Seq(col("__h"), col("doc_id")), "rn", None)
-      .join(broadcast(alloc), "grp")
-      .filter(col("rn") <= col("alloc"))
+    // stage 10: p13's mix over the k9 survivors
+    val picked = temperatureMix(f9.filter(col("k9")))
 
     // stage 11: per-grp concat-and-chunk budget on the REAL tokenizer
     val n10df = picked.agg(count(lit(1)).as("n10"))
@@ -1087,39 +1068,117 @@ object Pipeline {
       .agg(coalesce(sum(expr("(s + 511) DIV 512")), lit(0L)).as("nseq"))
 
     // the funnel: ONE aggregate row over the flag frame, unpivoted
-    def cnt(c: org.apache.spark.sql.Column) = sum(when(c, 1L).otherwise(0L))
     val one = f9.agg(count(lit(1)).as("n0"),
-        cnt(col("k1")).as("n1"), cnt(col("k2")).as("n2"),
-        cnt(col("k3")).as("n3"), cnt(col("k4")).as("n4"),
-        cnt(col("k5")).as("n5"), cnt(col("k6")).as("n6"),
-        cnt(col("k7")).as("n7"), cnt(col("k8")).as("n8"),
-        cnt(col("k9")).as("n9"))
+        (1 to 9).map(i => cnt(col(s"k$i")).as(s"n$i")): _*)
       .crossJoin(broadcast(n10df)).crossJoin(broadcast(seqs))
-    def stage(i: Int, rule: String, in: String, out: String) =
-      struct(lit(i.toLong).as("stage"), lit(rule).as("rule"),
-        col(in).as("n_in"), (col(in) - col(out)).as("n_dropped"),
-        col(out).as("n_out"))
-    one.select(explode(array(
-        stage(1, "markup_strip_nonempty", "n0", "n1"),
-        stage(2, "lang_id_en", "n1", "n2"),
-        stage(3, "blocklist_c4", "n2", "n3"),
-        stage(4, "gopher_repetition", "n3", "n4"),
-        stage(5, "gopher_structural", "n4", "n5"),
-        stage(6, "exact_dedup", "n5", "n6"),
-        stage(7, "fuzzy_dedup_clusters", "n6", "n7"),
-        stage(8, "decontaminate_8gram", "n7", "n8"),
-        stage(9, "leak_safe_train_split", "n8", "n9"),
-        stage(10, "temperature_mix_a05", "n9", "n10"),
-        struct(lit(11L).as("stage"), lit("pack_512_bpe_seqs").as("rule"),
-          col("n10").as("n_in"), lit(0L).as("n_dropped"),
-          col("nseq").as("n_out")))).as("r"))
-      .select(col("r.stage").as("stage"), col("r.rule").as("rule"),
-        col("r.n_in").as("n_in"), col("r.n_dropped").as("n_dropped"),
-        col("r.n_out").as("n_out"))
-      .orderBy(col("stage"))
+    funnelReport(one, p16Rules,
+      struct(lit(11L).as("stage"), lit("pack_512_bpe_seqs").as("rule"),
+        col("n10").as("n_in"), lit(0L).as("n_dropped"),
+        col("nseq").as("n_out")))
   }
 
-  val p16Sql: String = Dedup.p16Sql
+  /** p16's stages 1-10 as (rule, n_in, n_out); stage 11 changes unit. */
+  private[operators] val p16Rules: Seq[(String, String, String)] =
+    Seq("markup_strip_nonempty", "lang_id_en", "blocklist_c4",
+      "gopher_repetition", "gopher_structural", "exact_dedup",
+      "fuzzy_dedup_clusters", "decontaminate_8gram", "leak_safe_train_split",
+      "temperature_mix_a05").zipWithIndex
+      .map { case (r, i) => (r, s"n$i", s"n${i + 1}") }
+
+  /** Oracle: the fuzzy-dedup stage consumes the dd06 cluster artifact,
+    * whose derivation is dd06's [[Dedup.clusterCtes]]. Each stage calls the
+    * oracle definition its stage key owns: t11's [[TextAnalysis.stripMarkupSql]],
+    * t01's [[TextAnalysis.markerHitsSql]] and [[TextAnalysis.langArgmaxSql]],
+    * t16's blocklist, t18's [[TextAnalysis.repetitionCtesSql]] and
+    * [[TextAnalysis.repetitionKeepSql]], t20's
+    * [[TextAnalysis.gopherStatsSql]] and [[TextAnalysis.gopherRulesSql]],
+    * t10's [[TextAnalysis.gramSet8Sql]], p08's
+    * [[evalSplitSql]], p13's [[mixGroupSql]] and
+    * [[temperatureMixCtesSql]], t21's recursive-CTE BPE for the
+    * packing budget, and p09's [[cntSql]] and
+    * [[funnelReportSql]]; exact dedup is an md5 of the tokens. */
+  val p16Sql: String = {
+    import TextAnalysis._
+    val langCols = langMarkers
+      .map { case (l, ws) => s"    ${markerHitsSql("ts", ws)} AS s_$l" }
+      .mkString(",\n")
+    s"""WITH RECURSIVE ${Dedup.clusterCtes},
+       |c16 AS (
+       |  SELECT doc_id, text, source FROM corpus
+       |  UNION ALL
+       |  SELECT doc_id + 8000000, text, source FROM documents
+       |  WHERE doc_id % 20 = 7),
+       |f16 AS MATERIALIZED (
+       |  SELECT doc_id, source, text,
+       |    ${toksSql(stripMarkupSql("text"))} AS ts,
+       |    string_split(text, chr(10)) AS ls
+       |  FROM c16),
+       |st16 AS (
+       |  SELECT doc_id, source, ts,
+       |$gopherStatsSql,
+       |$langCols,
+       |    ${markerHitsSql("ts", blocklist)} AS n_bad,
+       |    md5(array_to_string(ts, ' ')) AS key
+       |  FROM f16),
+       |${repetitionCtesSql("f16")},
+       |cg16 AS MATERIALIZED (
+       |  SELECT doc_id, unnest(gs) AS gram
+       |  FROM (SELECT doc_id,
+       |      ${gramSet8Sql("ts")} AS gs
+       |    FROM f16)),
+       |eg16 AS (
+       |  SELECT DISTINCT gram FROM cg16
+       |  WHERE doc_id % 97 = 0 AND doc_id < ${Dedup.PlantOffset}),
+       |ov16 AS (
+       |  SELECT cg16.doc_id, COUNT(*) AS n_grams, COUNT(e.gram) AS n_overlap
+       |  FROM cg16 LEFT JOIN eg16 e ON cg16.gram = e.gram
+       |  GROUP BY 1),
+       |${graft.functions.KernelOracleSql.bpeDocLenCtes("f16", "x16", "ts")},
+       |fl16 AS MATERIALIZED (
+       |  SELECT s.doc_id, s.source, s.key,
+       |    COALESCE(l.cluster_id, s.doc_id) AS cluster,
+       |    COALESCE(b.b, 0) AS n_bpe,
+       |    COALESCE(o.n_grams, 0) AS n_grams,
+       |    COALESCE(o.n_overlap, 0) AS n_overlap,
+       |    s.n_words > 0 AS k1,
+       |    ($langArgmaxSql) = 'en' AS k2x,
+       |    s.n_bad = 0 AS k3x,
+       |    (${repetitionKeepSql("s.n_words")}) AS k4x,
+       |    (${gopherRulesSql.map(_._2).mkString(" AND\n     ")}) AS k5x
+       |  FROM st16 s
+       |  LEFT JOIN t2 USING (doc_id) LEFT JOIN d5 USING (doc_id)
+       |  LEFT JOIN ov16 o USING (doc_id) LEFT JOIN labels l USING (doc_id)
+       |  LEFT JOIN x16pw b USING (doc_id)),
+       |fk AS MATERIALIZED (
+       |  SELECT *, k1 AND k2x AS k2, k1 AND k2x AND k3x AS k3,
+       |    k1 AND k2x AND k3x AND k4x AS k4,
+       |    k1 AND k2x AND k3x AND k4x AND k5x AS k5
+       |  FROM fl16),
+       |mk16 AS (SELECT key, min(doc_id) AS mk FROM fk WHERE k5 GROUP BY key),
+       |f6 AS MATERIALIZED (SELECT fk.*, (k5 AND doc_id = mk) AS k6
+       |       FROM fk LEFT JOIN mk16 USING (key)),
+       |mc16 AS (SELECT cluster, min(doc_id) AS mc FROM f6 WHERE k6 GROUP BY 1),
+       |f7 AS MATERIALIZED (SELECT f6.*, (k6 AND doc_id = mc) AS k7
+       |       FROM f6 LEFT JOIN mc16 USING (cluster)),
+       |f9 AS MATERIALIZED (
+       |  SELECT *, (k7 AND n_overlap * 5 < n_grams) AS k8,
+       |    (k7 AND n_overlap * 5 < n_grams AND
+       |     NOT (${evalSplitSql("cluster")})) AS k9,
+       |    ${mixGroupSql("source")} AS grp
+       |  FROM f7),
+       |k916 AS (SELECT doc_id, grp, n_bpe FROM f9 WHERE k9),
+       |${temperatureMixCtesSql("k916")},
+       |n1016 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n10 FROM tm_pick),
+       |seq16 AS (SELECT CAST(COALESCE(SUM((s + 511) // 512), 0) AS BIGINT)
+       |    AS nseq
+       |  FROM (SELECT grp, SUM(n_bpe) AS s FROM tm_pick GROUP BY grp)),
+       |cnt16 AS MATERIALIZED (
+       |  SELECT CAST(COUNT(*) AS BIGINT) AS n0,
+       |${(1 to 9).map(i => s"    ${cntSql(s"k$i")} AS n$i").mkString(",\n")}
+       |  FROM f9)
+       |${funnelReportSql(p16Rules, "cnt16, n1016, seq16",
+           "SELECT 11, 'pack_512_bpe_seqs', n10, 0, nseq")}""".stripMargin
+  }
 
   // ---------------------------------------------------------------- p17
   /** p05's contiguous token-budget sharding re-based on the REAL

@@ -27,8 +27,22 @@ object TextAnalysis {
     * `string_split_regex` disagree on trailing empties, filtering is the
     * portable form.
     */
-  private[operators] def toks(c: Column): Column =
-    filter(split(lower(c), "[ \\t\\n\\r]+"), x => x =!= "")
+  private[operators] def toks(c: Column): Column = words(lower(c))
+
+  /** Raw-case whitespace words, empties dropped: the kernels' own
+    * whitespace class, so a plant built from them is byte-identical to
+    * the oracle's reconstruction. */
+  private[graft] def words(c: Column): Column =
+    filter(split(c, "[ \\t\\n\\r]+"), x => x =!= "")
+
+  /** The recrawl plant: `c` with its last word (and the whitespace
+    * before it) dropped. */
+  private[graft] def dropLastWord(c: Column): Column =
+    regexp_replace(c, "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "")
+
+  /** The oracle side of [[toks]]. */
+  private[operators] def toksSql(c: String): String =
+    s"list_filter(string_split_regex(lower($c), '[ \\t\\n\\r]+'), x -> x <> '')"
 
   private[operators] val langMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of", "to", "and", "is", "in"),
@@ -37,9 +51,32 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "est", "des"),
     "zh" -> Seq("的", "是", "了", "在", "和"))
 
-  private def markerHits(t: Column, words: Seq[String]): Column =
+  private[operators] def markerHits(t: Column, words: Seq[String]): Column =
     size(filter(t, x => x.isin(words.map(lit): _*)))
       .cast(LongType)
+
+  private[operators] def markerHitsSql(ts: String, words: Seq[String]): String =
+    s"CAST(len(list_filter($ts, x -> x IN (${words.map(w => s"'$w'").mkString(", ")}))) AS BIGINT)"
+
+  /** t01's decision over the per-language marker hits `s(lang)`: the
+    * argmax, ties to the earlier language of [[langMarkers]]. */
+  private[operators] def langArgmax(s: String => Column): Column =
+    when(s("en") >= s("es") && s("en") >= s("de") && s("en") >= s("fr") &&
+        s("en") >= s("zh"), "en")
+      .when(s("es") >= s("de") && s("es") >= s("fr") &&
+        s("es") >= s("zh"), "es")
+      .when(s("de") >= s("fr") && s("de") >= s("zh"), "de")
+      .when(s("fr") >= s("zh"), "fr")
+      .otherwise("zh")
+
+  /** The oracle side of [[langArgmax]], over columns `s_<lang>`. */
+  private[operators] val langArgmaxSql: String =
+    """CASE
+      |  WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
+      |  WHEN s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
+      |  WHEN s_de >= s_fr AND s_de >= s_zh THEN 'de'
+      |  WHEN s_fr >= s_zh THEN 'fr'
+      |  ELSE 'zh' END""".stripMargin
 
   // ---------------------------------------------------------------- t01
   /** n-gram/stopword language scorer: count marker-word hits per
@@ -51,37 +88,25 @@ object TextAnalysis {
     val scored = docs.select(
       Seq(col("doc_id"), col("lang").as("lang_label")) ++
         langMarkers.map { case (l, ws) => markerHits(t, ws).as(s"s_$l") }: _*)
-    val pred = when(col("s_en") >= col("s_es") && col("s_en") >= col("s_de") &&
-        col("s_en") >= col("s_fr") && col("s_en") >= col("s_zh"), "en")
-      .when(col("s_es") >= col("s_de") && col("s_es") >= col("s_fr") &&
-        col("s_es") >= col("s_zh"), "es")
-      .when(col("s_de") >= col("s_fr") && col("s_de") >= col("s_zh"), "de")
-      .when(col("s_fr") >= col("s_zh"), "fr")
-      .otherwise("zh")
-    scored.withColumn("predicted_lang", pred).orderBy(col("doc_id"))
+    scored.withColumn("predicted_lang", langArgmax(l => col(s"s_$l")))
+      .orderBy(col("doc_id"))
   }
 
   val t01Sql: String = {
-    def hits(ws: Seq[String]): String = {
-      val inList = ws.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), x -> x <> ''), x -> x IN ($inList))) AS BIGINT)"
-    }
-    val cols = langMarkers.map { case (l, ws) => s"  ${hits(ws)} AS s_$l" }
-      .mkString(",\n")
+    val cols = langMarkers.map { case (l, ws) =>
+      s"  ${markerHitsSql(toksSql("text"), ws)} AS s_$l" }.mkString(",\n")
     s"""WITH scored AS (
        |SELECT doc_id, lang AS lang_label,
        |$cols
        |FROM documents)
-       |SELECT *, CASE
-       |  WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-       |  WHEN s_es >= s_de AND s_es >= s_fr AND s_es >= s_zh THEN 'es'
-       |  WHEN s_de >= s_fr AND s_de >= s_zh THEN 'de'
-       |  WHEN s_fr >= s_zh THEN 'fr'
-       |  ELSE 'zh' END AS predicted_lang
+       |SELECT *, $langArgmaxSql AS predicted_lang
        |FROM scored ORDER BY doc_id""".stripMargin
   }
 
   // ---------------------------------------------------------------- t02
+  private[operators] val t02StopWords: Seq[String] =
+    Seq("the", "a", "of", "to", "and", "is", "in", "that", "it")
+
   /** Quality heuristics: token count, punctuation ratio, stopword ratio,
     * mean word length → fixed-order weighted score in [0,1].
     */
@@ -97,8 +122,7 @@ object TextAnalysis {
     val nChar = length(col("text")).cast(LongType)
     val nPunct = regexp_count(col("text"), lit("[^a-zA-Z0-9 \\t\\n\\r]"))
       .cast(LongType)
-    val stopHits = markerHits(t,
-      Seq("the", "a", "of", "to", "and", "is", "in", "that", "it"))
+    val stopHits = markerHits(t, t02StopWords)
     val wordChars = aggregate(t, lit(0L), (acc, x) => acc + length(x))
     docs.select(col("doc_id"), nTok.as("n_tokens"), nChar.as("n_chars"),
         nPunct.as("n_punct"), stopHits.as("n_stop"),
@@ -451,18 +475,12 @@ object TextAnalysis {
     val corpus = base.select(
       when(isEval, col("doc_id") + 3000000L).otherwise(col("doc_id"))
         .as("doc_id"),
-      when(isEval, regexp_replace(col("text"),
-          "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", ""))
+      when(isEval, dropLastWord(col("text")))
         .otherwise(col("text")).as("text"))
 
-    // distinct 8-word grams per doc; short docs contribute their full text
     def gramSets(df: DataFrame): DataFrame = df
       .select(col("doc_id"), toks(col("text")).as("ws"))
-      .select(col("doc_id"), expr(
-        """CASE WHEN size(ws) < 8 THEN array(array_join(ws, ' '))
-          |ELSE array_distinct(transform(sequence(1, size(ws) - 7),
-          |  i -> array_join(slice(ws, i, 8), ' '))) END""".stripMargin)
-        .as("gs"))
+      .select(col("doc_id"), gramSet8("ws").as("gs"))
 
     // explode_OUTER, deliberately: gs is never empty (a short doc yields
     // its whole text as one gram), so outer ≡ inner here — but the inner
@@ -487,29 +505,38 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
+  /** t10's distinct 8-word grams of the token array column `ts`; a doc
+    * shorter than 8 tokens yields its whole text as one gram. */
+  private[operators] def gramSet8(ts: String): Column = expr(
+    s"""CASE WHEN size($ts) < 8 THEN array(array_join($ts, ' '))
+       |ELSE array_distinct(transform(sequence(1, size($ts) - 7),
+       |  i -> array_join(slice($ts, i, 8), ' '))) END""".stripMargin)
+
+  /** The oracle side of [[gramSet8]]. */
+  private[operators] def gramSet8Sql(ts: String): String =
+    s"""CASE WHEN len($ts) < 8 THEN [array_to_string($ts, ' ')]
+       |      ELSE list_distinct(list_transform(range(1, len($ts) - 6),
+       |        i -> array_to_string($ts[i:(i+7)], ' '))) END""".stripMargin
+
   val t10Sql: String =
-    """WITH evaldocs AS (
+    s"""WITH evaldocs AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
       |corpus AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
       |  UNION ALL
-      |  SELECT doc_id + 3000000, regexp_replace(text, '[ \t\n\r]+[^ \t\n\r]+$', '')
+      |  SELECT doc_id + 3000000, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
       |  FROM evaldocs),
       |cg AS (
       |  SELECT doc_id, unnest(gs) AS gram
       |  FROM (SELECT doc_id,
-      |      CASE WHEN len(ws) < 8 THEN [array_to_string(ws, ' ')]
-      |      ELSE list_distinct(list_transform(range(1, len(ws) - 6),
-      |        i -> array_to_string(ws[i:(i+7)], ' '))) END AS gs
+      |      ${gramSet8Sql("ws")} AS gs
       |    FROM (SELECT doc_id,
-      |        list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
+      |        list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
       |          x -> x <> '') AS ws FROM corpus))),
       |eg AS (
       |  SELECT DISTINCT unnest(gs) AS eg
-      |  FROM (SELECT CASE WHEN len(ws) < 8 THEN [array_to_string(ws, ' ')]
-      |      ELSE list_distinct(list_transform(range(1, len(ws) - 6),
-      |        i -> array_to_string(ws[i:(i+7)], ' '))) END AS gs
-      |    FROM (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
+      |  FROM (SELECT ${gramSet8Sql("ws")} AS gs
+      |    FROM (SELECT list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
       |        x -> x <> '') AS ws FROM evaldocs)))
       |SELECT doc_id, COUNT(*) AS n_grams, COUNT(eg.eg) AS n_overlap,
       |  ROUND(CAST(COUNT(eg.eg) AS DOUBLE) / COUNT(*), 4) AS overlap_frac,
@@ -535,23 +562,42 @@ object TextAnalysis {
           lit("""<b>bold</b> &lt;tag&gt; &quot;q&quot; &nbsp;"""), col("text"),
           lit("""<style>.c { color: red }</style>""")))
         .otherwise(col("text")))
-    val noBlocks = regexp_replace(col("text2"),
-      "(?s)<(script|style)[^>]*>.*?</(script|style)>", " ")
-    val noTags = regexp_replace(noBlocks, "<[^>]+>", " ")
-    val decoded = Seq("&amp;" -> "&", "&lt;" -> "<", "&gt;" -> ">",
-      "&quot;" -> "\"", "&nbsp;" -> " ").foldLeft(noTags) {
-      case (c, (e, r)) => replace(c, lit(e), lit(r)) }
     docs.select(col("doc_id"),
         size(expr("regexp_extract_all(text2, '<[^>]+>', 0)")).cast(LongType)
           .as("n_tags"),
-        trim(regexp_replace(decoded, "[ \\t\\n\\r]+", " ")).as("clean"))
+        stripMarkup(col("text2")).as("clean"))
       .select(col("doc_id"), col("n_tags"), md5(col("clean")).as("clean_key"),
         length(col("clean")).cast(LongType).as("clean_len"))
       .orderBy(col("doc_id"))
   }
 
+  /** t11's cleaner: script/style blocks dropped with their content, the
+    * remaining tags removed, five entities decoded, whitespace collapsed
+    * and trimmed. */
+  private[operators] def stripMarkup(text: Column): Column = {
+    val noBlocks = regexp_replace(text,
+      "(?s)<(script|style)[^>]*>.*?</(script|style)>", " ")
+    val noTags = regexp_replace(noBlocks, "<[^>]+>", " ")
+    val decoded = Seq("&amp;" -> "&", "&lt;" -> "<", "&gt;" -> ">",
+      "&quot;" -> "\"", "&nbsp;" -> " ").foldLeft(noTags) {
+      case (c, (e, r)) => replace(c, lit(e), lit(r)) }
+    trim(regexp_replace(decoded, "[ \\t\\n\\r]+", " "))
+  }
+
+  /** The oracle side of [[stripMarkup]]. */
+  private[operators] def stripMarkupSql(text: String): String =
+    s"""trim(regexp_replace(
+       |      replace(replace(replace(replace(replace(
+       |        regexp_replace(
+       |          regexp_replace($text,
+       |            '(?s)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'),
+       |          '<[^>]+>', ' ', 'g'),
+       |        '&amp;', '&'), '&lt;', '<'), '&gt;', '>'),
+       |        '&quot;', '"'), '&nbsp;', ' '),
+       |      '[ \\t\\n\\r]+', ' ', 'g'))""".stripMargin
+
   val t11Sql: String =
-    """WITH planted AS (
+    s"""WITH planted AS (
       |  SELECT doc_id, CASE
       |    WHEN doc_id % 4 = 0 THEN
       |      '<div class="hd"><p>Start &amp; lead</p><script type="text/js">var x = 1 < 2;</script></div> ' || text
@@ -563,15 +609,7 @@ object TextAnalysis {
       |stripped AS (
       |  SELECT doc_id,
       |    CAST(len(regexp_extract_all(text2, '<[^>]+>')) AS BIGINT) AS n_tags,
-      |    trim(regexp_replace(
-      |      replace(replace(replace(replace(replace(
-      |        regexp_replace(
-      |          regexp_replace(text2,
-      |            '(?s)<(script|style)[^>]*>.*?</(script|style)>', ' ', 'g'),
-      |          '<[^>]+>', ' ', 'g'),
-      |        '&amp;', '&'), '&lt;', '<'), '&gt;', '>'),
-      |        '&quot;', '"'), '&nbsp;', ' '),
-      |      '[ \t\n\r]+', ' ', 'g')) AS clean
+      |    ${stripMarkupSql("text2")} AS clean
       |  FROM planted)
       |SELECT doc_id, n_tags, md5(clean) AS clean_key,
       |  CAST(len(clean) AS BIGINT) AS clean_len
@@ -1064,13 +1102,14 @@ object TextAnalysis {
   private[graft] def blocklistInSql: String =
     blocklist.map(w => s"'$w'").mkString(", ")
 
+  /** t16's count: tokens of `ts` on the blocklist. */
+  private[graft] def blockHits(ts: Column): Column = markerHits(ts, blocklist)
+
   def t16BlocklistFilter(spark: SparkSession, dir: String): DataFrame = {
     val t = toks(col("text"))
     Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"),
-        size(t).cast(LongType).as("n_tokens"),
-        size(filter(t, x => x.isin(blocklist.map(lit): _*)))
-          .cast(LongType).as("n_bad"))
+        size(t).cast(LongType).as("n_tokens"), blockHits(t).as("n_bad"))
       .withColumn("keep", col("n_bad") === 0L)
       .orderBy(col("doc_id"))
   }
@@ -1138,7 +1177,7 @@ object TextAnalysis {
     // explicit whitespace class, not \s: Java and RE2 \s disagree on
     // \x0B, and the paraphrase TEXT must be byte-identical cross-engine
     // (the repo's oracle-tokenizer convention)
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = words(col("text"))
     // natural docs pass through, eval docs re-enter AS their paraphrase
     // — one CASE projection over ONE full scan (round 15, VERDICT r14
     // #4: the old base\eval ∪ paraLeaks union read text twice); %97
@@ -1234,22 +1273,53 @@ object TextAnalysis {
     // — the same zeros the old left_outer + coalesce produced.
     Tables.spread(docs.unionAll(planted))
       .select(col("doc_id"), toks(col("text")).as("ts"))
-      .select(col("doc_id"), size(col("ts")).cast(LongType).as("n_tokens"),
-        graft.functions.text.gram_stats(col("ts"), 2)
-          .getField("maxc").as("top2"),
-        graft.functions.text.gram_stats(col("ts"), 5)
-          .getField("dupsum").as("dup5"))
-      .withColumn("keep",
-        col("top2") * 10 <= col("n_tokens") &&
-          col("dup5") * 100 <= greatest(col("n_tokens") - 4, lit(0L)) * 15)
+      .select(col("doc_id") +: size(col("ts")).cast(LongType).as("n_tokens") +:
+        repetitionStats(col("ts")): _*)
+      .withColumn("keep", repetitionKeep(col("n_tokens")))
       .orderBy(col("doc_id"))
   }
 
+  /** t18's gram statistics of the token array `ts`, named `top2` (the
+    * top bigram's count) and `dup5` (occurrences of 5-grams seen twice
+    * or more), each one kernel pass. */
+  private[operators] def repetitionStats(ts: Column): Seq[Column] = Seq(
+    graft.functions.text.gram_stats(ts, 2).getField("maxc").as("top2"),
+    graft.functions.text.gram_stats(ts, 5).getField("dupsum").as("dup5"))
+
+  /** t18's keep rule over [[repetitionStats]] of a doc of `n` tokens. */
+  private[operators] def repetitionKeep(n: Column): Column =
+    col("top2") * 10 <= n &&
+      col("dup5") * 100 <= greatest(n - 4, lit(0L)) * 15
+
+  /** The oracle side of [[repetitionStats]]: CTEs `t2(doc_id, top2)` and
+    * `d5(doc_id, dup5)` over `src(doc_id, ts)`; a doc without a repeated
+    * gram has no row. */
+  private[operators] def repetitionCtesSql(src: String): String =
+    s"""g2 AS (
+       |  SELECT doc_id, ts[i] || ' ' || ts[i+1] AS g
+       |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
+       |        FROM $src WHERE len(ts) >= 2)),
+       |c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
+       |t2 AS (SELECT doc_id, MAX(c) AS top2 FROM c2 GROUP BY 1),
+       |g5 AS (
+       |  SELECT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' ' ||
+       |    ts[i+3] || ' ' || ts[i+4] AS g
+       |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 3)) AS i
+       |        FROM $src WHERE len(ts) >= 5)),
+       |c5 AS (SELECT doc_id, g, COUNT(*) AS c FROM g5 GROUP BY 1, 2),
+       |d5 AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup5
+       |       FROM c5 WHERE c >= 2 GROUP BY 1)""".stripMargin
+
+  /** The oracle side of [[repetitionKeep]], joined to `t2` and `d5`. */
+  private[operators] def repetitionKeepSql(n: String): String =
+    s"""(COALESCE(t2.top2, 0) * 10 <= $n) AND
+       |  (COALESCE(d5.dup5, 0) * 100 <= GREATEST($n - 4, 0) * 15)""".stripMargin
+
   val t18Sql: String =
-    """WITH docs AS (SELECT doc_id, text FROM documents),
+    s"""WITH docs AS (SELECT doc_id, text FROM documents),
       |ptoks AS (
       |  SELECT doc_id, text,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
+      |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
       |      x -> x <> '') AS ws
       |  FROM docs),
       |planted AS (
@@ -1262,28 +1332,14 @@ object TextAnalysis {
       |  UNION ALL SELECT doc_id, text FROM planted),
       |tk AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
+      |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
       |      x -> x <> '') AS ts
       |  FROM src),
-      |g2 AS (
-      |  SELECT doc_id, ts[i] || ' ' || ts[i+1] AS g
-      |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i
-      |        FROM tk WHERE len(ts) >= 2)),
-      |c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY 1, 2),
-      |t2 AS (SELECT doc_id, MAX(c) AS top2 FROM c2 GROUP BY 1),
-      |g5 AS (
-      |  SELECT doc_id, ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' ' ||
-      |    ts[i+3] || ' ' || ts[i+4] AS g
-      |  FROM (SELECT doc_id, ts, unnest(range(1, len(ts) - 3)) AS i
-      |        FROM tk WHERE len(ts) >= 5)),
-      |c5 AS (SELECT doc_id, g, COUNT(*) AS c FROM g5 GROUP BY 1, 2),
-      |d5 AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS dup5
-      |       FROM c5 WHERE c >= 2 GROUP BY 1)
+      |${repetitionCtesSql("tk")}
       |SELECT tk.doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
       |  COALESCE(t2.top2, 0) AS top2,
       |  COALESCE(d5.dup5, 0) AS dup5,
-      |  (COALESCE(t2.top2, 0) * 10 <= len(ts)) AND
-      |  (COALESCE(d5.dup5, 0) * 100 <= GREATEST(len(ts) - 4, 0) * 15)
+      |  ${repetitionKeepSql("len(ts)")}
       |    AS keep
       |FROM tk LEFT JOIN t2 USING (doc_id) LEFT JOIN d5 USING (doc_id)
       |ORDER BY doc_id""".stripMargin
@@ -1351,38 +1407,82 @@ object TextAnalysis {
       .unionAll(plant(15, 9600000L, t20ShortBody)))
     val stats = src.select(col("doc_id"), toks(col("text")).as("ts"),
         split(col("text"), "\n").as("ls"), col("text"))
-      .select(col("doc_id"),
-        size(col("ts")).cast(LongType).as("n_words"),
-        aggregate(transform(col("ts"), x => length(x).cast(LongType)),
-          lit(0L), (a, x) => a + x).as("sum_len"),
-        size(col("ls")).cast(LongType).as("n_lines"),
-        size(filter(col("ls"), l => l.startsWith("- ")))
-          .cast(LongType).as("bullet_lines"),
-        size(filter(col("ls"), l => l.endsWith("...")))
-          .cast(LongType).as("ellipsis_lines"),
-        size(filter(col("ts"), x => x.rlike("[a-z]")))
-          .cast(LongType).as("alpha_words"),
-        expr("CAST((length(text) - length(replace(text, '#', ''))) + " +
-          "(length(text) - length(replace(text, '...', ''))) div 3 " +
-          "AS BIGINT)").as("n_symbols"),
-        t20StopWords
-          .map(w => array_contains(col("ts"), w).cast("int"))
-          .reduce(_ + _).cast(LongType).as("stop_hits"))
-    stats
-      .withColumn("r_wc", col("n_words") >= 50 && col("n_words") <= 100000L)
-      .withColumn("r_wlen", lit(3) * col("n_words") <= col("sum_len") &&
-        col("sum_len") <= lit(10) * col("n_words"))
-      .withColumn("r_sym", col("n_symbols") * 10 <= col("n_words"))
-      .withColumn("r_bullet", col("bullet_lines") * 10 <= col("n_lines") * 9)
-      .withColumn("r_ellipsis",
-        col("ellipsis_lines") * 10 <= col("n_lines") * 3)
-      .withColumn("r_alpha", col("alpha_words") * 5 >= col("n_words") * 4)
-      .withColumn("r_stop", col("stop_hits") >= 2)
-      .withColumn("keep", col("r_wc") && col("r_wlen") && col("r_sym") &&
-        col("r_bullet") && col("r_ellipsis") && col("r_alpha") &&
-        col("r_stop"))
+      .select(col("doc_id") +: (gopherWordStats(col("ts")) ++
+        gopherLineStats(col("text"), col("ls"))): _*)
+      // t20's report order
+      .select(Seq("doc_id", "n_words", "sum_len", "n_lines", "bullet_lines",
+        "ellipsis_lines", "alpha_words", "n_symbols", "stop_hits").map(col): _*)
+    gopherRules.foldLeft(stats) { case (df, (r, c)) => df.withColumn(r, c) }
+      .withColumn("keep", gopherRules.map(r => col(r._1)).reduce(_ && _))
       .orderBy(col("doc_id"))
   }
+
+  /** t20's word statistics of the token array `ts`. */
+  private[operators] def gopherWordStats(ts: Column): Seq[Column] = Seq(
+    size(ts).cast(LongType).as("n_words"),
+    aggregate(transform(ts, x => length(x).cast(LongType)),
+      lit(0L), (a, x) => a + x).as("sum_len"),
+    size(filter(ts, x => x.rlike("[a-z]"))).cast(LongType).as("alpha_words"),
+    t20StopWords.map(w => array_contains(ts, w).cast("int"))
+      .reduce(_ + _).cast(LongType).as("stop_hits"))
+
+  /** t20's line and symbol statistics of the raw `text`, split into the
+    * lines `ls`. */
+  private[operators] def gopherLineStats(text: Column, ls: Column): Seq[Column] = {
+    def occurrences(s: String) =
+      length(text) - length(replace(text, lit(s), lit("")))
+    Seq(
+      size(ls).cast(LongType).as("n_lines"),
+      size(filter(ls, l => l.startsWith("- "))).cast(LongType)
+        .as("bullet_lines"),
+      size(filter(ls, l => l.endsWith("..."))).cast(LongType)
+        .as("ellipsis_lines"),
+      (occurrences("#") + call_function("div", occurrences("..."), lit(3)))
+        .cast(LongType).as("n_symbols"))
+  }
+
+  /** t20's seven rules over the statistics' names; a doc is kept when
+    * all hold. */
+  private[operators] val gopherRules: Seq[(String, Column)] = Seq(
+    "r_wc" -> (col("n_words") >= 50 && col("n_words") <= 100000L),
+    "r_wlen" -> (lit(3) * col("n_words") <= col("sum_len") &&
+      col("sum_len") <= lit(10) * col("n_words")),
+    "r_sym" -> (col("n_symbols") * 10 <= col("n_words")),
+    "r_bullet" -> (col("bullet_lines") * 10 <= col("n_lines") * 9),
+    "r_ellipsis" -> (col("ellipsis_lines") * 10 <= col("n_lines") * 3),
+    "r_alpha" -> (col("alpha_words") * 5 >= col("n_words") * 4),
+    "r_stop" -> (col("stop_hits") >= 2))
+
+  /** The oracle side of [[gopherWordStats]] and [[gopherLineStats]], over
+    * columns `ts`, `ls` and `text`. */
+  private[operators] val gopherStatsSql: String = {
+    val stopSum = t20StopWords
+      .map(w => s"list_contains(ts, '$w')::INT").mkString(" + ")
+    s"""    CAST(len(ts) AS BIGINT) AS n_words,
+       |    CAST(COALESCE(list_sum(list_transform(ts, x -> length(x))), 0)
+       |      AS BIGINT) AS sum_len,
+       |    CAST(len(ls) AS BIGINT) AS n_lines,
+       |    CAST(len(list_filter(ls, l -> starts_with(l, '- ')))
+       |      AS BIGINT) AS bullet_lines,
+       |    CAST(len(list_filter(ls, l -> ends_with(l, '...')))
+       |      AS BIGINT) AS ellipsis_lines,
+       |    CAST(len(list_filter(ts, x -> regexp_matches(x, '[a-z]')))
+       |      AS BIGINT) AS alpha_words,
+       |    CAST((length(text) - length(replace(text, '#', ''))) +
+       |      (length(text) - length(replace(text, '...', ''))) // 3
+       |      AS BIGINT) AS n_symbols,
+       |    CAST($stopSum AS BIGINT) AS stop_hits""".stripMargin
+  }
+
+  /** The oracle side of [[gopherRules]]. */
+  private[operators] val gopherRulesSql: Seq[(String, String)] = Seq(
+    "r_wc" -> "n_words >= 50 AND n_words <= 100000",
+    "r_wlen" -> "3 * n_words <= sum_len AND sum_len <= 10 * n_words",
+    "r_sym" -> "n_symbols * 10 <= n_words",
+    "r_bullet" -> "bullet_lines * 10 <= n_lines * 9",
+    "r_ellipsis" -> "ellipsis_lines * 10 <= n_lines * 3",
+    "r_alpha" -> "alpha_words * 5 >= n_words * 4",
+    "r_stop" -> "stop_hits >= 2")
 
   /** Oracle: identical tokenization/line split/replace arithmetic in
     * DuckDB; the plant literals are built by the same Scala expressions
@@ -1392,8 +1492,6 @@ object TextAnalysis {
     // the SHARED plant bodies, newline-escaped for the SQL literal
     val bulletBody = t20BulletBody.replace("\n", "\\n")
     val ellBody = t20EllBody.replace("\n", "\\n")
-    val stopSum = t20StopWords
-      .map(w => s"list_contains(ts, '$w')::INT").mkString(" + ")
     s"""WITH base AS (SELECT doc_id, text FROM documents),
       |src AS (
       |  SELECT doc_id, text FROM base
@@ -1413,31 +1511,11 @@ object TextAnalysis {
       |  FROM src),
       |stats AS (
       |  SELECT doc_id,
-      |    CAST(len(ts) AS BIGINT) AS n_words,
-      |    CAST(COALESCE(list_sum(list_transform(ts, x -> length(x))), 0)
-      |      AS BIGINT) AS sum_len,
-      |    CAST(len(ls) AS BIGINT) AS n_lines,
-      |    CAST(len(list_filter(ls, l -> starts_with(l, '- ')))
-      |      AS BIGINT) AS bullet_lines,
-      |    CAST(len(list_filter(ls, l -> ends_with(l, '...')))
-      |      AS BIGINT) AS ellipsis_lines,
-      |    CAST(len(list_filter(ts, x -> regexp_matches(x, '[a-z]')))
-      |      AS BIGINT) AS alpha_words,
-      |    CAST((length(text) - length(replace(text, '#', ''))) +
-      |      (length(text) - length(replace(text, '...', ''))) // 3
-      |      AS BIGINT) AS n_symbols,
-      |    CAST($stopSum AS BIGINT) AS stop_hits
+      |$gopherStatsSql
       |  FROM f)
       |SELECT *,
-      |  n_words >= 50 AND n_words <= 100000 AS r_wc,
-      |  3 * n_words <= sum_len AND sum_len <= 10 * n_words AS r_wlen,
-      |  n_symbols * 10 <= n_words AS r_sym,
-      |  bullet_lines * 10 <= n_lines * 9 AS r_bullet,
-      |  ellipsis_lines * 10 <= n_lines * 3 AS r_ellipsis,
-      |  alpha_words * 5 >= n_words * 4 AS r_alpha,
-      |  stop_hits >= 2 AS r_stop,
-      |  r_wc AND r_wlen AND r_sym AND r_bullet AND r_ellipsis AND
-      |  r_alpha AND r_stop AS keep
+      |${gopherRulesSql.map { case (r, c) => s"  $c AS $r," }.mkString("\n")}
+      |  ${gopherRulesSql.map(_._1).mkString(" AND ")} AS keep
       |FROM stats ORDER BY doc_id""".stripMargin
   }
 
@@ -1667,7 +1745,7 @@ object TextAnalysis {
       nMerges: Int, maxRoundsIn: Int = -1): (DataFrame, Int) = {
     val maxRounds =
       if (maxRoundsIn > 0) maxRoundsIn else t23RoundBudget(nMerges)
-    val raw = filter(split(col("text"), "[ \\t\\n\\r]+"), x => x =!= "")
+    val raw = words(col("text"))
     var state = Tables(spark, dir, "documents")
       .select(explode(raw).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("f"))
@@ -2032,8 +2110,7 @@ object TextAnalysis {
   def t26Readability(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.spread(Tables(spark, dir, "documents"))
       .filter(col("text").isNotNull)
-    val wds = filter(split(lower(col("text")), "[ \\t\\n\\r]+"),
-      x => x =!= "")
+    val wds = toks(col("text"))
     val w = size(wds).cast(LongType)
     val syl = (size(regexp_extract_all(lower(col("text")),
         lit("[aeiouy]+"), lit(0))) +

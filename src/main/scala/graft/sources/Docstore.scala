@@ -265,7 +265,7 @@ object DocstoreTable {
   def inferred(opts: DocstoreOptions): (StructType, DocstoreSample) = {
     val (docs, s) = read(opts, listFiles(opts))
     (s.declared.fold(SchemaInference.infer(
-      docs.filterNot(_.map.contains("__schema")), opts.flatten)._1)(_._1), s)
+      docs.filterNot(_.map.contains("__schema")), opts.flatten))(_._1), s)
   }
 
   /** Reads the non-empty lines, in file order, until `samplesize` of them
@@ -313,20 +313,23 @@ final class DocstoreSample(
     else Some(math.max(1L, math.round(totalBytes.toDouble * lines / bytes)))
 }
 
-/** `sample0` is read on the first scan, so a write never samples. */
+/** `sample0` is read on the first scan, so a write never samples. Every
+  * column reads as nullable, as in Spark's file sources: a document may
+  * lack any field, or hold a value that does not convert. */
 class DocstoreTable(schema0: StructType, opts: DocstoreOptions,
     sample0: => DocstoreSample)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   private lazy val sample = sample0
+  private val schema1 = DocRowConverter.nullable(schema0).asInstanceOf[StructType]
   override def name(): String = s"docstore(${opts.path})"
-  override def schema(): StructType = schema0
+  override def schema(): StructType = schema1
   override def capabilities(): JSet[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.TRUNCATE).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new DocstoreScanBuilder(schema0, opts, sample)
+    new DocstoreScanBuilder(schema1, opts, sample)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
@@ -353,6 +356,10 @@ class DocstoreScanBuilder(fullSchema: StructType, opts: DocstoreOptions,
   /** A builder over `fullSchema` outside a table: samples for the paths. */
   def this(fullSchema: StructType, opts: DocstoreOptions) =
     this(fullSchema, opts, DocstoreTable.sample(opts))
+
+  // every read, batch or streaming, plans through here; a write's table
+  // may hold types only the sink handles
+  DocRowConverter.requireReadable(fullSchema)
 
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
@@ -643,26 +650,15 @@ class DocstoreMicroBatchStream(fullSchema: StructType, required: StructType,
   */
 final case class FileCountOffset(n: Int, last: String = "")
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = {
-    val esc = last.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c => c.toString
-    }
-    s"""{"n":$n,"last":"$esc"}"""
-  }
+  override def json(): String = s"""{"n":$n,"last":${ExtJson.quote(last)}}"""
 }
 
 object FileCountOffset {
   def parse(s: String): FileCountOffset = {
     val t = s.trim
     if (t.startsWith("{")) {
-      val n = """"n"\s*:\s*(\d+)""".r.findFirstMatchIn(t)
-        .map(_.group(1).toInt).getOrElse(0)
-      val last = """"last"\s*:\s*"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(t)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse("")
-      FileCountOffset(n, last)
+      val o = ExtJson.mapper.readTree(t)
+      FileCountOffset(o.path("n").asInt(0), o.path("last").asText(""))
     } else FileCountOffset(t.toInt)
   }
 }
@@ -1264,6 +1260,33 @@ class DocRowConverter(schema: StructType, paths: DocPaths, schemaMode: String) {
 }
 
 object DocRowConverter {
+  /** The types [[DocRowConverter.toInternal]] converts a value to. */
+  def readable(dt: DataType): Boolean = dt match {
+    case StringType | LongType | DoubleType | BooleanType | TimestampType |
+         DateType | BinaryType => true
+    case ArrayType(et, _) => readable(et)
+    case st: StructType   => st.forall(f => readable(f.dataType))
+    case _                => false
+  }
+
+  /** `dt` with every field and array element nullable. */
+  def nullable(dt: DataType): DataType = dt match {
+    case ArrayType(et, _) => ArrayType(nullable(et), containsNull = true)
+    case st: StructType   =>
+      StructType(st.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case other            => other
+  }
+
+  /** Fails on the first column of `schema` whose type is not [[readable]]. */
+  def requireReadable(schema: StructType): Unit =
+    schema.find(f => !readable(f.dataType)).foreach { f =>
+      throw new IllegalArgumentException(
+        s"docstore read: column ${f.name} has type ${f.dataType.simpleString}, " +
+          "which the scan does not convert; readable types are string, " +
+          "bigint, double, boolean, timestamp, date, binary, and arrays " +
+          "and structs of these")
+    }
+
   private final val Missing: Byte = 0
   private final val Null: Byte = 1
   private final val Value: Byte = 2

@@ -44,7 +44,28 @@ class DocstoreWriteBuilder(schema: StructType, opts: DocstoreOptions)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new DocstoreWrite(schema, opts, doTruncate)
+  override def build(): Write = {
+    schema.find(f => !DocstoreWriteBuilder.writable(f.dataType)).foreach { f =>
+      throw new UnsupportedOperationException(
+        s"docstore write: column ${f.name} has type ${f.dataType.simpleString}, " +
+          "which the sink does not write" +
+          (if (f.dataType.isInstanceOf[DecimalType]) "; cast it to DOUBLE"
+           else ""))
+    }
+    new DocstoreWrite(schema, opts, doTruncate)
+  }
+}
+
+object DocstoreWriteBuilder {
+  /** The types `DocstoreDataWriter` renders: integers as JSON integers
+    * (read back as BIGINT), FLOAT as a double (read back as DOUBLE), the
+    * rest as the scan reads them. */
+  def writable(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | FloatType => true
+    case ArrayType(et, _) => writable(et)
+    case st: StructType   => st.forall(f => writable(f.dataType))
+    case other            => DocRowConverter.readable(other)
+  }
 }
 
 /** One write, batch or streaming; `truncate` applies to the batch commit. */
@@ -152,6 +173,9 @@ class DocstoreDataWriter(schema: StructType, conf: Configuration, dir: String,
     case LongType      => sb.append(v.asInstanceOf[Long])
     case DoubleType    => ExtJson.writeDouble(sb, v.asInstanceOf[Double])
     case IntegerType   => sb.append(v.asInstanceOf[Int])
+    case ShortType     => sb.append(v.asInstanceOf[Short])
+    case ByteType      => sb.append(v.asInstanceOf[Byte])
+    case FloatType     => ExtJson.writeDouble(sb, v.asInstanceOf[Float].toDouble)
     case BooleanType   => sb.append(v.asInstanceOf[Boolean])
     case StringType    => ExtJson.quote(sb, v.asInstanceOf[UTF8String].toString)
     case TimestampType => ExtJson.writeDate(sb, v.asInstanceOf[Long])

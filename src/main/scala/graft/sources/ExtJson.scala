@@ -57,7 +57,7 @@ object ExtJson {
 
   /** The one document parser of sampling and the scan: content after the
     * document makes a line malformed (`{"n":1}{"n":2}` is not one row). */
-  private[sources] val mapper =
+  private[graft] val mapper =
     new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
   private val isoFmt = DateTimeFormatter.ISO_OFFSET_DATE_TIME
   private final val MicrosPerDay = 86400000000L
@@ -228,6 +228,8 @@ object ExtJson {
       .append("\",\"subType\":\"00\"}}")
 
   /** `s` as a JSON string literal. */
+  def quote(s: String): String = quote(new JStringBuilder, s).toString
+
   def quote(sb: JStringBuilder, s: String): JStringBuilder = {
     sb.append('"')
     s.foreach {

@@ -105,10 +105,8 @@ object SchemaInference {
     * @param flatten nested documents become `parent_child` columns
     *                (reference flattening); when false a nested document
     *                becomes a JSON-text column (Document→VARCHAR rule).
-    * @return schema + the doc-path for each column (used by the row
-    *         converter to walk the original nested doc).
     */
-  def infer(sample: Seq[DDoc], flatten: Boolean = true): (StructType, Seq[Seq[String]]) = {
+  def infer(sample: Seq[DDoc], flatten: Boolean = true): StructType = {
     // path → unified Inferred
     val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[String], Inferred]
     def visit(prefix: Seq[String], v: DocValue): Unit = v match {
@@ -149,19 +147,13 @@ object SchemaInference {
         case TimestampType if inf.allMidnight => DateType // midnight-UTC rule
         case other => clean(other)
       }
-      StructField(path.mkString("_"), dt, nullable = true) -> path
+      StructField(path.mkString("_"), dt, nullable = true)
     }
     // Doc fields are case-sensitive but Spark resolves columns
     // case-insensitively by default, so case-variant fields (or a flatten
     // collision like `a_b` vs `a.b`) would make every column reference
     // ambiguous. Keep the first variant, as the reference does
     // (reference: test/sql/schema/case_variant_fields.test:1, issue #35).
-    val deduped = scala.collection.mutable.LinkedHashMap.empty[String, (StructField, Seq[String])]
-    fields.foreach { case (sf, path) =>
-      val key = sf.name.toLowerCase
-      if (!deduped.contains(key)) deduped(key) = (sf, path)
-    }
-    val kept = deduped.values.toSeq
-    (StructType(kept.map(_._1)), kept.map(_._2))
+    StructType(fields.distinctBy(_.name.toLowerCase))
   }
 }

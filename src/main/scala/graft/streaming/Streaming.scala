@@ -1883,12 +1883,12 @@ object Streaming {
   private[graft] def st15Wave(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.spread(Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text")))
-    val ws = filter(split(col("text"), "[ \\t\\n\\r]+"), w => w =!= "")
+    val ws = graft.operators.TextAnalysis.words(col("text"))
     val suffixed = (a: org.apache.spark.sql.Column) =>
       array_join(transform(a, w => concat(w, lit("~new"))), " ")
     base.filter(col("doc_id") % 7 === 3)
       .select((col("doc_id") + 5000000L).as("doc_id"),
-        regexp_replace(col("text"), "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "").as("text"))
+        graft.operators.TextAnalysis.dropLastWord(col("text")).as("text"))
       .unionAll(base.filter(col("doc_id") % 7 === 5)
         .select((col("doc_id") + 6000000L).as("doc_id"),
           suffixed(ws).as("text")))

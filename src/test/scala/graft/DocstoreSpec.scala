@@ -950,4 +950,83 @@ class DocstoreSpec extends SparkSpec {
     assert(small.rdd.getNumPartitions == files * ((fileLen + split - 1) / split), fileLen)
     assert(small.collect().map(_.getLong(0)).sorted.toSeq == (0L until files * 10L))
   }
+
+  test("a user schema reads as nullable: a missing field or a bad value is NULL, as spark.read.json reads it") {
+    val dir = writeDocs("user_schema_nullable", Seq("""{"a":1}""", """{"b":2}""", """{"a":"x"}"""))
+    val s = StructType(Seq(StructField("a", LongType, nullable = false)))
+    val df = spark.read.schema(s).format("docstore").option("path", dir).load()
+    assert(df.schema("a").nullable)
+    val got = df.collect().map(r => Option(r.get(0))).toSeq
+    assert(got == Seq(Some(1L), None, None), got)
+    val json = spark.read.schema(s).json(dir).collect().map(r => Option(r.get(0))).toSeq
+    assert(got == json, json)
+  }
+
+  test("a user schema with a type the scan does not convert fails when the read is planned, naming the column") {
+    import spark.implicits._
+    val dir = "/tmp/graft_docstore_spec/user_schema_int"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    val ints = Seq((0L, 0), (1L, 1)).toDF("id", "n")
+    ints.write.format("docstore").option("path", dir).mode("append").save()
+    for (t <- Seq(IntegerType, FloatType, DecimalType(10, 2),
+        ArrayType(IntegerType), MapType(StringType, LongType))) {
+      val s = StructType(Seq(StructField("id", LongType), StructField("n", t)))
+      val e = errorChain(intercept[Exception](
+        spark.read.schema(s).format("docstore").option("path", dir).load().collect()))
+      assert(e.contains(s"column n has type ${t.simpleString}") &&
+        e.contains("bigint, double"), e)
+    }
+    // read with inference, the INT column is the BIGINT it was written as
+    val back = spark.read.format("docstore").option("path", dir).load()
+    assert(back.schema("n").dataType == LongType)
+    assert(back.orderBy("id").collect().map(_.getAs[Long]("n")).toSeq == Seq(0L, 1L))
+  }
+
+  test("docstore write: TINYINT, SMALLINT, INT and FLOAT round-trip as BIGINT and DOUBLE") {
+    val outDir = "/tmp/graft_docstore_spec/write_small_types"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outDir))
+    spark.range(3).select(col("id"), col("id").cast(ByteType).as("b"),
+        (col("id") - 1).cast(ShortType).as("sh"), (col("id") * 7).cast(IntegerType).as("i"),
+        (col("id") + 0.5).cast(FloatType).as("f"),
+        array(col("id").cast(IntegerType)).as("ai"))
+      .write.format("docstore").option("path", outDir).mode("append").save()
+    val back = spark.read.format("docstore").option("path", outDir).load()
+    assert(Seq("b", "sh", "i").forall(c => back.schema(c).dataType == LongType), back.schema)
+    assert(back.schema("f").dataType == DoubleType && back.schema("ai").dataType == ArrayType(LongType))
+    val r = back.orderBy("id").collect()
+    assert(r.map(_.getAs[Long]("sh")).toSeq == Seq(-1L, 0L, 1L))
+    assert(r.map(_.getAs[Long]("i")).toSeq == Seq(0L, 7L, 14L))
+    assert(r.map(_.getAs[Double]("f")).toSeq == Seq(0.5, 1.5, 2.5))
+    assert(r.map(_.getSeq[Long](r(0).fieldIndex("ai"))).toSeq == Seq(Seq(0L), Seq(1L), Seq(2L)))
+    // the streaming sink asks for its table the way a reader does
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val streamDir = s"${outDir}_stream"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(streamDir))
+    val in = MemoryStream[(Long, Int)]
+    val q = in.toDF().toDF("id", "i").writeStream.format("docstore")
+      .option("path", s"$streamDir/data").option("checkpointLocation", s"$streamDir/ckpt")
+      .start()
+    try { in.addData((1L, 7), (2L, 14)); q.processAllAvailable() } finally q.stop()
+    val streamed = spark.read.format("docstore").option("path", s"$streamDir/data").load()
+    assert(streamed.orderBy("id").collect().map(_.getAs[Long]("i")).toSeq == Seq(7L, 14L))
+  }
+
+  test("docstore write: a type the sink does not write fails on the driver, naming the column") {
+    val outDir = "/tmp/graft_docstore_spec/write_refused"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(outDir))
+    def write(c: org.apache.spark.sql.Column) =
+      spark.range(2).select(col("id"), c.as("x"))
+        .write.format("docstore").option("path", outDir).mode("append").save()
+    // thrown by the write builder: a task's failure would arrive wrapped
+    // in a SparkException
+    val dec = intercept[UnsupportedOperationException](write(col("id").cast(DecimalType(10, 2))))
+    assert(dec.getMessage.contains("column x has type decimal(10,2)") &&
+      dec.getMessage.contains("cast it to DOUBLE"), dec.getMessage)
+    val m = intercept[UnsupportedOperationException](write(map(lit("k"), col("id"))))
+    assert(m.getMessage.contains("column x has type map<string,bigint>"), m.getMessage)
+    assert(!Files.exists(Paths.get(outDir)) ||
+      Files.list(Paths.get(outDir)).count() == 0)
+  }
 }

@@ -9,7 +9,7 @@ class SchemaInferenceSpec extends AnyFunSuite {
   import DocValue._
 
   private def infer(lines: String*): StructType =
-    SchemaInference.infer(lines.map(ExtJson.parse))._1
+    SchemaInference.infer(lines.map(ExtJson.parse))
 
   private def tpe(s: StructType, name: String): DataType =
     s(s.fieldIndex(name)).dataType
@@ -63,7 +63,7 @@ class SchemaInferenceSpec extends AnyFunSuite {
   }
 
   test("flatten=false maps Document to JSON VARCHAR") {
-    val (s, _) = SchemaInference.infer(
+    val s = SchemaInference.infer(
       Seq(ExtJson.parse("""{"user":{"id":1},"v":2}""")), flatten = false)
     assert(tpe(s, "user") == StringType)
     assert(tpe(s, "v") == LongType)
@@ -93,7 +93,7 @@ class SchemaInferenceSpec extends AnyFunSuite {
   }
 
   test("empty sample yields empty schema (empty-collection edge case)") {
-    assert(SchemaInference.infer(Seq.empty)._1.isEmpty)
+    assert(SchemaInference.infer(Seq.empty).isEmpty)
   }
 
   test("extended-json render round-trips") {
