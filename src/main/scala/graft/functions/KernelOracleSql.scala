@@ -1,5 +1,7 @@
 package graft.functions
 
+import graft.operators.TextAnalysis.{dropLastWordSql, toksSql, wordsSql}
+
 /** DuckDB-SQL replicas of the [[TextHashes]] kernels, used to give the
   * hash-based operators (dd02 minhash, dd03 simhash, t04 fingerprint)
   * full value-level DuckDB oracles instead of rows-only checks.
@@ -59,19 +61,16 @@ object KernelOracleSql {
   private def toSigned(u: String): String =
     s"CASE WHEN $u >= $Sign THEN $u - $P64 ELSE $u END::BIGINT"
 
-  /** The planted near-dup corpus (mirrors Dedup.plantedDocs). */
-  private def corpusCte(plantOffset: Long): String =
+  /** The planted near-dup corpus (mirrors Dedup.plantedDocs): every
+    * tenth document again at `plantOffset` with its last word dropped,
+    * with the `extra` select items of both copies. */
+  private[graft] def corpusCte(plantOffset: Long,
+      extra: String = ""): String =
     s"""corpus AS (
-       |  SELECT doc_id, text FROM documents
+       |  SELECT doc_id, text$extra FROM documents
        |  UNION ALL
-       |  SELECT doc_id + $plantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
+       |  SELECT doc_id + $plantOffset, ${dropLastWordSql("text")}$extra
        |  FROM documents WHERE doc_id % 10 = 0)""".stripMargin
-
-  /** Whitespace tokens of lower(text), empties dropped (= TextHashes.tokens
-    * on ASCII input).
-    */
-  private val toksExpr =
-    "list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'), t -> t <> '')"
 
   /** BPE merge-loop CTE chain — the ONE replica of [[Bpe]]'s
     * leftmost-min-rank recursion, shared by t21 and p16 (review r11:
@@ -155,7 +154,7 @@ object KernelOracleSql {
     */
   private def minhashSigCtes(srcCte: String): String =
     s"""toks AS (
-       |  SELECT doc_id, text, $toksExpr AS ts
+       |  SELECT doc_id, text, ${toksSql("text")} AS ts
        |  FROM $srcCte),
        |sets AS (
        |  SELECT doc_id,
@@ -260,10 +259,8 @@ object KernelOracleSql {
     s"""WITH ${corpusCte(plantOffset)},
        |ctoks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
-       |  FROM corpus WHERE len(list_filter(string_split_regex(text,
-       |    '[ \\t\\n\\r]+'), t -> t <> '')) > 0),
+       |    ${wordsSql("text")} AS ws
+       |  FROM corpus WHERE len(${wordsSql("text")}) > 0),
        |cchunks AS (
        |  SELECT doc_id,
        |    unnest(list_transform(range(0,
@@ -300,8 +297,7 @@ object KernelOracleSql {
        |evaldocs AS (SELECT doc_id, text FROM base WHERE doc_id % 97 = 0),
        |etoks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM evaldocs),
        |para AS (
        |  SELECT doc_id + 3000000 AS doc_id,
@@ -356,12 +352,11 @@ object KernelOracleSql {
     s"""WITH base AS (SELECT doc_id, text FROM documents),
        |b3 AS (
        |  SELECT doc_id + 5000000 AS doc_id,
-       |    regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '') AS text
+       |    ${dropLastWordSql("text")} AS text
        |  FROM base WHERE doc_id % 7 = 3),
        |b5t AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM base WHERE doc_id % 7 = 5),
        |b5 AS (
        |  SELECT doc_id + 6000000 AS doc_id,
@@ -427,13 +422,12 @@ object KernelOracleSql {
        |  FROM base WHERE doc_id % 7 = 2
        |  UNION ALL
        |  SELECT doc_id + 5000000,
-       |    regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
+       |    ${dropLastWordSql("text")}
        |  FROM base WHERE doc_id % 7 = 3
        |  UNION ALL
        |  SELECT doc_id + 6000000,
        |    array_to_string(list_transform(
-       |      list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |        t -> t <> ''), w -> w || '~new'), ' ')
+       |      ${wordsSql("text")}, w -> w || '~new'), ' ')
        |  FROM base WHERE doc_id % 7 = 5),
        |src AS (SELECT doc_id, text, 0 AS is_wave FROM base
        |  UNION ALL SELECT doc_id, text, 1 FROM wv),
@@ -486,8 +480,7 @@ object KernelOracleSql {
       s"""  UNION ALL
          |  SELECT doc_id + ${(20L + r) * 1000000L},
          |    array_to_string(list_transform(
-         |      list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-         |        t -> t <> ''),
+         |      ${wordsSql("text")},
          |      (w, i) -> CASE WHEN i % $m = 0 THEN 'xq' ELSE w END), ' ')
          |  FROM documents WHERE doc_id % 31 = $r""".stripMargin
     }.mkString("\n")
@@ -495,13 +488,12 @@ object KernelOracleSql {
        |  SELECT doc_id, text FROM documents
        |  UNION ALL
        |  SELECT doc_id + 29000000,
-       |    regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
+       |    ${dropLastWordSql("text")}
        |  FROM documents WHERE doc_id % 10 = 0
        |$ladder),
        |ttoks AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ts
+       |    ${toksSql("text")} AS ts
        |  FROM corpus),
        |tsets AS (
        |  SELECT doc_id,
@@ -551,12 +543,11 @@ object KernelOracleSql {
     s"""WITH base AS (SELECT doc_id, text FROM documents),
        |b3 AS (
        |  SELECT doc_id + 5000000 AS doc_id,
-       |    regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '') AS text
+       |    ${dropLastWordSql("text")} AS text
        |  FROM base WHERE doc_id % 7 = 3),
        |b5t AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM base WHERE doc_id % 7 = 5),
        |b5 AS (
        |  SELECT doc_id + 6000000 AS doc_id,
@@ -658,7 +649,7 @@ object KernelOracleSql {
 
   private def simhashCtes(srcCte: String): String =
     s"""toks AS (
-       |  SELECT doc_id, unnest($toksExpr) AS tok
+       |  SELECT doc_id, unnest(${toksSql("text")}) AS tok
        |  FROM $srcCte),
        |tokh AS (
        |  SELECT doc_id, ${fnv1a("tok")} AS f0
@@ -762,7 +753,7 @@ object KernelOracleSql {
   private def bucketChainCtes(carry: Seq[String]): String = {
     val cs = carry.mkString(", ")
     s"""toks AS (
-       |  SELECT $cs, text, $toksExpr AS ts FROM documents),
+       |  SELECT $cs, text, ${toksSql("text")} AS ts FROM documents),
        |bs AS (
        |  SELECT $cs,
        |    CASE WHEN len(ts) < 1 THEN [(${fnv1a("text")}) % 64::HUGEINT]
@@ -797,7 +788,7 @@ object KernelOracleSql {
        |  SELECT doc_id, n_tokens, score_milli FROM (${p11Sql(weights)})),
        |bad AS (
        |  SELECT doc_id, source,
-       |    CAST(len(list_filter($toksExpr, x -> x IN ($bl)))
+       |    CAST(len(list_filter(${toksSql("text")}, x -> x IN ($bl)))
        |      AS BIGINT) AS n_bad
        |  FROM documents)
        |SELECT b.doc_id, b.source, p.n_tokens, b.n_bad, p.score_milli,

@@ -359,15 +359,10 @@ object Dedup {
     * collisions are negligible at any realistic df).
     */
   private val pairCtes: String =
-    s"""corpus AS (
-       |  SELECT doc_id, text, source FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', ''),
-       |    source FROM documents WHERE doc_id % 10 = 0),
+    s"""${graft.functions.KernelOracleSql.corpusCte(PlantOffset, ", source")},
        |toks AS (
        |  SELECT doc_id, source, text,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ts
+       |    ${TextAnalysis.toksSql("text")} AS ts
        |  FROM corpus),
        |sets AS (
        |  SELECT doc_id, source,
@@ -447,15 +442,12 @@ object Dedup {
        |  SELECT doc_id, text, source FROM documents
        |  UNION ALL
        |  SELECT doc_id + $PlantOffset,
-       |    array_to_string(list_filter(string_split_regex(text,
-       |      '[ \\t\\n\\r]+'), t -> t <> '')[1:greatest(3,
-       |      len(list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |        t -> t <> '')) // 2)], ' '),
+       |    array_to_string(${TextAnalysis.wordsSql("text")}[1:greatest(3,
+       |      len(${TextAnalysis.wordsSql("text")}) // 2)], ' '),
        |    source FROM documents WHERE doc_id % 7 = 1),
        |toks AS (
        |  SELECT doc_id, source, text,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ts
+       |    ${TextAnalysis.toksSql("text")} AS ts
        |  FROM corpus),
        |sets AS (
        |  SELECT doc_id, source,
@@ -625,15 +617,10 @@ object Dedup {
   /** Oracle over gram STRINGS (the dd04 argument: 64-bit FNV collisions
     * are negligible, so hashed-gram df equals string-gram df). */
   val dd11Sql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
-       |  FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH ${graft.functions.KernelOracleSql.corpusCte(PlantOffset)},
        |toks AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ts
+       |    ${TextAnalysis.toksSql("text")} AS ts
        |  FROM corpus),
        |grams AS (
        |  SELECT doc_id,
@@ -835,17 +822,11 @@ object Dedup {
   }
 
   val dd07Sql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
-       |  FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH ${graft.functions.KernelOracleSql.corpusCte(PlantOffset)},
        |toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
-       |  FROM corpus WHERE len(list_filter(string_split_regex(text,
-       |    '[ \\t\\n\\r]+'), t -> t <> '')) > 0),
+       |    ${TextAnalysis.wordsSql("text")} AS ws
+       |  FROM corpus WHERE len(${TextAnalysis.wordsSql("text")}) > 0),
        |chunks AS (
        |  SELECT doc_id,
        |    unnest(list_transform(range(0,
@@ -915,17 +896,11 @@ object Dedup {
   }
 
   val dd12Sql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
-       |  FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH ${graft.functions.KernelOracleSql.corpusCte(PlantOffset)},
        |toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
-       |  FROM corpus WHERE len(list_filter(string_split_regex(text,
-       |    '[ \\t\\n\\r]+'), t -> t <> '')) > 0),
+       |    ${TextAnalysis.wordsSql("text")} AS ws
+       |  FROM corpus WHERE len(${TextAnalysis.wordsSql("text")}) > 0),
        |chunks AS (
        |  SELECT doc_id,
        |    unnest(list_transform(range(0,
@@ -1106,15 +1081,10 @@ object Dedup {
     * indices are 1-based where Spark's are 0-based — the `i - 1` in the
     * final filter is that conversion. */
   val dd14Sql: String =
-    s"""WITH corpus AS (
-       |  SELECT doc_id, text FROM documents
-       |  UNION ALL
-       |  SELECT doc_id + $PlantOffset, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
-       |  FROM documents WHERE doc_id % 10 = 0),
+    s"""WITH ${graft.functions.KernelOracleSql.corpusCte(PlantOffset)},
        |toks AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ts
+       |    ${TextAnalysis.toksSql("text")} AS ts
        |  FROM corpus),
        |nz AS (SELECT * FROM toks WHERE len(ts) > 0),
        |gidx AS (
@@ -1643,9 +1613,7 @@ object Dedup {
     val corpus = base.select(col("vec_id"), col("embedding"))
       .unionAll(base.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + PlantOffset).as("vec_id"), col("embedding")))
-    val centroids = base.filter(col("vec_id") % 61 === 3)
-      .orderBy(col("vec_id")).limit(8)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+    val centroids = Similarity.ivfCentroids(base)
     // Nearest-cell assignment: Similarity.assignCells — a map-only fold
     // over the c_id-sorted broadcast centroid array (lowest-c_id wins
     // ties, exactly the oracle's (cos DESC, c_id ASC) window order),
@@ -1676,15 +1644,10 @@ object Dedup {
        |  UNION ALL
        |  SELECT vec_id + $PlantOffset, embedding FROM embeddings
        |  WHERE vec_id % 25 = 0),
-       |cent AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS c_vec
-       |  FROM embeddings WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8),
-       |assigned AS (
-       |  SELECT vec_id, embedding, cell FROM (
-       |    SELECT v.vec_id, v.embedding, c.c_id AS cell,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |             ORDER BY list_cosine_similarity(v.embedding::DOUBLE[],
-       |               c.c_vec) DESC, c.c_id) AS rn
-       |    FROM corpus v, cent c) WHERE rn = 1)
+       |cent AS (${Similarity.centroidsSql("embeddings",
+         "embedding::DOUBLE[]")}),
+       |assigned AS (${Similarity.nearestCellsSql("corpus", "vec_id",
+         "embedding::DOUBLE[]", Seq("vec_id", "embedding"), "cent", 1)})
        |SELECT a.vec_id, a.cell FROM assigned a
        |WHERE EXISTS (SELECT 1 FROM assigned b
        |  WHERE b.cell = a.cell AND b.vec_id < a.vec_id

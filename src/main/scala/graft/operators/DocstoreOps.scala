@@ -32,6 +32,42 @@ object DocstoreOps {
     s"/tmp/graft_docstore/$sf"
   }
 
+  /** Per-JVM run nonce (ADVICE r14): stable within a run, so a replayed
+    * write hits the same collection, but unique across concurrent driver
+    * processes sharing /tmp. */
+  private val runNonce: String =
+    java.lang.Long.toHexString(ProcessHandle.current().pid()) + "_" +
+      java.lang.Long.toHexString(
+        java.util.concurrent.ThreadLocalRandom.current().nextLong())
+
+  private val scratchPaths =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private lazy val scratchCleanup: Unit =
+    sys.addShutdownHook(dropScratchCollections())
+
+  /** The docstore collection a key writes and reads back:
+    * `/tmp/graft_docstore/<name>_<dir>_<nonce>`, one per key, sf dir and
+    * JVM, so two drivers on one sf dir never interleave their writes. The
+    * key returns a lazy frame over the collection, so the collection
+    * stays until the JVM exits, when a shutdown hook deletes it
+    * ([[dropScratchCollections]]). */
+  def scratchCollection(name: String, dir: String): String = {
+    scratchCleanup
+    val path = s"/tmp/graft_docstore/${name}_" +
+      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + runNonce
+    scratchPaths.add(path)
+    path
+  }
+
+  /** Deletes every collection [[scratchCollection]] handed out in this
+    * JVM; a frame still reading one of them fails after this. */
+  private[graft] def dropScratchCollections(): Unit =
+    scratchPaths.forEach { p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
+      scratchPaths.remove(p)
+    }
+
   /** events table → JSONL docs dir (idempotent). Doc shape exercises the
     * reference's inference surface: ObjectId `_id`, `$date` timestamp,
     * nested `user` sub-document (→ flattened `user_id`/`user_segment`),
@@ -378,7 +414,7 @@ object DocstoreOps {
     * rides along.
     */
   def d15MergeUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"/tmp/graft_docstore/merge_d15_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+    val path = scratchCollection("merge_d15", dir)
     val ord = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         col("o_totalprice").cast(DoubleType).as("total"))

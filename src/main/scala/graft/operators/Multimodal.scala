@@ -296,7 +296,7 @@ object Multimodal {
     s"""corpus AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL
-      |  SELECT doc_id + 999999, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
+      |  SELECT doc_id + 999999, ${TextAnalysis.dropLastWordSql("text")}
       |  FROM documents WHERE doc_id % 9 = 0),
       |med AS (
       |  SELECT doc_id,
@@ -802,15 +802,14 @@ object Multimodal {
   private val pairCorpusCtes: String =
     s"""ptoks AS (
       |  SELECT doc_id, text,
-      |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-      |      t -> t <> '') AS ws
+      |    ${TextAnalysis.wordsSql("text")} AS ws
       |  FROM documents),
       |pairsrc AS (
       |  SELECT doc_id, text AS img_txt,
       |    array_to_string(ws[1:12], ' ') AS caption FROM ptoks
       |  UNION ALL
       |  SELECT doc_id + 7000000,
-      |    regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', ''),
+      |    ${TextAnalysis.dropLastWordSql("text")},
       |    array_to_string(list_transform(ws[1:12], w -> w || '~re'), ' ')
       |  FROM ptoks WHERE doc_id % 11 = 1
       |  UNION ALL
@@ -1028,8 +1027,7 @@ object Multimodal {
     s"""WITH RECURSIVE
       |docw AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-      |      t -> t <> '') AS ws
+      |    ${TextAnalysis.wordsSql("text")} AS ws
       |  FROM documents),
       |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
       |med AS (
@@ -1185,8 +1183,7 @@ object Multimodal {
     s"""WITH RECURSIVE
       |docw AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-      |      t -> t <> '') AS ws
+      |    ${TextAnalysis.wordsSql("text")} AS ws
       |  FROM documents),
       |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
       |toks AS (

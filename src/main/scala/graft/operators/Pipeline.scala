@@ -115,9 +115,8 @@ object Pipeline {
   }
 
   val p03Sql: String =
-    """SELECT source, COUNT(*) AS docs_kept,
-      |  CAST(SUM(len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |    t -> t <> ''))) AS BIGINT) AS token_budget
+    s"""SELECT source, COUNT(*) AS docs_kept,
+      |  CAST(SUM(len(${TextAnalysis.toksSql("text")})) AS BIGINT) AS token_budget
       |FROM documents
       |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) <=
       |  CASE WHEN CAST(substr(source, 4) AS BIGINT) % 2 = 0
@@ -415,10 +414,9 @@ object Pipeline {
       .select(col("doc_id"), col("source"), col("tokens")), 20000L)
 
   val p05Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      t -> t <> '')) AS BIGINT) AS tokens
+      |    CAST(len(${TextAnalysis.toksSql("text")}) AS BIGINT) AS tokens
       |  FROM documents),
       |packed AS (
       |  SELECT doc_id, source, tokens,
@@ -669,10 +667,9 @@ object Pipeline {
   }
 
   val p10Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id, source,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      t -> t <> '')) AS BIGINT) AS tokens
+      |    CAST(len(${TextAnalysis.toksSql("text")}) AS BIGINT) AS tokens
       |  FROM documents),
       |c AS (
       |  SELECT doc_id, source, tokens,
@@ -1205,8 +1202,7 @@ object Pipeline {
     s"""WITH RECURSIVE
        |docw AS (
        |  SELECT doc_id, source,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${TextAnalysis.wordsSql("text")} AS ws
        |  FROM documents),
        |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
        |toks AS (
@@ -1486,8 +1482,7 @@ object Pipeline {
     s"""WITH RECURSIVE
        |docw AS (
        |  SELECT doc_id, source,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${TextAnalysis.wordsSql("text")} AS ws
        |  FROM documents),
        |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
        |toks AS (
@@ -1656,10 +1651,9 @@ object Pipeline {
 
   /** Same round6 kernels, same integer lanes (HUGEINT for the DIVs). */
   val p21Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id, source,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '') AS ts
+      |    ${TextAnalysis.toksSql("text")} AS ts
       |  FROM documents),
       |uni AS (SELECT t, COUNT(*) AS cnt
       |  FROM (SELECT unnest(ts) AS t FROM d) GROUP BY 1),
@@ -1784,8 +1778,7 @@ object Pipeline {
     s"""WITH RECURSIVE
        |docw AS (
        |  SELECT doc_id, source,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${TextAnalysis.wordsSql("text")} AS ws
        |  FROM documents),
        |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
        |tt AS (

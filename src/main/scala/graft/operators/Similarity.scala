@@ -17,6 +17,26 @@ import graft.functions.{vectors => V}
   * corpus is bucketed by coarse centroid once (write-time partitioning in
   * a real deployment) and each query probes only `nprobe` cells, cutting
   * the scan by cells/nprobe.
+  *
+  * The oracle composes like the Spark side: each ANN primitive has one
+  * DuckDB definition beside its Spark twin, and the s01–s20 and dd09
+  * oracle strings are built from them, never from Spark rules (the two
+  * engines stay independent):
+  *  - the query set [[queriesSql]] ([[queriesDf]]), the grown corpus and
+  *    its queries [[grownSql]]/[[grownQueriesSql]]
+  *    ([[grownCorpus]]/[[grownQueries]]);
+  *  - the quantizer pick [[centroidsSql]] ([[ivfCentroids]],
+  *    [[graphCentroids]]) and the nearest-cell window [[nearestCellsSql]],
+  *    which is both the assignment ([[assignCells]]) and the probe
+  *    ([[probeCells]], [[probeRanks]]);
+  *  - the graph walk [[graphBuildSql]] + [[graphWalkSql]]
+  *    ([[buildGraphEdges]], [[beamVisited]]), unsuffixed for s18/s20 and
+  *    suffixed per tier for s19, and its top-10 [[walkTopSql]]
+  *    ([[walkTop]]);
+  *  - the evaluation algebra: the exact baselines [[s01ExactSql]]
+  *    ([[s01Exact]]) and [[exactTopSql]] ([[grownExact]]), and recall@k
+  *    [[hitsSql]]/[[recallColsSql]] ([[hitCounts]]/[[recallCols]]), with
+  *    [[recallVsExact]] (s09, s10) and [[walkRecall]] (s18, s19) on top.
   */
 object Similarity {
 
@@ -29,6 +49,55 @@ object Similarity {
   private def queriesDf(spark: SparkSession, dir: String): DataFrame =
     Tables(spark, dir, "embeddings").filter(queryPred)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+
+  /** SQL twin of [[queriesDf]]: the query set as (q_id, q_vec) with
+    * q_vec = `vec` over `embeddings`, plus any `extra` select items. */
+  private def queriesSql(vec: String = "embedding::DOUBLE[]",
+      extra: String = ""): String =
+    s"""SELECT vec_id AS q_id, $vec AS q_vec$extra
+       |  FROM embeddings WHERE vec_id < 5""".stripMargin
+
+  /** recall@k's hit count: `left` joined with broadcast `right` on
+    * (q_id, vec_id), counted per `keys`. */
+  private def hitCounts(left: DataFrame, right: DataFrame,
+      keys: String*): DataFrame =
+    left.join(broadcast(right), Seq("q_id", "vec_id"))
+      .groupBy(keys.map(col): _*).agg(count(lit(1)).as("hits"))
+
+  /** recall@k's columns over a frame left-joined with [[hitCounts]]:
+    * hits (0 when a query has none) and hits / `n` rounded to 4dp. */
+  private def recallCols(n: Column): Seq[Column] = {
+    val hits = coalesce(col("hits"), lit(0L))
+    Seq(hits.as("hits"), round(hits.cast(DoubleType) / n, 4).as("recall"))
+  }
+
+  /** SQL twin of [[hitCounts]]: the rows of `approx` found in `exact`,
+    * counted per `keys`. */
+  private def hitsSql(approx: String, exact: String,
+      keys: Seq[String] = Seq("q_id")): String =
+    s"""SELECT ${keys.map("a." + _).mkString(", ")}, COUNT(*) AS hits
+       |  FROM $approx a JOIN $exact e
+       |    ON e.q_id = a.q_id AND e.vec_id = a.vec_id
+       |  GROUP BY ${keys.indices.map(_ + 1).mkString(", ")}""".stripMargin
+
+  /** SQL twin of [[recallCols]] over a `hits` expression that is NULL for
+    * a query without hits. */
+  private def recallColsSql(hits: String, n: String): String =
+    s"""CAST(COALESCE($hits, 0) AS BIGINT) AS hits,
+       |  round(CAST(COALESCE($hits, 0) AS DOUBLE) / $n, 4) AS recall"""
+      .stripMargin
+
+  /** Exact top-10 per query of `qs` (q_id, q_vec) over the rows of `rel`
+    * ranked by cosine to `vec` (cos DESC, vec_id), self excluded: the
+    * ground-truth window of s10's prefix tier and of the grown corpus. */
+  private def exactTopSql(qs: String, rel: String, vec: String): String =
+    s"""SELECT q_id, vec_id FROM (
+       |    SELECT q.q_id, e.vec_id,
+       |      row_number() OVER (PARTITION BY q.q_id
+       |        ORDER BY list_cosine_similarity(q.q_vec, e.$vec) DESC,
+       |          e.vec_id) AS rn
+       |    FROM $qs q, $rel e WHERE e.vec_id <> q.q_id) WHERE rn <= $K"""
+      .stripMargin
 
   /** Map-only nearest-centroid assignment (shared by s02's IVF build and
     * dd09's SemDeDup quantizer): adds `cell` = the c_id of the nearest
@@ -71,6 +140,20 @@ object Similarity {
       .filter(col("cell") >= 0) // empty-quantizer guard: no cells, no rows
       .drop("cents")
   }
+
+  /** SQL twin of [[assignCells]] (n = 1) and of the probes
+    * ([[probeCells]] and [[probeRanks]], n = nprobe): each row of `rel` with its `n` nearest
+    * cells of `cent` (c_id, c_vec) by (cosine of `vec` DESC, c_id), one
+    * row per cell with its rank `rn`. Keeps the `cols` of `rel`; `key`
+    * identifies a row. */
+  private[operators] def nearestCellsSql(rel: String, key: String,
+      vec: String, cols: Seq[String], cent: String, n: Int): String =
+    s"""SELECT ${cols.mkString(", ")}, cell, rn FROM (
+       |    SELECT ${cols.map("r." + _).mkString(", ")}, c.c_id AS cell,
+       |      row_number() OVER (PARTITION BY r.$key
+       |        ORDER BY list_cosine_similarity(r.$vec, c.c_vec) DESC,
+       |          c.c_id) AS rn
+       |    FROM $rel r, $cent c) WHERE rn <= $n""".stripMargin
 
   /** Exact per-query top-k in the shape that survives 100× (s05's
     * TakeOrdered shape generalized to many queries): stage 1 keeps a
@@ -129,8 +212,7 @@ object Similarity {
     * ROUND(,4) absorbs the remaining formula-level ulps.
     */
   val s01Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql()}),
       |scored AS (
       |  SELECT q.q_id, e.vec_id, e.label,
       |         list_cosine_similarity(q.q_vec, e.embedding::DOUBLE[]) AS c
@@ -143,14 +225,39 @@ object Similarity {
       |SELECT q_id, vec_id, label, ROUND(c, 4) AS cos, rank
       |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
 
+  /** s01's exact top-10 as (q_id, vec_id, `extra`…), checkpointed: the
+    * ground truth s09, s10, s18 and s20 grade against. Query-sized. */
+  private def s01Exact(spark: SparkSession, dir: String,
+      extra: Column*): DataFrame =
+    Tables.ckptTiny(s01BruteForce(spark, dir)
+      .select(col("q_id") +: col("vec_id") +: extra: _*))
+
+  /** SQL twin of [[s01Exact]]. */
+  private val s01ExactSql: String = s"SELECT q_id, vec_id FROM ($s01Sql)"
+
   // ---------------------------------------------------------------- s02
-  /** Seeded coarse quantizer shared by the s02/s07 index builds and
-    * their probes: 8 fixed corpus vectors as centroids (ORDER BY before
+  /** Seeded coarse quantizer shared by the s02/s07 index builds, their
+    * probes and dd09: 8 fixed corpus vectors as centroids (ORDER BY before
     * LIMIT so the pick is deterministic cross-engine). */
-  private def ivfCentroids(corpus: DataFrame): DataFrame =
+  private[operators] def ivfCentroids(corpus: DataFrame): DataFrame =
     corpus.filter(col("vec_id") % 61 === 3)
-      .orderBy(col("vec_id")).limit(8)
+      .orderBy(col("vec_id")).limit(IvfCells)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+
+  private val IvfCells = 8
+
+  /** SQL twin of the quantizer pick of [[ivfCentroids]] and
+    * [[graphCentroids]]: the first `n` seeded rows of `rel`, vector `vec`
+    * as c_vec. */
+  private[operators] def centroidsSql(rel: String, vec: String,
+      n: String = IvfCells.toString): String =
+    s"""SELECT vec_id AS c_id, $vec AS c_vec
+       |  FROM $rel WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT $n"""
+      .stripMargin
+
+  /** The IVF quantizer over `embeddings` in SQL, as CTE `cent`. */
+  private val ivfCentSql: String =
+    s"cent AS (${centroidsSql("embeddings", "embedding::DOUBLE[]")})"
 
   /** s02's INVERTED FILE — (vec_id, label, cell, vector) — materialized
     * ONCE per embeddings generation (VERDICT r10 #3: production vector
@@ -167,6 +274,23 @@ object Similarity {
         .select(col("vec_id"), col("label"), col("cell"), col("embedding"))
     }
 
+  /** The probe: each query's `nprobe` nearest cells of `cents` by
+    * (cosine DESC, c_id), as (q_id, q_vec, cell). Per-query rows are
+    * bounded by the centroid count, so a window-free sort/slice agg keeps
+    * q_id out of every window partition in the plan. */
+  private def probeCells(qs: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    qs.crossJoin(broadcast(cents))
+      .select(col("q_id"), col("q_vec"), col("c_id"),
+        V.cosine_sim(col("q_vec"), col("c_vec")).as("q_cos"))
+      .groupBy(col("q_id"))
+      .agg(first(col("q_vec")).as("q_vec"),
+        slice(array_sort(collect_list(
+          struct((col("q_cos") * -1).as("__n"), col("c_id")))), 1, nprobe)
+          .as("__top"))
+      .select(col("q_id"), col("q_vec"), explode(col("__top")).as("f"))
+      .select(col("q_id"), col("q_vec"), col("f.c_id").as("cell"))
+
   /** IVF-style ANN: coarse quantizer = 8 seeded centroids, corpus
     * assigned to nearest cell ONCE into the inverted-file artifact
     * ([[ensureIvfCellsArtifact]]); queries probe the 2 nearest cells
@@ -180,20 +304,7 @@ object Similarity {
     // plan audit pins the consumer plan free of the assign fold
     val assigned = ensureIvfCellsArtifact(spark, dir)
 
-    // probe: each query picks its 2 nearest cells — per-query rows are
-    // bounded by the centroid count, so a window-free sort/slice agg
-    // keeps q_id out of every window partition in the plan
-    val probes = queriesDf(spark, dir).crossJoin(broadcast(centroids))
-      .select(col("q_id"), col("q_vec"), col("c_id"),
-        V.cosine_sim(col("q_vec"), col("c_vec")).as("q_cos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_vec")).as("q_vec"),
-        slice(array_sort(collect_list(
-          struct((col("q_cos") * -1).as("__n"), col("c_id")))), 1, 2)
-          .as("__top"))
-      .select(col("q_id"), col("q_vec"),
-        explode(col("__top")).as("f"))
-      .select(col("q_id"), col("q_vec"), col("f.c_id").as("cell"))
+    val probes = probeCells(queriesDf(spark, dir), centroids, 2)
 
     // search only the probed cells; same bounded local-topk + tiny merge
     // shape as s01 (the probed slice of the corpus is still data-sized)
@@ -211,34 +322,23 @@ object Similarity {
     * deterministic and oracle-checkable.
     */
   val s02Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
-      |cent AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS c_vec
-      |  FROM embeddings WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8),
-      |assigned AS (
-      |  SELECT vec_id, label, embedding, cell FROM (
-      |    SELECT e.vec_id, e.label, e.embedding, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
-      |               c.c_vec) DESC, c.c_id) AS rn
-      |    FROM embeddings e, cent c) WHERE rn = 1),
-      |probes AS (
-      |  SELECT q_id, q_vec, cell FROM (
-      |    SELECT q.q_id, q.q_vec, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY q.q_id
-      |             ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-      |               c.c_id) AS rn
-      |    FROM q, cent c) WHERE rn <= 2),
-      |ranked AS (
-      |  SELECT p.q_id, a.vec_id, a.label, a.cell,
-      |         list_cosine_similarity(p.q_vec, a.embedding::DOUBLE[]) AS c,
-      |         row_number() OVER (PARTITION BY p.q_id
-      |           ORDER BY list_cosine_similarity(p.q_vec,
-      |             a.embedding::DOUBLE[]) DESC, a.vec_id) AS rank
-      |  FROM assigned a JOIN probes p USING (cell)
-      |  WHERE a.vec_id <> p.q_id)
-      |SELECT q_id, vec_id, label, cell, ROUND(c, 4) AS cos, rank
-      |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
+    s"""WITH q AS (${queriesSql()}),
+       |$ivfCentSql,
+       |assigned AS (${nearestCellsSql("embeddings", "vec_id",
+         "embedding::DOUBLE[]", Seq("vec_id", "label", "embedding"), "cent",
+         1)}),
+       |probes AS (${nearestCellsSql("q", "q_id", "q_vec",
+         Seq("q_id", "q_vec"), "cent", 2)}),
+       |ranked AS (
+       |  SELECT p.q_id, a.vec_id, a.label, a.cell,
+       |         list_cosine_similarity(p.q_vec, a.embedding::DOUBLE[]) AS c,
+       |         row_number() OVER (PARTITION BY p.q_id
+       |           ORDER BY list_cosine_similarity(p.q_vec,
+       |             a.embedding::DOUBLE[]) DESC, a.vec_id) AS rank
+       |  FROM assigned a JOIN probes p USING (cell)
+       |  WHERE a.vec_id <> p.q_id)
+       |SELECT q_id, vec_id, label, cell, ROUND(c, 4) AS cos, rank
+       |FROM ranked WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin
 
   // ---------------------------------------------------------------- s03
   /** Per-vector int8 scalar quantization — the standard embedding
@@ -574,16 +674,8 @@ object Similarity {
     // (tiny frame — ≤ queries × nprobe rows — so the repeated q_vec
     // transform inside each lut column is irrelevant)
     val qv = expr("transform(q_vec, x -> CAST(x AS DOUBLE))")
-    val probes = queriesDf(spark, dir).crossJoin(broadcast(ivfCent))
-      .select(col("q_id"), col("q_vec"), col("c_id"),
-        V.cosine_sim(col("q_vec"), col("c_vec")).as("q_cos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_vec")).as("q_vec"),
-        slice(array_sort(collect_list(
-          struct((col("q_cos") * -1).as("__n"), col("c_id")))), 1, nprobe)
-          .as("__top"))
-      .select(col("q_id"), col("q_vec"), explode(col("__top")).as("f"))
-      .select(col("q_id") +: col("f.c_id").as("cell") +:
+    val probes = probeCells(queriesDf(spark, dir), ivfCent, nprobe)
+      .select(col("q_id") +: col("cell") +:
         (for (s <- 0 until m; c <- 0 until kCb)
           yield cdist(qv, c, s).as(s"lut_${s}_$c")): _*)
     def codeLut(s: Int): Column =
@@ -606,24 +698,15 @@ object Similarity {
     * codebook (subspace distances are bit-identical; the cross-subspace
     * sum is rounded to 4dp before ranking in BOTH engines). */
   val s07Sql: String =
-    """WITH q AS (
-      |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
-      |cent AS (
-      |  SELECT vec_id AS c_id, embedding::DOUBLE[] AS c_vec
-      |  FROM embeddings WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8),
+    s"""WITH q AS (${queriesSql()}),
+      |$ivfCentSql,
       |cb AS (
       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
       |    embedding::DOUBLE[] AS v
       |  FROM (SELECT * FROM embeddings WHERE vec_id % 97 = 11
       |        ORDER BY vec_id LIMIT 4)),
-      |assigned AS (
-      |  SELECT vec_id, embedding, cell FROM (
-      |    SELECT e.vec_id, e.embedding, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
-      |               c.c_vec) DESC, c.c_id) AS rn
-      |    FROM embeddings e, cent c) WHERE rn = 1),
+      |assigned AS (${nearestCellsSql("embeddings", "vec_id",
+        "embedding::DOUBLE[]", Seq("vec_id", "embedding"), "cent", 1)}),
       |codes AS (
       |  SELECT vec_id, s, MIN(ROW(d, c))[2] AS code FROM (
       |    SELECT a.vec_id, s.s, b.c,
@@ -634,13 +717,8 @@ object Similarity {
       |    CROSS JOIN (SELECT unnest(range(0, 8)) AS s) s
       |    CROSS JOIN cb b)
       |  GROUP BY vec_id, s),
-      |probes AS (
-      |  SELECT q_id, q_vec, cell FROM (
-      |    SELECT q.q_id, q.q_vec, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY q.q_id
-      |             ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-      |               c.c_id) AS rn
-      |    FROM q, cent c) WHERE rn <= 2),
+      |probes AS (${nearestCellsSql("q", "q_id", "q_vec",
+        Seq("q_id", "q_vec"), "cent", 2)}),
       |adc AS (
       |  SELECT p.q_id, a.vec_id, a.cell,
       |    ROUND(SUM(list_sum(list_transform(range(1, 9),
@@ -769,8 +847,7 @@ object Similarity {
   }
 
   val s08Sql: String =
-    s"""WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-       |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql()}),
        |scored AS (
        |  SELECT q.q_id, e.vec_id, e.embedding::DOUBLE[] AS emb,
        |    list_cosine_similarity(q.q_vec, e.embedding::DOUBLE[]) AS c
@@ -812,48 +889,48 @@ object Similarity {
     */
   def s09AnnRecall(spark: SparkSession, dir: String): DataFrame = {
     val (exact, approx) = graft.Par.run2( // independent chains (§2.6)
-      () => Tables.ckptTiny(s01BruteForce(spark, dir)
-        .select(col("q_id"), col("vec_id"))),
+      () => s01Exact(spark, dir),
       () => Tables.ckptTiny(s02Ivf(spark, dir)
         .select(col("q_id"), col("vec_id"))))
-    // every frame here is Q×10 rows, but a localCheckpointed RDD has no
-    // size statistics, so without the hints Spark plans sort-merge
-    // joins for 50-row inputs — the hint IS the bound's documentation
-    val hits = exact.join(broadcast(approx), Seq("q_id", "vec_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(broadcast(approx.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_approx"))), Seq("q_id"), "left_outer")
-      .join(broadcast(hits), Seq("q_id"), "left_outer")
-      .select(col("q_id"), col("n_exact"),
-        coalesce(col("n_approx"), lit(0L)).as("n_approx"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)).cast("double")
-          / col("n_exact"), 4).as("recall"))
-      .orderBy(col("q_id"))
+    recallVsExact(exact, approx, "n_approx")
   }
 
-  /** Oracle: the s01 and s02 replicas verbatim as subqueries, then the
-    * recall algebra. */
-  val s09Sql: String =
-    s"""WITH exact AS (SELECT q_id, vec_id FROM ($s01Sql)),
-       |approx AS (SELECT q_id, vec_id FROM ($s02Sql)),
-       |h AS (
-       |  SELECT e.q_id, COUNT(*) AS hits
-       |  FROM exact e JOIN approx a
-       |    ON a.q_id = e.q_id AND a.vec_id = e.vec_id
-       |  GROUP BY 1),
+  /** s09's and s10's recall table: per query of `exact`, its count, the
+    * count `nApprox` of `approx`, hits and recall@k. Every frame here is
+    * Q×10 rows, but a localCheckpointed RDD has no size statistics, so
+    * without the hints Spark plans sort-merge joins for 50-row inputs —
+    * the hint IS the bound's documentation. */
+  private def recallVsExact(exact: DataFrame, approx: DataFrame,
+      nApprox: String): DataFrame =
+    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
+      .join(broadcast(approx.groupBy(col("q_id"))
+        .agg(count(lit(1)).as(nApprox))), Seq("q_id"), "left_outer")
+      .join(broadcast(hitCounts(exact, approx, "q_id")), Seq("q_id"),
+        "left_outer")
+      .select(Seq(col("q_id"), col("n_exact"),
+        coalesce(col(nApprox), lit(0L)).as(nApprox)) ++
+        recallCols(col("n_exact")): _*)
+      .orderBy(col("q_id"))
+
+  /** SQL twin of [[recallVsExact]] over CTEs `exact` and `approx`. */
+  private def recallVsExactSql(approx: String, nApprox: String): String =
+    s"""h AS (${hitsSql(approx, "exact")}),
        |ne AS (SELECT q_id, COUNT(*) AS n_exact FROM exact GROUP BY 1),
-       |na AS (SELECT q_id, COUNT(*) AS n_approx FROM approx GROUP BY 1)
+       |na AS (SELECT q_id, COUNT(*) AS $nApprox FROM $approx GROUP BY 1)
        |SELECT ne.q_id, ne.n_exact,
-       |  CAST(COALESCE(na.n_approx, 0) AS BIGINT) AS n_approx,
-       |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-       |  round(CAST(COALESCE(h.hits, 0) AS DOUBLE) / ne.n_exact, 4)
-       |    AS recall
+       |  CAST(COALESCE(na.$nApprox, 0) AS BIGINT) AS $nApprox,
+       |  ${recallColsSql("h.hits", "ne.n_exact")}
        |FROM ne
        |LEFT JOIN na ON na.q_id = ne.q_id
        |LEFT JOIN h ON h.q_id = ne.q_id
        |ORDER BY ne.q_id""".stripMargin
+
+  /** Oracle: the s01 and s02 replicas verbatim as subqueries, then the
+    * recall algebra. */
+  val s09Sql: String =
+    s"""WITH exact AS ($s01ExactSql),
+       |approx AS (SELECT q_id, vec_id FROM ($s02Sql)),
+       |${recallVsExactSql("approx", "n_approx")}""".stripMargin
 
   // ---------------------------------------------------------------- s10
   /** Matryoshka (MRL, Kusupati 2022) truncated-dimension retrieval
@@ -880,54 +957,19 @@ object Similarity {
     val (trunc, exact) = graft.Par.run2( // independent chains (§2.6)
       () => Tables.ckptTiny(topKPerQuery(scoredT, K, Seq.empty)
         .select(col("q_id"), col("vec_id"))),
-      () => Tables.ckptTiny(s01BruteForce(spark, dir)
-        .select(col("q_id"), col("vec_id"))))
-    val hits = exact.join(broadcast(trunc), Seq("q_id", "vec_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-      .join(broadcast(trunc.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_trunc"))), Seq("q_id"), "left_outer")
-      .join(broadcast(hits), Seq("q_id"), "left_outer")
-      .select(col("q_id"), col("n_exact"),
-        coalesce(col("n_trunc"), lit(0L)).as("n_trunc"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)).cast("double")
-          / col("n_exact"), 4).as("recall"))
-      .orderBy(col("q_id"))
+      () => s01Exact(spark, dir))
+    recallVsExact(exact, trunc, "n_trunc")
   }
 
   /** Oracle: the s01 replica for ground truth + the same brute-force
-    * chain over the 16-dim prefixes. */
-  val s10Sql: String =
-    s"""WITH exact AS (SELECT q_id, vec_id FROM ($s01Sql)),
-       |tq AS (SELECT vec_id AS q_id, embedding[1:16]::DOUBLE[] AS q_vec
-       |  FROM embeddings WHERE vec_id < 5),
-       |tscored AS (
-       |  SELECT tq.q_id, e.vec_id,
-       |    list_cosine_similarity(tq.q_vec, e.embedding[1:16]::DOUBLE[])
-       |      AS c
-       |  FROM embeddings e, tq WHERE e.vec_id <> tq.q_id),
-       |trunc AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY c DESC, vec_id) AS rn
-       |    FROM tscored) WHERE rn <= 10),
-       |h AS (
-       |  SELECT e.q_id, COUNT(*) AS hits
-       |  FROM exact e JOIN trunc t
-       |    ON t.q_id = e.q_id AND t.vec_id = e.vec_id
-       |  GROUP BY 1),
-       |ne AS (SELECT q_id, COUNT(*) AS n_exact FROM exact GROUP BY 1),
-       |nt AS (SELECT q_id, COUNT(*) AS n_trunc FROM trunc GROUP BY 1)
-       |SELECT ne.q_id, ne.n_exact,
-       |  CAST(COALESCE(nt.n_trunc, 0) AS BIGINT) AS n_trunc,
-       |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-       |  round(CAST(COALESCE(h.hits, 0) AS DOUBLE) / ne.n_exact, 4)
-       |    AS recall
-       |FROM ne
-       |LEFT JOIN nt ON nt.q_id = ne.q_id
-       |LEFT JOIN h ON h.q_id = ne.q_id
-       |ORDER BY ne.q_id""".stripMargin
+    * window over the 16-dim prefixes. */
+  val s10Sql: String = {
+    val prefix = "embedding[1:16]::DOUBLE[]"
+    s"""WITH exact AS ($s01ExactSql),
+       |tq AS (${queriesSql(prefix)}),
+       |trunc AS (${exactTopSql("tq", "embeddings", prefix)}),
+       |${recallVsExactSql("trunc", "n_trunc")}""".stripMargin
+  }
 
   // ---------------------------------------------------------------- s11
   /** Matryoshka two-tier retrieval — the OPERATIONAL query path whose
@@ -973,8 +1015,7 @@ object Similarity {
   /** Oracle: the s10 prefix chain extended with the emb payload, then
     * the full-dim re-rank over the 50-row shortlist. */
   val s11Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql()}),
       |tscored AS (
       |  SELECT q.q_id, e.vec_id, e.embedding::DOUBLE[] AS emb,
       |    list_cosine_similarity(q.q_vec[1:16], e.embedding[1:16]::DOUBLE[])
@@ -1038,8 +1079,7 @@ object Similarity {
 
   /** Decide on raw cosine, present ROUND(,4) — s01's parity rule. */
   val s12Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql()}),
       |m AS (
       |  SELECT q.q_id, e.vec_id, e.label,
       |         list_cosine_similarity(q.q_vec, e.embedding::DOUBLE[]) AS c
@@ -1099,9 +1139,7 @@ object Similarity {
   /** Oracle: one scored CTE feeds both the filtered and the global
     * window rank; postfilter_hit = global rank ≤ 50. */
   val s13Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec,
-      |    label AS q_label
-      |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql(extra = ",\n    label AS q_label")}),
       |scored AS (
       |  SELECT q.q_id, q.q_label, e.vec_id, e.label,
       |         list_cosine_similarity(q.q_vec, e.embedding::DOUBLE[]) AS c
@@ -1195,8 +1233,7 @@ object Similarity {
   /** Hamming as sign-disagreement count over the zipped pair — no
     * 64-bit shift (DuckDB's `1::BIGINT << 63` hazard); rerank = s01. */
   val s14Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
+    s"""WITH q AS (${queriesSql()}),
       |ham AS (
       |  SELECT q.q_id, e.vec_id, e.label, e.embedding::DOUBLE[] AS v,
       |    q.q_vec,
@@ -1269,16 +1306,13 @@ object Similarity {
     val exact = top.filter(col("nprobe") === 8L)
       .select(col("q_id"), col("vec_id"))
     val ne = exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-    val hits = top.join(broadcast(exact), Seq("q_id", "vec_id"))
-      .groupBy(col("q_id"), col("nprobe")).agg(count(lit(1)).as("hits"))
     top.groupBy(col("q_id"), col("nprobe"))
       .agg(count(lit(1)).as("n_returned"))
       .join(broadcast(ne), Seq("q_id"))
-      .join(broadcast(hits), Seq("q_id", "nprobe"), "left_outer")
-      .select(col("q_id"), col("nprobe"), col("n_returned"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)).cast(DoubleType)
-          / col("n_exact"), 4).as("recall"))
+      .join(broadcast(hitCounts(top, exact, "q_id", "nprobe")),
+        Seq("q_id", "nprobe"), "left_outer")
+      .select(Seq(col("q_id"), col("nprobe"), col("n_returned")) ++
+        recallCols(col("n_exact")): _*)
       .orderBy(col("q_id"), col("nprobe"))
   }
 
@@ -1286,26 +1320,14 @@ object Similarity {
     * s02/s09 discipline: same centroid picks, same tie-breaks, so the
     * whole tuning curve is deterministic and oracle-checkable). */
   val s15Sql: String =
-    """WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5),
-      |cent AS (SELECT vec_id AS c_id, embedding::DOUBLE[] AS c_vec
-      |  FROM embeddings WHERE vec_id % 61 = 3 ORDER BY vec_id LIMIT 8),
-      |assigned AS (
-      |  SELECT vec_id, embedding, cell FROM (
-      |    SELECT e.vec_id, e.embedding, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY e.vec_id
-      |             ORDER BY list_cosine_similarity(e.embedding::DOUBLE[],
-      |               c.c_vec) DESC, c.c_id) AS rn
-      |    FROM embeddings e, cent c) WHERE rn = 1),
-      |prank AS (
-      |  SELECT q_id, q_vec, cell, pr FROM (
-      |    SELECT q.q_id, q.q_vec, c.c_id AS cell,
-      |           row_number() OVER (PARTITION BY q.q_id
-      |             ORDER BY list_cosine_similarity(q.q_vec, c.c_vec)
-      |               DESC, c.c_id) AS pr
-      |    FROM q, cent c)),
+    s"""WITH q AS (${queriesSql()}),
+      |$ivfCentSql,
+      |assigned AS (${nearestCellsSql("embeddings", "vec_id",
+        "embedding::DOUBLE[]", Seq("vec_id", "embedding"), "cent", 1)}),
+      |prank AS (${nearestCellsSql("q", "q_id", "q_vec",
+        Seq("q_id", "q_vec"), "cent", IvfCells)}),
       |scored AS (
-      |  SELECT p.q_id, p.pr, a.vec_id,
+      |  SELECT p.q_id, p.rn AS pr, a.vec_id,
       |         list_cosine_similarity(p.q_vec, a.embedding::DOUBLE[]) AS c
       |  FROM assigned a JOIN prank p ON p.cell = a.cell
       |  WHERE a.vec_id <> p.q_id),
@@ -1322,18 +1344,12 @@ object Similarity {
       |top AS (SELECT q_id, np, vec_id FROM ranked WHERE rank <= 10),
       |exact AS (SELECT q_id, vec_id FROM top WHERE np = 8),
       |ne AS (SELECT q_id, COUNT(*) AS n_exact FROM exact GROUP BY 1),
-      |h AS (
-      |  SELECT t.q_id, t.np, COUNT(*) AS hits
-      |  FROM top t JOIN exact e
-      |    ON e.q_id = t.q_id AND e.vec_id = t.vec_id
-      |  GROUP BY 1, 2),
+      |h AS (${hitsSql("top", "exact", Seq("q_id", "np"))}),
       |nr AS (SELECT q_id, np, COUNT(*) AS n_returned
       |  FROM top GROUP BY 1, 2)
       |SELECT nr.q_id, nr.np AS nprobe,
       |  CAST(nr.n_returned AS BIGINT) AS n_returned,
-      |  CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-      |  round(CAST(COALESCE(h.hits, 0) AS DOUBLE) / ne.n_exact, 4)
-      |    AS recall
+      |  ${recallColsSql("h.hits", "ne.n_exact")}
       |FROM nr
       |JOIN ne ON ne.q_id = nr.q_id
       |LEFT JOIN h ON h.q_id = nr.q_id AND h.np = nr.np
@@ -1435,6 +1451,33 @@ object Similarity {
       transform(col("q_vec"), x => abs(x)).as("q_vec")))
   }
 
+  /** SQL twin of [[grownCorpus]]: (vec_id, label, v, is_new). */
+  private val grownSql: String =
+    s"""SELECT vec_id, label, embedding::DOUBLE[] AS v, 0 AS is_new
+       |  FROM embeddings
+       |  UNION ALL
+       |  SELECT vec_id + $S16Off, label,
+       |    list_transform(embedding::DOUBLE[], x -> abs(x)), 1
+       |  FROM embeddings WHERE vec_id % 9 = 1""".stripMargin
+
+  /** SQL twin of [[grownQueries]]: (q_id, q_vec). */
+  private val grownQueriesSql: String =
+    s"""${queriesSql()}
+       |  UNION ALL
+       |  SELECT q_id + $S16Off, list_transform(q_vec, x -> abs(x))
+       |  FROM (${queriesSql()})""".stripMargin
+
+  /** The growth model's exact top-10 over the grown corpus: ground truth
+    * of s16 and s19. Query-sized, checkpointed. */
+  private def grownExact(grown: DataFrame, qs: DataFrame): DataFrame =
+    Tables.ckptTiny(topKPerQuery(
+        grown.crossJoin(broadcast(qs))
+          .filter(col("vec_id") =!= col("q_id"))
+          .select(col("q_id"), col("vec_id"),
+            V.cosine_sim(col("q_vec"), col("embedding")).as("cos")),
+        K, Nil)
+      .select(col("q_id"), col("vec_id")))
+
   def s16IndexStaleness(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables(spark, dir, "embeddings")
     val grown = grownCorpus(spark, dir)
@@ -1459,26 +1502,16 @@ object Similarity {
         .select(col("q_id"), col("vec_id")))
     }
     val chains = graft.Par.run[DataFrame](
-      () => Tables.ckptTiny(topKPerQuery(
-          grown.crossJoin(broadcast(qs))
-            .filter(col("vec_id") =!= col("q_id"))
-            .select(col("q_id"), col("vec_id"),
-              V.cosine_sim(col("q_vec"), col("embedding")).as("cos")),
-          K, Nil)
-        .select(col("q_id"), col("vec_id"))),
+      () => grownExact(grown, qs),
       () => tierApprox(freshC, 3),
       () => tierApprox(staleC, 2))
     val exact = chains(0)
-    def tierRecall(name: String, approx: DataFrame): DataFrame = {
-      val hits = exact.join(broadcast(approx), Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
+    def tierRecall(name: String, approx: DataFrame): DataFrame =
       exact.groupBy(col("q_id")).agg(count(lit(1)).as("n_exact"))
-        .join(broadcast(hits), Seq("q_id"), "left_outer")
-        .select(lit(name).as("tier"), col("q_id"), col("n_exact"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(coalesce(col("hits"), lit(0L)).cast(DoubleType)
-            / col("n_exact"), 4).as("recall"))
-    }
+        .join(broadcast(hitCounts(exact, approx, "q_id")), Seq("q_id"),
+          "left_outer")
+        .select(Seq(lit(name).as("tier"), col("q_id"), col("n_exact")) ++
+          recallCols(col("n_exact")): _*)
     tierRecall("fresh", chains(1)).unionAll(tierRecall("stale", chains(2)))
       .orderBy(col("tier"), col("q_id"))
   }
@@ -1486,90 +1519,50 @@ object Similarity {
   /** Oracle: the whole grown-corpus build + both quantizers + both
     * probe/search paths + the exact tier, declaratively (the s02/s09
     * replica discipline — same picks, same tie-breaks). */
-  val s16Sql: String =
-    """WITH grown AS (
-      |  SELECT vec_id, label, embedding::DOUBLE[] AS emb, 0 AS is_new
-      |  FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 8000000, label,
-      |    list_transform(embedding::DOUBLE[], x -> abs(x)), 1
-      |  FROM embeddings WHERE vec_id % 9 = 1),
-      |qs AS (
-      |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-      |  FROM embeddings WHERE vec_id < 5
-      |  UNION ALL
-      |  SELECT vec_id + 8000000,
-      |    list_transform(embedding::DOUBLE[], x -> abs(x))
-      |  FROM embeddings WHERE vec_id < 5),
-      |stale_c AS (SELECT vec_id AS c_id, emb AS c_vec FROM grown
-      |  WHERE is_new = 0 AND vec_id % 61 = 3
-      |  ORDER BY vec_id LIMIT 8),
-      |fresh_new AS (SELECT vec_id AS c_id, emb AS c_vec FROM grown
+  val s16Sql: String = {
+    def assign(cent: String) = nearestCellsSql("grown", "vec_id", "v",
+      Seq("vec_id", "v"), cent, 1)
+    def probe(cent: String, np: Int) = nearestCellsSql("qs", "q_id",
+      "q_vec", Seq("q_id", "q_vec"), cent, np)
+    s"""WITH grown AS ($grownSql),
+      |qs AS ($grownQueriesSql),
+      |stale_c AS (${centroidsSql("embeddings", "embedding::DOUBLE[]")}),
+      |fresh_new AS (SELECT vec_id AS c_id, v AS c_vec FROM grown
       |  WHERE is_new = 1 ORDER BY vec_id % 7, vec_id LIMIT 4),
       |fresh_c AS (SELECT * FROM stale_c
       |  UNION ALL SELECT * FROM fresh_new),
-      |a_stale AS (SELECT vec_id, emb, cell FROM (
-      |  SELECT g.vec_id, g.emb, c.c_id AS cell,
-      |    row_number() OVER (PARTITION BY g.vec_id
-      |      ORDER BY list_cosine_similarity(g.emb, c.c_vec) DESC, c.c_id)
-      |      AS rn
-      |  FROM grown g, stale_c c) WHERE rn = 1),
-      |a_fresh AS (SELECT vec_id, emb, cell FROM (
-      |  SELECT g.vec_id, g.emb, c.c_id AS cell,
-      |    row_number() OVER (PARTITION BY g.vec_id
-      |      ORDER BY list_cosine_similarity(g.emb, c.c_vec) DESC, c.c_id)
-      |      AS rn
-      |  FROM grown g, fresh_c c) WHERE rn = 1),
-      |p_stale AS (SELECT q_id, q_vec, cell FROM (
-      |  SELECT q.q_id, q.q_vec, c.c_id AS cell,
-      |    row_number() OVER (PARTITION BY q.q_id
-      |      ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-      |        c.c_id) AS rn
-      |  FROM qs q, stale_c c) WHERE rn <= 2),
-      |p_fresh AS (SELECT q_id, q_vec, cell FROM (
-      |  SELECT q.q_id, q.q_vec, c.c_id AS cell,
-      |    row_number() OVER (PARTITION BY q.q_id
-      |      ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-      |        c.c_id) AS rn
-      |  FROM qs q, fresh_c c) WHERE rn <= 3),
+      |a_stale AS (${assign("stale_c")}),
+      |a_fresh AS (${assign("fresh_c")}),
+      |p_stale AS (${probe("stale_c", 2)}),
+      |p_fresh AS (${probe("fresh_c", 3)}),
       |top_stale AS (SELECT q_id, vec_id FROM (
       |  SELECT p.q_id, a.vec_id,
       |    row_number() OVER (PARTITION BY p.q_id
-      |      ORDER BY list_cosine_similarity(p.q_vec, a.emb) DESC,
+      |      ORDER BY list_cosine_similarity(p.q_vec, a.v) DESC,
       |        a.vec_id) AS rn
       |  FROM p_stale p JOIN a_stale a
       |    ON a.cell = p.cell AND a.vec_id <> p.q_id) WHERE rn <= 10),
       |top_fresh AS (SELECT q_id, vec_id FROM (
       |  SELECT p.q_id, a.vec_id,
       |    row_number() OVER (PARTITION BY p.q_id
-      |      ORDER BY list_cosine_similarity(p.q_vec, a.emb) DESC,
+      |      ORDER BY list_cosine_similarity(p.q_vec, a.v) DESC,
       |        a.vec_id) AS rn
       |  FROM p_fresh p JOIN a_fresh a
       |    ON a.cell = p.cell AND a.vec_id <> p.q_id) WHERE rn <= 10),
-      |exact AS (SELECT q_id, vec_id FROM (
-      |  SELECT q.q_id, g.vec_id,
-      |    row_number() OVER (PARTITION BY q.q_id
-      |      ORDER BY list_cosine_similarity(q.q_vec, g.emb) DESC,
-      |        g.vec_id) AS rn
-      |  FROM qs q, grown g WHERE g.vec_id <> q.q_id) WHERE rn <= 10),
+      |exact AS (${exactTopSql("qs", "grown", "v")}),
       |ne AS (SELECT q_id, COUNT(*) AS n_exact FROM exact GROUP BY 1),
-      |hs AS (SELECT e.q_id, COUNT(*) AS hits FROM exact e
-      |  JOIN top_stale t ON t.q_id = e.q_id AND t.vec_id = e.vec_id
-      |  GROUP BY 1),
-      |hf AS (SELECT e.q_id, COUNT(*) AS hits FROM exact e
-      |  JOIN top_fresh t ON t.q_id = e.q_id AND t.vec_id = e.vec_id
-      |  GROUP BY 1),
+      |hs AS (${hitsSql("top_stale", "exact")}),
+      |hf AS (${hitsSql("top_fresh", "exact")}),
       |r AS (
-      |  SELECT 'fresh' AS tier, ne.q_id, ne.n_exact,
-      |    COALESCE(hf.hits, 0) AS hits
+      |  SELECT 'fresh' AS tier, ne.q_id, ne.n_exact, hf.hits
       |  FROM ne LEFT JOIN hf ON hf.q_id = ne.q_id
       |  UNION ALL
-      |  SELECT 'stale', ne.q_id, ne.n_exact, COALESCE(hs.hits, 0)
+      |  SELECT 'stale', ne.q_id, ne.n_exact, hs.hits
       |  FROM ne LEFT JOIN hs ON hs.q_id = ne.q_id)
       |SELECT tier, q_id, CAST(n_exact AS BIGINT) AS n_exact,
-      |  CAST(hits AS BIGINT) AS hits,
-      |  round(CAST(hits AS DOUBLE) / n_exact, 4) AS recall
+      |  ${recallColsSql("hits", "n_exact")}
       |FROM r ORDER BY tier, q_id""".stripMargin
+  }
 
   // ---------------------------------------------------------------- s17
   /** Quantization trade-off audit (round 13) — the "which index do I
@@ -1697,16 +1690,15 @@ object Similarity {
     * as the order-free 6dp-decimal aggregate, per-tier ranks as plain
     * windows. */
   val s17Sql: String =
-    """WITH cent AS (
+    s"""WITH cent AS (
       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c_id,
       |    embedding::DOUBLE[] AS c_vec
       |  FROM (SELECT * FROM embeddings WHERE vec_id % 97 = 11
       |        ORDER BY vec_id LIMIT 4)),
       |qq AS (
-      |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS qv,
-      |    list_max(list_transform(embedding::DOUBLE[], x -> abs(x)))
-      |      AS qamax
-      |  FROM embeddings WHERE vec_id < 5),
+      |  SELECT q_id, q_vec AS qv,
+      |    list_max(list_transform(q_vec, x -> abs(x))) AS qamax
+      |  FROM (${queriesSql()})),
       |qi AS (
       |  SELECT q_id, qv,
       |    CASE WHEN qamax = 0
@@ -1866,6 +1858,37 @@ object Similarity {
         lit("entry").as("kind"), col("cell")))
   }
 
+  /** SQL twin of [[graphCentroids]] + [[buildGraphEdges]] over `rel`
+    * (vec_id, v): the corpus-sized quantizer, the assignment, the in-cell
+    * top-[[S18R]] edges plus the hub layer, and one entry per cell, as
+    * CTEs `cnt`, `cent`, `assigned`, `edges_in`, `entries` and `edges`,
+    * each name suffixed with `sfx`. */
+  private def graphBuildSql(sfx: String, rel: String): String =
+    s"""cnt$sfx AS (
+       |  SELECT GREATEST(8, CAST(ceil(COUNT(*) / 256.0) AS BIGINT)) AS nc
+       |  FROM $rel),
+       |cent$sfx AS MATERIALIZED (
+       |  ${centroidsSql(rel, "v", s"(SELECT nc FROM cnt$sfx)")}),
+       |assigned$sfx AS MATERIALIZED (${nearestCellsSql(rel, "vec_id", "v",
+         Seq("vec_id", "v"), s"cent$sfx", 1)}),
+       |edges_in$sfx AS (
+       |  SELECT src, nbr FROM (
+       |    SELECT a.vec_id AS src, b.vec_id AS nbr,
+       |      row_number() OVER (PARTITION BY a.vec_id
+       |        ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id)
+       |        AS rn
+       |    FROM assigned$sfx a JOIN assigned$sfx b
+       |      ON a.cell = b.cell AND a.vec_id <> b.vec_id)
+       |  WHERE rn <= $S18R),
+       |entries$sfx AS MATERIALIZED (
+       |  SELECT cell, MIN(vec_id) AS entry FROM assigned$sfx
+       |  GROUP BY cell),
+       |edges$sfx AS MATERIALIZED (
+       |  SELECT src, nbr FROM edges_in$sfx
+       |  UNION ALL
+       |  SELECT a.entry, b.entry FROM entries$sfx a JOIN entries$sfx b
+       |    ON a.entry <> b.entry)""".stripMargin
+
   def ensureGraphAnnArtifact(spark: SparkSession, dir: String): DataFrame =
     graft.Graft.artifact(spark, dir, "s18_graph_v2", "embeddings") {
       val corpus = Tables(spark, dir, "embeddings")
@@ -1916,17 +1939,7 @@ object Similarity {
     val entries = art.filter(col("kind") === "entry")
       .select(col("cell"), col("src").as("entry"),
         col("nbr_emb").as("emb"))
-    // probe: top-2 cells per query, the s02 window-free slice shape
-    val probes = qs.crossJoin(broadcast(cents))
-      .select(col("q_id"), col("q_vec"), col("c_id"),
-        V.cosine_sim(col("q_vec"), col("c_vec")).as("q_cos"))
-      .groupBy(col("q_id"))
-      .agg(first(col("q_vec")).as("q_vec"),
-        slice(array_sort(collect_list(
-          struct((col("q_cos") * -1).as("__n"), col("c_id")))), 1, 2)
-          .as("__top"))
-      .select(col("q_id"), col("q_vec"), explode(col("__top")).as("f"))
-      .select(col("q_id"), col("q_vec"), col("f.c_id").as("cell"))
+    val probes = probeCells(qs, cents, 2) // top-2 cells per query, as s02
     // the query NODE stays in the beam (it is a corpus member here, and
     // its own cell's entry is often itself — filtering it out of the
     // walk would make exactly the best cell unreachable); self is
@@ -1997,6 +2010,93 @@ object Similarity {
     visited.drop("__rk").drop("q_vec")
   }
 
+  /** SQL twin of [[beamVisited]] over a [[graphBuildSql]] build: the
+    * queries `q` (q_id, q_vec) seed the beam with the entry nodes of
+    * their 2 nearest cells of `cent`, then [[S18T]] hops each expand the
+    * top-[[S18B]] beam through `edges` and score only never-visited
+    * candidates against `emb` (vec_id, v). CTEs `probes`, `v0`, then per
+    * hop i `f<i>`, `c<i>`, `n<i>` and the visited set `v<i>`, each name
+    * suffixed with `sfx`. */
+  private def graphWalkSql(sfx: String, cent: String, entries: String,
+      edges: String, q: String, emb: String): String =
+    graphSeedSql(sfx, cent, entries, q, emb) + ",\n" +
+      graphHopsSql(sfx, edges, q, emb)
+
+  private def graphSeedSql(sfx: String, cent: String, entries: String,
+      q: String, emb: String): String =
+    s"""probes$sfx AS (${nearestCellsSql(q, "q_id", "q_vec",
+         Seq("q_id"), cent, 2)}),
+       |v0$sfx AS MATERIALIZED (
+       |  SELECT p.q_id, en.entry AS vec_id,
+       |    list_cosine_similarity(q.q_vec, m.v) AS cos
+       |  FROM probes$sfx p
+       |  JOIN $entries en ON en.cell = p.cell
+       |  JOIN $q q ON q.q_id = p.q_id
+       |  JOIN $emb m ON m.vec_id = en.entry)""".stripMargin
+
+  private def graphHopsSql(sfx: String, edges: String, q: String,
+      emb: String): String = {
+    def hopSql(i: Int): String = {
+      val prev = s"v${i - 1}$sfx"
+      s"""f$i$sfx AS (
+         |  SELECT q_id, vec_id FROM (
+         |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+         |      ORDER BY cos DESC, vec_id) AS rn FROM $prev)
+         |  WHERE rn <= $S18B),
+         |c$i$sfx AS (
+         |  SELECT DISTINCT f.q_id, e.nbr AS vec_id
+         |  FROM f$i$sfx f JOIN $edges e ON e.src = f.vec_id),
+         |n$i$sfx AS (
+         |  SELECT c.q_id, c.vec_id,
+         |    list_cosine_similarity(q.q_vec, m.v) AS cos
+         |  FROM c$i$sfx c
+         |  JOIN $q q ON q.q_id = c.q_id
+         |  JOIN $emb m ON m.vec_id = c.vec_id
+         |  LEFT JOIN $prev p ON p.q_id = c.q_id AND p.vec_id = c.vec_id
+         |  WHERE p.vec_id IS NULL),
+         |v$i$sfx AS MATERIALIZED (
+         |  SELECT * FROM $prev UNION ALL SELECT * FROM n$i$sfx)""".stripMargin
+    }
+    (1 to S18T).map(hopSql).mkString(",\n")
+  }
+
+  /** The walk's ranked top-K (q_id, vec_id, rank) over its visited set,
+    * self excluded: the answer list s18, s19 and s20 grade. */
+  private def walkTop(visited: DataFrame): DataFrame =
+    topKPerQuery(visited.filter(col("vec_id") =!= col("q_id"))
+        .withColumn("__x", lit(0)), K, Seq("__x"))
+      .select(col("q_id"), col("vec_id"), col("rank"))
+
+  /** SQL twin of [[walkTop]] over the walk suffixed `sfx`. */
+  private def walkTopSql(sfx: String): String =
+    s"""SELECT q_id, vec_id, rn AS rank FROM (
+       |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
+       |    ORDER BY cos DESC, vec_id) AS rn FROM v$S18T$sfx
+       |  WHERE vec_id <> q_id) WHERE rn <= $K""".stripMargin
+
+  /** s18's and s19's per-query walk report, `lead` columns first: the
+    * visited count, the hits of [[walkTop]] in `exact`, and recall@K. */
+  private def walkRecall(visited: DataFrame, exact: DataFrame,
+      lead: Column*): DataFrame =
+    visited.groupBy(col("q_id")).agg(count(lit(1)).as("n_visited"))
+      .join(broadcast(hitCounts(exact,
+        walkTop(visited).select(col("q_id"), col("vec_id")), "q_id")),
+        Seq("q_id"), "left_outer")
+      .select(lead ++ Seq(col("q_id"), col("n_visited")) ++
+        recallCols(lit(K)): _*)
+
+  /** SQL twin of [[walkRecall]]: CTEs `top<sfx>` and `h<sfx>` against the
+    * CTE `exact`, then (as [[walkRecallSelectSql]]) the report. */
+  private def walkRecallSql(sfx: String, exact: String): String =
+    s"""top$sfx AS (${walkTopSql(sfx)}),
+       |h$sfx AS (${hitsSql(s"top$sfx", exact)})""".stripMargin
+
+  private def walkRecallSelectSql(sfx: String, lead: String): String =
+    s"""SELECT $lead v.q_id, CAST(COUNT(*) AS BIGINT) AS n_visited,
+       |    ${recallColsSql("ANY_VALUE(h.hits)", K.toString)}
+       |  FROM v$S18T$sfx v LEFT JOIN h$sfx h ON h.q_id = v.q_id
+       |  GROUP BY v.q_id""".stripMargin
+
   def s18GraphAnn(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables(spark, dir, "embeddings")
     val (cents, _) = graphCentroids(corpus)
@@ -2005,126 +2105,33 @@ object Similarity {
     val (visited, exact) = graft.Par.run2(
       () => beamVisited(
         ensureGraphAnnArtifact(spark, dir), cents, queriesDf(spark, dir)),
-      () => Tables.ckptTiny(s01BruteForce(spark, dir)
-        .select(col("q_id"), col("vec_id"))))
-    val top = topKPerQuery(visited.filter(col("vec_id") =!= col("q_id"))
-        .withColumn("__x", lit(0)), K, Seq("__x"))
-      .select(col("q_id"), col("vec_id"))
-    val hits = exact.join(broadcast(top), Seq("q_id", "vec_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    visited.groupBy(col("q_id")).agg(count(lit(1)).as("n_visited"))
-      .join(broadcast(hits), Seq("q_id"), "left_outer")
-      .select(col("q_id"), col("n_visited"),
-        coalesce(col("hits"), lit(0L)).as("hits"),
-        round(coalesce(col("hits"), lit(0L)).cast("double") / K, 4)
-          .as("recall"))
-      .orderBy(col("q_id"))
+      () => s01Exact(spark, dir))
+    walkRecall(visited, exact).orderBy(col("q_id"))
   }
 
   /** The full graph build + beam probe replicated declaratively —
     * centroid count from the corpus count, within-cell kNN, hub layer,
     * 2-cell entry seeding, and T unrolled hops each scoring only the
-    * round's never-visited candidates. Multi-referenced CTEs are
-    * MATERIALIZED (the t23/dd02 rule). The WITH-chain through v{T} is
-    * shared with s20's graph tier ([[s18ChainSql]]). */
-  private def s18ChainSql: String = {
-    def hop(i: Int): String = {
-      val prev = s"v${i - 1}"
-      s"""f$i AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY cos DESC, vec_id) AS rn FROM $prev) WHERE rn <= $S18B),
-         |c$i AS (
-         |  SELECT DISTINCT f.q_id, e.nbr AS vec_id
-         |  FROM f$i f JOIN edges e ON e.src = f.vec_id),
-         |n$i AS (
-         |  SELECT c.q_id, c.vec_id,
-         |    list_cosine_similarity(q.q_vec, m.v) AS cos
-         |  FROM c$i c
-         |  JOIN q ON q.q_id = c.q_id
-         |  JOIN emb m ON m.vec_id = c.vec_id
-         |  LEFT JOIN $prev p ON p.q_id = c.q_id AND p.vec_id = c.vec_id
-         |  WHERE p.vec_id IS NULL),
-         |v$i AS MATERIALIZED (
-         |  SELECT * FROM $prev UNION ALL SELECT * FROM n$i)""".stripMargin
-    }
-    s"""cnt AS (
-       |  SELECT GREATEST(8, CAST(ceil(COUNT(*) / 256.0) AS BIGINT)) AS nc
-       |  FROM embeddings),
-       |cent AS MATERIALIZED (
-       |  SELECT vec_id AS c_id, embedding::DOUBLE[] AS c_vec
-       |  FROM embeddings WHERE vec_id % 61 = 3
-       |  ORDER BY vec_id LIMIT (SELECT nc FROM cnt)),
-       |emb AS MATERIALIZED (
+    * round's never-visited candidates: the unsuffixed [[graphBuildSql]]
+    * and [[graphWalkSql]]. Multi-referenced CTEs are MATERIALIZED (the
+    * t23/dd02 rule). The WITH-chain through v{T} is shared with s20's
+    * graph tier. The query CTE is `qs`, not `q`: DuckDB 1.0 fails with
+    * "Recursive CTE scan found without recursive CTE node" when the
+    * nested `q` of [[s01ExactSql]] shadows a MATERIALIZED `q`. */
+  private def s18ChainSql: String =
+    s"""emb AS MATERIALIZED (
        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |assigned AS MATERIALIZED (
-       |  SELECT vec_id, v, cell FROM (
-       |    SELECT e.vec_id, e.v, c.c_id AS cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY list_cosine_similarity(e.v, c.c_vec) DESC, c.c_id)
-       |        AS rn
-       |    FROM emb e, cent c) WHERE rn = 1),
-       |edges_in AS (
-       |  SELECT src, nbr FROM (
-       |    SELECT a.vec_id AS src, b.vec_id AS nbr,
-       |      row_number() OVER (PARTITION BY a.vec_id
-       |        ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id)
-       |        AS rn
-       |    FROM assigned a JOIN assigned b
-       |      ON a.cell = b.cell AND a.vec_id <> b.vec_id) WHERE rn <= $S18R),
-       |entries AS MATERIALIZED (
-       |  SELECT cell, MIN(vec_id) AS entry FROM assigned GROUP BY cell),
-       |edges AS MATERIALIZED (
-       |  SELECT src, nbr FROM edges_in
-       |  UNION ALL
-       |  SELECT a.entry, b.entry FROM entries a JOIN entries b
-       |    ON a.entry <> b.entry),
-       |q AS MATERIALIZED (
-       |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-       |  FROM embeddings WHERE vec_id < 5),
-       |probes AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT q.q_id, c.c_id AS cell,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-       |          c.c_id) AS rn
-       |    FROM q, cent c) WHERE rn <= 2),
-       |v0 AS MATERIALIZED (
-       |  SELECT p.q_id, en.entry AS vec_id,
-       |    list_cosine_similarity(q.q_vec, m.v) AS cos
-       |  FROM probes p
-       |  JOIN entries en ON en.cell = p.cell
-       |  JOIN q ON q.q_id = p.q_id
-       |  JOIN emb m ON m.vec_id = en.entry),
-       |${(1 to S18T).map(hop).mkString(",\n")}""".stripMargin
-  }
+       |${graphBuildSql("", "emb")},
+       |qs AS MATERIALIZED (${queriesSql()}),
+       |${graphWalkSql("", "cent", "entries", "edges", "qs", "emb")}"""
+      .stripMargin
 
   val s18Sql: String =
     s"""WITH $s18ChainSql,
-       |top AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos DESC, vec_id) AS rn FROM v$S18T
-       |    WHERE vec_id <> q_id) WHERE rn <= 10),
-       |exact AS (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q.q_id, e.vec_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY list_cosine_similarity(q.q_vec,
-       |          e.embedding::DOUBLE[]) DESC, e.vec_id) AS rank
-       |    FROM embeddings e, q WHERE e.vec_id <> q.q_id)
-       |  WHERE rank <= 10),
-       |h AS (
-       |  SELECT t.q_id, COUNT(*) AS hits
-       |  FROM top t JOIN exact x
-       |    ON x.q_id = t.q_id AND x.vec_id = t.vec_id
-       |  GROUP BY 1)
-       |SELECT v.q_id, CAST(COUNT(*) AS BIGINT) AS n_visited,
-       |  CAST(COALESCE(ANY_VALUE(h.hits), 0) AS BIGINT) AS hits,
-       |  round(CAST(COALESCE(ANY_VALUE(h.hits), 0) AS DOUBLE) / 10, 4)
-       |    AS recall
-       |FROM v$S18T v LEFT JOIN h ON h.q_id = v.q_id
-       |GROUP BY v.q_id ORDER BY v.q_id""".stripMargin
+       |exact AS ($s01ExactSql),
+       |${walkRecallSql("", "exact")}
+       |${walkRecallSelectSql("", "")}
+       |ORDER BY v.q_id""".stripMargin
 
   // ---------------------------------------------------------------- s19
   /** s19 insert parameters: out-degree of an inserted node and the
@@ -2264,31 +2271,13 @@ object Similarity {
       () => graphCentroids(base)._1,
       () => graphCentroids(grown.select(col("vec_id"), col("embedding")))._1)
     val chains = graft.Par.run[DataFrame](
-      () => Tables.ckptTiny(topKPerQuery(
-          grown.crossJoin(broadcast(qs))
-            .filter(col("vec_id") =!= col("q_id"))
-            .select(col("q_id"), col("vec_id"),
-              V.cosine_sim(col("q_vec"), col("embedding")).as("cos")),
-          K, Nil)
-        .select(col("q_id"), col("vec_id"))),
+      () => grownExact(grown, qs),
       () => beamVisited(ensureGraphFreshArtifact(spark, dir), freshCents, qs),
       () => beamVisited(ensureGraphMaintArtifact(spark, dir), oldCents, qs),
       () => beamVisited(ensureGraphAnnArtifact(spark, dir), oldCents, qs))
     val exact = chains(0)
-    def tier(name: String, visited: DataFrame): DataFrame = {
-      val top = topKPerQuery(
-          visited.filter(col("vec_id") =!= col("q_id"))
-            .withColumn("__x", lit(0)), K, Seq("__x"))
-        .select(col("q_id"), col("vec_id"))
-      val hits = exact.join(broadcast(top), Seq("q_id", "vec_id"))
-        .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-      visited.groupBy(col("q_id")).agg(count(lit(1)).as("n_visited"))
-        .join(broadcast(hits), Seq("q_id"), "left_outer")
-        .select(lit(name).as("tier"), col("q_id"), col("n_visited"),
-          coalesce(col("hits"), lit(0L)).as("hits"),
-          round(coalesce(col("hits"), lit(0L)).cast("double") / K, 4)
-            .as("recall"))
-    }
+    def tier(name: String, visited: DataFrame): DataFrame =
+      walkRecall(visited, exact, lit(name).as("tier"))
     tier("fresh", chains(1))
       .unionByName(tier("maintained", chains(2)))
       .unionByName(tier("stale", chains(3)))
@@ -2303,125 +2292,16 @@ object Similarity {
     * (the t23/dd02 rule); scoring joins the shared grown-embedding
     * table `gemb` — numerically identical to the artifact's inline
     * float→double vectors (exact widening, §5). */
-  val s19Sql: String = {
-    // one s18 build, suffix-parametrized (source relation + count)
-    def build(sfx: String, rel: String): String =
-      s"""cnt$sfx AS (
-         |  SELECT GREATEST(8, CAST(ceil(COUNT(*) / 256.0) AS BIGINT)) AS nc
-         |  FROM $rel),
-         |cent$sfx AS MATERIALIZED (
-         |  SELECT vec_id AS c_id, v AS c_vec
-         |  FROM $rel WHERE vec_id % 61 = 3
-         |  ORDER BY vec_id LIMIT (SELECT nc FROM cnt$sfx)),
-         |assigned$sfx AS MATERIALIZED (
-         |  SELECT vec_id, v, cell FROM (
-         |    SELECT e.vec_id, e.v, c.c_id AS cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY list_cosine_similarity(e.v, c.c_vec) DESC, c.c_id)
-         |        AS rn
-         |    FROM $rel e, cent$sfx c) WHERE rn = 1),
-         |edges_in$sfx AS (
-         |  SELECT src, nbr FROM (
-         |    SELECT a.vec_id AS src, b.vec_id AS nbr,
-         |      row_number() OVER (PARTITION BY a.vec_id
-         |        ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id)
-         |        AS rn
-         |    FROM assigned$sfx a JOIN assigned$sfx b
-         |      ON a.cell = b.cell AND a.vec_id <> b.vec_id)
-         |  WHERE rn <= $S18R),
-         |entries$sfx AS MATERIALIZED (
-         |  SELECT cell, MIN(vec_id) AS entry FROM assigned$sfx
-         |  GROUP BY cell),
-         |edges$sfx AS MATERIALIZED (
-         |  SELECT src, nbr FROM edges_in$sfx
-         |  UNION ALL
-         |  SELECT a.entry, b.entry FROM entries$sfx a JOIN entries$sfx b
-         |    ON a.entry <> b.entry)""".stripMargin
-    // probe seed: top-2 cells per query against a tier's quantizer,
-    // beam seeded with those cells' entry nodes
-    def seed(sfx: String, cent: String, entries: String): String =
-      s"""probes$sfx AS (
-         |  SELECT q_id, cell FROM (
-         |    SELECT q.q_id, c.c_id AS cell,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY list_cosine_similarity(q.q_vec, c.c_vec) DESC,
-         |          c.c_id) AS rn
-         |    FROM q10 q, $cent c) WHERE rn <= 2),
-         |v0$sfx AS MATERIALIZED (
-         |  SELECT p.q_id, en.entry AS vec_id,
-         |    list_cosine_similarity(q.q_vec, m.v) AS cos
-         |  FROM probes$sfx p
-         |  JOIN $entries en ON en.cell = p.cell
-         |  JOIN q10 q ON q.q_id = p.q_id
-         |  JOIN gemb m ON m.vec_id = en.entry)""".stripMargin
-    def hop(i: Int, sfx: String, edges: String): String = {
-      val prev = s"v${i - 1}$sfx"
-      s"""f$i$sfx AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY cos DESC, vec_id) AS rn FROM $prev)
-         |  WHERE rn <= $S18B),
-         |c$i$sfx AS (
-         |  SELECT DISTINCT f.q_id, e.nbr AS vec_id
-         |  FROM f$i$sfx f JOIN $edges e ON e.src = f.vec_id),
-         |n$i$sfx AS (
-         |  SELECT c.q_id, c.vec_id,
-         |    list_cosine_similarity(q.q_vec, m.v) AS cos
-         |  FROM c$i$sfx c
-         |  JOIN q10 q ON q.q_id = c.q_id
-         |  JOIN gemb m ON m.vec_id = c.vec_id
-         |  LEFT JOIN $prev p ON p.q_id = c.q_id AND p.vec_id = c.vec_id
-         |  WHERE p.vec_id IS NULL),
-         |v$i$sfx AS MATERIALIZED (
-         |  SELECT * FROM $prev UNION ALL SELECT * FROM n$i$sfx)""".stripMargin
-    }
-    def probe(sfx: String, edges: String): String =
-      (1 to S18T).map(hop(_, sfx, edges)).mkString(",\n")
-    def res(tierName: String, sfx: String): String =
-      s"""SELECT '$tierName' AS tier, v.q_id,
-         |    CAST(COUNT(*) AS BIGINT) AS n_visited,
-         |    CAST(COALESCE(ANY_VALUE(h.hits), 0) AS BIGINT) AS hits,
-         |    round(CAST(COALESCE(ANY_VALUE(h.hits), 0) AS DOUBLE) / 10, 4)
-         |      AS recall
-         |  FROM v$S18T$sfx v LEFT JOIN h$sfx h ON h.q_id = v.q_id
-         |  GROUP BY v.q_id""".stripMargin
-    def hits(sfx: String): String =
-      s"""top$sfx AS (
-         |  SELECT q_id, vec_id FROM (
-         |    SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY cos DESC, vec_id) AS rn FROM v$S18T$sfx
-         |    WHERE vec_id <> q_id) WHERE rn <= 10),
-         |h$sfx AS (
-         |  SELECT t.q_id, COUNT(*) AS hits
-         |  FROM top$sfx t JOIN exactg x
-         |    ON x.q_id = t.q_id AND x.vec_id = t.vec_id
-         |  GROUP BY 1)""".stripMargin
-    s"""WITH grown AS MATERIALIZED (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v, 0 AS is_new
-       |  FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 8000000,
-       |    list_transform(embedding::DOUBLE[], x -> abs(x)), 1
-       |  FROM embeddings WHERE vec_id % 9 = 1),
+  val s19Sql: String =
+    s"""WITH grown AS MATERIALIZED ($grownSql),
        |gemb AS MATERIALIZED (SELECT vec_id, v FROM grown),
        |base AS (SELECT vec_id, v FROM grown WHERE is_new = 0),
-       |q10 AS MATERIALIZED (
-       |  SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-       |  FROM embeddings WHERE vec_id < 5
-       |  UNION ALL
-       |  SELECT vec_id + 8000000,
-       |    list_transform(embedding::DOUBLE[], x -> abs(x))
-       |  FROM embeddings WHERE vec_id < 5),
-       |${build("_b", "base")},
-       |${build("_g", "grown")},
+       |q10 AS MATERIALIZED ($grownQueriesSql),
+       |${graphBuildSql("_b", "base")},
+       |${graphBuildSql("_g", "grown")},
        |newv AS (SELECT vec_id, v FROM grown WHERE is_new = 1),
-       |newp AS (
-       |  SELECT vec_id, v, cell FROM (
-       |    SELECT n.vec_id, n.v, c.c_id AS cell,
-       |      row_number() OVER (PARTITION BY n.vec_id
-       |        ORDER BY list_cosine_similarity(n.v, c.c_vec) DESC, c.c_id)
-       |        AS rn
-       |    FROM newv n, cent_b c) WHERE rn <= 2),
+       |newp AS (${nearestCellsSql("newv", "vec_id", "v",
+         Seq("vec_id", "v"), "cent_b", 2)}),
        |new_sc AS (
        |  SELECT p.vec_id AS src, a.vec_id AS nbr,
        |    list_cosine_similarity(p.v, a.v) AS cos
@@ -2440,31 +2320,22 @@ object Similarity {
        |  SELECT src, nbr FROM edges_b
        |  UNION ALL SELECT src, nbr FROM new_out
        |  UNION ALL SELECT src, nbr FROM back),
-       |${seed("_s", "cent_b", "entries_b")},
+       |${graphWalkSql("_s", "cent_b", "entries_b", "edges_b", "q10", "gemb")},
        |v0_m AS (SELECT * FROM v0_s),
-       |${seed("_g", "cent_g", "entries_g")},
-       |${probe("_s", "edges_b")},
-       |${probe("_m", "edges_m")},
-       |${probe("_g", "edges_g")},
-       |exactg AS MATERIALIZED (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q.q_id, g.vec_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY list_cosine_similarity(q.q_vec, g.v) DESC,
-       |          g.vec_id) AS rn
-       |    FROM q10 q, gemb g WHERE g.vec_id <> q.q_id) WHERE rn <= 10),
-       |${hits("_s")},
-       |${hits("_m")},
-       |${hits("_g")},
+       |${graphHopsSql("_m", "edges_m", "q10", "gemb")},
+       |${graphWalkSql("_g", "cent_g", "entries_g", "edges_g", "q10", "gemb")},
+       |exactg AS MATERIALIZED (${exactTopSql("q10", "gemb", "v")}),
+       |${walkRecallSql("_s", "exactg")},
+       |${walkRecallSql("_m", "exactg")},
+       |${walkRecallSql("_g", "exactg")},
        |res AS (
-       |  ${res("fresh", "_g")}
+       |  ${walkRecallSelectSql("_g", "'fresh' AS tier,")}
        |  UNION ALL
-       |  ${res("maintained", "_m")}
+       |  ${walkRecallSelectSql("_m", "'maintained' AS tier,")}
        |  UNION ALL
-       |  ${res("stale", "_s")})
+       |  ${walkRecallSelectSql("_s", "'stale' AS tier,")})
        |SELECT tier, q_id, n_visited, hits, recall
        |FROM res ORDER BY tier, q_id""".stripMargin
-  }
 
   // ---------------------------------------------------------------- s20
   /** 6dp decimal literals of 1/log2(rank+1) and 1/rank for ranks 1..10
@@ -2483,11 +2354,8 @@ object Similarity {
   private def s18TopFrame(spark: SparkSession, dir: String): DataFrame = {
     val corpus = Tables(spark, dir, "embeddings")
     val (cents, _) = graphCentroids(corpus)
-    val visited = beamVisited(
-      ensureGraphAnnArtifact(spark, dir), cents, queriesDf(spark, dir))
-    topKPerQuery(visited.filter(col("vec_id") =!= col("q_id"))
-        .withColumn("__x", lit(0)), K, Seq("__x"))
-      .select(col("q_id"), col("vec_id"), col("rank"))
+    walkTop(beamVisited(
+      ensureGraphAnnArtifact(spark, dir), cents, queriesDf(spark, dir)))
   }
 
   /** RANK-WEIGHTED RETRIEVAL METRICS (round 15, VERDICT r14 #5) — the
@@ -2513,8 +2381,7 @@ object Similarity {
     // chain) — overlap them (guide §2.6) and checkpoint only the three
     // query-sized columns the metric algebra reads
     val chains = graft.Par.run[DataFrame](
-      () => Tables.ckptTiny(s01BruteForce(spark, dir)
-        .select(col("q_id"), col("vec_id"), lit(1L).as("__hit"))),
+      () => s01Exact(spark, dir, lit(1L).as("__hit")),
       () => Tables.ckptTiny(s14BinaryQuantize(spark, dir)
         .select(col("q_id"), col("vec_id"), col("rank"))),
       () => Tables.ckptTiny(s18TopFrame(spark, dir)
@@ -2562,12 +2429,7 @@ object Similarity {
     * weight table is the shared 6dp literal VALUES, and the metric
     * algebra matches the Spark side decimal-for-decimal. */
   val s20Sql: String = {
-    val s18TopSql =
-      s"""WITH $s18ChainSql
-         |SELECT q_id, vec_id, rn AS rank FROM (
-         |  SELECT q_id, vec_id, row_number() OVER (PARTITION BY q_id
-         |    ORDER BY cos DESC, vec_id) AS rn FROM v$S18T
-         |  WHERE vec_id <> q_id) WHERE rn <= 10""".stripMargin
+    val s18TopSql = s"WITH $s18ChainSql\n${walkTopSql("")}"
     val tiers = Seq("binary" -> s14Sql, "graph" -> s18TopSql,
       "ivf2" -> s02Sql, "ivfpq" -> s07Sql)
     val wRows = (1 to 10).map(i =>
@@ -2585,16 +2447,7 @@ object Similarity {
          |  JOIN w ON w.r = t.rank
          |  LEFT JOIN exact e ON e.q_id = t.q_id AND e.vec_id = t.vec_id
          |  GROUP BY t.q_id)""".stripMargin
-    s"""WITH exact AS MATERIALIZED (
-       |  SELECT q_id, vec_id FROM (
-       |    SELECT q.q_id, e.vec_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY list_cosine_similarity(q.q_vec,
-       |          e.embedding::DOUBLE[]) DESC, e.vec_id) AS rank
-       |    FROM embeddings e,
-       |      (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
-       |       FROM embeddings WHERE vec_id < 5) q
-       |    WHERE e.vec_id <> q.q_id) WHERE rank <= 10),
+    s"""WITH exact AS MATERIALIZED ($s01ExactSql),
        |w AS (SELECT * FROM (VALUES $wRows) AS w(r, dw, mw)),
        |${tiers.map { case (n, sql) =>
            s"t_$n AS (\n$sql)" }.mkString(",\n")},

@@ -41,8 +41,15 @@ object TextAnalysis {
     regexp_replace(c, "[ \\t\\n\\r]+[^ \\t\\n\\r]+\\z", "")
 
   /** The oracle side of [[toks]]. */
-  private[operators] def toksSql(c: String): String =
-    s"list_filter(string_split_regex(lower($c), '[ \\t\\n\\r]+'), x -> x <> '')"
+  private[graft] def toksSql(c: String): String = wordsSql(s"lower($c)")
+
+  /** The oracle side of [[words]]. */
+  private[graft] def wordsSql(c: String): String =
+    s"list_filter(string_split_regex($c, '[ \\t\\n\\r]+'), x -> x <> '')"
+
+  /** The oracle side of [[dropLastWord]]. */
+  private[graft] def dropLastWordSql(c: String): String =
+    s"regexp_replace($c, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')"
 
   private[operators] val langMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "a", "of", "to", "and", "is", "in"),
@@ -142,14 +149,14 @@ object TextAnalysis {
   }
 
   val t02Sql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id,
-      |    CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'), x -> x <> '')) AS BIGINT) AS n_tokens,
+      |    CAST(len(${toksSql("text")}) AS BIGINT) AS n_tokens,
       |    CAST(length(text) AS BIGINT) AS n_chars,
-      |    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 \t\n\r]')) AS BIGINT) AS n_punct,
-      |    CAST(len(list_filter(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'), x -> x <> ''),
+      |    CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 \\t\\n\\r]')) AS BIGINT) AS n_punct,
+      |    CAST(len(list_filter(${toksSql("text")},
       |      x -> x IN ('the','a','of','to','and','is','in','that','it'))) AS BIGINT) AS n_stop,
-      |    CAST(list_sum(list_transform(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'), x -> x <> ''),
+      |    CAST(list_sum(list_transform(${toksSql("text")},
       |      x -> length(x))) AS BIGINT) AS word_chars
       |  FROM documents),
       |ratios AS (
@@ -182,12 +189,12 @@ object TextAnalysis {
   }
 
   val t03Sql: String =
-    """SELECT doc_id, source,
-      |  CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'), x -> x <> '')) AS BIGINT) AS ws_tokens,
-      |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \t\n\r]')) AS BIGINT) AS bpe_tokens,
+    s"""SELECT doc_id, source,
+      |  CAST(len(${toksSql("text")}) AS BIGINT) AS ws_tokens,
+      |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r]')) AS BIGINT) AS bpe_tokens,
       |  CAST(length(text) AS BIGINT) AS chars,
       |  CAST(length(text) AS DOUBLE) /
-      |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \t\n\r]')) AS BIGINT) AS chars_per_token
+      |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\r]')) AS BIGINT) AS chars_per_token
       |FROM documents ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- t04
@@ -237,9 +244,9 @@ object TextAnalysis {
   }
 
   val t06Sql: String =
-    """WITH base AS (
+    s"""WITH base AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'), x -> x <> '') AS ts
+      |    ${toksSql("text")} AS ts
       |  FROM documents),
       |big AS (
       |  SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS n_tokens,
@@ -347,10 +354,9 @@ object TextAnalysis {
   }
 
   val t07Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '')) AS term
+      |    unnest(${toksSql("text")}) AS term
       |  FROM documents),
       |tf AS (
       |  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
@@ -524,20 +530,18 @@ object TextAnalysis {
       |corpus AS (
       |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
       |  UNION ALL
-      |  SELECT doc_id + 3000000, regexp_replace(text, '[ \\t\\n\\r]+[^ \\t\\n\\r]+$$', '')
+      |  SELECT doc_id + 3000000, ${dropLastWordSql("text")}
       |  FROM evaldocs),
       |cg AS (
       |  SELECT doc_id, unnest(gs) AS gram
       |  FROM (SELECT doc_id,
       |      ${gramSet8Sql("ws")} AS gs
       |    FROM (SELECT doc_id,
-      |        list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-      |          x -> x <> '') AS ws FROM corpus))),
+      |        ${toksSql("text")} AS ws FROM corpus))),
       |eg AS (
       |  SELECT DISTINCT unnest(gs) AS eg
       |  FROM (SELECT ${gramSet8Sql("ws")} AS gs
-      |    FROM (SELECT list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-      |        x -> x <> '') AS ws FROM evaldocs)))
+      |    FROM (SELECT ${toksSql("text")} AS ws FROM evaldocs)))
       |SELECT doc_id, COUNT(*) AS n_grams, COUNT(eg.eg) AS n_overlap,
       |  ROUND(CAST(COUNT(eg.eg) AS DOUBLE) / COUNT(*), 4) AS overlap_frac,
       |  CAST(COUNT(eg.eg) AS DOUBLE) / COUNT(*) >= 0.2 AS contaminated
@@ -661,10 +665,9 @@ object TextAnalysis {
   }
 
   val t12Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '')) AS term
+      |    unnest(${toksSql("text")}) AS term
       |  FROM documents),
       |tfdt AS (SELECT doc_id, term, COUNT(*) AS k FROM toks GROUP BY 1, 2),
       |tf AS (SELECT term, SUM(k) AS cnt FROM tfdt GROUP BY 1),
@@ -801,10 +804,9 @@ object TextAnalysis {
   }
 
   val t14Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '') AS ts
+      |    ${toksSql("text")} AS ts
       |  FROM documents),
       |vocab AS (
       |  SELECT COUNT(DISTINCT t) AS v
@@ -990,9 +992,8 @@ object TextAnalysis {
   }
 
   val t15Sql: String =
-    """WITH toks AS (
-      |  SELECT unnest(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |    x -> x <> '')) AS term
+    s"""WITH toks AS (
+      |  SELECT unnest(${toksSql("text")}) AS term
       |  FROM documents),
       |freq AS (SELECT term, COUNT(*) AS freq FROM toks GROUP BY 1),
       |topt AS (SELECT term, freq FROM freq
@@ -1059,10 +1060,9 @@ object TextAnalysis {
   }
 
   val t13Sql: String =
-    """WITH d AS (
+    s"""WITH d AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      t -> t <> '') AS ts
+      |    ${toksSql("text")} AS ts
       |  FROM documents),
       |starts AS (
       |  SELECT doc_id, ts,
@@ -1121,8 +1121,7 @@ object TextAnalysis {
        |  len(list_filter(ts, x -> x IN ($blocklistInSql))) = 0 AS keep
        |FROM (
        |  SELECT doc_id, source,
-       |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-       |      x -> x <> '') AS ts
+       |    ${toksSql("text")} AS ts
        |  FROM documents)
        |ORDER BY doc_id""".stripMargin
 
@@ -1319,8 +1318,7 @@ object TextAnalysis {
     s"""WITH docs AS (SELECT doc_id, text FROM documents),
       |ptoks AS (
       |  SELECT doc_id, text,
-      |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-      |      x -> x <> '') AS ws
+      |    ${toksSql("text")} AS ws
       |  FROM docs),
       |planted AS (
       |  SELECT doc_id + 9000000 AS doc_id,
@@ -1332,8 +1330,7 @@ object TextAnalysis {
       |  UNION ALL SELECT doc_id, text FROM planted),
       |tk AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-      |      x -> x <> '') AS ts
+      |    ${toksSql("text")} AS ts
       |  FROM src),
       |${repetitionCtesSql("tk")}
       |SELECT tk.doc_id, CAST(len(ts) AS BIGINT) AS n_tokens,
@@ -1505,8 +1502,7 @@ object TextAnalysis {
       |    FROM base WHERE doc_id % 29 = 15),
       |f AS (
       |  SELECT doc_id,
-      |    list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
-      |      x -> x <> '') AS ts,
+      |    ${toksSql("text")} AS ts,
       |    string_split(text, chr(10)) AS ls, text
       |  FROM src),
       |stats AS (
@@ -1557,8 +1553,7 @@ object TextAnalysis {
     s"""WITH RECURSIVE
        |docw AS (
        |  SELECT doc_id,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM documents),
        |w0 AS (SELECT DISTINCT unnest(ws) AS w FROM docw),
        |${graft.functions.KernelOracleSql.bpeCtes("w0", "")},
@@ -1642,8 +1637,7 @@ object TextAnalysis {
   private[operators] val bpeSourcePerCtes: String =
     s"""docw AS (
        |  SELECT doc_id, source,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM documents),
        |${graft.functions.KernelOracleSql.bpeDocLenCtes("docw", "")},
        |per AS (
@@ -1900,8 +1894,7 @@ object TextAnalysis {
     }
     s"""WITH RECURSIVE
        |docw AS MATERIALIZED (
-       |  SELECT list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |    t -> t <> '') AS ws
+       |  SELECT ${wordsSql("text")} AS ws
        |  FROM documents),
        |wf AS MATERIALIZED (
        |  SELECT w, CAST(COUNT(*) AS BIGINT) AS f
@@ -1967,8 +1960,7 @@ object TextAnalysis {
     s"""WITH RECURSIVE
        |docw AS (
        |  SELECT doc_id, text,
-       |    list_filter(string_split_regex(text, '[ \\t\\n\\r]+'),
-       |      t -> t <> '') AS ws
+       |    ${wordsSql("text")} AS ws
        |  FROM documents),
        |w0 AS (SELECT DISTINCT unnest(ws) AS w FROM docw),
        |${graft.functions.KernelOracleSql.bpeCtes("w0", "")},
@@ -2131,12 +2123,11 @@ object TextAnalysis {
 
   /** Same counts, same cross-multiplied band tests. */
   val t26Sql: String =
-    """WITH f AS (
+    s"""WITH f AS (
       |  SELECT source,
-      |    len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '')) AS w,
+      |    len(${toksSql("text")}) AS w,
       |    len(regexp_extract_all(lower(text), '[aeiouy]+'))
-      |      + len(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
+      |      + len(list_filter(string_split_regex(lower(text), '[ \\t\\n\\r]+'),
       |          x -> x <> '' AND NOT regexp_matches(x, '[aeiouy]'))) AS syl,
       |    GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1) AS s
       |  FROM documents WHERE text IS NOT NULL)
@@ -2198,10 +2189,9 @@ object TextAnalysis {
 
   /** Same per-doc (U, W), same cross-multiplied band tests. */
   val t27Sql: String =
-    """WITH toks AS (
+    s"""WITH toks AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\r]+'),
-      |      x -> x <> '')) AS t
+      |    unnest(${toksSql("text")}) AS t
       |  FROM documents),
       |cnt AS (SELECT doc_id, t, COUNT(*) AS k FROM toks GROUP BY 1, 2),
       |pd AS (SELECT doc_id, COUNT(*) AS u, SUM(k) AS w FROM cnt GROUP BY 1),

@@ -27,14 +27,6 @@ object Streaming {
 
   val SessionGapSeconds = 1800L
 
-  /** Per-JVM run nonce for sink collection paths (ADVICE r14): stable
-    * within a run (replays must hit the same collection) but unique
-    * across concurrent driver processes sharing /tmp. */
-  private[graft] val runNonce: String =
-    java.lang.Long.toHexString(ProcessHandle.current().pid()) + "_" +
-      java.lang.Long.toHexString(
-        java.util.concurrent.ThreadLocalRandom.current().nextLong())
-
   // ---------------------------------------------------------------- st01
   /** Tumbling 1-hour window count/sum — batch and stream share this. */
   def windowedAggRaw(events: DataFrame): DataFrame =
@@ -1507,13 +1499,11 @@ object Streaming {
     * foreachBatch over [[st19Stream]]'s Update-mode output and replays
     * a batch to prove state equality. */
   def st20ViewSink(spark: SparkSession, dir: String): DataFrame = {
-    // per-JVM nonce (ADVICE r14): two concurrent drivers on the same
-    // sfDir must not interleave one's $out truncate with the other's
-    // $merge — each run gets its own collection, like Verify's
-    // per-run artifacts. Within a run the path is stable, so a replay
-    // still hits the same collection (the idempotence under test).
-    val path = "/tmp/graft_docstore/st20_view_" +
-      dir.replaceAll("[^a-zA-Z0-9]", "_") + "_" + Streaming.runNonce
+    // one collection per JVM: two concurrent drivers on the same sfDir
+    // must not interleave one's $out truncate with the other's $merge.
+    // Within a run the path is stable, so a replay still hits the same
+    // collection (the idempotence under test).
+    val path = graft.operators.DocstoreOps.scratchCollection("st20_view", dir)
     val view = Tables.ckptNarrow(st19OplogView(spark, dir), 8)
     val odd = view.filter(col("user_id") % 2 === 1)
     graft.Graft.aggregate(view.filter(col("user_id") % 2 === 0),

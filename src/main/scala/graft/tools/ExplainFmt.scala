@@ -6,12 +6,29 @@ package graft.tools
   * two builds diff line for line. `runMain graft.tools.ExplainFmt <sfDir>
   * <outDir> <tag> <key1,key2,...>`. */
 object ExplainFmt {
-  /** `x_45#123` → `x_#` (a fresh lambda variable), `#123` → `#` and
-    * `plan_id=67` → `plan_id=`: the counters are JVM-global, so they
-    * differ between any two runs that build plans in another order. */
+  /** Masks what differs between two runs of the same plan:
+    *  - `x_45#123` → `x_#` (a fresh lambda variable), `#123` → `#` and
+    *    `plan_id=67` → `plan_id=`: the counters are JVM-global, so they
+    *    differ between any two runs that build plans in another order;
+    *  - a checkpoint scan's RDD id and call site,
+    *    `MapPartitionsRDD[967] at localCheckpoint at Dedup.scala:1055` →
+    *    `MapPartitionsRDD[] at localCheckpoint at <site>`: the id is a
+    *    context-global counter and the line moves with any edit;
+    *  - object hashes (`UnsafeArrayData@c39e56ca` → `UnsafeArrayData@`)
+    *    and JVM lambda class names (`Foo$$Lambda$1712/0x0000000801a3c000`
+    *    → `Foo$$Lambda`);
+    *  - the per-JVM nonce of a key's scratch collection
+    *    (`/tmp/graft_docstore/st20_view_<sf>_<pid>_<random>` →
+    *    `/tmp/graft_docstore/st20_view_<sf>`), see
+    *    `DocstoreOps.scratchCollection`. */
   def normalise(plan: String): String =
     plan.replaceAll("\\b([a-z]+)_\\d+#\\d+", "$1_#").replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("RDD\\[\\d+\\] at (\\w+) at [\\w$.]+\\.scala:\\d+",
+        "RDD[] at $1 at <site>")
+      .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-f]+", "\\$\\$Lambda")
+      .replaceAll("@[0-9a-f]{1,8}\\b", "@")
+      .replaceAll("(graft_docstore/\\w+?)_[0-9a-f]+_[0-9a-f]{8,16}\\b", "$1")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

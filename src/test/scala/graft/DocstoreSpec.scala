@@ -1029,4 +1029,17 @@ class DocstoreSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(outDir)) ||
       Files.list(Paths.get(outDir)).count() == 0)
   }
+
+  test("d15 and st20 read back a per-JVM scratch collection that cleanup " +
+      "deletes") {
+    val d15 = DocstoreOps.d15MergeUpsert(spark, sfDir)
+    val st20 = graft.streaming.Streaming.st20ViewSink(spark, sfDir)
+    val paths = Seq(DocstoreOps.scratchCollection("merge_d15", sfDir),
+      DocstoreOps.scratchCollection("st20_view", sfDir))
+    // the keys' lazy frames read the collections while they stand
+    assert(d15.count() > 0 && st20.count() > 0)
+    paths.foreach(p => assert(new java.io.File(p).isDirectory, p))
+    DocstoreOps.dropScratchCollections()
+    paths.foreach(p => assert(!new java.io.File(p).exists, p))
+  }
 }

@@ -1,7 +1,12 @@
 #!/usr/bin/env python3
-"""check.py's compare, emitted in the driver's CORRECTNESS JSON shape:
-per key {rows_match, schema_match, hash_match, spark_rows, oracle_rows,
-err}. Usage: python3 tools/check_json.py <outDir> <sfDir> <outJson> [keys]
+"""The local oracle gate: Verify's parquet output against the DuckDB
+oracle SQL on the same testdata tables, in the driver's CORRECTNESS JSON
+shape: per key {rows_match, schema_match, hash_match, dtype_match,
+spark_rows, oracle_rows, err}. A key passes when its columns, row count,
+column dtypes and values all match. Prints one line per failed check
+(MISSING, ORA-ERR, SCHEMA, ROWS, DTYPE, VALUE with the first differing
+value) or OK per key, then "N/M OK"; exits 1 when any key fails.
+Usage: python3 tools/check_json.py <outDir> <sfDir> <outJson> [keys]
 
 Env:
   ORACLE_BUDGET_SEC  per-key oracle budget (0 = unlimited). A key whose
@@ -45,11 +50,53 @@ lock = threading.Lock()
 done = [0]
 
 
+def passed(ent):
+    return (ent["rows_match"] and ent["schema_match"] and ent["hash_match"]
+            and ent["dtype_match"] and not ent["err"])
+
+
+def compare(name, got, exp, ent, lines):
+    """Driver semantics: sort columns by name, then rows, then compare
+    each column's dtype and its values as strings."""
+    got = got.reindex(sorted(got.columns), axis=1)
+    exp = exp.reindex(sorted(exp.columns), axis=1)
+    ent["schema_match"] = list(got.columns) == list(exp.columns)
+    ent["rows_match"] = len(got) == len(exp)
+    if not ent["schema_match"]:
+        lines.append(f"SCHEMA   {name}: got {list(got.columns)} "
+                     f"exp {list(exp.columns)}")
+        return
+    if not ent["rows_match"]:
+        lines.append(f"ROWS     {name}: got {len(got)} exp {len(exp)}")
+        return
+    gs = got.sort_values(by=list(got.columns)).reset_index(drop=True)
+    es = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
+    ent["hash_match"] = ent["dtype_match"] = True
+    for c in got.columns:
+        gv, ev = gs[c], es[c]
+        if str(gv.dtype) != str(ev.dtype):
+            lines.append(f"DTYPE    {name}.{c}: got {gv.dtype} exp {ev.dtype}")
+            ent["dtype_match"] = False
+        try:
+            bad = gv.astype(str) != ev.astype(str)
+        except Exception as e:
+            lines.append(f"VALUE    {name}.{c}: not comparable: {e}")
+            ent["hash_match"] = False
+            continue
+        if bad.any():
+            i = bad[bad].index[0]
+            lines.append(f"VALUE    {name}.{c}: first diff row {i}: "
+                         f"got={gv[i]!r} exp={ev[i]!r}")
+            ent["hash_match"] = False
+
+
 def run_key(name):
     sql = oracle[name]
     t0 = time.time()
     ent = {"rows_match": False, "schema_match": False, "hash_match": False,
-           "spark_rows": None, "oracle_rows": None, "err": None}
+           "dtype_match": False, "spark_rows": None, "oracle_rows": None,
+           "err": None}
+    lines = []
     # one cursor per key: budget interrupts land on THIS cursor only,
     # and a late-firing timer is swallowed below before the cursor is
     # ever reused (ADVICE r13: the old single-connection interrupt
@@ -60,7 +107,8 @@ def run_key(name):
         pdir = f"{outdir}/{name}"
         if not os.path.isdir(pdir):
             ent["err"] = "no parquet dir"
-            return name, ent, time.time() - t0
+            lines.append(f"MISSING  {name} (no parquet dir)")
+            return name, ent, lines, time.time() - t0
         files = glob.glob(f"{pdir}/*.parquet")
         got = con.execute(
             f"SELECT * FROM read_parquet({files!r})").fetchdf()
@@ -70,26 +118,13 @@ def run_key(name):
         exp = con.execute(sql).fetchdf()
         ent["spark_rows"] = len(got)
         ent["oracle_rows"] = len(exp)
-        got = got.reindex(sorted(got.columns), axis=1)
-        exp = exp.reindex(sorted(exp.columns), axis=1)
-        ent["schema_match"] = list(got.columns) == list(exp.columns)
-        ent["rows_match"] = len(got) == len(exp)
-        if ent["schema_match"] and ent["rows_match"]:
-            gs = got.sort_values(by=list(got.columns)).reset_index(drop=True)
-            es = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
-            ok = True
-            for c in got.columns:
-                try:
-                    if not (gs[c].astype(str) == es[c].astype(str)).all():
-                        ok = False
-                except Exception:
-                    ok = False
-            ent["hash_match"] = ok
+        compare(name, got, exp, ent, lines)
     except Exception as e:
         msg = str(e)[:300]
         if "INTERRUPT" in msg.upper():
             msg = f"oracle_budget_exceeded({int(budget)}s)"
         ent["err"] = msg
+        lines.append(f"ORA-ERR  {name}: {msg}")
     finally:
         if timer is not None:
             timer.cancel()
@@ -101,8 +136,9 @@ def run_key(name):
             except Exception:
                 pass
         con.close()
-    return name, ent, time.time() - t0
-
+    if passed(ent):
+        lines.append(f"OK       {name} ({ent['spark_rows']} rows)")
+    return name, ent, lines, time.time() - t0
 
 
 # FAMILY-INTERLEAVED schedule (round 15): plain sorted order runs the
@@ -123,22 +159,19 @@ while any(qs):
         if q:
             names.append(q.pop(0))
 with ThreadPoolExecutor(max_workers=nthreads) as ex:
-    for name, ent, dt in ex.map(run_key, names):
+    for name, ent, lines, dt in ex.map(run_key, names):
         with lock:
             result[name] = ent
             done[0] += 1
-            ok = (ent["rows_match"] and ent["schema_match"]
-                  and ent["hash_match"] and not ent["err"])
-            print(f"{'OK ' if ok else 'BAD'} {name} {dt:.1f}s "
-                  f"[{done[0]}/{len(names)}]"
-                  + ("" if ok else f" err={ent['err']}"), flush=True)
+            for ln in lines:
+                print(ln, flush=True)
+            print(f"         {name} {dt:.1f}s [{done[0]}/{len(names)}]",
+                  flush=True)
             json.dump({k: result[k] for k in sorted(result)},
                       open(outjson, "w"), indent=2)
 
 result = {k: result[k] for k in sorted(result)}
-n_ok = sum(1 for e in result.values()
-           if e["rows_match"] and e["schema_match"] and e["hash_match"]
-           and not e["err"])
+n_ok = sum(1 for e in result.values() if passed(e))
 json.dump(result, open(outjson, "w"), indent=2)
-print(f"{n_ok}/{len(result)} OK -> {outjson}")
+print(f"\n{n_ok}/{len(result)} OK -> {outjson}")
 sys.exit(0 if n_ok == len(result) else 1)
